@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.ConfluentAvro
-import graft.pipeline.{Pipeline, Processors, Step}
+import graft.pipeline.PipelineDef
 
 /** Benchmark main — one JSON line per run for the driver's BENCH_r{N}.json.
   *
@@ -39,22 +39,18 @@ object Bench {
           col("id").cast("int").as("num")),
         ConfluentAvro.eventSchemaJson, schemaId = 1).as("value"))
 
-  /** The reference data plane end-to-end: decode, 3-step chain, encode,
-    * route. Returns msg/s.
+  /** The shipping data plane end-to-end, `PipelineRunner.decodeAndRoute`
+    * over a batch frame: guarded decode, 3-step chain with its
+    * conservation observation, route, encode. Returns msg/s.
     */
   private def pipelineThroughput(spark: SparkSession, n: Long): Double = {
     val wire = wireMessages(spark, n).persist()
     wire.count() // materialize input outside the timed section
-    val chain = Pipeline(Seq(Step(Processors.capitalize), Step(Processors.add10),
-      Step(Processors.isEven)))
+    val spec = PipelineDef(0, "bench", "in", "target", "event", "event",
+      Seq("capitalize", "add10", "isEven"), Seq.empty)
     val sec = time {
-      val decoded = wire.select(
-        ConfluentAvro.fromConfluentAvro(col("value"), ConfluentAvro.eventSchemaJson).as("m"))
-        .select("m.key", "m.value", "m.num")
-      val routed = chain(decoded)
-      force(routed.kafkaShape(df => ConfluentAvro.toConfluentAvro(
-        struct(df("key"), df("value"), df("num")),
-        ConfluentAvro.eventSchemaJson, schemaId = 1)))
+      force(PipelineRunner.decodeAndRoute(wire, spec,
+        ConfluentAvro.eventSchemaJson, ConfluentAvro.eventSchemaJson, outSchemaId = 1))
     }
     wire.unpersist()
     n / sec

@@ -1,19 +1,15 @@
 package graft.codec
 
-import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.avro.util.Utf8
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,17 +20,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * (magic byte 0x00 + 4-byte big-endian schema id + Avro body — reference
   * src/consumer.js:117-124,130,139 via @kafkajs/confluent-schema-registry).
   * Spark ships no Confluent framing and this build has no spark-avro
-  * connector jar, so both layers are implemented here against the core
-  * avro-1.12 jar. Schema resolution happens ONCE on the driver (as the
-  * reference does at startup, consumer.js:212-219): the schema JSON is a
-  * literal baked into the plan, never a per-row registry call.
+  * connector jar, so both layers are implemented here. Schema resolution
+  * happens ONCE, at plan time (as the reference does at startup,
+  * consumer.js:212-219): the schema JSON is parsed into a [[FlatAvro]]
+  * kernel, never a per-row registry call.
   *
   * Supported Avro shape: flat records of string/int/long/float/double/
-  * boolean/bytes, with nullable `[null, T]` unions — a superset of the
-  * reference's 3-field payload (FIXTURES.md §1).
+  * boolean/bytes, with nullable `[null, T]` / `[T, null]` unions — a
+  * superset of the reference's 3-field payload (FIXTURES.md §1).
   *
-  * Expressions are `CodegenFallback`: decode cost is dominated by Avro
-  * itself, and fallback keeps surrounding projections codegen'd.
+  * The per-message cost of a generic Avro reader is not Avro's binary
+  * format, which is a handful of varints and length-prefixed bytes per
+  * field, but the machinery around it: a per-thread reader, a header copy,
+  * a Utf8 → String → UTF8String transcode per string and, as a
+  * `CodegenFallback`, a projection kept out of whole-stage codegen. The
+  * kernel reads and writes the frame directly, and the two expressions
+  * generate code, so the decode and encode projections compile together
+  * with the chain around them.
   */
 object ConfluentAvro {
 
@@ -50,59 +52,13 @@ object ConfluentAvro {
   private[codec] def parseSchema(json: String): Schema =
     new Schema.Parser().parse(json)
 
-  private[codec] def sparkType(s: Schema): DataType = s.getType match {
-    case Schema.Type.STRING => StringType
-    case Schema.Type.INT => IntegerType
-    case Schema.Type.LONG => LongType
-    case Schema.Type.FLOAT => FloatType
-    case Schema.Type.DOUBLE => DoubleType
-    case Schema.Type.BOOLEAN => BooleanType
-    case Schema.Type.BYTES => BinaryType
-    case Schema.Type.UNION =>
-      val nonNull = s.getTypes.toArray.map(_.asInstanceOf[Schema])
-        .filter(_.getType != Schema.Type.NULL)
-      require(nonNull.length == 1, s"only [null, T] unions supported: $s")
-      sparkType(nonNull.head)
-    case other => throw new IllegalArgumentException(s"unsupported avro type $other")
-  }
-
-  private[codec] def structTypeFor(schema: Schema): StructType = {
-    require(schema.getType == Schema.Type.RECORD, s"need a record schema, got $schema")
-    StructType(schema.getFields.toArray.map { f0 =>
-      val f = f0.asInstanceOf[Schema.Field]
-      val nullable = f.schema().getType == Schema.Type.UNION
-      StructField(f.name(), sparkType(f.schema()), nullable)
-    })
-  }
-
-  private def avroToCatalyst(v: Any): Any = v match {
-    case null => null
-    case u: Utf8 => UTF8String.fromString(u.toString)
-    case s: String => UTF8String.fromString(s)
-    case b: ByteBuffer =>
-      val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
-    case other => other // Int, Long, Float, Double, Boolean
-  }
-
-  private def catalystToAvro(v: Any, s: Schema): Any = {
-    val t = s.getType match {
-      case Schema.Type.UNION =>
-        s.getTypes.toArray.map(_.asInstanceOf[Schema])
-          .find(_.getType != Schema.Type.NULL).get.getType
-      case t0 => t0
-    }
-    v match {
-      case null => null
-      case u: UTF8String => u.toString
-      case arr: Array[Byte] if t == Schema.Type.BYTES => ByteBuffer.wrap(arr)
-      case other => other
-    }
-  }
+  /** The 5-byte Confluent header: magic byte + big-endian schema id. */
+  def header(schemaId: Int): Array[Byte] =
+    ByteBuffer.allocate(5).put(MagicByte).putInt(schemaId).array()
 
   /** Strip the 5-byte Confluent header; throws on bad magic byte (the
     * reference's registry client does the same — such rows take the error
-    * path, src/consumer.js:142-150; wrap in a try-guard upstream to route
-    * them to a poison sink instead).
+    * path, src/consumer.js:142-150).
     */
   case class ConfluentStrip(child: Expression)
       extends UnaryExpression with CodegenFallback {
@@ -128,128 +84,54 @@ object ConfluentAvro {
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }
 
-  /** Prepend the Confluent header (magic 0 + schema id BE) to a payload. */
-  case class ConfluentWrap(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = BinaryType
-    override def nullSafeEval(schemaId: Any, payload: Any): Any = {
-      val body = payload.asInstanceOf[Array[Byte]]
-      val out = ByteBuffer.allocate(5 + body.length)
-      out.put(MagicByte).putInt(schemaId.asInstanceOf[Int]).put(body)
-      out.array()
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(l, r)
-  }
-
-  /** Decode a bare Avro body into a struct (schema fixed at plan time).
+  /** Confluent frame → decoded struct (schema fixed at plan time).
     *
-    * The Avro decoder and record are REUSED across rows (Avro's factory
-    * supports reconfiguring a `BinaryDecoder` onto new bytes and
-    * `GenericDatumReader.read` a previous record) — this is the hot loop
-    * of the pipeline throughput path, and per-row decoder/record
-    * allocation dominated it. State is ThreadLocal because local-mode
-    * tasks can share one deserialized expression tree across threads.
+    * `safe` decodes a malformed frame — bad framing, bad magic byte, a
+    * truncated or corrupt Avro body — to null: the per-message decode guard
+    * of the reference consumer loop (src/consumer.js:142-150 catches per
+    * message, counts messages_error_total, and keeps consuming), without
+    * which one poison Kafka message kills the whole streaming query.
+    * Otherwise such a frame throws.
     */
-  case class AvroDecode(child: Expression, schemaJson: String)
-      extends UnaryExpression with CodegenFallback {
-    @transient private lazy val schema = parseSchema(schemaJson)
-    @transient private lazy val reader = new GenericDatumReader[GenericRecord](schema)
-    @transient private lazy val fields = schema.getFields
-    @transient private lazy val state =
-      new ThreadLocal[(Array[org.apache.avro.io.BinaryDecoder],
-        Array[GenericRecord])]() {
-        override def initialValue() =
-          (new Array[org.apache.avro.io.BinaryDecoder](1), new Array[GenericRecord](1))
-      }
-    // lazy: dataType is read repeatedly during analysis — re-parsing the
-    // schema JSON per call would allocate a Parser each time
-    @transient override lazy val dataType: DataType = structTypeFor(schema)
-    override def nullSafeEval(input: Any): Any = {
-      val bytes = input.asInstanceOf[Array[Byte]]
-      val (decHolder, recHolder) = state.get()
-      val dec = DecoderFactory.get().binaryDecoder(bytes, decHolder(0))
-      decHolder(0) = dec
-      val rec = reader.read(recHolder(0), dec)
-      recHolder(0) = rec
-      val n = fields.size()
-      val vals = new Array[Any](n)
-      var i = 0
-      while (i < n) { vals(i) = avroToCatalyst(rec.get(i)); i += 1 }
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
+  case class ConfluentAvroDecode(child: Expression, schemaJson: String, safe: Boolean)
+      extends UnaryExpression {
+    @transient private lazy val kernel = FlatAvro(schemaJson)
+    // lazy: dataType is read repeatedly during analysis
+    @transient override lazy val dataType: DataType = kernel.structType
+    override def nullable: Boolean = safe || child.nullable
+    override def nullSafeEval(input: Any): Any =
+      kernel.decode(input.asInstanceOf[Array[Byte]], strict = !safe)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val k = ctx.addReferenceObj("avroKernel", kernel)
+      nullSafeCodeGen(ctx, ev, frame =>
+        if (safe) s"${ev.value} = $k.decode($frame, false);\n${ev.isNull} = ${ev.value} == null;"
+        else s"${ev.value} = $k.decode($frame, true);")
     }
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
-  /** Encode a struct into a bare Avro body. Encoder, output buffer, and
-    * record are reused per thread (see [[AvroDecode]]).
+  /** Struct → Confluent frame (header with `schemaId` + Avro body). Schema
+    * fields take their values from the input struct BY NAME: the outgoing
+    * schema (e.g. from the registry) may order fields differently from the
+    * struct, and positional mapping would silently swap same-typed values.
     */
-  case class AvroEncode(child: Expression, schemaJson: String)
-      extends UnaryExpression with CodegenFallback {
-    @transient private lazy val schema = parseSchema(schemaJson)
-    @transient private lazy val writer = new GenericDatumWriter[GenericRecord](schema)
-    @transient private lazy val state =
-      new ThreadLocal[(ByteArrayOutputStream,
-        Array[org.apache.avro.io.BinaryEncoder], GenericData.Record)]() {
-        override def initialValue() =
-          (new ByteArrayOutputStream(256),
-            new Array[org.apache.avro.io.BinaryEncoder](1),
-            new GenericData.Record(schema))
-      }
+  case class ConfluentAvroEncode(child: Expression, schemaJson: String, schemaId: Int)
+      extends UnaryExpression {
+    @transient private lazy val writer =
+      FlatAvro(schemaJson).writer(child.dataType.asInstanceOf[StructType], schemaId)
     override def dataType: DataType = BinaryType
-    private lazy val inputType = child.dataType.asInstanceOf[StructType]
-    // Avro fields resolved to input-struct ordinals BY NAME, once: the
-    // outgoing schema (e.g. from the registry) may order fields
-    // differently from the struct, and positional mapping would silently
-    // swap same-typed values (ProtoEncode already maps by name)
-    @transient private lazy val fieldSources: Array[Int] = {
-      val fs = schema.getFields
-      Array.tabulate(fs.size()) { i =>
-        val name = fs.get(i).name()
-        require(inputType.fieldNames.contains(name),
-          s"outgoing schema field '$name' missing from input struct " +
-            s"(${inputType.fieldNames.mkString(", ")})")
-        inputType.fieldIndex(name)
-      }
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case _: StructType =>
+        try { writer; TypeCheckResult.TypeCheckSuccess }
+        catch { case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage) }
+      case other => TypeCheckResult.TypeCheckFailure(s"need a struct to encode, got $other")
     }
-    override def nullSafeEval(input: Any): Any = {
-      val row = input.asInstanceOf[InternalRow]
-      val (bos, encHolder, rec) = state.get()
-      val fields = schema.getFields
-      var i = 0
-      while (i < fields.size()) {
-        val f = fields.get(i)
-        val src = fieldSources(i)
-        val v = if (row.isNullAt(src)) null
-          else row.get(src, inputType(src).dataType)
-        rec.put(i, catalystToAvro(v, f.schema()))
-        i += 1
-      }
-      bos.reset()
-      val enc = EncoderFactory.get().binaryEncoder(bos, encHolder(0))
-      encHolder(0) = enc
-      writer.write(rec, enc)
-      enc.flush()
-      bos.toByteArray
+    override def nullSafeEval(input: Any): Any = writer.encode(input.asInstanceOf[InternalRow])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val w = ctx.addReferenceObj("avroWriter", writer)
+      defineCodeGen(ctx, ev, row => s"$w.encode($row)")
     }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Null-on-failure wrapper: evaluates the child, returns null if it
-    * throws. The per-message decode guard of the reference consumer loop
-    * (src/consumer.js:142-150 catches per message, counts
-    * messages_error_total, and keeps consuming) — without it one poison
-    * Kafka message kills the whole streaming query.
-    */
-  case class TryEval(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = child.dataType
-    override def nullable: Boolean = true
-    override def eval(input: InternalRow): Any =
-      try child.eval(input)
-      catch { case scala.util.control.NonFatal(_) => null }
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -261,19 +143,328 @@ object ConfluentAvro {
 
   /** value bytes in Confluent wire format → decoded struct column. */
   def fromConfluentAvro(value: Column, schemaJson: String): Column =
-    toCol(AvroDecode(ConfluentStrip(toExpr(value)), schemaJson))
+    toCol(ConfluentAvroDecode(toExpr(value), schemaJson, safe = false))
 
   /** Like [[fromConfluentAvro]] but null (instead of a query-killing
     * throw) for malformed messages — bad framing, bad magic byte,
     * truncated or corrupt Avro bodies.
     */
   def fromConfluentAvroSafe(value: Column, schemaJson: String): Column =
-    toCol(TryEval(AvroDecode(ConfluentStrip(toExpr(value)), schemaJson)))
+    toCol(ConfluentAvroDecode(toExpr(value), schemaJson, safe = true))
 
   /** struct column → Confluent wire format bytes with the given id. */
   def toConfluentAvro(payload: Column, schemaJson: String, schemaId: Int): Column =
-    toCol(ConfluentWrap(toExpr(lit(schemaId)), AvroEncode(toExpr(payload), schemaJson)))
+    toCol(ConfluentAvroEncode(toExpr(payload), schemaJson, schemaId))
 
   def confluentSchemaId(value: Column): Column =
     toCol(ConfluentSchemaId(toExpr(value)))
+}
+
+/** A flat Avro record schema compiled, once at plan time, into the field
+  * layout its Confluent frames are read and written with. Immutable, so
+  * one instance is safe to share across the tasks of a plan.
+  *
+  * Decoding follows Avro's binary decoder (the reference's registry client
+  * reads the same bytes): zig-zag varints of at most 5 (int) or 10 (long)
+  * bytes, with the bits past the type's width dropped; little-endian
+  * floats; a boolean is true only for byte 1; a union's branch index is an
+  * int varint; bytes after the last field are ignored. Anything else — a
+  * bad index, a negative length, a read past the end — makes the frame
+  * malformed.
+  *
+  * Strings are referenced in place in the frame when they are ASCII.
+  * Others go through `new String(bytes, UTF_8)`, which is byte-identical
+  * for valid UTF-8 and replaces malformed sequences exactly as Avro's
+  * `Utf8.toString` does. Encoding writes a string's own bytes when they
+  * are ASCII and its `toString` UTF-8 otherwise, as Avro's writer does.
+  */
+private[codec] final class FlatAvro private (
+    names: Array[String],
+    kinds: Array[Int],
+    // branch index of `null` in a two-branch union; -1 when not a union
+    nullBranch: Array[Int]) extends Serializable {
+  import FlatAvro._
+
+  def structType: StructType = StructType(names.indices.map { i =>
+    StructField(names(i), sparkTypes(kinds(i)), nullable = nullBranch(i) >= 0)
+  })
+
+  /** The record in a Confluent frame; null (or, when `strict`, a throw)
+    * for a malformed one.
+    */
+  def decode(frame: Array[Byte], strict: Boolean): InternalRow = {
+    if (frame.length < 5 || frame(0) != ConfluentAvro.MagicByte) {
+      if (strict) throw new IllegalArgumentException(
+        s"not Confluent wire format (len=${frame.length})")
+      return null
+    }
+    val in = new Cursor(frame, 5)
+    val vals = new Array[Any](kinds.length)
+    var i = 0
+    while (i < kinds.length) {
+      val present = nullBranch(i) < 0 || {
+        val branch = in.varInt()
+        if (branch != 0 && branch != 1) in.fail()
+        branch != nullBranch(i)
+      }
+      if (present) vals(i) = (kinds(i): @annotation.switch) match {
+        case Str => in.string()
+        case Int32 => in.varInt()
+        case Int64 => in.varLong()
+        case F32 => java.lang.Float.intBitsToFloat(in.fixed(4).toInt)
+        case F64 => java.lang.Double.longBitsToDouble(in.fixed(8))
+        case Bool => in.byte() == 1
+        case Bin => in.bytes()
+      }
+      i += 1
+    }
+    if (in.ok) new GenericInternalRow(vals)
+    else if (strict) throw new IllegalArgumentException(
+      s"malformed Avro body in Confluent frame (len=${frame.length})")
+    else null
+  }
+
+  /** A writer of this schema from rows of `input`, framed with `schemaId`. */
+  def writer(input: StructType, schemaId: Int): Writer = {
+    val src = names.map { name =>
+      require(input.fieldNames.contains(name),
+        s"outgoing schema field '$name' missing from input struct " +
+          s"(${input.fieldNames.mkString(", ")})")
+      input.fieldIndex(name)
+    }
+    val srcTypes = names.indices.map { i =>
+      val t = input(src(i)).dataType
+      // Avro's writer narrows any Number into a plain numeric field, but a
+      // union resolves its branch from the value's own type
+      val numeric = Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+      val ok = t == NullType || t == sparkTypes(kinds(i)) ||
+        (nullBranch(i) < 0 && numeric.contains(t) && numeric.contains(sparkTypes(kinds(i))))
+      require(ok, s"cannot encode input field '${names(i)}' of type ${t.simpleString} " +
+        s"as Avro ${avroTypes(kinds(i)).getName}${if (nullBranch(i) >= 0) " union" else ""}")
+      t
+    }.toArray
+    new Writer(ConfluentAvro.header(schemaId), src, srcTypes)
+  }
+
+  final class Writer private[FlatAvro] (header: Array[Byte], src: Array[Int],
+      srcTypes: Array[DataType]) extends Serializable {
+
+    private val exact = names.indices.map(i => srcTypes(i) == sparkTypes(kinds(i))).toArray
+
+    // another numeric input type narrows as in Avro's writer: Number.xValue
+    private def number(row: InternalRow, i: Int): Number =
+      row.get(src(i), srcTypes(i)).asInstanceOf[Number]
+    private def int32(row: InternalRow, i: Int): Int =
+      if (exact(i)) row.getInt(src(i)) else number(row, i).intValue
+    private def int64(row: InternalRow, i: Int): Long =
+      if (exact(i)) row.getLong(src(i)) else number(row, i).longValue
+    private def float32(row: InternalRow, i: Int): Float =
+      if (exact(i)) row.getFloat(src(i)) else number(row, i).floatValue
+    private def float64(row: InternalRow, i: Int): Double =
+      if (exact(i)) row.getDouble(src(i)) else number(row, i).doubleValue
+
+    /** The Confluent frame of `row`: one pass sizes it, one writes it. */
+    def encode(row: InternalRow): Array[Byte] = {
+      // string and bytes values as written, read once
+      val blobs = new Array[AnyRef](kinds.length)
+      var size = header.length
+      var i = 0
+      while (i < kinds.length) {
+        if (nullBranch(i) >= 0) size += 1
+        if (row.isNullAt(src(i))) {
+          if (nullBranch(i) < 0) throw new IllegalArgumentException(
+            s"null value for non-nullable Avro field '${names(i)}'")
+        } else size += ((kinds(i): @annotation.switch) match {
+          case Str =>
+            val s = wireString(row.getUTF8String(src(i)))
+            blobs(i) = s
+            varLongSize(s.numBytes) + s.numBytes
+          case Bin =>
+            val b = row.getBinary(src(i))
+            blobs(i) = b
+            varLongSize(b.length) + b.length
+          case Int32 => varLongSize(int32(row, i))
+          case Int64 => varLongSize(int64(row, i))
+          case F32 => 4
+          case F64 => 8
+          case Bool => 1
+        })
+        i += 1
+      }
+      val out = new Array[Byte](size)
+      System.arraycopy(header, 0, out, 0, header.length)
+      var pos = header.length
+      i = 0
+      while (i < kinds.length) {
+        val isNull = row.isNullAt(src(i))
+        if (nullBranch(i) >= 0)
+          pos = putVarLong(out, pos, if (isNull) nullBranch(i) else 1 - nullBranch(i))
+        if (!isNull) pos = (kinds(i): @annotation.switch) match {
+          case Str =>
+            val s = blobs(i).asInstanceOf[UTF8String]
+            pos = putVarLong(out, pos, s.numBytes)
+            s.writeToMemory(out, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
+            pos + s.numBytes
+          case Bin =>
+            val b = blobs(i).asInstanceOf[Array[Byte]]
+            pos = putVarLong(out, pos, b.length)
+            System.arraycopy(b, 0, out, pos, b.length)
+            pos + b.length
+          case Int32 => putVarLong(out, pos, int32(row, i))
+          case Int64 => putVarLong(out, pos, int64(row, i))
+          case F32 => putFixed(out, pos, java.lang.Float.floatToRawIntBits(float32(row, i)), 4)
+          case F64 => putFixed(out, pos, java.lang.Double.doubleToRawLongBits(float64(row, i)), 8)
+          case Bool => out(pos) = (if (row.getBoolean(src(i))) 1 else 0).toByte; pos + 1
+        }
+        i += 1
+      }
+      out
+    }
+  }
+}
+
+private[codec] object FlatAvro {
+  // field kinds: indexes into avroTypes and sparkTypes
+  private final val Str = 0
+  private final val Int32 = 1
+  private final val Int64 = 2
+  private final val F32 = 3
+  private final val F64 = 4
+  private final val Bool = 5
+  private final val Bin = 6
+
+  private val avroTypes = Array(Schema.Type.STRING, Schema.Type.INT, Schema.Type.LONG,
+    Schema.Type.FLOAT, Schema.Type.DOUBLE, Schema.Type.BOOLEAN, Schema.Type.BYTES)
+  private val sparkTypes: Array[DataType] = Array(StringType, IntegerType, LongType,
+    FloatType, DoubleType, BooleanType, BinaryType)
+
+  def apply(schemaJson: String): FlatAvro = {
+    val schema = ConfluentAvro.parseSchema(schemaJson)
+    require(schema.getType == Schema.Type.RECORD, s"need a record schema, got $schema")
+    val fields = schema.getFields.toArray.map(_.asInstanceOf[Schema.Field])
+    val layout = fields.map { f =>
+      val s = f.schema()
+      val (t, nullBranch) =
+        if (s.getType != Schema.Type.UNION) (s.getType, -1)
+        else {
+          val branches = s.getTypes.toArray.map(_.asInstanceOf[Schema].getType)
+          val nb = branches.indexOf(Schema.Type.NULL)
+          require(branches.length == 2 && nb >= 0 && branches(1 - nb) != Schema.Type.NULL,
+            s"only [null, T] unions supported: $s")
+          (branches(1 - nb), nb)
+        }
+      val kind = avroTypes.indexOf(t)
+      require(kind >= 0, s"unsupported avro type $t")
+      (kind, nullBranch)
+    }
+    new FlatAvro(fields.map(_.name()), layout.map(_._1), layout.map(_._2))
+  }
+
+  private def isAscii(s: UTF8String): Boolean = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    var i = 0
+    while (i < s.numBytes) {
+      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) < 0) return false
+      i += 1
+    }
+    true
+  }
+
+  private def wireString(s: UTF8String): UTF8String =
+    if (isAscii(s)) s else UTF8String.fromString(s.toString)
+
+  private def varLongSize(v: Long): Int = {
+    var n = (v << 1) ^ (v >> 63)
+    var size = 1
+    while ((n & ~0x7FL) != 0) { n >>>= 7; size += 1 }
+    size
+  }
+
+  /** Writes `v` zig-zag varint encoded at `pos`; returns the next position.
+    * An int's zig-zag form equals its long's, so ints use this too.
+    */
+  private def putVarLong(out: Array[Byte], pos0: Int, v: Long): Int = {
+    var n = (v << 1) ^ (v >> 63)
+    var pos = pos0
+    while ((n & ~0x7FL) != 0) { out(pos) = ((n & 0x7F) | 0x80).toByte; n >>>= 7; pos += 1 }
+    out(pos) = n.toByte
+    pos + 1
+  }
+
+  /** Writes the low `width` bytes of `bits` little-endian at `pos`. */
+  private def putFixed(out: Array[Byte], pos: Int, bits: Long, width: Int): Int = {
+    var i = 0
+    while (i < width) { out(pos + i) = (bits >>> (8 * i)).toByte; i += 1 }
+    pos + width
+  }
+
+  /** Read position in one frame. A failed read marks the frame malformed
+    * and moves to the end, so every later read fails too, harmlessly.
+    */
+  private final class Cursor(buf: Array[Byte], private var pos: Int) {
+    var ok = true
+
+    def fail(): Unit = { ok = false; pos = buf.length }
+
+    def byte(): Int =
+      if (pos < buf.length) { pos += 1; buf(pos - 1) & 0xFF } else { fail(); 0 }
+
+    def varInt(): Int = {
+      var v = 0
+      var shift = 0
+      while (shift < 35) {
+        val b = byte()
+        v |= (b & 0x7F) << shift
+        if (b < 0x80) return (v >>> 1) ^ -(v & 1)
+        shift += 7
+      }
+      fail(); 0
+    }
+
+    def varLong(): Long = {
+      var v = 0L
+      var shift = 0
+      while (shift < 70) {
+        val b = byte()
+        v |= (b & 0x7FL) << shift
+        if (b < 0x80) return (v >>> 1) ^ -(v & 1)
+        shift += 7
+      }
+      fail(); 0L
+    }
+
+    /** `width` bytes, little-endian. */
+    def fixed(width: Int): Long =
+      if (buf.length - pos < width) { fail(); 0L }
+      else {
+        var bits = 0L
+        var i = 0
+        while (i < width) { bits |= (buf(pos + i) & 0xFFL) << (8 * i); i += 1 }
+        pos += width
+        bits
+      }
+
+    /** A length prefix, checked against the bytes left. */
+    private def length(): Int = {
+      val n = varLong()
+      if (n < 0 || n > buf.length - pos) { fail(); 0 } else n.toInt
+    }
+
+    def string(): UTF8String = {
+      val n = length()
+      val start = pos
+      pos += n
+      var i = start
+      while (i < pos && buf(i) >= 0) i += 1
+      if (i == pos) UTF8String.fromBytes(buf, start, n)
+      else UTF8String.fromString(new String(buf, start, n, UTF_8))
+    }
+
+    def bytes(): Array[Byte] = {
+      val n = length()
+      pos += n
+      java.util.Arrays.copyOfRange(buf, pos - n, pos)
+    }
+  }
 }

@@ -238,7 +238,7 @@ object ConfluentProto {
         ConfluentAvro.ConfluentStrip(Bridge.expression(value)))), fields))
 
   def toConfluentProto(payload: Column, fields: Seq[ProtoField], schemaId: Int): Column =
-    Bridge.column(ConfluentAvro.ConfluentWrap(
-      Bridge.expression(org.apache.spark.sql.functions.lit(schemaId)),
-      Bridge.expression(Bridge.column(ProtoEncode(Bridge.expression(payload), fields)))))
+    org.apache.spark.sql.functions.concat(
+      org.apache.spark.sql.functions.lit(ConfluentAvro.header(schemaId)),
+      encodeProto(payload, fields))
 }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.LongType
 
 /** The canonical message shape of the reference engine:
   * `{key: string, value: string, num: int}` (reference
@@ -74,9 +76,18 @@ object Processors {
     * src/consumer.js:96-103): parse `value` as a number into `num`,
     * "throwing" when it is not numeric.
     */
-  val parseNum: MapProcessor = MapProcessor("parseNum")(
-    m => m.copy(num = m.value.try_cast("long")),
-    errorWhen = m => m.value.try_cast("long").isNull)
+  val parseNum: MapProcessor = {
+    // try_cast(string as bigint) throws and catches an exception inside for
+    // every non-numeric value. The legacy cast returns null instead, and it
+    // accepts a superset of what the exact parse accepts (the same parser,
+    // also allowing a decimal part), so its null check can gate try_cast
+    // without changing a result.
+    def parsed(v: Column): Column =
+      when(Bridge.legacyCast(v, LongType).isNotNull, v.try_cast("long"))
+    MapProcessor("parseNum")(
+      m => m.copy(num = parsed(m.value)),
+      errorWhen = m => parsed(m.value).isNull)
+  }
 
   private val builtin: Seq[Processor] =
     Seq(add10, appendString, capitalize, reverseString, isEven, parseNum)
@@ -113,9 +124,10 @@ object Routing {
   *
   * Columns: topic, key, value, num, error_step (int|null), dropped_step
   * (int|null). DLQ rows carry the ORIGINAL pre-chain message, matching
-  * src/consumer.js:87,100.
+  * src/consumer.js:87,100. `errorSinkSteps` are the steps with no DLQ,
+  * whose errored rows go to the error sink.
   */
-final case class RoutedMessages(df: DataFrame, target: String) {
+final case class RoutedMessages(df: DataFrame, target: String, errorSinkSteps: Seq[Int]) {
   private val msgCols = Seq(col("key"), col("value"), col("num"))
   def toTarget: DataFrame = df.filter(col("topic") === target).select(msgCols: _*)
   def toDlq: DataFrame =
@@ -128,10 +140,14 @@ final case class RoutedMessages(df: DataFrame, target: String) {
     * the output Kafka key is the decoded payload's `key` field, NOT the
     * incoming message key (reference quirk, src/consumer.js:131,141).
     * Rows routed nowhere (dropped/error) are excluded, as the reference
-    * produces them to no topic.
+    * produces them to no topic; the filter compares the integer step
+    * columns, not topic strings.
     */
   def kafkaShape(encodeValue: DataFrame => Column): DataFrame = {
-    val live = df.filter(col("topic") =!= Routing.Dropped && col("topic") =!= Routing.Error)
+    val err = col("error_step")
+    val toErrorSink =
+      if (errorSinkSteps.isEmpty) lit(false) else err.isNotNull && err.isin(errorSinkSteps: _*)
+    val live = df.filter(col("dropped_step").isNull && !toErrorSink)
     live.select(col("topic"), col("key").cast("binary").as("key"),
       encodeValue(live).as("value"))
   }
@@ -144,6 +160,18 @@ final case class RoutedMessages(df: DataFrame, target: String) {
   * at 100 TB this is a narrow map stage with zero shuffles.
   */
 final case class Pipeline(steps: Seq[Step], target: String = "target") {
+
+  // A DLQ topic equal to the target or to a sentinel would route errored
+  // originals as completed (or as dropped/error) rows.
+  require(target != Routing.Dropped && target != Routing.Error,
+    s"target topic '$target' collides with a routing sentinel")
+  steps.zipWithIndex.foreach { case (Step(p, dlq), i) =>
+    dlq.foreach { t =>
+      require(t != target && t != Routing.Dropped && t != Routing.Error,
+        s"step $i (${p.name}): DLQ topic '$t' collides with " +
+          (if (t == target) "the target topic" else "a routing sentinel"))
+    }
+  }
 
   /** Compile & apply over a batch or streaming DataFrame with columns
     * (key, value, num). Steps execute in array order
@@ -197,49 +225,61 @@ final case class Pipeline(steps: Seq[Step], target: String = "target") {
       when(isErr, col("__orig.num")).otherwise(col("num")).as("num"),
       col("__err").as("error_step"),
       col("__drop").as("dropped_step"))
-    RoutedMessages(routed, target)
+    RoutedMessages(routed, target, errorSinkSteps)
   }
+
+  private def errorSinkSteps: Seq[Int] =
+    steps.indices.filter(i => !steps(i).processor.isFilter && steps(i).dlq.isEmpty)
 
   /** Routed DataFrame instrumented with the reference's conservation
     * metrics (reference src/metrics.js:5-45):
     * received = completed + dlq + dropped + error.
     * Reads back via `org.apache.spark.sql.Observation` on an action, or
     * the streaming `QueryProgressEvent.observedMetrics`.
+    *
+    * There are `steps + 1` distinct aggregates, all integer compares: the
+    * rows received, and per step the rows it stopped (a map step errors
+    * them, a filter drops them; a row stops at most once). Every counter
+    * is an exact integer expression over those, so conservation holds by
+    * construction: rows_in(i) = received - Σ_{j<i} stopped(j), and since
+    * no DLQ topic may equal the target or a sentinel, completed/dlq/
+    * dropped/error are the survivors and the stopped rows by step kind
+    * and DLQ slot. Spark's observation accumulator updates one slot per
+    * occurrence of an aggregate in a counter, for every row, so each
+    * counter names each count at most once.
+    * Per-step labels follow the reference's {processor_name/step}
+    * (src/metrics.js); sub-expression timing has no Spark equivalent,
+    * documented deviation (SURVEY §7.3).
     */
   def observed(input: DataFrame, name: String = "pipeline_metrics"): RoutedMessages = {
     val r = apply(input)
-    // first step index that stopped a row (that step itself ran — it
-    // dropped or threw); null = the row survived the whole chain
-    val firstStop = coalesce(col("error_step"), col("dropped_step"))
-    // per-step splits of the dlq/dropped counters plus per-step row
-    // counts — the closest Spark analog of the reference's per-processor
-    // labels (src/metrics.js labels {processor_name/step}); sub-expression
-    // timing has no Spark equivalent, documented deviation (SURVEY §7.3).
-    // rows_in localizes a conservation break to ONE step:
-    // rows_in(i) = rows_in(i+1) + dropped(i) + errors(i)
-    // (and for the last step, completed replaces rows_in(i+1)).
+    val received = count(lit(1))
+    val stopped = steps.zipWithIndex.map { case (Step(p, _), i) =>
+      count(when(col(if (p.isFilter) "dropped_step" else "error_step") === i, 1))
+    }
+    def total(cs: Seq[Column]): Column = cs.reduceOption(_ + _).getOrElse(lit(0L))
+    def stoppedWhere(pick: Step => Boolean): Column =
+      total(steps.indices.filter(i => pick(steps(i))).map(stopped))
+    val rowsIn = steps.indices.map(i => stopped.take(i).foldLeft(received)(_ - _))
     val perStep = steps.zipWithIndex.flatMap { case (Step(p, _), i) =>
       Seq(
-        count(when(firstStop.isNull || firstStop >= i, 1))
-          .as(s"step_${i}_${p.name}_rows_in_total"),
-        count(when(col("error_step") === i, 1))
-          .as(s"step_${i}_${p.name}_errors_total"),
-        count(when(col("dropped_step") === i, 1))
-          .as(s"step_${i}_${p.name}_dropped_total"))
+        rowsIn(i).as(s"step_${i}_${p.name}_rows_in_total"),
+        (if (p.isFilter) lit(0L) else stopped(i)).as(s"step_${i}_${p.name}_errors_total"),
+        (if (p.isFilter) stopped(i) else lit(0L)).as(s"step_${i}_${p.name}_dropped_total"))
     }
     val counters = Seq(
-      count(lit(1)).as("messages_received_total"),
-      coalesce(sum(when(firstStop.isNotNull, firstStop + 1)
-        .otherwise(lit(steps.length))), lit(0L)).cast("long")
-        .as("processors_applied_total"),
-      count(when(col("topic") === target, 1)).as("messages_completed_total"),
-      count(when(col("topic") =!= target &&
-        col("topic") =!= Routing.Dropped && col("topic") =!= Routing.Error, 1))
-        .as("messages_dlq_total"),
-      count(when(col("topic") === Routing.Dropped, 1)).as("messages_dropped_total"),
-      count(when(col("topic") === Routing.Error, 1)).as("messages_error_total")) ++ perStep
+      received.as("messages_received_total"),
+      // Σ rows_in(i), naming each count once
+      steps.indices.dropRight(1).foldLeft(received * steps.length) { (acc, j) =>
+        acc - stopped(j) * (steps.length - 1 - j)
+      }.as("processors_applied_total"),
+      stopped.foldLeft(received)(_ - _).as("messages_completed_total"),
+      stoppedWhere(s => !s.processor.isFilter && s.dlq.isDefined).as("messages_dlq_total"),
+      stoppedWhere(_.processor.isFilter).as("messages_dropped_total"),
+      stoppedWhere(s => !s.processor.isFilter && s.dlq.isEmpty).as("messages_error_total")) ++
+      perStep
     val obsDf = r.df.observe(name, counters.head, counters.tail: _*)
-    RoutedMessages(obsDf, target)
+    r.copy(df = obsDf)
   }
 }
 

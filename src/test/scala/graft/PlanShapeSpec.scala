@@ -315,4 +315,44 @@ class PlanShapeSpec extends SparkSpec {
     p should not include "Exchange"
     joined.count() should be > 0L
   }
+
+  test("decodeAndRoute: decode and encode compile whole-stage; the observation holds steps + 1 aggregates") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{CollectMetricsExec, ProjectExec, WholeStageCodegenExec}
+    import graft.codec.ConfluentAvro
+    import graft.pipeline.PipelineDef
+    val wire = spark.range(1000).select(ConfluentAvro.toConfluentAvro(
+      struct(col("id").cast("string").as("key"), col("id").cast("string").as("value"),
+        col("id").cast("int").as("num")), ConfluentAvro.eventSchemaJson, 1).as("value"))
+      .localCheckpoint()
+    val spec = PipelineDef(1, "p", "in", "target", "event", "event",
+      Seq("parseNum", "capitalize", "add10", "isEven"), Seq(Some("dlq_parse"), None, None, None))
+    val routed = PipelineRunner.decodeAndRoute(wire, spec,
+      ConfluentAvro.eventSchemaJson, ConfluentAvro.eventSchemaJson, 1)
+    val plan = routed.queryExecution.executedPlan
+
+    plan.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e })) shouldBe empty
+    val codegenProjects = plan.collect { case w: WholeStageCodegenExec =>
+      w.child.collect { case p: ProjectExec => p }
+    }.flatten
+    def projecting(cls: Class[_]) = plan.collect {
+      case p: ProjectExec if p.projectList.exists(_.exists(e => cls.isInstance(e))) => p
+    }
+    Seq(classOf[ConfluentAvro.ConfluentAvroDecode], classOf[ConfluentAvro.ConfluentAvroEncode])
+      .foreach { cls =>
+        withClue(s"${cls.getSimpleName}: ") {
+          projecting(cls) should not be empty
+          projecting(cls).foreach(p => codegenProjects.exists(_ eq p) shouldBe true)
+        }
+      }
+    val observation = plan.collect { case c: CollectMetricsExec if c.name == "pipeline_metrics" => c }
+    observation should have size 1
+    // distinct aggregate functions: count(1) and one count per step (the
+    // accumulator still gives each occurrence in a counter its own slot)
+    observation.head.metricExpressions
+      .flatMap(_.collect { case a: AggregateExpression => a.canonicalized })
+      .distinct should have size (spec.processors.size + 1)
+    routed.count() shouldBe 500 // the even nums reach the target
+  }
 }

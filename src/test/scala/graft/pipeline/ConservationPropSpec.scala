@@ -42,4 +42,50 @@ class ConservationPropSpec extends SparkSpec {
       }
     }
   }
+
+  test("every pipeline_metrics counter equals its count grouped from the routed columns") {
+    val n = 300
+    val in = spark.range(n).select(
+      col("id").cast("string").as("key"),
+      when(col("id") % 5 === 0, concat(lit("v"), col("id")))
+        .otherwise(col("id").cast("string")).as("value"),
+      col("id").cast("int").as("num")).cache()
+    in.count()
+    val longer = Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, stepGen)).map(Pipeline(_))
+
+    (0 until 15).foreach { i =>
+      val pipe = longer(Gen.Parameters.default, Seed(7L + i))
+        .getOrElse(fail(s"generator produced no pipeline for seed $i"))
+      withClue(s"pipeline ${pipe.steps.map(s => s.processor.name -> s.dlq)}: ") {
+        val r = pipe.observed(in)
+        // (topic, error_step, dropped_step) of every routed row
+        val routed = r.df.collect().toSeq.map(row => (row.getAs[String]("topic"),
+          Option(row.getAs[Integer]("error_step")).map(_.intValue),
+          Option(row.getAs[Integer]("dropped_step")).map(_.intValue)))
+        val observed = r.df.queryExecution.observedMetrics("pipeline_metrics")
+
+        def rowsWhere(p: ((String, Option[Int], Option[Int])) => Boolean): Long =
+          routed.count(p).toLong
+        def stop(row: (String, Option[Int], Option[Int])): Option[Int] = row._2.orElse(row._3)
+        val sentinels = Set(pipe.target, Routing.Dropped, Routing.Error)
+        val expected = Map(
+          "messages_received_total" -> routed.size.toLong,
+          "processors_applied_total" -> routed.map(stop(_).fold(pipe.steps.size)(_ + 1).toLong).sum,
+          "messages_completed_total" -> rowsWhere(_._1 == pipe.target),
+          "messages_dlq_total" -> rowsWhere(row => !sentinels(row._1)),
+          "messages_dropped_total" -> rowsWhere(_._1 == Routing.Dropped),
+          "messages_error_total" -> rowsWhere(_._1 == Routing.Error)) ++
+          pipe.steps.zipWithIndex.flatMap { case (Step(p, _), k) =>
+            Seq(
+              s"step_${k}_${p.name}_rows_in_total" -> rowsWhere(stop(_).forall(_ >= k)),
+              s"step_${k}_${p.name}_errors_total" -> rowsWhere(_._2.contains(k)),
+              s"step_${k}_${p.name}_dropped_total" -> rowsWhere(_._3.contains(k)))
+          }
+        observed.schema.fieldNames.toSet shouldBe expected.keySet
+        expected.foreach { case (name, v) =>
+          withClue(s"$name: ") { observed.getAs[Long](name) shouldBe v }
+        }
+      }
+    }
+  }
 }

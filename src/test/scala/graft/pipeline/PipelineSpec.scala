@@ -115,6 +115,41 @@ class PipelineSpec extends SparkSpec {
     row.getAs[Long]("step_0_parseNum_dropped_total") shouldBe 0
   }
 
+  test("a DLQ topic equal to the target or to a routing sentinel is rejected, naming the step") {
+    Seq("target", Routing.Dropped, Routing.Error).foreach { t =>
+      val e = intercept[IllegalArgumentException] {
+        Pipeline(Seq(Step(Processors.add10), Step(Processors.parseNum, Some(t))))
+      }
+      e.getMessage should include("step 1 (parseNum)")
+      intercept[IllegalArgumentException] {
+        Pipeline.fromNames(Seq("parseNum"), Seq(Some(t)), target = "target")
+      }.getMessage should include("step 0 (parseNum)")
+    }
+    intercept[IllegalArgumentException] {
+      Pipeline(Seq(Step(Processors.add10)), target = Routing.Dropped)
+    }.getMessage should include("routing sentinel")
+    // distinct DLQ topics, shared or not, stay legal
+    Pipeline(Seq(Step(Processors.parseNum, Some("d")), Step(Processors.parseNum, Some("d"))))
+  }
+
+  test("parseNum's gated parse gives try_cast's num and errors") {
+    import spark.implicits._
+    val values = Seq(Some(" 12 "), Some("+3"), Some("-0"), Some("1.5"), Some(""),
+      Some("9223372036854775808"), Some("v12x"), None)
+    val in = values.zipWithIndex.map { case (v, i) => (s"k$i", v, 0) }.toDF("key", "value", "num")
+    // the processor's definition before the gate, as the reference result
+    val plain = MapProcessor("parseNum")(
+      m => m.copy(num = m.value.try_cast("long")),
+      errorWhen = m => m.value.try_cast("long").isNull)
+    def outcome(p: Processor): Seq[Seq[Any]] =
+      rows(Pipeline(Seq(Step(p)))(in).df.select("key", "num", "error_step").orderBy("key"))
+    val gated = outcome(Processors.parseNum)
+    gated shouldBe outcome(plain)
+    // only " 12 ", "+3" and "-0" parse
+    gated.map(_(2)) shouldBe Seq(null, null, null, 0, 0, 0, 0, 0)
+    gated.take(3).map(_(1)) shouldBe Seq(12L, 3L, 0L)
+  }
+
   test("fromNames builds from catalog-style parallel arrays") {
     val p = Pipeline.fromNames(Seq("capitalize", "isEven"), Seq(None, Some("d2")))
     p.steps.map(_.processor.name) shouldBe Seq("capitalize", "isEven")
