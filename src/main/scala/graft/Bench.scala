@@ -29,6 +29,35 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The summary line — the run's gate record, printed LAST on
+    * stdout and copied to `BENCH_SUMMARY.json`. A failed query is timed
+    * as `-1.0`: it is left out of `value` and the top ten but COUNTED in
+    * `n_failed` (a run with failures exits 1 — its total is not a
+    * valid measurement, never a faster one). Keys and the SF path are
+    * escaped with [[Verify.jsonStr]], so the line is strict JSON.
+    */
+  private[graft] def summaryJson(results: Seq[(String, Double)],
+      throughput: Double, sfDir: String, cpus: Int): String = {
+    val ok = results.filter(_._2 >= 0)
+    val top10 = ok.sortBy(-_._2).take(10)
+      .map { case (k, v) => s"${Verify.jsonStr(k)}:${math.round(v * 1000) / 1000.0}" }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total_queries","value":${ok.map(_._2).sum},""" +
+      s""""unit":"sec","queries":$top10,"n_queries":${results.size},""" +
+      s""""n_failed":${results.size - ok.size},"cpus":$cpus,""" +
+      s""""pipeline_throughput_msgs_per_sec":$throughput,""" +
+      s""""sf":${Verify.jsonStr(sfDir)}}"""
+  }
+
+  // the one record writer: every record file lands relative to the
+  // working directory (the repo root under sbt's forked run and
+  // tools/run_main.sh); a failed write is reported, not swallowed
+  private def writeRecord(file: String, json: String): Unit =
+    try java.nio.file.Files.write(java.nio.file.Paths.get(file),
+      (json + "\n").getBytes("UTF-8"))
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] could not write $file: $e") }
+
   /** loadTest.js-shaped messages, pre-encoded in Confluent wire format. */
   private def wireMessages(spark: SparkSession, n: Long): DataFrame =
     spark.range(n).select(
@@ -151,13 +180,12 @@ object Bench {
               }
             }.toMap)
         }
-      } catch { case _: Throwable => None }
+      } catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] could not read $path: $e"); None }
     val prevTimings: Map[String, Double] = {
-      // per-SF file first, then LATEST (still SF-checked) — with the same
-      // repo-path + cwd fallback the WRITER uses, so the guard works
-      // anywhere the writer does
-      Seq(s"/root/repo/BENCH_FULL_$sfName.json", s"BENCH_FULL_$sfName.json",
-        "/root/repo/BENCH_FULL_LATEST.json", "BENCH_FULL_LATEST.json")
+      // per-SF file first, then LATEST (still SF-checked) — the paths
+      // the writer uses, so the guard works wherever the writer does
+      Seq(s"BENCH_FULL_$sfName.json", "BENCH_FULL_LATEST.json")
         .iterator
         .flatMap(p => parseSameSf(java.nio.file.Paths.get(p)))
         .nextOption()
@@ -171,12 +199,9 @@ object Bench {
     // its best gets the same one-more-fresh-run remedy, and whatever
     // remains above the bar is published as drift_vs_best so the
     // round-over-round story is auditable.
-    val bestPaths = Seq(s"/root/repo/BENCH_BEST_$sfName.json",
-      s"BENCH_BEST_$sfName.json")
-    val bestTimings: Map[String, Double] = bestPaths.iterator
-      .flatMap(p => parseSameSf(java.nio.file.Paths.get(p)))
-      .nextOption()
-      .getOrElse(Map.empty)
+    val bestPath = s"BENCH_BEST_$sfName.json"
+    val bestTimings: Map[String, Double] =
+      parseSameSf(java.nio.file.Paths.get(bestPath)).getOrElse(Map.empty)
     def above2x(hist: Map[String, Double])(name: String, v: Double): Boolean =
       v >= 0 && hist.get(name).exists(p => v > 2 * p)
     val retried = twoPass.collect { case (name, v)
@@ -224,18 +249,15 @@ object Bench {
     // before the summary and ~60% of timings scrolled off. The tail size
     // is unknowable from here, so this round we stop fighting it:
     //   (1) the COMPLETE record (every timing, throughput, sf) is
-    //       written to /root/repo/BENCH_FULL_LATEST.json — always
-    //       readable regardless of what stdout survives;
+    //       written to BENCH_FULL_LATEST.json — always readable
+    //       regardless of what stdout survives;
     //   (2) stdout ends with: packed timing chunks (SLOWEST queries in
     //       the final chunk, so the highest-signal numbers sit closest
     //       to the guaranteed-kept end) and then the <300-byte summary
     //       line LAST — inside any tail window, carrying the gates.
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val top10 = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + "\":" + math.round(v * 1000) / 1000.0 }
-      .mkString("{", ",", "}")
+    val summary = summaryJson(results, throughput, sfDir,
+      spark.sparkContext.defaultParallelism)
     def ms(v: Double): String = if (v < 0) "-1" else math.round(v * 1000).toString
-    val summary = s"""{"metric":"total_queries","value":$total,"unit":"sec","queries":$top10,"n_queries":${results.size},"pipeline_throughput_msgs_per_sec":$throughput,"sf":"$sfDir"}"""
 
     val allMs = results.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
@@ -250,16 +272,8 @@ object Bench {
         s""","throughput_samples":$samplesJson,"drift_retried":$retriedJson,"drift_vs_best":$driftBestJson,"timings_ms":$allMs}"""
       // LATEST = the shipping record; BENCH_FULL_<sf>.json = this SF's
       // drift-guard history, immune to runs at other SFs
-      Seq("BENCH_FULL_LATEST.json", s"BENCH_FULL_$sfName.json").foreach { f =>
-        try java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"/root/repo/$f"),
-          (fullJson + "\n").getBytes("UTF-8"))
-        catch { case _: Throwable =>
-          try java.nio.file.Files.write(
-            java.nio.file.Paths.get(f), (fullJson + "\n").getBytes("UTF-8"))
-          catch { case _: Throwable => () }
-        }
-      }
+      writeRecord("BENCH_FULL_LATEST.json", fullJson)
+      writeRecord(s"BENCH_FULL_$sfName.json", fullJson)
       // fold this run into the all-time best record (min per query)
       val newBest = (bestTimings.keySet ++ results.collect {
         case (k, v) if v >= 0 => k }.toSet).toSeq.sorted.map { k =>
@@ -269,36 +283,13 @@ object Bench {
       }
       val bestMs = newBest
         .map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
-      val bestJson =
-        s"""{"sf":"$sfDir","timings_ms":$bestMs}"""
-      // repo path first, cwd fallback — the FULL writer's discipline
-      bestPaths.foldLeft(false) { (done, f) =>
-        done || (try {
-          java.nio.file.Files.write(java.nio.file.Paths.get(f),
-            (bestJson + "\n").getBytes("UTF-8"))
-          true
-        } catch { case _: Throwable => false })
-      }
-      ()
-    }
-
-    // The driver parses the summary line from the process stdout tail.
-    // Two belts against harness parse failures (BENCH_r14–r17 all carry
-    // parsed:null): build.sbt now forwards forked run output UNPREFIXED
-    // (sbt's default logger wrapped every line in "[info] ", hiding the
-    // JSON), and the exact summary line additionally lands in a stable
-    // root-level file (full runs only — a SPARK_GRAFT_ONLY subset must
-    // not shadow the shipping record).
-    if (only.isEmpty) {
-      Seq("/root/repo/BENCH_SUMMARY.json", "BENCH_SUMMARY.json")
-        .foldLeft(false) { (done, f) =>
-          done || (try {
-            java.nio.file.Files.write(java.nio.file.Paths.get(f),
-              (summary + "\n").getBytes("UTF-8"))
-            true
-          } catch { case _: Throwable => false })
-        }
-      ()
+      writeRecord(bestPath,
+        s"""{"sf":${Verify.jsonStr(sfDir)},"timings_ms":$bestMs}""")
+      // the exact summary line also lands in a stable root-level file,
+      // for readers that cannot parse the stdout tail (sbt's logger
+      // once prefixed every forked line; build.sbt now forwards forked
+      // output unprefixed)
+      writeRecord("BENCH_SUMMARY.json", summary)
     }
 
     // slowest-last so a byte- or line-limited tail keeps the queries most
@@ -310,5 +301,6 @@ object Bench {
     }
     println(summary)
     spark.stop()
+    if (results.exists(_._2 < 0)) sys.exit(1)
   }
 }

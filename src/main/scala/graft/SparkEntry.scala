@@ -980,7 +980,7 @@ object SparkEntry {
         Store("table", s"$base/tbl",
           Map("idCol" -> "doc_id", "partitionCol" -> "p")))
       // delete → compact → audit-prove, fused into ONE concurrent store
-      // walk (semantically identical to forget(); compactAll();
+      // walk (on success the same end state as forget(); compactAll();
       // assertForgotten() — stores are independent — but without the two
       // global phase barriers: wall = slowest store's chain, and any
       // non-clean store still fails the query itself, not just the hash)

@@ -177,8 +177,7 @@ object Classifier {
       path: String): Unit = {
     nbRequireUniqueIds(docs, idCol, textCol, "nbModelWrite")
     CountStore.writeBase(docs.sparkSession, path,
-      nbModelTables(docs, idCol, textCol),
-      derived = Seq("stats" -> nbStatsFromMembers _))
+      nbModelTables(docs, idCol, textCol))
   }
 
   // intra-batch duplicate-id guard over the rows that actually
@@ -204,45 +203,32 @@ object Classifier {
     // text_md5 pins the EXACT ingested text: label/n_tokens alone would
     // pass a same-length same-label different-token text, whose
     // subtraction silently corrupts the counts.
-    // `def`, not `val`: the counts and members tables are written by
-    // CONCURRENT jobs (CountStore.writeBase/stageDelta), and a table
-    // built FROM another table's frame (stats was members.agg(...))
-    // makes both plans share the SAME expression instances —
+    // `def`, not `val`: the three tables are written by CONCURRENT
+    // jobs (CountStore's one table writer), and a table built FROM
+    // another table's frame (stats as members.agg(...) over ONE members
+    // frame) makes both plans share the SAME expression instances —
     // gopherPass's higher-order `aggregate` carries per-instance
     // mutable lambda-variable holders, so two driver-side optimizer
     // evaluations of the shared instance (ConvertToLocalRelation on
     // driver-local batches) raced and intermittently flipped a doc's
     // label in ONE of the plans (the NbUnlearnSpec prior-shift flake,
-    // reproduced ~1/45 with graft.tools.ReproNbFlake). A fresh
-    // projection per table keeps every stateful expression instance
-    // single-reader. (The stats table no longer scans the batch at
-    // all: it aggregates the WRITTEN members parquet —
-    // [[nbStatsFromMembers]] — one fewer tokenize+gopher pass per
-    // ingest face, and a parquet leaf shares nothing.)
+    // about 1 run in 45). A fresh projection per table (stats
+    // aggregates its OWN memberRows call) keeps every stateful
+    // expression instance single-reader; NbUnlearnSpec pins this
+    // structurally.
     def memberRows: DataFrame = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), T.gopherPass(col(textCol)).as("label"),
         size(T.normTokens(col(textCol))).cast("long").as("n_tokens"),
         md5(col(textCol).cast("binary")).as("text_md5"),
         s.cast("int").as("mult"))
-    Seq("counts" -> counts, "members" -> memberRows)
-  }
-
-  /** The per-batch `stats` row — (d_pos, d_neg) class doc counts —
-    * derived from the batch's WRITTEN `members` table instead of a
-    * third scan+tokenize pass over the input: members already carries
-    * (label, n_tokens, mult), and `mult` is the batch's sign on every
-    * row, so `sum(when(cond, mult))` is bit-identical to the old
-    * `sign * sum(when(cond, 1))` (exact integer arithmetic; the sum of
-    * an empty batch stays NULL in both forms).
-    */
-  private def nbStatsFromMembers(spark: SparkSession, dir: String)
-      : DataFrame =
-    spark.read.parquet(s"$dir/members")
-      .agg(sum(when(col("label") && col("n_tokens") > 0,
-          col("mult").cast("long")).otherwise(0L)).as("d_pos"),
-        sum(when(!col("label") && col("n_tokens") > 0,
-          col("mult").cast("long")).otherwise(0L)).as("d_neg"))
+    val stats = memberRows
+      .agg((s * sum(when(col("label") && col("n_tokens") > 0, 1L)
+          .otherwise(0L))).as("d_pos"),
+        (s * sum(when(!col("label") && col("n_tokens") > 0, 1L)
+          .otherwise(0L))).as("d_neg"))
       .repartition(1)
+    Seq("counts" -> counts, "members" -> memberRows, "stats" -> stats)
+  }
 
   /** Append a new doc batch to a [[nbModelWrite]] store: the batch's
     * counts/members/stats staged as one atomic `_COMMIT` delta. Ids
@@ -258,8 +244,7 @@ object Classifier {
     AtomicBatches.assertNotInMaintenance(spark, path, "nbModelAppend")
     AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
     nbRequireAppendable(newDocs, idCol, textCol, path, "nbModelAppend")
-    CountStore.stageDelta(spark, path, nbModelTables(newDocs, idCol, textCol),
-      derived = Seq("stats" -> nbStatsFromMembers _))
+    CountStore.stageDelta(spark, path, nbModelTables(newDocs, idCol, textCol))
   }
 
   /** REPLAY-SAFE ingestion face for stream-driven training — call from
@@ -287,8 +272,7 @@ object Classifier {
     nbRequireAppendable(newDocs, idCol, textCol, path,
       "nbModelAppendStream")
     CountStore.stageStreamDelta(spark, path, batchId,
-      nbModelTables(newDocs, idCol, textCol),
-      derived = Seq("stats" -> nbStatsFromMembers _))
+      nbModelTables(newDocs, idCol, textCol))
   }
 
   // BOTH append guards (intra-batch duplicates + fresh-ids ledger
@@ -380,8 +364,7 @@ object Classifier {
       if (empty) return
       CountStore.stageDelta(spark, path, nbModelTables(
         victims.select(col("id").as(idCol), col("__text").as(textCol)),
-        idCol, textCol, sign = -1),
-        derived = Seq("stats" -> nbStatsFromMembers _))
+        idCol, textCol, sign = -1))
     } finally
       org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(victims)
   }

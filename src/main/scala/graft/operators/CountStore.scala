@@ -91,53 +91,40 @@ private[graft] object CountStore {
     * base; now every face fails loudly until a rebuild completes.
     */
   def writeBase(spark: SparkSession, path: String,
-      tables: Seq[(String, DataFrame)],
-      derived: Seq[(String, (SparkSession, String) => DataFrame)] = Nil)
-      : Unit =
+      tables: Seq[(String, DataFrame)]): Unit =
     AtomicBatches.withRebuildMarker(spark, path) {
-      // the tables are independent outputs (write order never mattered —
-      // any crash inside the marker demands a full rebuild), so their
-      // write JOBS run concurrently: wall-clock = the widest table, not
-      // the sum of three (guide §2.6)
-      Takedown.inParallel(tables) { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$path/$name")
-      }
-      // DERIVED tables are aggregates of sibling tables written above —
-      // built by re-reading the landed parquet (the fn gets this batch's
-      // directory) instead of re-running their own pass over the input
-      // (nb's stats re-scanned + re-tokenized the whole batch to
-      // aggregate three columns the members table already carries).
-      // Still inside the rebuild marker: any crash point demands a full
-      // rebuild, exactly as between the concurrent writes above.
-      derived.foreach { case (name, fn) =>
-        fn(spark, path).write.mode("overwrite").parquet(s"$path/$name")
-      }
+      // write order never mattered here: any crash inside the marker
+      // demands a full rebuild
+      writeTables(path, tables)
       val fs = fsOf(spark, path)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/deltas"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/base_next"), true)
     }
 
-  /** Stage one atomic delta batch (several tables, one `_COMMIT`).
-    * `derived` tables are computed from the staged siblings (same
-    * contract as [[writeBase]]); the `_COMMIT` marker lands strictly
-    * after them, so the batch stays invisible until complete.
+  /** Stage one atomic delta batch (several tables, one `_COMMIT`). The
+    * marker lands strictly after every table, so the batch stays
+    * invisible until complete.
     */
   def stageDelta(spark: SparkSession, path: String,
-      tables: Seq[(String, DataFrame)],
-      derived: Seq[(String, (SparkSession, String) => DataFrame)] = Nil)
-      : Unit = {
+      tables: Seq[(String, DataFrame)]): Unit = {
     val bdir =
       s"$path/deltas/${AtomicBatches.nextBatchN(spark, s"$path/deltas")}"
-    // concurrent like writeBase: nothing reads the batch before its
-    // _COMMIT lands below, so intra-batch write order is free
-    Takedown.inParallel(tables) { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$bdir/$name")
-    }
-    derived.foreach { case (name, fn) =>
-      fn(spark, bdir).write.mode("overwrite").parquet(s"$bdir/$name")
-    }
+    writeTables(bdir, tables)
     AtomicBatches.commit(spark, bdir)
   }
+
+  /** The one table writer of every face: the tables of a base or a
+    * batch are independent outputs and nothing reads them before the
+    * caller's rebuild marker clears or its `_COMMIT` lands, so their
+    * write JOBS run concurrently — wall-clock = the widest table, not
+    * the sum. Each table must be its own plan (the
+    * [[Classifier.nbModelTables]] single-reader rule).
+    */
+  private def writeTables(dir: String,
+      tables: Seq[(String, DataFrame)]): Unit =
+    Takedown.inParallel(tables) { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$dir/$name")
+    }
 
   /** One table read across base + every committed delta batch. */
   def fold(spark: SparkSession, path: String, table: String): DataFrame = {
@@ -145,6 +132,16 @@ private[graft] object CountStore {
     spark.read.parquet(
       s"$path/$table" +: deltas.map(d => s"$d/$table"): _*)
   }
+
+  /** True when stream batch `batchId` already committed — the callers'
+    * replay check, placed BEFORE their ledger guards (a redelivered
+    * batch's own ids are legitimately in the ledger from the first
+    * delivery, so the guard would misfire on a replay).
+    */
+  def streamBatchCommitted(spark: SparkSession, path: String,
+      batchId: Long): Boolean =
+    fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(
+      s"$path/deltas/s$batchId/_COMMIT"))
 
   /** The REPLAY-SAFE staging face for stream-driven ingestion
     * (`foreachBatch` at-least-once delivery): a micro-batch that was
@@ -160,31 +157,14 @@ private[graft] object CountStore {
     *
     * Returns true when the batch was staged, false on a replay skip.
     */
-  /** True when stream batch `batchId` already committed — the callers'
-    * replay check, placed BEFORE their ledger guards (a redelivered
-    * batch's own ids are legitimately in the ledger from the first
-    * delivery, so the guard would misfire on a replay).
-    */
-  def streamBatchCommitted(spark: SparkSession, path: String,
-      batchId: Long): Boolean =
-    fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(
-      s"$path/deltas/s$batchId/_COMMIT"))
-
   def stageStreamDelta(spark: SparkSession, path: String, batchId: Long,
-      tables: Seq[(String, DataFrame)],
-      derived: Seq[(String, (SparkSession, String) => DataFrame)] = Nil)
-      : Boolean = {
+      tables: Seq[(String, DataFrame)]): Boolean = {
     require(batchId >= 0, "batchId must be non-negative")
     val fs = fsOf(spark, path)
     val bdir = s"$path/deltas/s$batchId"
     if (streamBatchCommitted(spark, path, batchId)) return false
     fs.delete(new org.apache.hadoop.fs.Path(bdir), true)
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$bdir/$name")
-    }
-    derived.foreach { case (name, fn) =>
-      fn(spark, bdir).write.mode("overwrite").parquet(s"$bdir/$name")
-    }
+    writeTables(bdir, tables)
     AtomicBatches.commit(spark, bdir)
     true
   }

@@ -521,31 +521,48 @@ object Takedown {
     val kind = kinds(st.kind)
     kind.invoke(v, idCol, textCol, st)
     if (kind.victimShape == "id_text" && nNullText > 0) {
-      val held = kind.present(spark, idCol, st)
-        .select(col("id").cast("long").as("id"))
-        .join(broadcast(nullTextIds), Seq("id"), "left_semi")
-      val r = held.agg(countDistinct(col("id")).as("n"),
-        slice(sort_array(collect_set(col("id"))), 1, 5).as("s"))
-        .head()
-      if (r.getLong(0) > 0) throw PartialTakedown(
-        s"${r.getLong(0)} victim id(s) arrived with NULL " +
+      val (n, sample) = probeRemaining(spark, st, idCol, nullTextIds)
+      if (n > 0) throw PartialTakedown(
+        s"$n victim id(s) arrived with NULL " +
         s"'$textCol' and are still present in this id_text store " +
-        s"(e.g. ${r.getSeq[Long](1).mkString(",")}) — re-run " +
+        s"(e.g. ${sample.mkString(",")}) — re-run " +
         "forget carrying their exact ingested text")
     }
     kind.deleteFace
   }
 
+  // the one takedown probe: how many of `ids` (one long `id` column)
+  // the store's own read-visibility rule still sees, with up to five of
+  // them in id order. Callers run it inside their per-store thunk, so
+  // every projection here is a fresh expression instance over the
+  // shared checkpointed leaf (the single-reader rule).
+  private def probeRemaining(spark: SparkSession, st: Store, idCol: String,
+      ids: DataFrame): (Long, Seq[Long]) = {
+    val r = kinds(st.kind).present(spark, idCol, st)
+      .select(col("id").cast("long").as("id"))
+      .join(broadcast(ids), Seq("id"), "left_semi")
+      .agg(countDistinct(col("id")).as("n"),
+        slice(sort_array(collect_set(col("id"))), 1, 5).as("sample"))
+      .head()
+    (r.getLong(0), r.getSeq[Long](1))
+  }
+
   /** [[forget]] + [[compactAll]] + [[assertForgotten]] fused into ONE
     * concurrent store walk: per store, delete → compact → audit-probe
     * run as one chain, stores in flight on the shared bounded pool.
-    * Semantically identical to calling the three entry points in
-    * sequence (stores are independent — distinct validated roots — and
-    * each phase of one store only reads/writes that store); the fusion
-    * removes the two GLOBAL barriers, so the wall-clock is the slowest
-    * store's whole chain instead of Σ (slowest store per phase), and a
-    * fast store's compaction back-fills executor slots while a slow
-    * store is still deleting (guide §2.6).
+    * When every store succeeds, the end state and the per-store
+    * verdicts equal calling the three entry points in sequence (stores
+    * are independent — distinct validated roots — and each phase of one
+    * store only reads/writes that store). On a failure the two differ:
+    * the phased sequence stops at the first failed PHASE (a failed
+    * delete on one store means no store compacts), while the fused walk
+    * still compacts and audits every store whose own chain is healthy —
+    * strictly more work, all of it idempotent, so a re-run converges to
+    * the same state either way. The fusion removes the two GLOBAL
+    * barriers, so the wall-clock is the slowest store's whole chain
+    * instead of Σ (slowest store per phase), and a fast store's
+    * compaction back-fills executor slots while a slow store is still
+    * deleting.
     *
     * Same attempt-all + loud-failure contract: every store runs its
     * full chain even when another failed; outcomes are reported per
@@ -574,21 +591,14 @@ object Takedown {
           case Some(c) => c(spark, st); true
           case None => false
         }
-        // the audit probe, inline: the store's own read-visibility rule
-        // must no longer see any requested id — post-compact, so `held`
-        // means the takedown is NOT proven for this store. Projections
-        // are built inside this thunk (fresh expression instances over
-        // the checkpointed victim leaf — the single-reader rule).
-        val rem = kinds(st.kind).present(spark, idCol, st)
-          .select(col("id").cast("long").as("id"))
-          .join(broadcast(v.select(col(idCol).cast("long").as("id"))),
-            Seq("id"), "left_semi")
-        val r = rem.agg(countDistinct(col("id")).as("n"),
-          slice(sort_array(collect_set(col("id"))), 1, 5).as("sample"))
-          .head()
-        if (r.getLong(0) > 0) throw HeldAfterTakedown(
-          s"${r.getLong(0)} requested id(s) still visible after delete" +
-          s" + compact (e.g. ${r.getSeq[Long](1).mkString(",")})")
+        // the audit probe: the store's own read-visibility rule must no
+        // longer see any requested id — post-compact, so `held` means
+        // the takedown is NOT proven for this store
+        val (n, sample) = probeRemaining(spark, st, idCol,
+          v.select(col(idCol).cast("long").as("id")))
+        if (n > 0) throw HeldAfterTakedown(
+          s"$n requested id(s) still visible after delete" +
+          s" + compact (e.g. ${sample.mkString(",")})")
         s"$detail + ${if (compacted) "compacted" else "no compaction face"}" +
           " + audit clean"
       }
@@ -645,16 +655,9 @@ object Takedown {
     try {
       val outcomes = inParallel(stores) { st =>
         try {
-          val rem = kinds(st.kind).present(spark, idCol, st)
-            .select(col("id").cast("long").as("id"))
-            .join(broadcast(v), Seq("id"), "left_semi")
-          val r = rem.agg(
-            countDistinct(col("id")).as("n"),
-            slice(sort_array(collect_set(col("id"))), 1, 5).as("sample"))
-            .head()
-          val n = r.getLong(0)
+          val (n, sample) = probeRemaining(spark, st, idCol, v)
           (st.kind, st.path, if (n == 0) "clean" else "held", n,
-            r.getSeq[Long](1).mkString(","))
+            sample.mkString(","))
         } catch {
           case e: Exception =>
             (st.kind, st.path, "failed", -1L,

@@ -1,0 +1,28 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.matchers.should.Matchers
+
+/** Bench's summary line is the run's gate record: a query that throws
+  * is timed as `-1.0` and left out of the total, so the line must COUNT
+  * it — otherwise a failing query makes the total look faster.
+  */
+class BenchSummarySpec extends AnyFunSuite with Matchers {
+
+  test("summaryJson counts a failed query and parses as strict JSON") {
+    val json = Bench.summaryJson(
+      Seq("q_ok" -> 1.5, "q_boom" -> -1.0, "q \"odd\"\tname" -> 0.25),
+      throughput = 1234.5, sfDir = "/data/sf\"0.1", cpus = 4)
+    // strict JSON (jackson ships on the Spark classpath)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    m.get("n_failed").asInt() shouldBe 1
+    m.get("n_queries").asInt() shouldBe 3
+    m.get("cpus").asInt() shouldBe 4
+    // the failed query is in neither the total nor the top ten
+    m.get("value").asDouble() shouldBe 1.75
+    m.get("queries").has("q_boom") shouldBe false
+    m.get("queries").get("q \"odd\"\tname").asDouble() shouldBe 0.25
+    m.get("pipeline_throughput_msgs_per_sec").asDouble() shouldBe 1234.5
+    m.get("sf").asText() shouldBe "/data/sf\"0.1"
+  }
+}

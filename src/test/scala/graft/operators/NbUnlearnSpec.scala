@@ -324,38 +324,43 @@ class NbUnlearnSpec extends SparkSpec {
 
   test("staged model tables share no stateful expression instances") {
     // the write faces stage counts/members/stats with CONCURRENT jobs
-    // (CountStore.writeBase/stageDelta); two plans holding the SAME
+    // (CountStore's one table writer); two plans holding the SAME
     // higher-order-function instance race on its mutable lambda-variable
     // holders during concurrent driver-side optimizer evaluation — the
-    // intermittent label flip graft.tools.ReproNbFlake reproduced
-    // (stats built as members.agg shared gopherPass's `aggregate`).
+    // intermittent label flip this test pins (stats built as
+    // members.agg shared gopherPass's `aggregate`; about 1 run in 45).
     // Pin the fix structurally: every stateful expression instance in
-    // the staged plans must have exactly ONE reading plan.
+    // the staged plans must have exactly ONE reading plan — for the
+    // ingest faces (sign = +1) and the delete face (sign = -1).
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
-    val tables = Classifier.nbModelTables(corpus, "doc_id", "text")
-    val perTable = tables.map { case (name, df) =>
-      val set = java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[HigherOrderFunction, java.lang.Boolean]())
-      // the ANALYZED plan: that is the tree Dataset-to-Dataset
-      // composition embeds by reference (stats = members.agg built on
-      // members' analyzed instances — the sharing that raced), and the
-      // raw .logical plan still holds unresolved builder nodes
-      df.queryExecution.analyzed.foreach(_.expressions.foreach(_.foreach {
-        case h: HigherOrderFunction => set.add(h)
-        case _ =>
-      }))
-      name -> set
-    }
-    perTable.foreach { case (_, s) => s.isEmpty shouldBe false } // non-vacuous
     import scala.jdk.CollectionConverters._
-    perTable.combinations(2).foreach { case Seq((na, a), (nb, b)) =>
-      // intersect by IDENTITY (b is IdentityHashMap-backed): Catalyst
-      // expressions are structurally equal across fresh builds — that
-      // sharing is fine; only same-INSTANCE sharing races
-      val shared = a.asScala.filter(b.contains)
-      shared.foreach(h => info(s"SHARED $na/$nb: ${h.getClass.getName} ${h.toString.take(120)}"))
-      withClue(s"tables $na and $nb share a stateful expression instance: ") {
-        shared.isEmpty shouldBe true
+    for (sign <- Seq(1, -1)) {
+      val tables = Classifier.nbModelTables(corpus, "doc_id", "text", sign)
+      tables.map(_._1) should contain allOf ("counts", "members", "stats")
+      val perTable = tables.map { case (name, df) =>
+        val set = java.util.Collections.newSetFromMap(
+          new java.util.IdentityHashMap[HigherOrderFunction, java.lang.Boolean]())
+        // the ANALYZED plan: that is the tree Dataset-to-Dataset
+        // composition embeds by reference (stats = members.agg built on
+        // members' analyzed instances — the sharing that raced), and the
+        // raw .logical plan still holds unresolved builder nodes
+        df.queryExecution.analyzed.foreach(_.expressions.foreach(_.foreach {
+          case h: HigherOrderFunction => set.add(h)
+          case _ =>
+        }))
+        name -> set
+      }
+      perTable.foreach { case (_, s) => s.isEmpty shouldBe false } // non-vacuous
+      perTable.combinations(2).foreach { case Seq((na, a), (nb, b)) =>
+        // intersect by IDENTITY (b is IdentityHashMap-backed): Catalyst
+        // expressions are structurally equal across fresh builds — that
+        // sharing is fine; only same-INSTANCE sharing races
+        val shared = a.asScala.filter(b.contains)
+        shared.foreach(h => info(s"SHARED $na/$nb: ${h.getClass.getName} ${h.toString.take(120)}"))
+        withClue(s"sign $sign: tables $na and $nb share a stateful " +
+            "expression instance: ") {
+          shared.isEmpty shouldBe true
+        }
       }
     }
   }

@@ -16,6 +16,9 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# record files (Bench's BENCH_*.json) land relative to the working
+# directory: run from the repo root, as sbt's forked run does
+cd "$REPO"
 exec java $ADD_OPENS \
   -Dspark.ui.enabled="${SPARK_UI_ENABLED:-false}" \
   -Dspark.sql.session.timeZone=UTC \
