@@ -85,6 +85,23 @@ object Bench {
     n / sec
   }
 
+  /** The per-query seconds of one bench record (`BENCH_FULL_*.json` or
+    * `BENCH_BEST_*.json` text) when it was taken at `sfDir`, else None.
+    * Failed (`-1`) entries are dropped. A JSON read, so an SF path the
+    * writer escaped ([[Verify.jsonStr]]) still matches its own history;
+    * a malformed record throws (an `IOException`).
+    */
+  private[graft] def timingsAtSf(record: String,
+      sfDir: String): Option[Map[String, Double]] = {
+    import scala.jdk.CollectionConverters._
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(record)
+    val timings = root.path("timings_ms")
+    if (root.path("sf").asText(null) != sfDir || !timings.isObject) None
+    else Some(timings.properties().asScala.map(e =>
+        e.getKey -> e.getValue.asDouble(-1) / 1000.0)
+      .filter(_._2 > 0).toMap)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -164,22 +181,8 @@ object Bench {
     def parseSameSf(path: java.nio.file.Path): Option[Map[String, Double]] =
       try {
         if (!java.nio.file.Files.isReadable(path)) None
-        else {
-          val txt = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-          val sameSf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt)
-            .exists(_.group(1) == sfDir)
-          if (!sameSf) None
-          else "\"timings_ms\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(txt)
-            .map(_.group(1).split(",").toSeq.flatMap { kv =>
-              kv.split(":") match {
-                case Array(k, v) =>
-                  scala.util.Try(
-                    k.replaceAll("[\"\\s]", "") -> v.trim.toDouble / 1000.0)
-                    .toOption.filter(_._2 > 0)
-                case _ => None
-              }
-            }.toMap)
-        }
+        else timingsAtSf(
+          new String(java.nio.file.Files.readAllBytes(path), "UTF-8"), sfDir)
       } catch { case e: java.io.IOException =>
         System.err.println(s"[bench] could not read $path: $e"); None }
     val prevTimings: Map[String, Double] = {
@@ -260,7 +263,7 @@ object Bench {
     def ms(v: Double): String = if (v < 0) "-1" else math.round(v * 1000).toString
 
     val allMs = results.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => Verify.jsonStr(k) + ":" + ms(v) }.mkString("{", ",", "}")
     // FULL runs only: a SPARK_GRAFT_ONLY subset run must not clobber the
     // complete record with a partial one
     if (only.isEmpty) {
@@ -282,7 +285,7 @@ object Bench {
         k -> cand.min
       }
       val bestMs = newBest
-        .map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
+        .map { case (k, v) => Verify.jsonStr(k) + ":" + ms(v) }.mkString("{", ",", "}")
       writeRecord(bestPath,
         s"""{"sf":${Verify.jsonStr(sfDir)},"timings_ms":$bestMs}""")
       // the exact summary line also lands in a stable root-level file,
@@ -295,7 +298,7 @@ object Bench {
     // slowest-last so a byte- or line-limited tail keeps the queries most
     // worth comparing round-over-round
     val packed = results.sortBy(_._2)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }.grouped(30).toSeq
+      .map { case (k, v) => Verify.jsonStr(k) + ":" + ms(v) }.grouped(30).toSeq
     packed.zipWithIndex.foreach { case (chunk, i) =>
       println(s"""{"timings_ms_${i + 1}of${packed.size}":${chunk.mkString("{", ",", "}")}}""")
     }

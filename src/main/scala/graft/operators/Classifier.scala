@@ -154,24 +154,15 @@ object Classifier {
     *
     *  - `counts` — (term, c_pos, c_neg): per-term class token counts,
     *    vocabulary-sized.
-    *  - `members` — (id, label, n_tokens, text_md5, mult): one
-    *    `mult = +1` row per trained doc with non-null text. The
-    *    membership ledger a delete verifies against (and the append
-    *    guard probes); `text_md5` pins the EXACT ingested text so a
-    *    drifted re-submission fails loudly instead of silently
-    *    corrupting the counts (label/n_tokens alone would pass a
-    *    same-length same-label different-token text). Deletes add
-    *    `mult = −1` rows; presence = Σ mult > 0.
+    *  - `members` — (id, label, n_tokens, text_md5, mult): the
+    *    membership ledger, keyed by id ([[nbLedger]]).
     *  - `stats` — one (d_pos, d_neg) row per batch: class doc counts
     *    (docs with ≥ 1 token, the [[nbTrain]] contract).
     *
-    * Updates stage under `deltas/<n>/` and become visible atomically
-    * via the shared `_COMMIT` protocol ([[AtomicBatches]]); scoring
-    * folds base + committed deltas by exact integer sums, so batch
-    * order is invisible. [[nbModelCompact]] makes removals physical. A
-    * rebuild (this method) supersedes pending deltas and an interrupted
-    * compaction — channel retired and marker cleared only AFTER the new
-    * base landed, the bm25IndexWrite discipline.
+    * The store protocol — atomic delta batches, the ledger's guards and
+    * present rule, staged-swap compaction, and a rebuild (this method)
+    * superseding pending deltas and an interrupted compaction — is
+    * [[CountStore]]'s.
     */
   def nbModelWrite(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
@@ -187,6 +178,11 @@ object Classifier {
     CountStore.requireUniqueBatchKeys(
       docs.filter(col(textCol).isNotNull).select(col(idCol).as("id")),
       Seq("id"), face)
+
+  // the store's ledger layout: keyed by id; the compaction fold carries
+  // each doc's class, token count and pinned text digest
+  private val nbLedger = CountStore.Ledger(Seq("id"),
+    Seq("label", "n_tokens", "text_md5"), "nbModel")
 
   // the three model tables of one doc batch, with `sign` applied to
   // every additive quantity — the ONE place the store's arithmetic
@@ -233,17 +229,16 @@ object Classifier {
   /** Append a new doc batch to a [[nbModelWrite]] store: the batch's
     * counts/members/stats staged as one atomic `_COMMIT` delta. Ids
     * must be NEW — an id currently or formerly in the model fails
-    * loudly (the formerly case until a compact retires its ledger
-    * rows): re-ingesting a changed doc under the same id would leave
-    * the counts describing neither version, and the ledger could no
-    * longer say what to subtract on a later takedown.
+    * loudly until a compact retires its ledger rows
+    * ([[CountStore.requireFresh]]).
     */
   def nbModelAppend(newDocs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val spark = newDocs.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path, "nbModelAppend")
     AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
-    nbRequireAppendable(newDocs, idCol, textCol, path, "nbModelAppend")
+    CountStore.requireFresh(nbLedger, newDocs, idCol, textCol, path,
+      "nbModelAppend")
     CountStore.stageDelta(spark, path, nbModelTables(newDocs, idCol, textCol))
   }
 
@@ -269,42 +264,10 @@ object Classifier {
     val spark = newDocs.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path, "nbModelAppendStream")
     if (CountStore.streamBatchCommitted(spark, path, batchId)) return false
-    nbRequireAppendable(newDocs, idCol, textCol, path,
+    CountStore.requireFresh(nbLedger, newDocs, idCol, textCol, path,
       "nbModelAppendStream")
     CountStore.stageStreamDelta(spark, path, batchId,
       nbModelTables(newDocs, idCol, textCol))
-  }
-
-  // BOTH append guards (intra-batch duplicates + fresh-ids ledger
-  // probe) in ONE bounded collect: a tagged union of the two probe
-  // frames. One driver round trip instead of two, and one PLAN — the
-  // probes share the caller's batch frame, and a single plan keeps
-  // every stateful expression instance single-reader (the
-  // nbModelTables rule; two concurrently-optimized plans sharing the
-  // caller's instances would reintroduce the race it fixed). The
-  // ledger side still broadcasts the BOUNDED batch ids — the other
-  // direction would broadcast a corpus-sized id set.
-  private def nbRequireAppendable(newDocs: DataFrame, idCol: String,
-      textCol: String, path: String, face: String): Unit = {
-    val dup = CountStore.uniqueKeyViolations(
-        newDocs.filter(col(textCol).isNotNull).select(col(idCol).as("id")),
-        Seq("id")).limit(5)
-      .select(lit("dup").as("__k"), col("__key").as("__v"))
-    val clash = nbMembers(newDocs.sparkSession, path).select("id")
-      .join(broadcast(newDocs.select(col(idCol).as("id")).distinct()),
-        Seq("id"), "left_semi")
-      .limit(5)
-      .select(lit("clash").as("__k"), col("id").cast("string").as("__v"))
-    val viol = dup.unionByName(clash).collect()
-    CountStore.raiseDuplicateKeys(face, Seq("id"),
-      viol.filter(_.getString(0) == "dup").map(_.getString(1)).toSeq)
-    val clashes = viol.filter(_.getString(0) == "clash").map(_.getString(1))
-    require(clashes.isEmpty,
-      s"$face to $path includes ids already in the model's " +
-      s"membership ledger (e.g. ${clashes.mkString(", ")}): re-ingesting " +
-      "an id would corrupt the counts (and a formerly-deleted id's " +
-      "ledger rows are retired only by nbModelCompact). Compact first, " +
-      "or rebuild with nbModelWrite.")
   }
 
   /** DELETE (takedown / exact unlearning) face: subtract the victims'
@@ -314,76 +277,23 @@ object Classifier {
     * ([[nbModelAsLlr]] folds exact integer counts through [[nbTrain]]'s
     * expressions; per-doc score sums then agree with a retrain at the
     * driver oracle's round-6 contract — double-sum order is the only
-    * thing Spark doesn't pin). O(victim-size): nothing vocabulary- or
-    * corpus-sized is scanned beyond one column-pruned membership probe.
-    *
-    * The victims' counts are recomputed from the submitted text
-    * (tokenization is deterministic), which is VERIFIED against the
-    * ledger's pinned text digest — a victim whose submitted text is
-    * not byte-for-byte what was ingested fails loudly: subtracting
-    * drifted counts would silently corrupt the model for every future
-    * score.
-    * Ids not currently in the model (never added, or already deleted)
-    * are skipped — double-deleting must not double-subtract, the
-    * bm25IndexDelete rule.
+    * thing Spark doesn't pin). The victims' counts are recomputed from
+    * the submitted text (tokenization is deterministic); the drift
+    * check, the skip of absent ids and the staging are
+    * [[CountStore.stageDelete]]'s.
     */
   def nbModelDelete(victimDocs: DataFrame, idCol: String,
-      textCol: String, path: String): Unit = {
-    val spark = victimDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "nbModelDelete")
-    AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
-    // ONE ledger pass: the inner join both restricts to present ids and
-    // carries the pinned digest for the drift check (two passes — a
-    // semi-join then a re-join — would scan the corpus-sized ledger
-    // twice per takedown)
-    val present = nbMembers(spark, path).groupBy("id")
-      .agg(sum(col("mult")).as("__m"), max(col("text_md5")).as("__md5"))
-      .filter(col("__m") > 0)
-      .select("id", "__md5")
-    val victims = victimDocs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
-      .dropDuplicates("id")
-      .join(present, Seq("id"))
-      .localCheckpoint(true) // drift check + three delta tables read it
-    try {
-      // the emptiness probe and the drift check are independent actions
-      // on the checkpointed victims frame — one concurrent round trip
-      @volatile var empty = false
-      @volatile var drift: Array[Any] = Array.empty
-      Takedown.inParallel(Seq[() => Unit](
-        () => empty = victims.isEmpty,
-        () => drift = victims
-          .filter(md5(col("__text").cast("binary")) =!= col("__md5"))
-          .select("id").limit(5).collect().map(_.get(0))))(_.apply())
-      require(drift.isEmpty,
-        s"nbModelDelete on $path: submitted text for ids " +
-        s"${drift.mkString(", ")} does not match what was ingested " +
-        "(text digest differs) — subtracting drifted counts would " +
-        "silently corrupt the model. Submit the ingested text, " +
-        "or rebuild with nbModelWrite over the surviving corpus.")
-      if (empty) return
-      CountStore.stageDelta(spark, path, nbModelTables(
-        victims.select(col("id").as(idCol), col("__text").as(textCol)),
-        idCol, textCol, sign = -1))
-    } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(victims)
-  }
-
-  private def nbMembers(spark: SparkSession, path: String): DataFrame =
-    CountStore.fold(spark, path, "members")
+      textCol: String, path: String): Unit =
+    CountStore.stageDelete(nbLedger, victimDocs, idCol, textCol, path)(
+      nbModelTables(_, idCol, textCol, sign = -1))
 
   /** AUDIT face: the ids whose counts still influence the model — one
-    * `id` column, lazily corpus-sized (compose with a semi-join; the
-    * [[graft.operators.Takedown.audit]] consumer does). A takedown is
-    * PROVEN here: an id [[nbModelDelete]] subtracted no longer appears,
-    * compacted or not.
+    * `id` column, lazily corpus-sized ([[CountStore.presentIds]], the
+    * [[graft.operators.Takedown.audit]] consumer's probe). An id
+    * [[nbModelDelete]] subtracted no longer appears, compacted or not.
     */
-  def nbModelPresentIds(spark: SparkSession, path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path, "nbModelPresentIds")
-    nbMembers(spark, path).groupBy("id")
-      .agg(sum(col("mult")).as("__m")).filter(col("__m") > 0)
-      .select("id")
-  }
+  def nbModelPresentIds(spark: SparkSession, path: String): DataFrame =
+    CountStore.presentIds(spark, path, nbLedger)
 
   /** The store's CURRENT model in [[nbTrain]]'s derived form — (term,
     * llr) rows plus the `term = NULL` prior row — from the folded
@@ -443,28 +353,17 @@ object Classifier {
     * `deltas/` channel — the physical-removal half of [[nbModelDelete]]
     * (victim evidence leaves the ledger; zero-count vocabulary rows
     * leave disk) and the read-cost bound for long histories. Crash
-    * safety, `_MAINT` exclusivity, and the takeover contract are the
-    * shared staged-swap protocol ([[CountStore.compactSwap]]).
+    * safety, `_MAINT` exclusivity, the takeover contract and the ledger
+    * fold are the shared staged-swap protocol ([[CountStore.compactSwap]]).
     */
   def nbModelCompact(spark: SparkSession, path: String,
       takeover: Boolean = false): Unit =
-    CountStore.compactSwap(spark, path, takeover,
-      Seq("counts", "members", "stats")) {
+    CountStore.compactSwap(spark, path, takeover, nbLedger,
+      Seq("counts", "stats")) {
       case "counts" =>
         CountStore.fold(spark, path, "counts").groupBy("term")
           .agg(sum(col("c_pos")).as("c_pos"), sum(col("c_neg")).as("c_neg"))
           .filter(col("c_pos") + col("c_neg") > 0)
-      case "members" =>
-        // a present id has exactly one +1 row and no −1 row after the
-        // fold (the append guard forbids re-ingestion), so max() just
-        // re-reads that row's pinned values
-        nbMembers(spark, path).groupBy("id")
-          .agg(sum(col("mult")).as("__m"),
-            max(col("label")).as("label"), max(col("n_tokens")).as("n_tokens"),
-            max(col("text_md5")).as("text_md5"))
-          .filter(col("__m") > 0)
-          .select(col("id"), col("label"), col("n_tokens"),
-            col("text_md5"), lit(1).as("mult"))
       case "stats" =>
         CountStore.fold(spark, path, "stats")
           .agg(coalesce(sum("d_pos"), lit(0L)).as("d_pos"),

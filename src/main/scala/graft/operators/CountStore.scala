@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max, md5, sum, when}
 
 /** The shared lifecycle of the COUNT-FORM model stores — persisted
   * models whose state is additive integer sufficient statistics, so an
@@ -10,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[Sampling.dsirStoreWrite]]'s DSIR importance model). One
   * implementation of the store protocol, so a hardening fix cannot
   * silently miss one of the stores (the [[AtomicBatches]] rationale,
-  * one level up):
+  * one level up). The stores own only their table builders and model
+  * readers; the protocol is:
   *
   *  - base tables overwritten by a rebuild, which also retires the
   *    delta channel and any maintenance marker — AFTER the new base
@@ -19,6 +21,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    via the `_COMMIT` marker ([[AtomicBatches]]); readers fold
   *    base + committed deltas by exact integer sums, so batch order is
   *    invisible,
+  *  - the membership ledger ([[Ledger]]): a `members` table with one
+  *    `mult = +1` row per ingested key with non-null text and one
+  *    `mult = −1` row per deleted key; a key is PRESENT while
+  *    Σ `mult` > 0. Its `text_md5` pins the exact ingested text, so
+  *    [[stageDelete]] refuses a drifted victim text (subtracting counts
+  *    recomputed from it would silently corrupt the model),
+  *    [[requireFresh]] refuses re-ingestion and divergent texts under
+  *    two keys of one id, [[presentIds]] is the audit probe, and
+  *    compaction folds the ledger to one +1 row per present key,
   *  - staged-swap compaction (the trianglesIndexCompact discipline):
   *    the fresh base is computed under `base_next/` and `_COMMIT`-marked
   *    BEFORE the swap touches anything readers use; a re-run
@@ -43,21 +54,22 @@ private[graft] object CountStore {
     * (write, append, stream-append) places this before building its
     * tables. One batch-sized aggregation; nothing corpus-sized moves.
     */
-  def requireUniqueBatchKeys(batch: org.apache.spark.sql.DataFrame,
+  def requireUniqueBatchKeys(batch: DataFrame,
       keyCols: Seq[String], face: String): Unit =
     raiseDuplicateKeys(face, keyCols,
       uniqueKeyViolations(batch, keyCols).limit(5).collect()
         .map(_.getString(0)))
 
   /** The duplicate-key probe of [[requireUniqueBatchKeys]] as a frame —
-    * one stringified key per violating group — so the append faces can
-    * fold it into a single tagged-union guard job with their other
-    * probes (one driver round trip, and one plan: a lone reader of the
-    * caller's expression instances — the nbModelTables rule).
+    * one stringified key per violating group — so [[requireFresh]] and
+    * DSIR's two-role write guard can fold it into a single tagged-union
+    * guard job with their other probes (one driver round trip, and one
+    * plan: a lone reader of the caller's expression instances — the
+    * nbModelTables rule).
     */
-  def uniqueKeyViolations(batch: org.apache.spark.sql.DataFrame,
-      keyCols: Seq[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, lit}
+  def uniqueKeyViolations(batch: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, concat_ws, count}
     batch.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
       // coalesce each component: concat_ws SKIPS nulls, so a duplicate
@@ -133,6 +145,156 @@ private[graft] object CountStore {
       s"$path/$table" +: deltas.map(d => s"$d/$table"): _*)
   }
 
+  /** A store's membership ledger layout: the `members` table's key
+    * columns (`id` first — DSIR adds `role`) and the per-key columns its
+    * compaction fold carries (`text_md5`, the pinned digest of the
+    * ingested text, among them). `faces` is the store's face-name prefix
+    * (`nbModel` → `nbModelWrite`, `nbModelDelete`, …), so the shared
+    * checks name the store's own faces in their errors.
+    */
+  final case class Ledger(keys: Seq[String], carried: Seq[String],
+      faces: String) {
+    require(keys.headOption.contains("id") && carried.contains("text_md5"),
+      "a ledger is keyed by id first and carries text_md5")
+  }
+
+  // the ONE present rule: a key influences the model while Σ mult > 0.
+  // `carried` re-reads the key's pinned +1 row via max() — a present key
+  // has exactly one +1 row and no −1 row, because the append guard
+  // refuses re-ingestion of any key the ledger still holds
+  private def present(spark: SparkSession, path: String, ledger: Ledger,
+      carried: Seq[String]): DataFrame =
+    fold(spark, path, "members").groupBy(ledger.keys.map(col): _*)
+      .agg(sum(col("mult")).as("__m"), carried.map(c => max(col(c)).as(c)): _*)
+      .filter(col("__m") > 0)
+      .select((ledger.keys ++ carried).map(col): _*)
+
+  /** AUDIT probe: the ids whose counts still influence the model under
+    * any key — one `id` column, lazily corpus-sized (compose with a
+    * semi-join; [[Takedown.audit]] does). A takedown is PROVEN here: an
+    * id [[stageDelete]] subtracted no longer appears, compacted or not.
+    */
+  def presentIds(spark: SparkSession, path: String,
+      ledger: Ledger): DataFrame = {
+    AtomicBatches.assertNotInMaintenance(spark, path,
+      s"${ledger.faces}PresentIds")
+    present(spark, path, ledger, Nil).select("id").distinct()
+  }
+
+  /** Loud guard for the append faces, run BEFORE anything is staged:
+    * the batch's non-null-text rows are keyed by `id` plus `keyValues`
+    * (one value per further ledger key column, e.g. DSIR's role), and
+    * the batch is refused when
+    *
+    *  - it holds one key twice ([[raiseDuplicateKeys]]),
+    *  - an id is in the ledger under the SAME key, currently or formerly
+    *    (until a compaction retires its rows): re-ingesting a changed
+    *    doc would leave the counts describing neither version, and the
+    *    ledger could no longer say what to subtract on a takedown,
+    *  - an id is in the ledger under ANY key with a DIFFERENT text
+    *    digest: a takedown subtracts one submitted text from every key
+    *    the id holds, so divergent texts would make the id undeletable.
+    *
+    * Both probes run as ONE bounded collect of a tagged union: one
+    * driver round trip, and one PLAN — the probes share the caller's
+    * batch frame, and a single plan keeps every stateful expression
+    * instance single-reader (the [[Classifier.nbModelTables]] rule).
+    * The ledger side broadcasts the BOUNDED batch; the other direction
+    * would broadcast a corpus-sized id set.
+    */
+  def requireFresh(ledger: Ledger, docs: DataFrame, idCol: String,
+      textCol: String, path: String, face: String,
+      keyValues: Column*): Unit = {
+    val extra = ledger.keys.tail
+    require(keyValues.size == extra.size,
+      s"$face: one key value per ledger key column ${extra.mkString(", ")}")
+    val batch = docs.filter(col(textCol).isNotNull).select(
+      (col(idCol).as("id") +:
+        keyValues.zip(extra).map { case (v, k) => v.as(k) }) :+
+        md5(col(textCol).cast("binary")).as("__bmd5"): _*)
+    val dup = uniqueKeyViolations(batch, ledger.keys).limit(5)
+      .select(lit("dup").as("__k"), col("__key").as("__v"))
+    val sameKey =
+      extra.map(k => col(k) === col(s"__b_$k")).foldLeft(lit(true))(_ && _)
+    val clash = fold(docs.sparkSession, path, "members")
+      .select((ledger.keys :+ "text_md5").map(col): _*)
+      .join(broadcast(batch.select((col("id") +:
+          extra.map(k => col(k).as(s"__b_$k"))) :+ col("__bmd5"): _*)
+        .dropDuplicates("id")), Seq("id"))
+      .filter(sameKey || col("text_md5") =!= col("__bmd5"))
+      .limit(5)
+      .select(when(sameKey, lit("same")).otherwise(lit("cross")).as("__k"),
+        col("id").cast("string").as("__v"))
+    val viol = dup.unionByName(clash).collect()
+    def tagged(k: String): Seq[String] =
+      viol.filter(_.getString(0) == k).map(_.getString(1)).toSeq
+    raiseDuplicateKeys(face, ledger.keys, tagged("dup"))
+    val same = tagged("same")
+    require(same.isEmpty,
+      s"$face to $path includes ids already in the model's membership " +
+      s"ledger (e.g. ${same.mkString(", ")}): re-ingesting an id already " +
+      s"in the ledger under the same ${ledger.keys.mkString("(", ", ", ")")} " +
+      "key would corrupt the counts (and a formerly-deleted id's ledger " +
+      s"rows are retired only by ${ledger.faces}Compact). Compact first, " +
+      s"or rebuild with ${ledger.faces}Write.")
+    val cross = tagged("cross")
+    require(cross.isEmpty,
+      s"$face to $path: ids ${cross.mkString(", ")} are in the ledger " +
+      s"under the other ${extra.mkString("/")} with DIFFERENT text — a " +
+      "takedown subtracts one submitted text from every key an id holds, " +
+      "so divergent texts would make these ids undeletable. Ingest " +
+      s"byte-identical text under every key, or rebuild with " +
+      s"${ledger.faces}Write.")
+  }
+
+  /** DELETE (takedown / exact unlearning) face: subtract the victims'
+    * counts, staged as one atomic `_COMMIT` delta. ONE ledger pass joins
+    * the victims (non-null text, one row per id) to their present keys
+    * and pinned `text_md5` — one row per (victim, held key), the frame
+    * `tables` receives as (`idCol`, `textCol`, further key columns) to
+    * build the store's tables with `sign = -1`. The submitted text is
+    * VERIFIED against the pinned digest byte for byte: a drifted text
+    * fails loudly, since its recomputed counts would silently corrupt
+    * the model. Ids not currently present (never added, or already
+    * deleted) are skipped — double-deleting must not double-subtract,
+    * the bm25IndexDelete rule. O(victim-size) beyond the column-pruned
+    * ledger pass.
+    */
+  def stageDelete(ledger: Ledger, victimDocs: DataFrame, idCol: String,
+      textCol: String, path: String)(
+      tables: DataFrame => Seq[(String, DataFrame)]): Unit = {
+    val spark = victimDocs.sparkSession
+    val face = s"${ledger.faces}Delete"
+    AtomicBatches.assertNotInMaintenance(spark, path, face)
+    AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
+    val victims = victimDocs.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), col(textCol).as("__text"))
+      .dropDuplicates("id")
+      .join(present(spark, path, ledger, Seq("text_md5")), Seq("id"))
+      .localCheckpoint(true) // drift check + every delta table read it
+    try {
+      // the emptiness probe and the drift check are independent actions
+      // on the checkpointed victims frame — one concurrent round trip
+      @volatile var empty = false
+      @volatile var drift: Array[Any] = Array.empty
+      Takedown.inParallel(Seq[() => Unit](
+        () => empty = victims.isEmpty,
+        () => drift = victims
+          .filter(md5(col("__text").cast("binary")) =!= col("text_md5"))
+          .select("id").limit(5).collect().map(_.get(0))))(_.apply())
+      require(drift.isEmpty,
+        s"$face on $path: submitted text for ids ${drift.mkString(", ")} " +
+        "does not match what was ingested (text digest differs) — " +
+        "subtracting drifted counts would silently corrupt the model. " +
+        s"Submit the ingested text, or rebuild with ${ledger.faces}Write " +
+        "over the surviving corpus.")
+      if (!empty) stageDelta(spark, path, tables(victims.select(
+        (col("id").as(idCol) +: col("__text").as(textCol) +:
+          ledger.keys.tail.map(col)): _*)))
+    } finally
+      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(victims)
+  }
+
   /** True when stream batch `batchId` already committed — the callers'
     * replay check, placed BEFORE their ledger guards (a redelivered
     * batch's own ids are legitimately in the ledger from the first
@@ -170,12 +332,16 @@ private[graft] object CountStore {
   }
 
   /** Staged-swap compaction: compute each named table's folded
-    * replacement via `fresh`, commit the stage, then idempotently swap
-    * it in and retire the delta channel. Tables NOT named (e.g. a
-    * frozen `meta`) are left untouched — deltas never carry them.
+    * replacement via `fresh` and the ledger's fold (one +1 row per
+    * present key, carrying the ledger's pinned columns) as `members`,
+    * commit the stage, then idempotently swap it in and retire the delta
+    * channel. Tables NOT named (e.g. a frozen `meta`) are left untouched
+    * — deltas never carry them.
     */
   def compactSwap(spark: SparkSession, path: String, takeover: Boolean,
-      tableNames: Seq[String])(fresh: String => DataFrame): Unit = {
+      ledger: Ledger, tableNames: Seq[String])(
+      fresh: String => DataFrame): Unit = {
+    val staged = tableNames :+ "members"
     val fs = fsOf(spark, path)
     val nextDir = s"$path/base_next"
     if (AtomicBatches.committedDirs(spark, s"$path/deltas").isEmpty &&
@@ -188,8 +354,12 @@ private[graft] object CountStore {
         fs.delete(new org.apache.hadoop.fs.Path(nextDir), true)
         // stage builds are independent folds; nothing reads the stage
         // before its _COMMIT below, so they run concurrently too
-        Takedown.inParallel(tableNames) { name =>
-          fresh(name).write.parquet(s"$nextDir/$name")
+        Takedown.inParallel(staged) { name =>
+          val df = if (name == "members")
+            present(spark, path, ledger, ledger.carried)
+              .withColumn("mult", lit(1))
+          else fresh(name)
+          df.write.parquet(s"$nextDir/$name")
         }
         AtomicBatches.commit(spark, nextDir)
       }
@@ -197,7 +367,7 @@ private[graft] object CountStore {
       // (rename-based — the stage is already the final folded form, so
       // re-writing it through parquet would pay the fold's I/O twice)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/deltas"), true)
-      AtomicBatches.swapCommittedStage(spark, path, nextDir, tableNames)
+      AtomicBatches.swapCommittedStage(spark, path, nextDir, staged)
     }
   }
 }

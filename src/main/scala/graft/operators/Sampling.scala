@@ -372,14 +372,14 @@ object Sampling {
     *    corrupts counts), frozen like the BM25 index's bucket count.
     *  - `counts` — (b, c_raw, c_target): per-bucket feature counts of
     *    the two corpora; at most `numBuckets` rows per batch.
-    *  - `members` — (id, role, n_feats, text_md5, mult): one
-    *    `mult = +1` row per ingested (doc, corpus-role) with non-null
-    *    text; `role` is "raw" or "target" (the same id may hold both —
-    *    target corpora are typically drawn from the raw pool, and the
-    *    append guard requires byte-identical text across roles so one
-    *    takedown text can verify against every held role). `text_md5`
-    *    pins the EXACT ingested text so a drifted re-submission fails
-    *    loudly.
+    *  - `members` — (id, role, n_feats, text_md5, mult): the
+    *    membership ledger, keyed by (id, role) ([[dsirLedger]]); `role`
+    *    is "raw" or "target" — the same id may hold both, since target
+    *    corpora are typically drawn from the raw pool.
+    *
+    * The store protocol — atomic delta batches, the ledger's guards and
+    * present rule, staged-swap compaction, rebuild discipline — is
+    * [[CountStore]]'s.
     *
     * The per-bucket totals stay exact through the double arithmetic:
     * every count is an integer, and integer-valued double sums below
@@ -406,41 +406,40 @@ object Sampling {
       CountStore.raiseDuplicateKeys(s"dsirStoreWrite($tag)", Seq("id"),
         viol.filter(_.getString(0) == tag).map(_.getString(1)).toSeq)
     }
-    val tables = dsirStoreTables(raw, idCol, textCol, numBuckets, "raw") ++
-      dsirStoreTables(target, idCol, textCol, numBuckets, "target")
-    val counts = tables.collect { case ("counts", df) => df }
-      .reduce(_ unionByName _)
-      .groupBy("b").agg(sum("c_raw").as("c_raw"),
-        sum("c_target").as("c_target"))
-    val members = tables.collect { case ("members", df) => df }
-      .reduce(_ unionByName _)
-    CountStore.writeBase(spark, path, Seq(
-      "counts" -> counts, "members" -> members,
-      "meta" -> spark.range(1).select(lit(numBuckets).as("num_buckets"))))
+    CountStore.writeBase(spark, path, dsirStoreTables(
+      Seq("raw" -> raw, "target" -> target), idCol, textCol, numBuckets) :+
+      ("meta" -> spark.range(1).select(lit(numBuckets).as("num_buckets"))))
   }
 
-  // the (counts, members) tables of one doc batch under one role, with
-  // `sign` applied to every additive quantity — the ONE place the
+  // the store's ledger layout: keyed by (id, role); the compaction fold
+  // carries each key's feature count and pinned text digest (n_feats
+  // alone would pass any same-token-count text)
+  private val dsirLedger = CountStore.Ledger(Seq("id", "role"),
+    Seq("n_feats", "text_md5"), "dsirStore")
+
+  // the (counts, members) tables of one batch of per-role doc frames,
+  // with `sign` applied to every additive quantity — the ONE place the
   // store's arithmetic lives (the nbModelTables discipline)
-  private def dsirStoreTables(docs: DataFrame, idCol: String,
-      textCol: String, numBuckets: Int, role: String,
+  private def dsirStoreTables(byRole: Seq[(String, DataFrame)],
+      idCol: String, textCol: String, numBuckets: Int,
       sign: Int = 1): Seq[(String, DataFrame)] = {
     import graft.functions.{TextFunctions => T}
     val s = lit(sign.toLong)
-    val counts = dsirFeats(docs, Seq.empty, textCol, numBuckets)
-      .groupBy(col("__b").as("b"))
-      .agg((s * count(lit(1))).as(if (role == "raw") "c_raw" else "c_target"))
-      .withColumn(if (role == "raw") "c_target" else "c_raw", lit(0L))
-      .select(col("b"), col("c_raw"), col("c_target"))
-    // text_md5 pins the EXACT ingested text (n_feats alone would pass
-    // any same-token-count text, whose subtraction silently corrupts
-    // the bucket counts — the nbModelTables rationale)
-    val members = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), lit(role).as("role"),
-        greatest(size(T.normTokens(col(textCol))) - 1, lit(0))
-          .cast("long").as("n_feats"),
-        md5(col(textCol).cast("binary")).as("text_md5"),
-        s.cast("int").as("mult"))
+    val counts = byRole.map { case (role, docs) =>
+        dsirFeats(docs, Seq.empty, textCol, numBuckets).select(
+          col("__b").as("b"), lit(if (role == "raw") 1L else 0L).as("c_raw"),
+          lit(if (role == "raw") 0L else 1L).as("c_target"))
+      }.reduce(_ unionByName _)
+      .groupBy("b").agg((s * sum("c_raw")).as("c_raw"),
+        (s * sum("c_target")).as("c_target"))
+    val members = byRole.map { case (role, docs) =>
+      docs.filter(col(textCol).isNotNull)
+        .select(col(idCol).as("id"), lit(role).as("role"),
+          greatest(size(T.normTokens(col(textCol))) - 1, lit(0))
+            .cast("long").as("n_feats"),
+          md5(col(textCol).cast("binary")).as("text_md5"),
+          s.cast("int").as("mult"))
+    }.reduce(_ unionByName _)
     Seq("counts" -> counts, "members" -> members)
   }
 
@@ -456,24 +455,17 @@ object Sampling {
 
   /** Append a new doc batch under `role` ("raw" or "target") — the
     * batch's counts/members staged as one atomic `_COMMIT` delta under
-    * the store's frozen hash width. (id, role) pairs must be NEW; a
-    * pair currently or formerly in the ledger fails loudly until a
-    * compact retires its rows (the nbModelAppend contract).
+    * the store's frozen hash width. (id, role) pairs must be NEW, and an
+    * id held under the other role must carry byte-identical text
+    * ([[CountStore.requireFresh]], the nbModelAppend contract).
     */
   def dsirStoreAppend(newDocs: DataFrame, idCol: String, textCol: String,
       path: String, role: String): Unit = {
     val spark = newDocs.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path, "dsirStoreAppend")
     AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
-    // the fused guard job and the one-row meta read are independent
-    // probes over DISJOINT trees — one concurrent round trip
-    @volatile var nb = 0
-    Takedown.inParallel(Seq[() => Unit](
-      () => dsirRequireAppendable(newDocs, idCol, textCol, path, role,
-        "dsirStoreAppend"),
-      () => nb = dsirStoreBuckets(spark, path)))(_.apply())
-    CountStore.stageDelta(spark, path, dsirStoreTables(
-      newDocs, idCol, textCol, nb, role))
+    CountStore.stageDelta(spark, path, dsirAppendTables(newDocs, idCol,
+      textCol, path, role, "dsirStoreAppend"))
   }
 
   /** REPLAY-SAFE ingestion face — the [[Classifier.nbModelAppendStream]]
@@ -489,139 +481,51 @@ object Sampling {
     val spark = newDocs.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path, "dsirStoreAppendStream")
     if (CountStore.streamBatchCommitted(spark, path, batchId)) return false
-    // concurrent like dsirStoreAppend: fused guard ∥ meta read
-    @volatile var nb = 0
-    Takedown.inParallel(Seq[() => Unit](
-      () => dsirRequireAppendable(newDocs, idCol, textCol, path, role,
-        "dsirStoreAppendStream"),
-      () => nb = dsirStoreBuckets(spark, path)))(_.apply())
-    CountStore.stageStreamDelta(spark, path, batchId, dsirStoreTables(
-      newDocs, idCol, textCol, nb, role))
+    CountStore.stageStreamDelta(spark, path, batchId, dsirAppendTables(
+      newDocs, idCol, textCol, path, role, "dsirStoreAppendStream"))
   }
 
-  // BOTH append guards in ONE bounded collect (the
-  // Classifier.nbRequireAppendable shape): a tagged union of the
-  // duplicate-id probe and the ledger probe — one driver round trip,
-  // and one PLAN, so the probes' shared batch frame keeps every
-  // stateful expression instance single-reader (the nbModelTables
-  // rule). The ledger pass still broadcasts the BOUNDED batch (the
-  // other direction would broadcast a corpus-sized id set) and serves
-  // both ledger guards: same-role re-ingestion, and cross-role text
-  // drift — a takedown subtracts ONE submitted text from every held
-  // role, so an id ingested under the other role with different text
-  // would become undeletable (each text failing the other role's
-  // pinned digest)
-  private def dsirRequireAppendable(newDocs: DataFrame, idCol: String,
-      textCol: String, path: String, role: String, face: String): Unit = {
+  // the append faces' guard and delta tables: the fused ledger guard job
+  // and the one-row meta read are independent probes over DISJOINT trees
+  // — one concurrent round trip
+  private def dsirAppendTables(newDocs: DataFrame, idCol: String,
+      textCol: String, path: String, role: String,
+      face: String): Seq[(String, DataFrame)] = {
     require(role == "raw" || role == "target", "role is 'raw' or 'target'")
-    val dup = CountStore.uniqueKeyViolations(
-        newDocs.filter(col(textCol).isNotNull).select(col(idCol).as("id")),
-        Seq("id")).limit(5)
-      .select(lit("dup").as("__k"), col("__key").as("__v"))
-    val batch = broadcast(newDocs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        md5(col(textCol).cast("binary")).as("__bmd5"))
-      .dropDuplicates("id"))
-    val fresh = CountStore.fold(newDocs.sparkSession, path, "members")
-      .select(col("id"), col("role"), col("text_md5"))
-      .join(batch, Seq("id"))
-      .filter(col("role") === lit(role) || col("text_md5") =!= col("__bmd5"))
-      .limit(5)
-      .select(when(col("role") === lit(role), lit("same"))
-        .otherwise(lit("cross")).as("__k"),
-        col("id").cast("string").as("__v"))
-    val viol = dup.unionByName(fresh).collect()
-    CountStore.raiseDuplicateKeys(s"$face($role)", Seq("id"),
-      viol.filter(_.getString(0) == "dup").map(_.getString(1)).toSeq)
-    val same = viol.filter(_.getString(0) == "same").map(_.getString(1))
-    require(same.isEmpty,
-      s"$face($role) to $path includes ids already in the " +
-      s"ledger under that role (e.g. ${same.mkString(", ")}): " +
-      "re-ingesting would corrupt the counts (and a formerly-deleted " +
-      "id's ledger rows are retired only by dsirStoreCompact). Compact " +
-      "first, or rebuild with dsirStoreWrite.")
-    val cross = viol.filter(_.getString(0) == "cross").map(_.getString(1))
-    require(cross.isEmpty,
-      s"$face($role) to $path: ids ${cross.mkString(", ")} are in the " +
-      "ledger under the other role with DIFFERENT text — a takedown " +
-      "subtracts one submitted text from every held role, so divergent " +
-      "texts would make these ids undeletable. Ingest byte-identical " +
-      "text under both roles, or rebuild with dsirStoreWrite.")
+    @volatile var nb = 0
+    Takedown.inParallel(Seq[() => Unit](
+      () => CountStore.requireFresh(dsirLedger, newDocs, idCol, textCol,
+        path, s"$face($role)", lit(role)),
+      () => nb = dsirStoreBuckets(newDocs.sparkSession, path)))(_.apply())
+    dsirStoreTables(Seq(role -> newDocs), idCol, textCol, nb)
   }
 
   /** DELETE (takedown / exact unlearning) face: subtract the victims'
     * feature counts from EVERY role they hold — after which
     * [[dsirStoreModel]] is bit-identical to retraining on the corpora
     * without them. The victims' counts are recomputed from the
-    * submitted text, which is VERIFIED against the ledger's pinned
-    * `text_md5` (byte-for-byte — drift fails loudly, the nbModelDelete
-    * rule); ids not currently in the ledger are skipped
-    * (double-deleting must not double-subtract). O(victim-size).
+    * submitted text; the drift check against the pinned digest, the
+    * skip of absent ids and the staging are
+    * [[CountStore.stageDelete]]'s. O(victim-size).
     */
   def dsirStoreDelete(victimDocs: DataFrame, idCol: String,
-      textCol: String, path: String): Unit = {
-    val spark = victimDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "dsirStoreDelete")
-    AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
-    val present = CountStore.fold(spark, path, "members")
-      .groupBy("id", "role")
-      .agg(sum(col("mult")).as("__m"), max(col("text_md5")).as("__md5"))
-      .filter(col("__m") > 0)
-      .select("id", "role", "__md5")
-    val victims = victimDocs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
-      .dropDuplicates("id")
-      .join(present, Seq("id")) // one row per (victim, held role)
-      .localCheckpoint(true) // drift check + both delta tables read it
-    try {
-      // the emptiness probe and the drift check are independent actions
-      // on the checkpointed victims frame — one concurrent round trip
-      // (the nbModelDelete shape)
-      @volatile var empty = false
-      @volatile var drift: Array[Any] = Array.empty
-      Takedown.inParallel(Seq[() => Unit](
-        () => empty = victims.isEmpty,
-        () => drift = victims
-          .filter(md5(col("__text").cast("binary")) =!= col("__md5"))
-          .select("id").limit(5).collect().map(_.get(0))))(_.apply())
-      require(drift.isEmpty,
-        s"dsirStoreDelete on $path: submitted text for ids " +
-        s"${drift.mkString(", ")} does not match what was ingested " +
-        "(text digest differs) — subtracting drifted counts would " +
-        "silently corrupt the model. Submit the ingested text, or " +
-        "rebuild with dsirStoreWrite over the surviving corpora.")
-      if (empty) return
-      val nb = dsirStoreBuckets(spark, path)
-      val tables = Seq("raw", "target").flatMap { role =>
-        dsirStoreTables(
-          victims.filter(col("role") === role)
-            .select(col("id").as(idCol), col("__text").as(textCol)),
-          idCol, textCol, nb, role, sign = -1)
-      }
-      val counts = tables.collect { case ("counts", df) => df }
-        .reduce(_ unionByName _)
-        .groupBy("b").agg(sum("c_raw").as("c_raw"),
-          sum("c_target").as("c_target"))
-      val members = tables.collect { case ("members", df) => df }
-        .reduce(_ unionByName _)
-      CountStore.stageDelta(spark, path,
-        Seq("counts" -> counts, "members" -> members))
-    } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(victims)
-  }
+      textCol: String, path: String): Unit =
+    CountStore.stageDelete(dsirLedger, victimDocs, idCol, textCol, path) {
+      victims =>
+        dsirStoreTables(Seq("raw", "target").map(role =>
+            role -> victims.filter(col("role") === role)),
+          idCol, textCol, dsirStoreBuckets(victimDocs.sparkSession, path),
+          sign = -1)
+    }
 
   /** AUDIT face: the ids whose feature counts still influence the
-    * model under ANY role — one `id` column, lazily corpus-sized (the
-    * [[Classifier.nbModelPresentIds]] twin, consumed by
-    * [[graft.operators.Takedown.audit]]'s semi-join).
+    * model under ANY role — one `id` column, lazily corpus-sized
+    * ([[CountStore.presentIds]], the [[Classifier.nbModelPresentIds]]
+    * twin, consumed by [[graft.operators.Takedown.audit]]'s semi-join).
     */
   def dsirStorePresentIds(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path, "dsirStorePresentIds")
-    CountStore.fold(spark, path, "members").groupBy("id", "role")
-      .agg(sum(col("mult")).as("__m")).filter(col("__m") > 0)
-      .select("id").distinct()
-  }
+      path: String): DataFrame =
+    CountStore.presentIds(spark, path, dsirLedger)
 
   /** The store's CURRENT model in [[dsirTrain]]'s derived form — (b,
     * lr) rows plus the `b = NULL` default row — from the folded integer
@@ -679,25 +583,18 @@ object Sampling {
     * `deltas/` channel — the physical-removal half of
     * [[dsirStoreDelete]] (victim evidence leaves the ledger;
     * zero-count buckets leave disk). Crash safety, `_MAINT`
-    * exclusivity, and the takeover contract are the shared staged-swap
-    * protocol ([[CountStore.compactSwap]]); `meta` is frozen and never
-    * touched.
+    * exclusivity, the takeover contract and the ledger fold are the
+    * shared staged-swap protocol ([[CountStore.compactSwap]]); `meta` is
+    * frozen and never touched.
     */
   def dsirStoreCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    CountStore.compactSwap(spark, path, takeover,
-      Seq("counts", "members")) {
+    CountStore.compactSwap(spark, path, takeover, dsirLedger,
+      Seq("counts")) {
       case "counts" =>
         CountStore.fold(spark, path, "counts").groupBy("b")
           .agg(sum("c_raw").as("c_raw"), sum("c_target").as("c_target"))
           .filter(col("c_raw") =!= 0L || col("c_target") =!= 0L)
-      case "members" =>
-        CountStore.fold(spark, path, "members").groupBy("id", "role")
-          .agg(sum(col("mult")).as("__m"), max(col("n_feats")).as("n_feats"),
-            max(col("text_md5")).as("text_md5"))
-          .filter(col("__m") > 0)
-          .select(col("id"), col("role"), col("n_feats"),
-            col("text_md5"), lit(1).as("mult"))
     }
 
   /** Per-group quality cap — "keep at most `n` best docs per domain",

@@ -143,6 +143,10 @@ object ProfilePairGen {
     println(s"[profile] pairs enumerated  = ${nEnumerated.value}")
     println(s"[profile] pairs emitted     = ${nEmitted.value} (pre first-band dedup)")
     println(s"[profile] first-band only   = ${nFirstBand.value}")
+    println("[profile] (the four counters above are accumulators updated " +
+      "inside flatMapGroups: task retries and speculative attempts add " +
+      "again, so they are upper bounds; trust them only from a run with " +
+      "no failed or speculative tasks)")
     println(s"[profile] distinct pairs    = $nDistinct")
 
     // and the shipped kernel end-to-end for wall-time reference

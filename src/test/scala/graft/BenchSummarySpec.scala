@@ -25,4 +25,22 @@ class BenchSummarySpec extends AnyFunSuite with Matchers {
     m.get("pipeline_throughput_msgs_per_sec").asDouble() shouldBe 1234.5
     m.get("sf").asText() shouldBe "/data/sf\"0.1"
   }
+
+  test("history parse: an escaped SF path matches its own record") {
+    val sf = "/data/sf\"0.1\\x"
+    val record = s"""{"sf":${Verify.jsonStr(sf)},"timings_ms":{"q_a":1500,"q_b":250}}"""
+    Bench.timingsAtSf(record, sf) shouldBe Some(Map("q_a" -> 1.5, "q_b" -> 0.25))
+  }
+
+  test("history parse: a record at another SF is ignored") {
+    val record = """{"sf":"/data/sf0.01","timings_ms":{"q_a":1500}}"""
+    Bench.timingsAtSf(record, "/data/sf0.1") shouldBe None
+  }
+
+  test("history parse: failed (-1) entries are dropped") {
+    // a full record: the summary's own keys precede timings_ms
+    val record = """{"value":1.5,"queries":{"q_a":1.5},"sf":"/data/sf0.1",""" +
+      """"timings_ms":{"q_a":1500,"q_boom":-1}}"""
+    Bench.timingsAtSf(record, "/data/sf0.1") shouldBe Some(Map("q_a" -> 1.5))
+  }
 }

@@ -184,6 +184,52 @@ class DsirUnlearnSpec extends SparkSpec {
         "doc_id", "text", NB))
   }
 
+  test("re-ingesting a deleted (id, role) fails until a compact retires " +
+      "its ledger rows") {
+    val dir = tmp("reingest")
+    Sampling.dsirStoreWrite(corpus, target(corpus), "doc_id", "text", dir, NB)
+    val doc3 = corpus.filter(col("doc_id") === 3L)
+    // present (id, role): always an error
+    intercept[IllegalArgumentException] {
+      Sampling.dsirStoreAppend(doc3, "doc_id", "text", dir, role = "raw")
+    }.getMessage should include("already in the ledger")
+    Sampling.dsirStoreDelete(doc3, "doc_id", "text", dir)
+    // deleted: still an error (ledger rows pending) until compaction
+    intercept[IllegalArgumentException] {
+      Sampling.dsirStoreAppend(doc3, "doc_id", "text", dir, role = "raw")
+    }.getMessage should include("already in the ledger")
+    Sampling.dsirStoreCompact(spark, dir)
+    Sampling.dsirStoreAppend(doc3, "doc_id", "text", dir, role = "raw")
+    scores(Sampling.dsirStoreScore(corpus, "doc_id", "text", dir)) shouldBe
+      retrain(corpus)
+  }
+
+  test("uncommitted delta batches are invisible and swept") {
+    val dir = tmp("crash")
+    val head = corpus.filter(col("doc_id") < 5)
+    Sampling.dsirStoreWrite(head, target(corpus), "doc_id", "text", dir, NB)
+    val before = scores(Sampling.dsirStoreScore(head, "doc_id", "text", dir))
+    val tail = corpus.filter(col("doc_id") >= 5)
+    Sampling.dsirStoreAppend(tail, "doc_id", "text", dir, role = "raw")
+    // simulate a crash mid-stage: drop the batch's commit marker
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/deltas/0/_COMMIT"), false)
+    // neither its counts nor its ledger rows are visible
+    scores(Sampling.dsirStoreScore(head, "doc_id", "text", dir)) shouldBe
+      before
+    Sampling.dsirStorePresentIds(spark, dir)
+      .filter(col("id") >= 5L).count() shouldBe 0L
+    // the next append sweeps the crashed directory (reusing its number)
+    // and lands committed with full effect
+    Sampling.dsirStoreAppend(tail, "doc_id", "text", dir, role = "raw")
+    fs.exists(
+      new org.apache.hadoop.fs.Path(s"$dir/deltas/0/_COMMIT")) shouldBe true
+    fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deltas/1")) shouldBe false
+    scores(Sampling.dsirStoreScore(corpus, "doc_id", "text", dir)) shouldBe
+      retrain(corpus)
+  }
+
   test("stream append face: replayed micro-batches are no-ops") {
     val dir = tmp("stream")
     Sampling.dsirStoreWrite(corpus.filter(col("doc_id") < 5),
