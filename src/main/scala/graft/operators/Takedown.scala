@@ -365,7 +365,12 @@ object Takedown {
     "writeBase" ->
       ("CountStore's internal protocol face — reachable only through " +
        "nbModelWrite / dsirStoreWrite, which the nb_model / dsir kinds " +
-       "cover"))
+       "cover"),
+    "writeBatch" ->
+      ("BatchState's internal protocol face: the per-batch write of the " +
+       "StreamingOps continuous* stream stores and their compactions — " +
+       "reachable only through those faces, whose takedown-bearing " +
+       "state the cluster_state / cdc_state kinds cover"))
 
   /** Takedown contract for MODEL ARTIFACTS the USER persists (the
     * train-offline / score-online faces whose scaladoc invites

@@ -115,61 +115,35 @@ object StreamingOps {
     * MinHash index of everything ingested before it
     * ([[graft.operators.Dedup.minhashLshIncrementalFromIndex]]), appends
     * the resulting new-involving pairs, then appends its own index rows
-    * so later batches match against it. The corpus text is read exactly
-    * once, ever; the accumulated state is the (id, band, sig, shingles)
-    * index on disk — restart-safe and corpus-sized on storage, never in
-    * executor memory.
+    * so later batches match against them — the shared probe-and-append
+    * loop of [[continuousClusteredDedup]], without the labels. The corpus
+    * text is read exactly once, ever; the accumulated state is the
+    * (id, band, sig, shingles) index on disk — restart-safe and
+    * corpus-sized on storage, never in executor memory.
     *
-    * Both writes are partitioned by batch id with dynamic partition
-    * overwrite, so a replayed batch (at-least-once foreachBatch)
-    * replaces its own partition instead of duplicating rows —
+    * Both writes replace their own `batch_id` partition
+    * ([[BatchState]]), so a replayed batch (at-least-once foreachBatch)
+    * replaces its first attempt instead of duplicating rows —
     * effectively exactly-once output.
     */
   def continuousNearDup(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, pairsPath: String, checkpoint: String,
       numHashes: Int = 16, bands: Int = 8, shingleN: Int = 5,
-      threshold: Double = 0.5, estimateSlack: Double = 0.25): DataStreamWriter[Row] = {
-    import graft.operators.Dedup
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // persist (not localCheckpoint): compute the batch index once for
-        // both the probe and the index write, with a handle we can release
-        // — checkpointed blocks would accumulate on executors for the
-        // stream's lifetime
-        val newIdx = Dedup.minhashIndex(batch.toDF(), idCol, textCol,
-          numHashes, bands, shingleN)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          newIdx.count() // eager, like localCheckpoint(true) was
-          val existing =
-            try spark.read.parquet(indexPath)
-              // a replayed batch must not see its own failed attempt's rows
-              .where(col("batch_id") =!= batchId).drop("batch_id")
-            catch {
-              // ONLY path-not-found means "first batch: nothing ingested
-              // yet" — any other analysis error (schema mismatch, an index
-              // written without batch_id partitions) must surface, not
-              // silently empty the corpus
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "PATH_NOT_FOUND" => newIdx.limit(0)
-            }
-          val pairs = Dedup.minhashLshIncrementalFromIndex(newIdx, idCol,
-            existing, numHashes, threshold, estimateSlack)
-          def writeBatch(df: DataFrame, path: String): Unit = df
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-          writeBatch(pairs, pairsPath)
-          writeBatch(newIdx, indexPath)
-        } finally newIdx.unpersist(blocking = false)
-        ()
-      }
-  }
+      threshold: Double = 0.5, estimateSlack: Double = 0.25): DataStreamWriter[Row] =
+    continuousIndexedDedup(docs, minhashIndexOf(idCol, textCol, numHashes,
+        bands, shingleN),
+      minhashProbe(idCol, numHashes, threshold, estimateSlack),
+      idCol, indexPath, pairsPath, checkpoint)
+
+  private def minhashIndexOf(idCol: String, textCol: String, numHashes: Int,
+      bands: Int, shingleN: Int): DataFrame => DataFrame =
+    b => graft.operators.Dedup.minhashIndex(b, idCol, textCol, numHashes,
+      bands, shingleN)
+
+  private def minhashProbe(idCol: String, numHashes: Int, threshold: Double,
+      estimateSlack: Double): (DataFrame, DataFrame) => DataFrame =
+    (newIdx, existing) => graft.operators.Dedup.minhashLshIncrementalFromIndex(
+      newIdx, idCol, existing, numHashes, threshold, estimateSlack)
 
   /** Continuous quality scoring against a persisted Naive Bayes model
     * ([[graft.operators.Classifier.nbTrain]] output, read back from
@@ -184,19 +158,11 @@ object StreamingOps {
   def continuousNbScore(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.operators.Classifier
-          .nbScore(batch.toDF(), idCol, textCol, model)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+      BatchState.writeBatch(
+        graft.operators.Classifier.nbScore(batch, idCol, textCol, model),
+        outPath, batchId)
+    }
 
   /** Continuous domain-relevance scoring against a persisted DSIR model
     * ([[graft.operators.Sampling.dsirTrain]] output, read back from
@@ -210,19 +176,12 @@ object StreamingOps {
   def continuousDsirScore(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, numBuckets: Int, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.operators.Sampling
-          .dsirScore(batch.toDF(), idCol, textCol, model, numBuckets)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+      BatchState.writeBatch(
+        graft.operators.Sampling.dsirScore(batch, idCol, textCol, model,
+          numBuckets),
+        outPath, batchId)
+    }
 
   /** Continuous realization of a static mixture plan
     * ([[graft.operators.Sampling.mixturePlan]] output, read back from
@@ -240,19 +199,12 @@ object StreamingOps {
   def continuousApplyMixturePlan(docs: DataFrame, sourceCol: String,
       idCol: String, plan: DataFrame, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.operators.Sampling
-          .applyMixturePlan(batch.toDF(), sourceCol, idCol, plan)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+      BatchState.writeBatch(
+        graft.operators.Sampling.applyMixturePlan(batch, sourceCol, idCol,
+          plan),
+        outPath, batchId)
+    }
 
   /** Continuous topic-shard assignment against a persisted k-means
     * model ([[graft.operators.Embeddings.kmeansTrain]] output): each
@@ -264,19 +216,11 @@ object StreamingOps {
   def continuousKmeansAssign(vecs: DataFrame, idCol: String, vecCol: String,
       model: DataFrame, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.operators.Embeddings
-          .kmeansAssign(batch.toDF(), idCol, vecCol, model)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+      BatchState.writeBatch(
+        graft.operators.Embeddings.kmeansAssign(batch, idCol, vecCol, model),
+        outPath, batchId)
+    }
 
   /** [[continuousKmeansAssign]] for a persisted
     * [[graft.operators.Sampling.kCenterCenters]] coreset: each
@@ -292,19 +236,11 @@ object StreamingOps {
   def continuousKCenterAssign(vecs: DataFrame, idCol: String,
       vecCol: String, centers: DataFrame, outPath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.operators.Sampling
-          .kCenterAssign(batch.toDF(), idCol, vecCol, centers)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+      BatchState.writeBatch(
+        graft.operators.Sampling.kCenterAssign(batch, idCol, vecCol, centers),
+        outPath, batchId)
+    }
 
   /** Continuous per-group quality cap — the streaming face of
     * [[graft.operators.Sampling.capPerGroup]] ("keep at most `n` best
@@ -326,50 +262,22 @@ object StreamingOps {
   def continuousCapPerGroup(docs: DataFrame, groupCols: Seq[String],
       idCol: String, scoreCol: String, n: Int, statePath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cols = groupCols ++ Seq(idCol, scoreCol)
-        val cur = batch.toDF().select(cols.map(col): _*)
-        val prev =
-          try {
-            val all = spark.read.parquet(statePath)
-              .where(col("batch_id") =!= batchId)
-            val mb = all.agg(max(col("batch_id"))).head.get(0)
-            if (mb == null) cur.limit(0)
-            else all.where(col("batch_id") === mb.toString.toLong)
-              .select(cols.map(col): _*)
-          } catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" => cur.limit(0)
-          }
-        // distinct: a row present in the carried state AND re-sent in
-        // this batch must occupy one top-k slot, not two
-        val best = graft.operators.Sampling.capPerGroup(
-          prev.union(cur).distinct(), groupCols, idCol, col(scoreCol), n)
-        best.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(statePath)
-        // prune everything older than the previous committed batch (the
-        // replay margin) — see pruneBatchPartitions for the crash story
-        pruneBatchPartitions(spark, statePath, keep = Set(batchId, batchId - 1))
-        ()
-      }
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+      val cur = batch.select((groupCols ++ Seq(idCol, scoreCol)).map(col): _*)
+      // distinct: a row present in the carried state AND re-sent in this
+      // batch must occupy one top-k slot, not two
+      BatchState.carry(statePath, batchId, cur.limit(0))(prev =>
+        graft.operators.Sampling.capPerGroup(
+          prev.union(cur).distinct(), groupCols, idCol, col(scoreCol), n))
+    }
 
   /** The current selection of a [[continuousCapPerGroup]] state table:
     * the latest batch's partition (older partitions exist only as the
     * replay safety margin).
     */
   def currentCapSelection(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame = {
-    val all = spark.read.parquet(statePath)
-    val mb = all.agg(max(col("batch_id"))).head.get(0).toString.toLong
-    all.where(col("batch_id") === mb).drop("batch_id")
-  }
+      statePath: String): DataFrame =
+    BatchState.current(spark, statePath)
 
   /** Continuous per-group distinct counting via MERGEABLE sketches —
     * the streaming face of `q_hll_merge`'s contract: the per-group
@@ -384,48 +292,23 @@ object StreamingOps {
   def continuousDistinctSketch(rows: DataFrame, groupCols: Seq[String],
       valueCol: String, statePath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cur = batch.toDF().groupBy(groupCols.map(col): _*)
-          .agg(hll_sketch_agg(col(valueCol)).as("sk"))
-        val prev =
-          try {
-            val all = spark.read.parquet(statePath)
-              .where(col("batch_id") =!= batchId)
-            val mb = all.agg(max(col("batch_id"))).head.get(0)
-            if (mb == null) cur.limit(0)
-            else all.where(col("batch_id") === mb.toString.toLong)
-              .select((groupCols :+ "sk").map(col): _*)
-          } catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" => cur.limit(0)
-          }
+    BatchState.eachBatch(rows, checkpoint) { (batch, batchId) =>
+      val cur = batch.groupBy(groupCols.map(col): _*)
+        .agg(hll_sketch_agg(col(valueCol)).as("sk"))
+      BatchState.carry(statePath, batchId, cur.limit(0))(prev =>
         prev.union(cur)
           .groupBy(groupCols.map(col): _*)
-          .agg(hll_union_agg(col("sk")).as("sk"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(statePath)
-        pruneBatchPartitions(spark, statePath, keep = Set(batchId, batchId - 1))
-        ()
-      }
+          .agg(hll_union_agg(col("sk")).as("sk")))
+    }
 
   /** Current per-group distinct estimates of a
     * [[continuousDistinctSketch]] state table.
     */
   def currentDistinctEstimates(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, groupCols: Seq[String]): DataFrame = {
-    val all = spark.read.parquet(statePath)
-    val mb = all.agg(max(col("batch_id"))).head.get(0).toString.toLong
-    all.where(col("batch_id") === mb)
+      statePath: String, groupCols: Seq[String]): DataFrame =
+    BatchState.current(spark, statePath)
       .select(groupCols.map(col) :+
         hll_sketch_estimate(col("sk")).as("n_distinct_est"): _*)
-  }
 
   /** Continuous per-group DISTINCT-WITH-SET-ALGEBRA tracking via the
     * KMV theta sketch ([[graft.functions.ThetaSketch]]) — the
@@ -445,36 +328,14 @@ object StreamingOps {
       valueCol: String, statePath: String, checkpoint: String,
       k: Int = 256): DataStreamWriter[Row] = {
     import graft.functions.{ThetaSketch => TS}
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cur = batch.toDF().groupBy(groupCols.map(col): _*)
-          .agg(TS.thetaSketch(col(valueCol), k).as("sk"))
-        val prev =
-          try {
-            val all = spark.read.parquet(statePath)
-              .where(col("batch_id") =!= batchId)
-            val mb = all.agg(max(col("batch_id"))).head.get(0)
-            if (mb == null) cur.limit(0)
-            else all.where(col("batch_id") === mb.toString.toLong)
-              .select((groupCols :+ "sk").map(col): _*)
-          } catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" => cur.limit(0)
-          }
+    BatchState.eachBatch(rows, checkpoint) { (batch, batchId) =>
+      val cur = batch.groupBy(groupCols.map(col): _*)
+        .agg(TS.thetaSketch(col(valueCol), k).as("sk"))
+      BatchState.carry(statePath, batchId, cur.limit(0))(prev =>
         prev.union(cur)
           .groupBy(groupCols.map(col): _*)
-          .agg(TS.thetaUnion(col("sk"), k).as("sk"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(statePath)
-        pruneBatchPartitions(spark, statePath, keep = Set(batchId, batchId - 1))
-        ()
-      }
+          .agg(TS.thetaUnion(col("sk"), k).as("sk")))
+    }
   }
 
   /** Continuous per-group QUANTILE tracking via the engine's mergeable
@@ -492,36 +353,14 @@ object StreamingOps {
       valueCol: String, statePath: String, checkpoint: String,
       bins: Int = 256): DataStreamWriter[Row] = {
     import graft.functions.{QuantileSketch => QS}
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cur = batch.toDF().groupBy(groupCols.map(col): _*)
-          .agg(QS.sketchAgg(col(valueCol).cast("double"), bins).as("sk"))
-        val prev =
-          try {
-            val all = spark.read.parquet(statePath)
-              .where(col("batch_id") =!= batchId)
-            val mb = all.agg(max(col("batch_id"))).head.get(0)
-            if (mb == null) cur.limit(0)
-            else all.where(col("batch_id") === mb.toString.toLong)
-              .select((groupCols :+ "sk").map(col): _*)
-          } catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" => cur.limit(0)
-          }
+    BatchState.eachBatch(rows, checkpoint) { (batch, batchId) =>
+      val cur = batch.groupBy(groupCols.map(col): _*)
+        .agg(QS.sketchAgg(col(valueCol).cast("double"), bins).as("sk"))
+      BatchState.carry(statePath, batchId, cur.limit(0))(prev =>
         prev.union(cur)
           .groupBy(groupCols.map(col): _*)
-          .agg(QS.sketchMerge(col("sk"), bins).as("sk"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(statePath)
-        pruneBatchPartitions(spark, statePath, keep = Set(batchId, batchId - 1))
-        ()
-      }
+          .agg(QS.sketchMerge(col("sk"), bins).as("sk")))
+    }
   }
 
   /** Current per-group quantile estimates of a
@@ -533,9 +372,7 @@ object StreamingOps {
       statePath: String, groupCols: Seq[String],
       probs: Seq[Double]): DataFrame = {
     import graft.functions.{QuantileSketch => QS}
-    val all = spark.read.parquet(statePath)
-    val mb = all.agg(max(col("batch_id"))).head.get(0).toString.toLong
-    all.where(col("batch_id") === mb)
+    BatchState.current(spark, statePath)
       .select(groupCols.map(col) :+ col("sk") :+ col("sk.n").as("n_values"): _*)
       .select(groupCols.map(col) ++ Seq(col("n_values")) ++ probs.map(p =>
         QS.sketchQuantile(col("sk"), p)
@@ -566,51 +403,27 @@ object StreamingOps {
   def continuousFunnel(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, steps: Seq[String], conversionWindow: Option[String],
       statePath: String, checkpoint: String): DataStreamWriter[Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cur = batch.toDF().select(col(userCol), col(typeCol), col(tsCol))
-        val emptyState = graft.operators.Funnel.reach(
-          cur.limit(0), userCol, typeCol, tsCol, steps, conversionWindow)
-        val prev =
-          try {
-            val all = spark.read.parquet(statePath)
-              .where(col("batch_id") =!= batchId)
-            val mb = all.agg(max(col("batch_id"))).head.get(0)
-            if (mb == null) emptyState
-            else all.where(col("batch_id") === mb.toString.toLong)
-              .select(emptyState.columns.map(col): _*)
-          } catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" => emptyState
-          }
+    BatchState.eachBatch(events, checkpoint) { (batch, batchId) =>
+      val cur = batch.select(col(userCol), col(typeCol), col(tsCol))
+      val emptyState = graft.operators.Funnel.reach(
+        cur.limit(0), userCol, typeCol, tsCol, steps, conversionWindow)
+      BatchState.carry(statePath, batchId, emptyState) { prev =>
         val synth = steps.indices.map { i =>
           prev.filter(col(s"t_${i + 1}").isNotNull)
             .select(col(userCol), lit(steps(i)).as(typeCol),
               col(s"t_${i + 1}").as(tsCol))
         }.reduce(_ union _)
-        val merged = graft.operators.Funnel.reach(
+        graft.operators.Funnel.reach(
           synth.union(cur), userCol, typeCol, tsCol, steps, conversionWindow)
-        merged.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(statePath)
-        pruneBatchPartitions(spark, statePath, keep = Set(batchId, batchId - 1))
-        ()
       }
+    }
 
   /** The current per-user reach frame of a [[continuousFunnel]] state
     * table (latest batch partition).
     */
   def currentFunnelReach(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame = {
-    val all = spark.read.parquet(statePath)
-    val mb = all.agg(max(col("batch_id"))).head.get(0).toString.toLong
-    all.where(col("batch_id") === mb).drop("batch_id")
-  }
+      statePath: String): DataFrame =
+    BatchState.current(spark, statePath)
 
   /** The funnel headline over the current stream state — the same
     * one-row (n_step_1 .. n_step_N) shape as
@@ -644,54 +457,44 @@ object StreamingOps {
   def continuousScd2(updates: DataFrame, keyCols: Seq[String], tsCol: String,
       tieCol: String, attrCols: Seq[String], statePath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cols = keyCols ++ Seq(tsCol, tieCol) ++ attrCols
-        val cur = batch.toDF().select(cols.map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          cur.count()
-          val currentOfTouched =
-            try {
-              val hist = spark.read.parquet(statePath)
-                .where(col("batch_id") =!= batchId)
-              // live row per version — identity is (key, effective_from,
-              // tie): equal-ts observations may open two versions at one
-              // effective_from, and the synthetic replay carries the
-              // original tie so rewrites collide with their own version —
-              // then the open version per touched key
-              hist.groupBy((keyCols ++ Seq("effective_from", tieCol)).map(col): _*)
-                .agg(max_by(struct(hist.columns.map(col): _*), col("batch_id"))
-                  .as("__r"))
-                .select(col("__r.*"))
-                .where(col("is_current"))
-                .join(cur.select(keyCols.map(col): _*).distinct(),
-                  keyCols, "left_semi")
-            } catch {
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "PATH_NOT_FOUND" =>
-                // first batch: empty frame with the history schema
-                graft.operators.Scd2.history(cur.limit(0),
-                  keyCols, tsCol, tieCol, attrCols)
-            }
-          // synthetic observation per touched key's open version: its
-          // effective_from + attrs re-enter the change-compression walk
-          val synth = currentOfTouched.select(
-            (keyCols.map(col) :+ col("effective_from").as(tsCol) :+
-              col(tieCol)) ++ attrCols.map(col): _*)
-          val delta = graft.operators.Scd2.history(
-            synth.union(cur), keyCols, tsCol, tieCol, attrCols)
-          delta.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(statePath)
-          ()
-        } finally cur.unpersist(blocking = false)
-      }
+    BatchState.eachBatch(updates, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val cur = batch.select((keyCols ++ Seq(tsCol, tieCol) ++ attrCols)
+          .map(col): _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        cur.count()
+        // the open version of every key this batch touches
+        val currentOfTouched = BatchState.priorRows(spark, statePath, batchId)
+          .map(hist => scd2Live(hist, keyCols, tieCol)
+            .where(col("is_current"))
+            .join(cur.select(keyCols.map(col): _*).distinct(),
+              keyCols, "left_semi"))
+          // first batch: empty frame with the history schema
+          .getOrElse(graft.operators.Scd2.history(cur.limit(0),
+            keyCols, tsCol, tieCol, attrCols))
+        // synthetic observation per touched key's open version: its
+        // effective_from + attrs re-enter the change-compression walk
+        val synth = currentOfTouched.select(
+          (keyCols.map(col) :+ col("effective_from").as(tsCol) :+
+            col(tieCol)) ++ attrCols.map(col): _*)
+        BatchState.writeBatch(graft.operators.Scd2.history(
+          synth.union(cur), keyCols, tsCol, tieCol, attrCols),
+          statePath, batchId)
+      } finally cur.unpersist(blocking = false)
+    }
+
+  /** The live row per version of SCD2 history rows: the row of the
+    * latest batch that wrote the version. Identity is (key,
+    * effective_from, tie): equal-ts observations may open two versions
+    * at one effective_from, and the synthetic replay carries the
+    * original tie so rewrites collide with their own version.
+    */
+  private def scd2Live(hist: DataFrame, keyCols: Seq[String],
+      tieCol: String): DataFrame =
+    BatchState.latestPerKey(hist, keyCols ++ Seq("effective_from", tieCol),
+      struct(hist.columns.filter(_ != "batch_id").map(col): _*), "__r")
+      .select(col("__r.*"))
 
   /** The live SCD2 history of a [[continuousScd2]] state table: the
     * latest batch's row per (key, effective_from) version. Read cost
@@ -699,13 +502,8 @@ object StreamingOps {
     * periodically if the stream runs for months.
     */
   def currentScd2History(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, keyCols: Seq[String], tieCol: String): DataFrame = {
-    val hist = spark.read.parquet(statePath)
-    hist.groupBy((keyCols ++ Seq("effective_from", tieCol)).map(col): _*)
-      .agg(max_by(struct(hist.columns.filter(_ != "batch_id").map(col): _*),
-        col("batch_id")).as("__r"))
-      .select(col("__r.*"))
-  }
+      statePath: String, keyCols: Seq[String], tieCol: String): DataFrame =
+    scd2Live(spark.read.parquet(statePath), keyCols, tieCol)
 
   /** Compact a [[continuousScd2]] state table — the
     * [[compactClusterLabels]] discipline ported to version rows: fold
@@ -718,58 +516,16 @@ object StreamingOps {
     * crash between the two leaves duplicate rows that agree in value.
     */
   def compactScd2History(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, keyCols: Seq[String], tieCol: String): Unit = {
-    val all =
-      try spark.read.parquet(statePath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => return
-      }
-    val maxB = all.agg(max(col("batch_id"))).head.get(0)
-    if (maxB == null) return
-    val maxBatch = maxB.toString.toLong
-    if (maxBatch <= 0) return
-    val folded = all.where(col("batch_id") < maxBatch)
-    val snapshot = folded
-      .groupBy((keyCols ++ Seq("effective_from", tieCol)).map(col): _*)
-      .agg(max_by(struct(folded.columns.filter(_ != "batch_id").map(col): _*),
-        col("batch_id")).as("__r"))
-      .select(col("__r.*"))
-      .withColumn("batch_id", lit(-1L))
-    snapshot.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("batch_id=")) {
-        val bid = scala.util.Try(name.stripPrefix("batch_id=").toLong)
-        if (bid.toOption.exists(b => b >= 0 && b < maxBatch))
-          fs.delete(st.getPath, true)
-      }
+      statePath: String, keyCols: Seq[String], tieCol: String): Unit =
+    for {
+      all <- graft.operators.Similarity.readParquetIfAny(spark, statePath)
+      maxBatch <- BatchState.maxBatch(all) if maxBatch > 0
+    } {
+      BatchState.writeBatch(
+        scd2Live(all.where(col("batch_id") < maxBatch), keyCols, tieCol),
+        statePath, -1L)
+      BatchState.prune(spark, statePath)(b => b >= 0 && b < maxBatch)
     }
-  }
-
-  /** Delete `batch_id=` partition directories not in `keep` — the shared
-    * prune of the replace-per-batch state tables ([[continuousCapPerGroup]],
-    * [[continuousFunnel]]). Runs AFTER the new state commits, so a crash
-    * leaves extra (correct) partitions, never missing ones.
-    */
-  private def pruneBatchPartitions(spark: org.apache.spark.sql.SparkSession,
-      path: String, keep: Set[Long]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("batch_id=")) {
-        val bid = scala.util.Try(name.stripPrefix("batch_id=").toLong)
-        if (bid.toOption.exists(b => !keep.contains(b)))
-          fs.delete(st.getPath, true)
-      }
-    }
-  }
 
   /** Continuous-ingestion SPAN dedup — the exact-substring face of the
     * probe-and-append loop, completing the family symmetry (MinHash,
@@ -795,44 +551,27 @@ object StreamingOps {
       indexPath: String, outPath: String, checkpoint: String,
       k: Int = 8): DataStreamWriter[Row] = {
     import graft.operators.TrainingData
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // the batch feeds two tokenize passes (rebuild + index delta) —
-        // persist the raw batch once, release deterministically
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          b.count()
-          val existing =
-            try spark.read.parquet(indexPath)
-              .where(col("batch_id") =!= batchId).drop("batch_id")
-            catch {
-              // ONLY path-not-found means "first batch" — see
-              // continuousNearDup
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "PATH_NOT_FOUND" =>
-                TrainingData.spanIndex(b.limit(0), idCol, textCol, k)
-            }
-          def writeBatch(df: DataFrame, path: String): Unit = df
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-          // output first, index second: a crash between the two replays
-          // the batch with the index still excluding its own rows
-          writeBatch(
-            TrainingData.dedupSpansIncremental(b, idCol, textCol, k, existing),
-            outPath)
-          writeBatch(
-            TrainingData.spanIndexDelta(b, idCol, textCol, k, existing),
-            indexPath)
-        } finally b.unpersist(blocking = false)
-        ()
-      }
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the batch feeds two tokenize passes (rebuild + index delta) —
+      // persist the raw batch once, release deterministically
+      val b = batch
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        b.count()
+        val existing = BatchState.priorRows(spark, indexPath, batchId)
+          .map(_.drop("batch_id"))
+          .getOrElse(TrainingData.spanIndex(b.limit(0), idCol, textCol, k))
+        // output first, index second: a crash between the two replays
+        // the batch with the index still excluding its own rows
+        BatchState.writeBatch(
+          TrainingData.dedupSpansIncremental(b, idCol, textCol, k, existing),
+          outPath, batchId)
+        BatchState.writeBatch(
+          TrainingData.spanIndexDelta(b, idCol, textCol, k, existing),
+          indexPath, batchId)
+      } finally b.unpersist(blocking = false)
+    }
   }
 
   /** Continuous-ingestion CDC chunk dedup — the content-defined-boundary
@@ -859,67 +598,40 @@ object StreamingOps {
       indexPath: String, outPath: String, checkpoint: String,
       w: Int = 8, maskBits: Int = 6): DataStreamWriter[Row] = {
     import graft.operators.TrainingData
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // fail the batch loudly while compactCdcIndex holds the store —
-        // reading half-rewritten partitions would silently mis-dedup;
-        // the failed batch replays after the maintenance completes
-        graft.operators.AtomicBatches.assertNotInMaintenance(spark,
-          indexPath, "continuousCdcDedup")
-        // the batch feeds two chunking passes (dedup + index delta) —
-        // persist the raw batch once, release deterministically
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          b.count()
-          val existing =
-            try {
-              val raw = spark.read.parquet(indexPath)
-                .where(col("batch_id") =!= batchId)
-              // takedown-aware ([[cdcStateDelete]]): a deleted doc's
-              // owned chunks are hidden (batch_id ≤ its up_to), so the
-              // new batch neither dedups against them nor fails to
-              // re-own them; a re-ingested victim's newer rows outrank
-              // the deletion
-              val live = cdcVictims(spark, indexPath) match {
-                case None => raw
-                case Some(v) =>
-                  raw.join(v.select(col("id").as(idCol), col("up_to")),
-                      Seq(idCol), "left_outer")
-                    .filter(col("up_to").isNull ||
-                      col("batch_id").cast("long") > col("up_to"))
-                    .drop("up_to")
-              }
-              live.drop("batch_id")
-            } catch {
-              // ONLY path-not-found means "first batch" — see
-              // continuousNearDup
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "PATH_NOT_FOUND" =>
-                TrainingData.cdcIndex(b.limit(0), idCol, textCol, w, maskBits)
-            }
-          def writeBatch(df: DataFrame, path: String): Unit = df
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-          // output first, index second: a crash between the two replays
-          // the batch with the index still excluding its own rows
-          writeBatch(
-            TrainingData.cdcDedupIncremental(b, idCol, textCol, w, maskBits,
-              existing),
-            outPath)
-          writeBatch(
-            TrainingData.cdcIndexDelta(b, idCol, textCol, w, maskBits,
-              existing),
-            indexPath)
-        } finally b.unpersist(blocking = false)
-        ()
-      }
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // fail the batch loudly while compactCdcIndex holds the store —
+      // reading half-rewritten partitions would silently mis-dedup;
+      // the failed batch replays after the maintenance completes
+      graft.operators.AtomicBatches.assertNotInMaintenance(spark,
+        indexPath, "continuousCdcDedup")
+      // the batch feeds two chunking passes (dedup + index delta) —
+      // persist the raw batch once, release deterministically
+      val b = batch
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        b.count()
+        // takedown-aware ([[cdcStateDelete]]): a deleted doc's owned
+        // chunks are hidden, so the new batch neither dedups against
+        // them nor fails to re-own them; a re-ingested victim's newer
+        // rows outrank the deletion
+        val existing = BatchState.priorRows(spark, indexPath, batchId)
+          .map(raw => BatchState.live(raw, cdcVictims(spark, indexPath),
+            Seq(idCol)).drop("batch_id"))
+          .getOrElse(TrainingData.cdcIndex(b.limit(0), idCol, textCol, w,
+            maskBits))
+        // output first, index second: a crash between the two replays
+        // the batch with the index still excluding its own rows
+        BatchState.writeBatch(
+          TrainingData.cdcDedupIncremental(b, idCol, textCol, w, maskBits,
+            existing),
+          outPath, batchId)
+        BatchState.writeBatch(
+          TrainingData.cdcIndexDelta(b, idCol, textCol, w, maskBits,
+            existing),
+          indexPath, batchId)
+      } finally b.unpersist(blocking = false)
+    }
   }
 
   /** Deleted ids of a [[continuousCdcDedup]] index as (id, up_to) —
@@ -950,9 +662,8 @@ object StreamingOps {
     import graft.operators.AtomicBatches
     val spark = victims.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, indexPath, "cdcStateDelete")
-    val upTo = Option(spark.read.parquet(indexPath)
-        .agg(max(col("batch_id").cast("long"))).head.get(0))
-      .map(_.toString.toLong)
+    val upTo = graft.operators.Similarity.readParquetIfAny(spark, indexPath)
+      .flatMap(BatchState.maxBatch)
       .getOrElse(throw new IllegalArgumentException(
         s"no chunk index under $indexPath - nothing to delete from"))
     victims.select(col(idCol).cast("long").as("id")).distinct()
@@ -974,49 +685,45 @@ object StreamingOps {
       takeover: Boolean = false): Unit = {
     import graft.operators.{AtomicBatches, Similarity}
     import org.apache.spark.sql.graft.Bridge
-    if (Similarity.readParquetIfAny(spark, s"$indexPath/_victims").isEmpty &&
+    if (cdcVictims(spark, indexPath).isEmpty &&
         !AtomicBatches.maintenanceActive(spark, indexPath)) return
     AtomicBatches.withMaintenanceLock(spark, indexPath, takeover) {
-      Similarity.readParquetIfAny(spark, s"$indexPath/_victims").foreach {
-        v0 =>
-        val store = spark.read.parquet(indexPath)
-        val idCol = store.columns.filterNot(c =>
-          c == "chunk_md5" || c == "chunk_idx" || c == "batch_id").head
+      cdcVictims(spark, indexPath).foreach { v0 =>
         // NO non-local return in here (it would skip the lock release);
-        // a rowless store folds through as an empty prune
-        val maxBatch = Option(store
-            .agg(max(col("batch_id").cast("long"))).head.get(0))
-          .map(_.toString.toLong).getOrElse(Long.MinValue)
-        val horizon = if (includeLatest) Long.MaxValue else maxBatch
-        val v = v0.groupBy("id").agg(max(col("up_to")).as("up_to"))
-          .localCheckpoint(true)
+        // a store a prior compaction emptied has no rows to prune
+        val storeOpt = Similarity.readParquetIfAny(spark, indexPath)
+        val horizon = if (includeLatest) Long.MaxValue
+          else storeOpt.flatMap(BatchState.maxBatch).getOrElse(Long.MinValue)
+        val v = v0.localCheckpoint(true)
         val fs = new org.apache.hadoop.fs.Path(indexPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         try {
           // shared rewrite protocol: touched-only dynamic overwrite +
           // emptied-partition deletion (AtomicBatches)
-          val joined = store
-            .join(v.select(col("id").as(idCol), col("up_to")),
-              Seq(idCol), "left_outer")
-          val dead = col("batch_id").cast("long") < lit(horizon) &&
-            col("up_to").isNotNull &&
-            col("batch_id").cast("long") <= col("up_to")
-          AtomicBatches.pruneDeadPartitionRows(spark, indexPath,
-            "batch_id", joined, dead, store.columns.toSeq)
+          storeOpt.foreach { store =>
+            val (joined, dead) =
+              BatchState.withVictims(store, v, Seq(cdcIdCol(store)))
+            AtomicBatches.pruneDeadPartitionRows(spark, indexPath,
+              "batch_id", joined,
+              col("batch_id").cast("long") < lit(horizon) && dead,
+              store.columns.toSeq)
+          }
           // GC victims whose every possible row is now physical; later
           // deletions (up_to ≥ horizon) stay pending and keep hiding
           val pending = v.filter(col("up_to") >= lit(horizon))
             .localCheckpoint(true)
           val vroot = new org.apache.hadoop.fs.Path(s"$indexPath/_victims")
           if (pending.isEmpty) fs.delete(vroot, true)
-          else {
-            pending.write.mode("overwrite").parquet(vroot.toString)
-          }
+          else pending.write.mode("overwrite").parquet(vroot.toString)
           Bridge.releaseLocalCheckpoint(pending)
         } finally Bridge.releaseLocalCheckpoint(v)
       }
     }
   }
+
+  /** The owner-id column of a CDC chunk index. */
+  private def cdcIdCol(store: DataFrame): String =
+    store.columns.filterNot(Set("chunk_md5", "chunk_idx", "batch_id")).head
 
   /** Continuous-ingestion near-dup for the HAMMING family — the chunk-
     * blocked analog of [[continuousNearDup]]: each micro-batch builds its
@@ -1081,15 +788,12 @@ object StreamingOps {
       checkpoint: String, numHashes: Int = 16, bands: Int = 8,
       shingleN: Int = 5, threshold: Double = 0.5,
       estimateSlack: Double = 0.25,
-      compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
-    import graft.operators.Dedup
-    continuousIndexedDedup(docs,
-      b => Dedup.minhashIndex(b, idCol, textCol, numHashes, bands, shingleN),
-      (newIdx, existing) => Dedup.minhashLshIncrementalFromIndex(newIdx, idCol,
-        existing, numHashes, threshold, estimateSlack),
+      compactEveryBatches: Int = 0): DataStreamWriter[Row] =
+    continuousIndexedDedup(docs, minhashIndexOf(idCol, textCol, numHashes,
+        bands, shingleN),
+      minhashProbe(idCol, numHashes, threshold, estimateSlack),
       idCol, indexPath, pairsPath, checkpoint, labelsPath = Some(labelsPath),
       compactEveryBatches = compactEveryBatches)
-  }
 
   /** Current (id, cluster_id) view over a [[continuousClusteredDedup]]
     * labels table: latest batch's row per id, with committed takedown
@@ -1124,25 +828,7 @@ object StreamingOps {
     val raw = rawOpt.get
     val deltas = excludeBatch
       .map(b => raw.where(col("batch_id") =!= b)).getOrElse(raw)
-    val latest = deltas.groupBy("id")
-      .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"),
-        max(col("batch_id").cast("long")).as("__b"))
-    clusterCorrections(spark, labelsPath) match {
-      case None => latest.drop("__b")
-      case Some(corr) =>
-        // latest correction per id (seq = staging order); it applies iff
-        // nothing newer than its up_to re-touched the id
-        val latestCorr = corr.groupBy("id")
-          .agg(max_by(struct(col("cluster_id"), col("up_to")), col("seq"))
-            .as("__c"))
-          .select(col("id"), col("__c.cluster_id").as("__cc"),
-            col("__c.up_to").as("__upto"))
-        latest.join(latestCorr, Seq("id"), "left_outer")
-          .select(col("id"),
-            when(col("__upto").isNotNull && col("__b") <= col("__upto"),
-              col("__cc")).otherwise(col("cluster_id")).as("cluster_id"))
-          .filter(col("cluster_id").isNotNull)
-    }
+    BatchState.foldLabels(deltas, clusterCorrections(spark, labelsPath))
   }
 
   /** Committed takedown correction rows (id, cluster_id NULLABLE,
@@ -1188,19 +874,8 @@ object StreamingOps {
     // cluster state carries this guard; this one was the gap)
     graft.operators.AtomicBatches.assertNotInMaintenance(spark, labelsPath,
       "currentClusterPairs")
-    val pairs = spark.read.parquet(pairsPath)
-    clusterVictims(spark, labelsPath) match {
-      case None => pairs
-      case Some(v) =>
-        pairs.withColumn("__pb", col("batch_id").cast("long"))
-          .join(v.select(col("id").as("id_a"), col("up_to").as("__ua")),
-            Seq("id_a"), "left_outer")
-          .join(v.select(col("id").as("id_b"), col("up_to").as("__ub")),
-            Seq("id_b"), "left_outer")
-          .filter((col("__ua").isNull || col("__pb") > col("__ua")) &&
-            (col("__ub").isNull || col("__pb") > col("__ub")))
-          .select(pairs.columns.map(col): _*)
-    }
+    BatchState.live(spark.read.parquet(pairsPath),
+      clusterVictims(spark, labelsPath), Seq("id_a", "id_b"))
   }
 
   /** DELETE (takedown) face of a [[continuousClusteredDedup]] state —
@@ -1254,10 +929,8 @@ object StreamingOps {
     // there is no state at all.
     val upTo = Seq(indexPath, labelsPath)
       .flatMap(p => graft.operators.Similarity.readParquetIfAny(spark, p))
-      .flatMap(df =>
-        Option(df.agg(max(col("batch_id").cast("long"))).head.get(0)))
-      .map(_.toString.toLong)
-      .reduceOption((a: Long, b: Long) => math.max(a, b))
+      .flatMap(BatchState.maxBatch)
+      .maxOption
       .getOrElse(throw new IllegalArgumentException(
         s"no index/label state under $indexPath / $labelsPath - " +
           "nothing to delete from"))
@@ -1336,16 +1009,9 @@ object StreamingOps {
       val idCol = idx.columns.find(_ == "doc_id").getOrElse(
         idx.columns.filterNot(Set("batch_id", "sh", "sig", "bucket"))
           .head)
-      val rows = idx.select(col(idCol).cast("long").as("id"),
-        col("batch_id").cast("long").as("__b"))
-      clusterVictims(spark, labelsPath) match {
-        case None => rows.select("id")
-        case Some(v) => rows
-          .join(v.select(col("id"), col("up_to").as("__u")),
-            Seq("id"), "left_outer")
-          .filter(col("__u").isNull || col("__b") > col("__u"))
-          .select("id")
-      }
+      BatchState.live(
+        idx.select(col(idCol).cast("long").as("id"), col("batch_id")),
+        clusterVictims(spark, labelsPath), Seq("id")).select("id")
     }
     (labelIds.toSeq ++ pairIds.toSeq ++ indexIds.toSeq)
       .reduceOption(_ unionByName _)
@@ -1362,19 +1028,13 @@ object StreamingOps {
       indexPath: String): DataFrame = {
     graft.operators.AtomicBatches.assertNotInMaintenance(spark, indexPath,
       "cdcStatePresentIds")
-    val store = spark.read.parquet(indexPath)
-    val idCol = store.columns.filterNot(c =>
-      c == "chunk_md5" || c == "chunk_idx" || c == "batch_id").head
-    val rows = store.select(col(idCol).cast("long").as("id"),
-      col("batch_id").cast("long").as("__b"))
-    cdcVictims(spark, indexPath) match {
-      case None => rows.select("id").distinct()
-      case Some(v) => rows
-        .join(v.select(col("id"), col("up_to").as("__u")),
-          Seq("id"), "left_outer")
-        .filter(col("__u").isNull || col("__b") > col("__u"))
-        .select("id").distinct()
-    }
+    // a store a full takedown emptied holds no ids
+    graft.operators.Similarity.readParquetIfAny(spark, indexPath)
+      .map(store => BatchState.live(
+        store.select(col(cdcIdCol(store)).cast("long").as("id"),
+          col("batch_id")),
+        cdcVictims(spark, indexPath), Seq("id")).select("id").distinct())
+      .getOrElse(spark.range(0).select(col("id")))
   }
 
   /** Compact a [[continuousClusteredDedup]] labels table: fold every
@@ -1403,15 +1063,9 @@ object StreamingOps {
     // inconsistent state in before a takeover re-run can repair it
     graft.operators.AtomicBatches.assertNotInMaintenance(spark, labelsPath,
       "compactClusterLabels")
-    val all =
-      try spark.read.parquet(labelsPath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => return
-      }
-    val maxB = all.agg(max(col("batch_id"))).head.get(0)
-    if (maxB == null) return
-    val maxBatch = maxB.toString.toLong
+    val all = graft.operators.Similarity.readParquetIfAny(spark, labelsPath)
+      .getOrElse(return)
+    val maxBatch = BatchState.maxBatch(all).getOrElse(return)
     if (maxBatch <= 0) return // nothing strictly below the latest batch
     // pending takedown corrections PIN the fold horizon: a delta row
     // NEWER than a correction's up_to outranks it (the resurrection
@@ -1425,27 +1079,11 @@ object StreamingOps {
       .map(_.toString.toLong)
     val horizon = math.min(maxBatch, minUpTo.map(_ + 1).getOrElse(Long.MaxValue))
     if (horizon <= 0) return
-    val snapshot = all.where(col("batch_id") < horizon)
-      .groupBy("id")
-      .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"))
-      .withColumn("batch_id", lit(-1L))
-    snapshot.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(labelsPath)
-    // prune the folded delta partitions (0 ≤ batch_id < horizon) via the
-    // filesystem — partition directories, the same granularity the
-    // dynamic-overwrite writes use
-    val root = new org.apache.hadoop.fs.Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("batch_id=")) {
-        val bid = scala.util.Try(name.stripPrefix("batch_id=").toLong)
-        if (bid.toOption.exists(b => b >= 0 && b < horizon))
-          fs.delete(st.getPath, true)
-      }
-    }
+    BatchState.writeBatch(
+      BatchState.foldLabels(all.where(col("batch_id") < horizon), None),
+      labelsPath, -1L)
+    // prune the folded delta partitions (0 ≤ batch_id < horizon)
+    BatchState.prune(spark, labelsPath)(b => b >= 0 && b < horizon)
   }
 
   /** FULL maintenance pass of a [[continuousClusteredDedup]] state —
@@ -1500,8 +1138,7 @@ object StreamingOps {
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       pairsPath: String, labelsPath: String, includeLatest: Boolean): Unit = {
     import graft.operators.{AtomicBatches, Similarity}
-    val fs = new org.apache.hadoop.fs.Path(labelsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import org.apache.spark.sql.graft.Bridge
     val allOpt = Similarity.readParquetIfAny(spark, labelsPath)
     // the stream's true position is the max batch across the stores —
     // the labels store alone under-reads it when recent batches were
@@ -1513,10 +1150,8 @@ object StreamingOps {
     // takedown data (r14 self-review)
     val maxBatch = (allOpt.toSeq ++
         Similarity.readParquetIfAny(spark, indexPath).toSeq)
-      .flatMap(df =>
-        Option(df.agg(max(col("batch_id").cast("long"))).head.get(0)))
-      .map(_.toString.toLong)
-      .reduceOption((a: Long, b: Long) => math.max(a, b))
+      .flatMap(BatchState.maxBatch)
+      .maxOption
       // NO readable store at all: with includeLatest there is no latest
       // batch to guard (horizon = ∞, pending corrections resolve over
       // empty stores); without it the horizon is unknowable and nothing
@@ -1535,61 +1170,30 @@ object StreamingOps {
     // all-unique stream never writes one; the victim prune and GC below
     // still run)
     allOpt.foreach { all =>
-      val folded = all.where(col("batch_id") < lit(horizon))
-        .groupBy("id")
-        .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"),
-          max(col("batch_id").cast("long")).as("__b"))
-      val snapped = if (appliedDirs.isEmpty) folded.drop("__b")
-      else {
-        val corr = spark.read.parquet(appliedDirs.map(d => s"$d/labels"): _*)
-          .groupBy("id")
-          .agg(max_by(struct(col("cluster_id"), col("up_to")), col("seq"))
-            .as("__c"))
-          .select(col("id"), col("__c.cluster_id").as("__cc"),
-            col("__c.up_to").as("__upto"))
-        folded.join(corr, Seq("id"), "left_outer")
-          .select(col("id"),
-            when(col("__upto").isNotNull && col("__b") <= col("__upto"),
-              col("__cc")).otherwise(col("cluster_id")).as("cluster_id"))
-          .filter(col("cluster_id").isNotNull)
-      }
       if (maxBatch > 0 || includeLatest) {
+        val applied =
+          if (appliedDirs.isEmpty) None
+          else Some(spark.read.parquet(appliedDirs.map(d => s"$d/labels"): _*))
         // the fold can be EMPTY (every folded id overridden to NULL by an
         // applied correction): dynamic overwrite of zero rows replaces
         // nothing, so a stale pre-takedown −1 snapshot would survive the
         // corrections' GC and silently resurrect the victims — delete the
         // snapshot partition explicitly in that case
-        val snappedCp = snapped.localCheckpoint(true) // isEmpty + write
+        val snapped = BatchState.foldLabels(
+            all.where(col("batch_id") < lit(horizon)), applied)
+          .localCheckpoint(true) // isEmpty + write
         try {
-          if (snappedCp.isEmpty)
-            fs.delete(
-              new org.apache.hadoop.fs.Path(s"$labelsPath/batch_id=-1"), true)
-          else snappedCp.withColumn("batch_id", lit(-1L))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(labelsPath)
-        } finally org.apache.spark.sql.graft.Bridge
-          .releaseLocalCheckpoint(snappedCp)
-        val lroot = new org.apache.hadoop.fs.Path(labelsPath)
-        fs.listStatus(lroot).foreach { st =>
-          val name = st.getPath.getName
-          if (st.isDirectory && name.startsWith("batch_id=")) {
-            val bid = scala.util.Try(name.stripPrefix("batch_id=").toLong)
-            if (bid.toOption.exists(b => b >= 0 && b < horizon))
-              fs.delete(st.getPath, true)
-          }
-        }
+          if (snapped.isEmpty) BatchState.prune(spark, labelsPath)(_ == -1L)
+          else BatchState.writeBatch(snapped, labelsPath, -1L)
+        } finally Bridge.releaseLocalCheckpoint(snapped)
+        BatchState.prune(spark, labelsPath)(b => b >= 0 && b < horizon)
       }
     }
     // 2) physically remove victim rows from the committed pair and
     // index partitions — victims from ALL correction batches (pending
     // ones keep their read-time rule for whatever this pass leaves)
-    if (dirs.nonEmpty) {
-      val victims = spark.read
-        .parquet(dirs.map(d => s"$d/victims"): _*)
-        .groupBy("id").agg(max(col("up_to")).as("up_to"))
-        .localCheckpoint(true)
+    clusterVictims(spark, labelsPath).foreach { v =>
+      val victims = v.localCheckpoint(true)
       try {
         // a row dies iff ANY of its id columns is a victim whose
         // deletion covers the row's batch — shared rewrite protocol
@@ -1598,19 +1202,10 @@ object StreamingOps {
         // FileSystem resolved per store path)
         def pruneStore(path: String, store: DataFrame,
             idCols: Seq[String]): Unit = {
-          var cond: Column = lit(false)
-          var df = store
-          idCols.zipWithIndex.foreach { case (ic, i) =>
-            df = df.join(
-              victims.select(col("id").as(ic), col("up_to").as(s"__u$i")),
-              Seq(ic), "left_outer")
-            cond = cond ||
-              (col(s"__u$i").isNotNull &&
-                col("batch_id").cast("long") <= col(s"__u$i"))
-          }
-          val dead = col("batch_id").cast("long") < lit(horizon) && cond
-          graft.operators.AtomicBatches.pruneDeadPartitionRows(spark, path,
-            "batch_id", df, dead, store.columns.toSeq)
+          val (joined, dead) = BatchState.withVictims(store, victims, idCols)
+          AtomicBatches.pruneDeadPartitionRows(spark, path, "batch_id",
+            joined, col("batch_id").cast("long") < lit(horizon) && dead,
+            store.columns.toSeq)
         }
         Similarity.readParquetIfAny(spark, pairsPath).foreach(store =>
           pruneStore(pairsPath, store, Seq("id_a", "id_b")))
@@ -1618,8 +1213,7 @@ object StreamingOps {
         // minhash/simhash/embedding index faces all put idCol first)
         Similarity.readParquetIfAny(spark, indexPath).foreach(store =>
           pruneStore(indexPath, store, Seq(store.columns.head)))
-      } finally org.apache.spark.sql.graft.Bridge
-        .releaseLocalCheckpoint(victims)
+      } finally Bridge.releaseLocalCheckpoint(victims)
     }
     // 3) GC the applied correction batches — their kills and overrides
     // are physical now; pending ones keep guarding. Deleted in ASCENDING
@@ -1629,6 +1223,8 @@ object StreamingOps {
     // is exactly the newest-wins rule — the other order could leave an
     // OLDER correction to re-apply on the takeover re-run, rolling a
     // later takedown's re-closure back (r14 self-review)
+    val fs = new org.apache.hadoop.fs.Path(labelsPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     appliedDirs.sortBy(_.split('/').last.toLong).foreach(d =>
       fs.delete(new org.apache.hadoop.fs.Path(d), true))
   }
@@ -1636,7 +1232,7 @@ object StreamingOps {
   /** The shared probe-and-append micro-batch loop behind the continuous
     * dedup variants: build the new batch's index rows, probe them against
     * the persisted index of all prior batches, append pairs and index —
-    * both writes per-batch-id dynamic-partition-overwritten so replays
+    * both writes replace their own `batch_id` partition, so replays
     * replace rather than duplicate. With `labelsPath` set, each batch
     * also folds its pairs into the persisted cluster labels (see
     * [[continuousClusteredDedup]]).
@@ -1647,93 +1243,63 @@ object StreamingOps {
       idCol: String,
       indexPath: String, pairsPath: String,
       checkpoint: String, labelsPath: Option[String] = None,
-      compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // fail EARLY while compactClusterState holds the labels store —
-        // without this the batch would write pairs/index before the
-        // label fold's own assert fired (replay-safe either way, but a
-        // clean refusal beats a half-written batch)
-        labelsPath.foreach(lp => graft.operators.AtomicBatches
-          .assertNotInMaintenance(spark, lp, "continuousIndexedDedup"))
-        // persist + unpersist, not localCheckpoint — see continuousNearDup
-        val newIdx = indexOf(batch.toDF())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      compactEveryBatches: Int = 0): DataStreamWriter[Row] =
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // fail EARLY while compactClusterState holds the labels store —
+      // without this the batch would write pairs/index before the
+      // label fold's own assert fired (replay-safe either way, but a
+      // clean refusal beats a half-written batch)
+      labelsPath.foreach(lp => graft.operators.AtomicBatches
+        .assertNotInMaintenance(spark, lp, "continuousIndexedDedup"))
+      // persist (not localCheckpoint): compute the batch index once for
+      // both the probe and the index write, with a handle we can release
+      // — checkpointed blocks would accumulate on executors for the
+      // stream's lifetime
+      val newIdx = indexOf(batch)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        newIdx.count()
+        // takedown-aware probe: a deleted doc's index rows are hidden,
+        // so no new pairs ever form against it; rows a later batch
+        // re-ingested outrank the deletion and stay probeable
+        // (resurrection)
+        val existing = BatchState.priorRows(spark, indexPath, batchId)
+          .map(raw => BatchState.live(raw,
+            labelsPath.flatMap(clusterVictims(spark, _)), Seq(idCol))
+            .drop("batch_id"))
+          .getOrElse(newIdx.limit(0))
+        // with labels, the pair relation feeds the pair write AND the
+        // label fold — materialize it once (bounded: new-involving pairs)
+        val probed = probe(newIdx, existing)
+        val pairs = labelsPath.fold(probed)(_ => probed
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         try {
-          newIdx.count()
-          val existing =
-            try {
-              val raw = spark.read.parquet(indexPath)
-                .where(col("batch_id") =!= batchId)
-              // takedown-aware probe: a deleted doc's index rows are
-              // hidden (batch_id ≤ its up_to), so no new pairs ever
-              // form against it; rows a later batch re-ingested outrank
-              // the deletion and stay probeable (resurrection)
-              val live = labelsPath.flatMap(clusterVictims(spark, _)) match {
-                case None => raw
-                case Some(v) =>
-                  raw.join(v.select(col("id").as(idCol), col("up_to")),
-                      Seq(idCol), "left_outer")
-                    .filter(col("up_to").isNull ||
-                      col("batch_id").cast("long") > col("up_to"))
-                    .drop("up_to")
-              }
-              live.drop("batch_id")
-            } catch {
-              // ONLY path-not-found means "first batch" (see
-              // continuousNearDup — other analysis errors must surface)
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "PATH_NOT_FOUND" => newIdx.limit(0)
-            }
-          // the pair relation feeds the pair write AND (optionally) the
-          // label maintenance — materialize once, bounded (new-involving
-          // pairs only)
-          val pairs = probe(newIdx, existing)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            def writeBatch(df: DataFrame, path: String): Unit = df
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(path)
-            writeBatch(pairs, pairsPath)
-            writeBatch(newIdx, indexPath)
-            labelsPath.foreach { lp =>
-              // corrections-aware ([[currentClusterLabelsAt]]): a batch
-              // folding pairs after a takedown must build on the
-              // RE-CLOSED state, or it would propagate a deleted doc's
-              // id as a cluster representative
-              val current =
-                try currentClusterLabelsAt(spark, lp, Some(batchId))
-                catch {
-                  case e: org.apache.spark.sql.AnalysisException
-                      if e.getCondition == "PATH_NOT_FOUND" =>
-                    pairs.select(col("id_a").as("id"),
-                      col("id_a").as("cluster_id")).limit(0)
-                }
-              // WithCleanup: the delta's cached frames are released in the
-              // finally — per-batch localCheckpoint/persist blocks must
-              // not wait on GC-driven ContextCleaner reclamation or they
-              // accumulate for the stream's lifetime
-              val (delta, release) = graft.operators.Dedup
-                .incrementalComponentDeltaWithCleanup(current, pairs)
-              try writeBatch(delta, lp)
-              finally release()
-              // inline maintenance: fold committed deltas into the -1
-              // snapshot every N batches (batch 0 has nothing to fold)
-              if (compactEveryBatches > 0 && batchId > 0 &&
-                  batchId % compactEveryBatches == 0)
-                compactClusterLabels(spark, lp)
-            }
-          } finally pairs.unpersist(blocking = false)
-        } finally newIdx.unpersist(blocking = false)
-        ()
-      }
-  }
+          BatchState.writeBatch(pairs, pairsPath, batchId)
+          BatchState.writeBatch(newIdx, indexPath, batchId)
+          labelsPath.foreach { lp =>
+            // corrections-aware ([[currentClusterLabelsAt]]): a batch
+            // folding pairs after a takedown must build on the
+            // RE-CLOSED state, or it would propagate a deleted doc's
+            // id as a cluster representative
+            val current = currentClusterLabelsAt(spark, lp, Some(batchId))
+            // WithCleanup: the delta's cached frames are released in the
+            // finally — per-batch localCheckpoint/persist blocks must
+            // not wait on GC-driven ContextCleaner reclamation or they
+            // accumulate for the stream's lifetime
+            val (delta, release) = graft.operators.Dedup
+              .incrementalComponentDeltaWithCleanup(current, pairs)
+            try BatchState.writeBatch(delta, lp, batchId)
+            finally release()
+            // inline maintenance: fold committed deltas into the -1
+            // snapshot every N batches (batch 0 has nothing to fold)
+            if (compactEveryBatches > 0 && batchId > 0 &&
+                batchId % compactEveryBatches == 0)
+              compactClusterLabels(spark, lp)
+          }
+        } finally if (labelsPath.isDefined) pairs.unpersist(blocking = false)
+      } finally newIdx.unpersist(blocking = false)
+    }
 
   /** [[continuousHammingDedup]] specialized to text SimHash — the
     * streaming face of [[graft.operators.Dedup.simhashIncremental]].
@@ -1771,30 +1337,23 @@ object StreamingOps {
       indexPath: String, checkpoint: String,
       compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
     import graft.operators.Similarity
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // the frozen quantizer: ≤2^nBits rows, read per batch so an
-        // offline rebuild that swaps the centroids table is picked up at
-        // the next batch boundary
-        val cents = Similarity.readCentroids(spark, indexPath)
-        Similarity.assignToCells(batch.toDF(), idCol, vecCol, cents)
-          .withColumn("batch_id", lit(batchId))
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the frozen quantizer: ≤2^nBits rows, read per batch so an
+      // offline rebuild that swaps the centroids table is picked up at
+      // the next batch boundary
+      val cents = Similarity.readCentroids(spark, indexPath)
+      BatchState.writeBatch(
+        Similarity.assignToCells(batch, idCol, vecCol, cents)
           // cluster by cell: each task writes one cell-coherent file, so
           // the delta read's cell predicate prunes via row-group stats
           // even though the delta tree partitions on batch_id
-          .repartition(col("cell"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$indexPath/deltas")
-        if (compactEveryBatches > 0 && batchId > 0 &&
-            batchId % compactEveryBatches == 0)
-          compactIvfDeltas(spark, indexPath)
-        ()
-      }
+          .repartition(col("cell")),
+        s"$indexPath/deltas", batchId)
+      if (compactEveryBatches > 0 && batchId > 0 &&
+          batchId % compactEveryBatches == 0)
+        compactIvfDeltas(spark, indexPath)
+    }
   }
 
   /** Fold a [[continuousIvfAppend]] (or [[continuousPqAppend]] — the
@@ -1880,9 +1439,7 @@ object StreamingOps {
     val deltasOpt = readParquetIfAny(spark, s"$indexPath/deltas")
     val tombsOpt = readParquetIfAny(spark, s"$indexPath/tombstones")
     if (deltasOpt.isEmpty && tombsOpt.isEmpty) return
-    val maxBatch = deltasOpt
-      .map(_.agg(max(col("batch_id"))).head.get(0))
-      .flatMap(Option(_)).map(_.toString.toLong).getOrElse(-1L)
+    val maxBatch = deltasOpt.flatMap(BatchState.maxBatch).getOrElse(-1L)
     val baseOpt = readParquetIfAny(spark, s"$indexPath/cells")
     // layout-generic: (id, <payload...>, cell) — v for the flat index,
     // codes for the PQ index ([[continuousPqAppend]] deltas)
@@ -1986,21 +1543,11 @@ object StreamingOps {
       Bridge.releaseLocalCheckpoint(folded)
     }
     committedOpt.foreach(Bridge.releaseLocalCheckpoint)
+    // prune the folded delta partitions
+    if (deltasOpt.nonEmpty) BatchState.prune(spark, s"$indexPath/deltas")(b =>
+      b < maxBatch || includeLatest)
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // prune the folded delta partitions at the directory granularity the
-    // dynamic-overwrite writes use
-    deltasOpt.foreach { _ =>
-      val root = new org.apache.hadoop.fs.Path(s"$indexPath/deltas")
-      if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.startsWith("batch_id=")) {
-          val bid = scala.util.Try(name.stripPrefix("batch_id=").toLong)
-          if (bid.toOption.exists(b => b < maxBatch || includeLatest))
-            fs.delete(st.getPath, true)
-        }
-      }
-    }
     // garbage-collect the APPLIED tombstones (their kills are physical
     // now); pending ones (up_to ≥ horizon) keep guarding the latest batch
     tombsOpt.foreach { ts =>
@@ -2068,25 +1615,18 @@ object StreamingOps {
       indexPath: String, checkpoint: String,
       compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
     import graft.operators.Similarity
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // frozen quantizer + codebooks re-read per batch, so an offline
-        // rebuild that swaps them is picked up at the next batch boundary
-        Similarity.pqDeltaRows(batch.toDF(), idCol, vecCol, indexPath)
-          .withColumn("batch_id", lit(batchId))
-          .repartition(col("cell")) // cell-coherent files — see above
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$indexPath/deltas")
-        if (compactEveryBatches > 0 && batchId > 0 &&
-            batchId % compactEveryBatches == 0)
-          compactIvfDeltas(spark, indexPath)
-        ()
-      }
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // frozen quantizer + codebooks re-read per batch, so an offline
+      // rebuild that swaps them is picked up at the next batch boundary
+      BatchState.writeBatch(
+        Similarity.pqDeltaRows(batch, idCol, vecCol, indexPath)
+          .repartition(col("cell")), // cell-coherent files — see above
+        s"$indexPath/deltas", batchId)
+      if (compactEveryBatches > 0 && batchId > 0 &&
+          batchId % compactEveryBatches == 0)
+        compactIvfDeltas(spark, indexPath)
+    }
   }
 
   /** [[ivfTopKFromStreamIndex]] for a [[continuousPqAppend]]-maintained

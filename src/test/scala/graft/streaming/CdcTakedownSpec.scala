@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.operators.AtomicBatches
+import graft.operators.{AtomicBatches, Takedown}
 
 /** Takedown on a [[StreamingOps.continuousCdcDedup]] persisted chunk
   * index: [[StreamingOps.cdcStateDelete]] hides the victim's owned
@@ -11,6 +11,23 @@ import graft.operators.AtomicBatches
   * removes the bytes under the `_MAINT` lock.
   */
 class CdcTakedownSpec extends SparkSpec {
+
+  /** One MemoryStream per test dir, reused across restarts; each
+    * `run(...)` call is one stream lifetime.
+    */
+  private def harness(dir: String): Seq[Seq[(Long, String)]] => Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val in = MemoryStream[(Long, String)]
+    batches => {
+      val q = StreamingOps.continuousCdcDedup(
+        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
+        s"$dir/index", s"$dir/out", s"$dir/ckpt").start()
+      try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+  }
 
   private val textX =
     "the quick brown fox jumps over the lazy dog in the morning sun today"
@@ -104,5 +121,42 @@ class CdcTakedownSpec extends SparkSpec {
     spark.read.parquet(s"$dir/index")
       .filter(col("doc_id") === 0L).count() shouldBe 0L
     new java.io.File(s"$dir/index/_victims").exists() shouldBe false
+  }
+
+  test("a stream resumes after a complete takedown compacted with includeLatest") {
+    // regression: the compaction leaves the index root with no data
+    // files, and the resumed stream's index probe failed to infer a
+    // schema instead of reading "no prior rows"
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cdc-full").toString
+    val run = harness(dir)
+    run(Seq(Seq((0L, textX), (1L, textY))))
+    StreamingOps.cdcStateDelete(Seq(0L, 1L).toDF("doc_id"), "doc_id",
+      s"$dir/index")
+    StreamingOps.compactCdcIndex(spark, s"$dir/index", includeLatest = true)
+    // nothing is indexed any more: a new copy of X is kept whole and
+    // owns its chunks
+    run(Seq(Seq((10L, textX))))
+    val out10 = spark.read.parquet(s"$dir/out")
+      .filter(col("doc_id") === 10L)
+      .select("n_chunks", "n_chunks_kept").head()
+    out10.getLong(1) shouldBe out10.getLong(0)
+    StreamingOps.cdcStatePresentIds(spark, s"$dir/index")
+      .collect().map(_.getLong(0)).toSet shouldBe Set(10L)
+  }
+
+  test("a full cdc_state purge through forgetCompactAssert reports purged") {
+    // regression: the audit read the compacted, now empty index with a
+    // bare parquet read and reported the purge as failed
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cdc-purge").toString
+    harness(dir)(Seq(Seq((0L, textX), (1L, textY))))
+    val out = Takedown.forgetCompactAssert(
+      Seq((0L, textX), (1L, textY)).toDF("id", "text"),
+      Seq(Takedown.Store("cdc_state", s"$dir/index",
+        Map("idCol" -> "doc_id", "includeLatest" -> "true"))),
+      bestEffort = true).collect()
+    out.map(_.getAs[String]("status")).toSeq shouldBe Seq("purged")
+    StreamingOps.cdcStatePresentIds(spark, s"$dir/index").count() shouldBe 0L
   }
 }

@@ -193,6 +193,23 @@ class ClusterTakedownSpec extends SparkSpec {
     labelMap(dir) shouldBe Map(10L -> 10L, 11L -> 10L)
   }
 
+  test("a stream resumes after a complete takedown compacted with includeLatest") {
+    // regression: the compaction leaves the index root with no data
+    // files, and the resumed stream's index probe failed to infer a
+    // schema instead of reading "no prior rows"
+    val dir = java.nio.file.Files.createTempDirectory("ctd-full").toString
+    val run = harness(dir)
+    run(Seq(Seq((0L, docA), (1L, docA))))
+    StreamingOps.clusterStateDelete(ids(0L, 1L), "doc_id",
+      s"$dir/index", s"$dir/pairs", s"$dir/labels")
+    StreamingOps.compactClusterState(spark,
+      s"$dir/index", s"$dir/pairs", s"$dir/labels", includeLatest = true)
+    labelMap(dir) shouldBe empty
+    run(Seq(Seq((10L, docA), (11L, docA))))
+    labelMap(dir) shouldBe Map(10L -> 10L, 11L -> 10L)
+    labelMap(dir) shouldBe rebuild(dir)
+  }
+
   test("takedown works on a stream that never produced pairs or labels") {
     // regression: clusterStateDelete used to crash reading the empty
     // labels/pairs stores (a pair-less batch writes no partition), so
