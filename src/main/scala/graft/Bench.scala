@@ -49,6 +49,18 @@ object Bench {
       s""""sf":${Verify.jsonStr(sfDir)}}"""
   }
 
+  /** The record files a run writes: none for a subset run (a partial
+    * record must not clobber the complete one); a full run with a failed
+    * query keeps the shipping LATEST and SUMMARY records and writes only
+    * its SF's history and best record, whose readers skip -1 entries.
+    */
+  private[graft] def recordFiles(subset: Boolean,
+      results: Seq[(String, Double)], sfName: String): Seq[String] =
+    if (subset) Nil
+    else Seq(s"BENCH_FULL_$sfName.json", s"BENCH_BEST_$sfName.json") ++
+      (if (results.exists(_._2 < 0)) Nil
+       else Seq("BENCH_FULL_LATEST.json", "BENCH_SUMMARY.json"))
+
   // the one record writer: every record file lands relative to the
   // working directory (the repo root under sbt's forked run and
   // tools/run_main.sh); a failed write is reported, not swallowed
@@ -264,36 +276,31 @@ object Bench {
 
     val allMs = results.sortBy(_._1)
       .map { case (k, v) => Verify.jsonStr(k) + ":" + ms(v) }.mkString("{", ",", "}")
-    // FULL runs only: a SPARK_GRAFT_ONLY subset run must not clobber the
-    // complete record with a partial one
-    if (only.isEmpty) {
-      val samplesJson = throughputSamples
-        .map(s => math.round(s).toString).mkString("[", ",", "]")
-      val retriedJson = retried.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val driftBestJson = driftVsBest.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val fullJson = summary.dropRight(1) +
-        s""","throughput_samples":$samplesJson,"drift_retried":$retriedJson,"drift_vs_best":$driftBestJson,"timings_ms":$allMs}"""
-      // LATEST = the shipping record; BENCH_FULL_<sf>.json = this SF's
-      // drift-guard history, immune to runs at other SFs
-      writeRecord("BENCH_FULL_LATEST.json", fullJson)
-      writeRecord(s"BENCH_FULL_$sfName.json", fullJson)
-      // fold this run into the all-time best record (min per query)
-      val newBest = (bestTimings.keySet ++ results.collect {
-        case (k, v) if v >= 0 => k }.toSet).toSeq.sorted.map { k =>
-        val cand = Seq(bestTimings.get(k),
-          results.toMap.get(k).filter(_ >= 0)).flatten
-        k -> cand.min
-      }
-      val bestMs = newBest
-        .map { case (k, v) => Verify.jsonStr(k) + ":" + ms(v) }.mkString("{", ",", "}")
-      writeRecord(bestPath,
-        s"""{"sf":${Verify.jsonStr(sfDir)},"timings_ms":$bestMs}""")
-      // the exact summary line also lands in a stable root-level file,
-      // for readers that cannot parse the stdout tail (sbt's logger
-      // once prefixed every forked line; build.sbt now forwards forked
-      // output unprefixed)
-      writeRecord("BENCH_SUMMARY.json", summary)
+    val samplesJson = throughputSamples
+      .map(s => math.round(s).toString).mkString("[", ",", "]")
+    val retriedJson = retried.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val driftBestJson = driftVsBest.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val fullJson = summary.dropRight(1) +
+      s""","throughput_samples":$samplesJson,"drift_retried":$retriedJson,"drift_vs_best":$driftBestJson,"timings_ms":$allMs}"""
+    // fold this run into the all-time best record (min per query)
+    val newBest = (bestTimings.keySet ++ results.collect {
+      case (k, v) if v >= 0 => k }.toSet).toSeq.sorted.map { k =>
+      val cand = Seq(bestTimings.get(k),
+        results.toMap.get(k).filter(_ >= 0)).flatten
+      k -> cand.min
     }
+    val bestMs = newBest
+      .map { case (k, v) => Verify.jsonStr(k) + ":" + ms(v) }.mkString("{", ",", "}")
+    // LATEST = the shipping record; BENCH_FULL_<sf>.json = this SF's
+    // drift-guard history, immune to runs at other SFs; the exact
+    // summary line also lands in a stable root-level file, for readers
+    // that cannot parse the stdout tail
+    val records = Map("BENCH_FULL_LATEST.json" -> fullJson,
+      s"BENCH_FULL_$sfName.json" -> fullJson,
+      bestPath -> s"""{"sf":${Verify.jsonStr(sfDir)},"timings_ms":$bestMs}""",
+      "BENCH_SUMMARY.json" -> summary)
+    recordFiles(only.nonEmpty, results, sfName)
+      .foreach(file => writeRecord(file, records(file)))
 
     // slowest-last so a byte- or line-limited tail keeps the queries most
     // worth comparing round-over-round

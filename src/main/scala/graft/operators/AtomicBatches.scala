@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** The `_COMMIT` batch protocol shared by the append-only index
-  * channels (the triangle index's `batches/`, the BM25 index's
-  * `deletes/`): each logical append stages its tables under one
+  * channels (the triangle index's `batches/`, the [[VictimChannel]]
+  * `victims/`): each logical append stages its tables under one
   * numbered directory and becomes visible ATOMICALLY via a zero-byte
   * `_COMMIT` marker — a crash mid-stage leaves an uncommitted
   * directory that every reader ignores and the next writer sweeps, so
@@ -170,7 +170,7 @@ private[graft] object AtomicBatches {
 
   /** Run a FULL REBUILD holding the `_MAINT` marker. Rebuilds are
     * multi-step too — base tables land, THEN the stale side channels
-    * (deltas / deletes / batches / a committed `base_next` stage) are
+    * (deltas / victims / batches / a committed `base_next` stage) are
     * retired — so a crash between the steps used to leave readers
     * silently folding stale channel state onto the fresh base (or a
     * later compaction swapping a stale committed stage IN). Under the

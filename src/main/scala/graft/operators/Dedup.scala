@@ -820,14 +820,12 @@ object Dedup {
         _.apply())
       // a rebuild supersedes pending deletions and an interrupted
       // compaction — retired AFTER the new base lands
-      val vp = new org.apache.hadoop.fs.Path(s"$path/victims")
-      val vfs = vp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (vfs.exists(vp)) vfs.delete(vp, true)
+      VictimChannel.retire(spark, path)
     }
   }
 
   /** DELETE (takedown) face of a [[jaccardPrefixIndexWrite]] index: one
-    * bounded id-list append to the `victims` channel. The probe
+    * bounded id-list batch staged to the [[VictimChannel]]. The probe
     * ([[jaccardJoinPrefixIncremental]]) anti-joins victims out of both
     * the candidate (prefix) and verify (docs) sides, so a deleted doc
     * pairs with nothing — exactly as if the index held only the
@@ -844,15 +842,9 @@ object Dedup {
     AtomicBatches.assertNotInMaintenance(spark, path,
       "jaccardPrefixIndexDelete")
     spark.read.parquet(s"$path/meta") // loud on a non-index path
-    ids.select(col(idCol).cast("long").as("__id")).distinct()
-      .write.mode("append").parquet(s"$path/victims")
+    VictimChannel.stage(spark, path,
+      ids.select(col(idCol).cast("long")).distinct())()
   }
-
-  /** Pending victims of a prefix index as a one-column (`as`) frame. */
-  private def prefixVictims(spark: org.apache.spark.sql.SparkSession,
-      path: String, as: String): Option[DataFrame] =
-    graft.operators.Similarity.readParquetIfAny(spark, s"$path/victims")
-      .map(_.select(col("__id").as(as)).distinct())
 
   /** AUDIT face: the ids whose docs a prefix-index probe can still pair
     * against (docs table minus the pending victim channel), as one `id`
@@ -862,12 +854,9 @@ object Dedup {
       path: String): DataFrame = {
     AtomicBatches.assertNotInMaintenance(spark, path,
       "jaccardPrefixPresentIds")
-    val docs = spark.read.parquet(s"$path/docs").select(col("__id"))
-    prefixVictims(spark, path, "__id") match {
-      case None => docs.select(col("__id").as("id"))
-      case Some(v) => docs.join(broadcast(v), Seq("__id"), "left_anti")
-        .select(col("__id").as("id"))
-    }
+    new VictimChannel(spark, path)
+      .minus(spark.read.parquet(s"$path/docs").select(col("__id")), "__id")
+      .select(col("__id").as("id"))
   }
 
   /** Physically remove a [[jaccardPrefixIndexWrite]] index's pending
@@ -882,34 +871,22 @@ object Dedup {
     * `takeover = true`.
     */
   def jaccardPrefixIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String, takeover: Boolean = false): Unit = {
-    import graft.operators.Similarity.readParquetIfAny
-    import org.apache.spark.sql.graft.Bridge
-    if (readParquetIfAny(spark, s"$path/victims").isEmpty &&
-        !AtomicBatches.maintenanceActive(spark, path)) return
-    AtomicBatches.withMaintenanceLock(spark, path, takeover) {
-      readParquetIfAny(spark, s"$path/victims").foreach { v0 =>
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val v = v0.distinct().localCheckpoint(true)
-        try {
-          // the two rewrite chains touch disjoint tables and read only
-          // the checkpointed victim frame — concurrent under the _MAINT
-          // lock (the CountStore.compactSwap stage-build judgment)
-          Takedown.inParallel(Seq("docs" -> "__id", "prefix" -> "__pid")) {
-            case (table, idc) =>
-              // checkpoint BEFORE overwriting the table being read
-              val kept = spark.read.parquet(s"$path/$table")
-                .join(v.select(col("__id").as(idc)), Seq(idc), "left_anti")
-                .localCheckpoint(true)
-              try kept.write.mode("overwrite").parquet(s"$path/$table")
-              finally Bridge.releaseLocalCheckpoint(kept)
-          }
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/victims"), true)
-        } finally Bridge.releaseLocalCheckpoint(v)
+      path: String, takeover: Boolean = false): Unit =
+    VictimChannel.compact(spark, path, takeover) { v =>
+      // the two rewrite chains touch disjoint tables and read only the
+      // checkpointed victim frame — concurrent under the _MAINT lock
+      // (the CountStore.compactSwap stage-build judgment)
+      Takedown.inParallel(Seq("docs" -> "__id", "prefix" -> "__pid")) {
+        case (table, idc) =>
+          // checkpoint BEFORE overwriting the table being read
+          val kept = spark.read.parquet(s"$path/$table")
+            .join(v.select(col("id").as(idc)), Seq(idc), "left_anti")
+            .localCheckpoint(true)
+          try kept.write.mode("overwrite").parquet(s"$path/$table")
+          finally
+            org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(kept)
       }
     }
-  }
 
   private def readPrefixMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Double) = {
@@ -927,19 +904,8 @@ object Dedup {
       textCol: String, path: String): Unit = {
     requireIntegralId(newDocs, idCol, "jaccardPrefixIndexAppend")
     val spark = newDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path,
+    VictimChannel.requireFresh(newDocs, idCol, path,
       "jaccardPrefixIndexAppend")
-    // versionless index: a pending victim entry would silently hide the
-    // re-appended rows — compact first
-    prefixVictims(spark, path, "__v").foreach { v =>
-      val hits = newDocs.select(col(idCol).cast("long").as("__v"))
-        .join(broadcast(v), Seq("__v"), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(hits.isEmpty,
-        s"jaccardPrefixIndexAppend to $path includes ids with PENDING " +
-        s"deletions (e.g. ${hits.mkString(", ")}); run " +
-        "jaccardPrefixIndexCompact first, then re-append")
-    }
     val (shingleN, threshold) = readPrefixMeta(spark, path)
     val shingled = prefixShingled(newDocs, idCol, textCol, shingleN)
       .select(col(idCol).cast("long").as("__id"), col("sh"))
@@ -1000,11 +966,8 @@ object Dedup {
       // expensive collect_list/sort agg (the jaccardJoinPrefix judgment)
     // takedown-aware: deleted docs leave the candidate side immediately
     // (one broadcast anti-join against the bounded victim list)
-    val prefOld = prefixVictims(spark, path, "__pid") match {
-      case None => spark.read.parquet(s"$path/prefix")
-      case Some(v) => spark.read.parquet(s"$path/prefix")
-        .join(broadcast(v), Seq("__pid"), "left_anti")
-    }
+    val victims = new VictimChannel(spark, path)
+    val prefOld = victims.minus(spark.read.parquet(s"$path/prefix"), "__pid")
     // new×corpus (both orientations — corpus ids can sit on either side
     // of the id order) ∪ new×new, one union of prefix rows with a flag
     val all = prefOld.withColumn("__new", lit(false))
@@ -1032,12 +995,7 @@ object Dedup {
     // ...and the verify side (belt-and-braces: no candidate references a
     // victim once the prefix side is pruned, but the dropped rows keep
     // the picked-set deterministic if one ever did)
-    val docsOld = prefixVictims(spark, path, "__id") match {
-      case None => spark.read.parquet(s"$path/docs")
-      case Some(v) => spark.read.parquet(s"$path/docs")
-        .join(broadcast(v), Seq("__id"), "left_anti")
-    }
-    val shById = docsOld
+    val shById = victims.minus(spark.read.parquet(s"$path/docs"), "__id")
       .withColumn("__new", lit(false))
       .unionByName(shNew.withColumn("__new", lit(true)))
       .withColumn("__rn", row_number().over(pick))

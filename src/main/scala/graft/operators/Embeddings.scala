@@ -334,7 +334,7 @@ object Embeddings {
   //   path/<model table>  — the served model (centroids / codebooks)
   //   path/manifest       — (id, vec): the rows the model was trained
   //                         on (provenance)
-  //   path/victims        — (id): tombstoned training ids
+  //   path/victims        — tombstoned training ids ([[VictimChannel]])
   //   path/meta           — the retrain recipe (dim/k/iters, + m)
   //   path/_STALE         — victim-influence fence
   //
@@ -402,13 +402,13 @@ object Embeddings {
           .parquet(s"$path/${modelTable._1}")
         manifest.write.mode("overwrite").parquet(s"$path/manifest")
         meta.write.mode("overwrite").parquet(s"$path/meta")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/victims"), true)
+        VictimChannel.retire(spark, path)
         fs.delete(new org.apache.hadoop.fs.Path(staleMarker(path)), false)
       }
 
     /** Takedown face: fence, then tombstone — see the section note.
       * Order matters for crash honesty: the fence goes up BEFORE the
-      * tombstones land, so a crash between leaves a
+      * tombstone batch commits, so a crash between leaves a
       * refused-but-auditable store (probe still reports the victims →
       * `held`, loud), never a servable victim-trained model. Victims
       * absent from the manifest are no-ops; re-delivery is idempotent.
@@ -438,7 +438,7 @@ object Embeddings {
           val (fs, _) = fsOf(spark, path)
           fs.create(new org.apache.hadoop.fs.Path(staleMarker(path)), true)
             .close()
-          hit.write.mode("append").parquet(s"$path/victims")
+          VictimChannel.stage(spark, path, hit)()
         }
       } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(hit)
     }
@@ -449,25 +449,20 @@ object Embeddings {
     def presentIds(spark: org.apache.spark.sql.SparkSession,
         path: String, face: String): DataFrame = {
       AtomicBatches.assertNotInMaintenance(spark, path, face)
-      val manifest = spark.read.parquet(s"$path/manifest").select("id")
-      Similarity.readParquetIfAny(spark, s"$path/victims") match {
-        case Some(v) =>
-          manifest.join(broadcast(v.select("id").distinct()), Seq("id"),
-            "left_anti")
-        case None => manifest
-      }
+      new VictimChannel(spark, path)
+        .minus(spark.read.parquet(s"$path/manifest").select("id"), "id")
     }
 
     /** Physical removal = RETRAIN over the manifest survivors, then
-      * swap the manifest to the survivor set, drop the tombstones, and
-      * lift the fence. `retrain` maps the survivor manifest frame to
-      * the new model table's rows (each face reads its own recipe from
-      * `path/meta` and handles the empty-survivors edge). No-op when
-      * nothing is tombstoned. Runs under the `_MAINT` lock; a crashed
-      * pass re-runs with `takeover = true` (every step is a pure
-      * function of the current tables — the manifest swap is recovered
-      * from `manifest_next` if a crash landed between its delete and
-      * rename).
+      * swap the manifest to the survivor set, lift the fence and retire
+      * the tombstones ([[VictimChannel.compact]]). `retrain` maps the
+      * survivor manifest frame to the new model table's rows (each face
+      * reads its own recipe from `path/meta` and handles the
+      * empty-survivors edge). No-op when nothing is tombstoned. Runs
+      * under the `_MAINT` lock; a crashed pass re-runs with
+      * `takeover = true` (every step is a pure function of the current
+      * tables — the manifest swap is recovered from `manifest_next` if a
+      * crash landed between its delete and rename).
       */
     def compact(spark: org.apache.spark.sql.SparkSession, path: String,
         takeover: Boolean, modelTable: String)
@@ -475,55 +470,39 @@ object Embeddings {
       val (fs, _) = fsOf(spark, path)
       val mPath = new org.apache.hadoop.fs.Path(s"$path/manifest")
       val mNext = new org.apache.hadoop.fs.Path(s"$path/manifest_next")
-      val anyVictims = Similarity.readParquetIfAny(spark, s"$path/victims")
-        .exists(_.limit(1).count() > 0)
-      // the no-op return must NOT skip a leftover _MAINT marker (a
-      // compact that crashed after its last cleanup step but before
-      // the lock release): entering the lock under takeover — and
-      // releasing it — is the only way the store unfences
-      if (!anyVictims && !stale(spark, path) && !fs.exists(mNext) &&
-          !AtomicBatches.maintenanceActive(spark, path))
-        return
       // fence WITHOUT tombstones = a delete crashed between fence-up
-      // and its tombstone write (the cleanup below drops the fence
-      // strictly BEFORE the tombstones, so a crashed COMPACT can never
+      // and its tombstone commit (the rewrite below drops the fence
+      // BEFORE the channel retires, so a crashed COMPACT can never
       // leave this state): the victim set is unknown here, and
       // retraining over the full manifest would lift the fence while
       // every victim still influences the model — refuse, the recovery
       // is re-running the forget (re-delivery is safe)
-      require(!(stale(spark, path) && !anyVictims && !fs.exists(mNext)),
+      val pending = new VictimChannel(spark, path).batches.nonEmpty
+      require(!stale(spark, path) || pending || fs.exists(mNext),
         s"model store at $path is FENCED (_STALE) with no tombstones " +
         "recorded: a delete crashed between the fence and its tombstone " +
         "write, so the victim set is unknown — re-run the forget (its " +
         "re-delivery is idempotent) before compacting; retraining now " +
         "would lift the fence with every victim still in the model.")
-      AtomicBatches.withMaintenanceLock(spark, path, takeover) {
+      VictimChannel.compact(spark, path, takeover) { victims =>
         if (!fs.exists(mPath) && fs.exists(mNext) &&
             !fs.rename(mNext, mPath))
           throw new java.io.IOException(
             s"manifest swap recovery rename $mNext -> $mPath failed")
-        val survivors = Similarity.readParquetIfAny(spark,
-            s"$path/victims") match {
-          case Some(v) => spark.read.parquet(mPath.toString)
-            .join(broadcast(v.select("id").distinct()), Seq("id"),
-              "left_anti")
-          case None => spark.read.parquet(mPath.toString)
-        }
-        survivors.write.mode("overwrite").parquet(mNext.toString)
+        spark.read.parquet(mPath.toString)
+          .join(broadcast(victims), Seq("id"), "left_anti")
+          .write.mode("overwrite").parquet(mNext.toString)
         retrain(spark.read.parquet(mNext.toString))
           .write.mode("overwrite").parquet(s"$path/$modelTable")
         if (!fs.delete(mPath, true) || !fs.rename(mNext, mPath))
           throw new java.io.IOException(
             s"manifest swap $mNext -> $mPath failed mid-way; re-run the " +
             "compaction with takeover = true — it recovers the swap")
-        // cleanup ORDER is load-bearing: the fence drops before the
-        // tombstones, so "stale with no tombstones" can only ever mean
-        // a crashed DELETE (the refuse above) — a compact crashing
-        // between these two deletes leaves an unfenced store with
-        // already-applied tombstones, which the next pass harmlessly
-        // re-folds (they are no longer in the manifest)
+        // the fence drops BEFORE the channel retires, so "stale with no
+        // tombstones" only ever means a crashed DELETE (refused above); a
+        // crash between the two leaves applied tombstones that the next
+        // pass harmlessly re-folds (they left the manifest)
         fs.delete(new org.apache.hadoop.fs.Path(staleMarker(path)), false)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/victims"), true)
       }
     }
   }

@@ -281,12 +281,12 @@ object TrainingData {
         .write.mode("overwrite").parquet(s"$path/meta")
       // a rebuild supersedes pending deletions and an interrupted
       // compaction — retired AFTER the new base lands
-      clearIndexVictims(docs.sparkSession, path)
+      VictimChannel.retire(docs.sparkSession, path)
     }
   }
 
   /** DELETE (takedown) face of a [[decontamIndexWrite]] index: one
-    * bounded id-list append to the index's `victims` channel — nothing
+    * bounded id-list batch staged to the [[VictimChannel]] — nothing
     * bucket-partitioned is rewritten at delete time. Every probe
     * anti-joins the (small, broadcast) victim list, so a deleted doc's
     * grams stop matching immediately — the probe answers exactly as if
@@ -297,73 +297,18 @@ object TrainingData {
     * silently hide the re-inserted rows).
     */
   def decontamIndexDelete(ids: DataFrame, idCol: String,
-      path: String): Unit =
-    stageIndexVictims(ids, idCol, path)
-
-  /** [[decontamIndexDelete]] for a [[containmentIndexWrite]] index. */
-  def containmentIndexDelete(ids: DataFrame, idCol: String,
-      path: String): Unit =
-    stageIndexVictims(ids, idCol, path)
-
-  private def stageIndexVictims(ids: DataFrame, idCol: String,
       path: String): Unit = {
     val spark = ids.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path, "index delete")
     // loud on a non-index path: both layouts persist a meta table
     spark.read.parquet(s"$path/meta")
-    // canonical column NAME in the channel: two delete calls passing
-    // different idCol names would otherwise append mixed-schema files,
-    // and a non-merged read infers one footer's schema — the other
-    // file's victims come back NULL and silently stop being hidden (a
-    // lost takedown); [[indexVictims]] renames back to the probe's id
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path/victims")
+    VictimChannel.stage(spark, path, ids.select(col(idCol)).distinct())()
   }
 
-  /** The pending victim ids of a decontamination index (or None), with
-    * the column renamed to the probe's id column.
-    */
-  private def indexVictims(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String): Option[DataFrame] =
-    graft.operators.Similarity.readParquetIfAny(spark, s"$path/victims")
-      .map(v => v.select(col(v.columns.head).as(idCol)).distinct())
-
-  /** Hide pending victims from a probe's store read — one broadcast
-    * anti-join against the bounded takedown list.
-    */
-  private def minusIndexVictims(spark: org.apache.spark.sql.SparkSession,
-      path: String, store: DataFrame, idCol: String): DataFrame =
-    indexVictims(spark, path, idCol) match {
-      case None => store
-      case Some(v) => store.join(broadcast(v), Seq(idCol), "left_anti")
-    }
-
-  /** The append-face guard: a versionless index cannot re-insert an id
-    * with a pending victim entry (the rows would land yet stay hidden) —
-    * compact first. Doubles as the maintenance guard.
-    */
-  private def requireNoIndexVictims(df: DataFrame, idCol: String,
-      path: String, face: String): Unit = {
-    val spark = df.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, face)
-    indexVictims(spark, path, idCol).foreach { v =>
-      val hits = df.select(col(idCol))
-        .join(broadcast(v), Seq(idCol), "left_semi")
-        .limit(5).collect().map(_.get(0))
-      require(hits.isEmpty,
-        s"$face to $path includes ids with PENDING deletions (e.g. " +
-        s"${hits.mkString(", ")}): the appended rows would be hidden by " +
-        "the victim list. Compact the index first, then re-append.")
-    }
-  }
-
-  private def clearIndexVictims(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/victims")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    AtomicBatches.clearMaintenance(spark, path)
-  }
+  /** [[decontamIndexDelete]] for a [[containmentIndexWrite]] index. */
+  def containmentIndexDelete(ids: DataFrame, idCol: String,
+      path: String): Unit =
+    decontamIndexDelete(ids, idCol, path)
 
   /** Physically remove a [[decontamIndexWrite]] index's pending victims:
     * rewrite only the victim-touched gram buckets (dynamic partition
@@ -375,44 +320,29 @@ object TrainingData {
     */
   def decontamIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    compactIndexVictims(spark, path, "grams", "gb", "g", takeover)
+    indexCompact(spark, path, "grams", "gb", "g", takeover)
 
   /** [[decontamIndexCompact]] for a [[containmentIndexWrite]] index. */
   def containmentIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    compactIndexVictims(spark, path, "shingles", "sb", "tok", takeover)
+    indexCompact(spark, path, "shingles", "sb", "tok", takeover)
 
-  private def compactIndexVictims(spark: org.apache.spark.sql.SparkSession,
+  private def indexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, table: String, bucketCol: String, sortCol: String,
-      takeover: Boolean): Unit = {
-    import graft.operators.Similarity.readParquetIfAny
-    if (readParquetIfAny(spark, s"$path/victims").isEmpty &&
-        !AtomicBatches.maintenanceActive(spark, path)) return
-    AtomicBatches.withMaintenanceLock(spark, path, takeover) {
-      readParquetIfAny(spark, s"$path/victims").foreach { v0 =>
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val v = v0.distinct().localCheckpoint(true)
-        try {
-          val store = spark.read.parquet(s"$path/$table")
-          // the victims channel stores the canonical `id` name
-          // (stageIndexVictims); the store's id column is its FIRST
-          // column — rename the victim side to match
-          val storeIdCol = store.columns.head
-          // shared rewrite protocol (AtomicBatches): only victim-touched
-          // buckets rewrite; sort order preserved for row-group skipping
-          val joined = store.join(
-            v.select(col(v.columns.head).as(storeIdCol),
-              lit(true).as("__dead")),
-            Seq(storeIdCol), "left_outer")
-          AtomicBatches.pruneDeadPartitionRows(spark, s"$path/$table",
-            bucketCol, joined, col("__dead").isNotNull,
-            store.columns.toSeq, sortWithin = Some(sortCol))
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/victims"), true)
-        } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(v)
-      }
+      takeover: Boolean): Unit =
+    VictimChannel.compact(spark, path, takeover) { v =>
+      val store = spark.read.parquet(s"$path/$table")
+      // the store's id column is its FIRST column
+      val storeIdCol = store.columns.head
+      // shared rewrite protocol (AtomicBatches): only victim-touched
+      // buckets rewrite; sort order preserved for row-group skipping
+      val joined = store.join(
+        v.select(col("id").as(storeIdCol), lit(true).as("__dead")),
+        Seq(storeIdCol), "left_outer")
+      AtomicBatches.pruneDeadPartitionRows(spark, s"$path/$table",
+        bucketCol, joined, col("__dead").isNotNull,
+        store.columns.toSeq, sortWithin = Some(sortCol))
     }
-  }
 
   /** Append a new corpus batch to a [[decontamIndexWrite]] index under
     * its frozen gram width. Ids must be disjoint from the indexed
@@ -420,7 +350,7 @@ object TrainingData {
     */
   def decontamIndexAppend(newDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
-    requireNoIndexVictims(newDocs, idCol, path, "decontamIndexAppend")
+    VictimChannel.requireFresh(newDocs, idCol, path, "decontamIndexAppend")
     val meta = newDocs.sparkSession.read.parquet(s"$path/meta").head()
     decontamGramsOut(newDocs, idCol, textCol, path,
       meta.getAs[Int]("n"), meta.getAs[Int]("n_buckets"), overwrite = false)
@@ -467,9 +397,8 @@ object TrainingData {
       .select(pmod(col("g"), lit(nBuckets.toLong)))
       .distinct().collect().map(_.getLong(0))
     AtomicBatches.assertNotInMaintenance(spark, path, "decontaminateFromIndex")
-    minusIndexVictims(spark, path,
-        spark.read.parquet(s"$path/grams")
-          .filter(col("gb").isin(buckets: _*)), idCol)
+    new VictimChannel(spark, path).minus(spark.read.parquet(s"$path/grams")
+        .filter(col("gb").isin(buckets: _*)), idCol)
       .join(broadcast(benchGrams), Seq("g"))
       .groupBy(idCol).agg(count(lit(1)).as("n_overlap_grams"))
   }
@@ -495,7 +424,7 @@ object TrainingData {
       docs.sparkSession.range(1)
         .select(lit(shingleN).as("shingle_n"), lit(nBuckets).as("n_buckets"))
         .write.mode("overwrite").parquet(s"$path/meta")
-      clearIndexVictims(docs.sparkSession, path)
+      VictimChannel.retire(docs.sparkSession, path)
     }
   }
 
@@ -504,7 +433,8 @@ object TrainingData {
     */
   def containmentIndexAppend(newDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
-    requireNoIndexVictims(newDocs, idCol, path, "containmentIndexAppend")
+    VictimChannel.requireFresh(newDocs, idCol, path,
+      "containmentIndexAppend")
     val meta = newDocs.sparkSession.read.parquet(s"$path/meta").head()
     containmentShinglesOut(newDocs, idCol, textCol, path,
       meta.getAs[Int]("shingle_n"), meta.getAs[Int]("n_buckets"),
@@ -557,9 +487,8 @@ object TrainingData {
       .distinct().collect().map(_.getLong(0))
     AtomicBatches.assertNotInMaintenance(spark, path,
       "decontaminateContainmentFromIndex")
-    minusIndexVictims(spark, path,
-        spark.read.parquet(s"$path/shingles")
-          .filter(col("sb").isin(buckets: _*)), idCol)
+    new VictimChannel(spark, path).minus(spark.read.parquet(s"$path/shingles")
+        .filter(col("sb").isin(buckets: _*)), idCol)
       .join(broadcast(evalToks), Seq("tok"))
       .groupBy(col(idCol), col("__eid"), col("__se"))
       .agg(count(lit(1)).as("__m"))
@@ -1718,7 +1647,7 @@ object TrainingData {
   def bm25IndexWrite(docs: DataFrame, idCol: String, textCol: String,
       path: String, nBuckets: Int = 64): Unit =
     // the whole rebuild holds _MAINT (withRebuildMarker): a crash after
-    // the base landed but before the stale deletes channel was retired
+    // the base landed but before the stale victim channel was retired
     // used to leave probes silently folding the old negative deltas
     // onto the fresh base — now the window fails loudly instead
     AtomicBatches.withRebuildMarker(docs.sparkSession, path) {
@@ -1733,15 +1662,15 @@ object TrainingData {
       // a rebuild supersedes every pending delete — retired only AFTER
       // the new base lands (a failed rebuild keeps failing loudly under
       // the marker rather than quietly serving a half-state)
-      val root = new org.apache.hadoop.fs.Path(s"$path/deletes")
-      val fs = root.getFileSystem(
-        docs.sparkSession.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+      VictimChannel.retire(docs.sparkSession, path)
     }
 
   /** Append a new batch to a [[bm25IndexWrite]] index: postings + df
     * batch counts + one stats row, under the index's frozen bucket
-    * count. Ids must be disjoint from the indexed corpus.
+    * count. Ids must be disjoint from the indexed corpus, and an id
+    * deleted by [[bm25IndexDelete]] is refused until a compaction
+    * applied the delete (its new postings would stay hidden, and the
+    * compaction would then remove them too).
     */
   def bm25IndexAppend(newDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
@@ -1751,7 +1680,7 @@ object TrainingData {
     // ids, and a compaction would recompute stats from the partial
     // table. Fail here instead, like the missing-meta case.
     val spark = newDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "bm25IndexAppend")
+    VictimChannel.requireFresh(newDocs, idCol, path, "bm25IndexAppend")
     val dl = new org.apache.hadoop.fs.Path(s"$path/doclens")
     val fsDl = dl.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fsDl.exists(dl),
@@ -1860,45 +1789,36 @@ object TrainingData {
     // rows are NEGATIVE exact integers (sum order invisible) and their
     // victim postings are anti-joined out of scoring. No deletes → the
     // plan is byte-identical to the pre-deletion one.
-    val deletes = bm25DeleteDirs(spark, path)
-    val tf0 = pruned("postings")
+    val deletes = new VictimChannel(spark, path)
+    val tf = deletes.minus(pruned("postings")
       .select(col(idCol), col("term"), col("tf").cast("double").as("__tf"),
-        col("dl").cast("double").as("__dl"))
-    val tf = deletes match {
-      case None => tf0
-      case Some(dirs) => tf0.join(
-        spark.read.parquet(dirs.map(d => s"$d/ids"): _*),
-        Seq(idCol), "left_anti")
-    }
-    def withDeletes(df0: DataFrame, sub: String): DataFrame =
-      deletes match {
-        case None => df0
-        case Some(dirs) =>
-          df0.unionByName(spark.read.parquet(dirs.map(d => s"$d/$sub"): _*)
-            .filter(col("tb").isin(buckets: _*) && col("term").isin(qTerms: _*)))
-      }
-    val dfT = withDeletes(pruned("df"), "df").groupBy("term")
-      .agg(sum(col("df")).cast("double").as("__df"))
+        col("dl").cast("double").as("__dl")), idCol)
+    val dfT = withDeletes(spark, deletes, pruned("df"), "df")(
+        _.filter(col("tb").isin(buckets: _*) && col("term").isin(qTerms: _*)))
+      .groupBy("term").agg(sum(col("df")).cast("double").as("__df"))
     bm25Score(tf, dfT, bm25IndexStats(spark, path, deletes),
       Seq(idCol), k1, b)
   }
+
+  // `base` ∪ the `sub` payload rows of the committed delete batches,
+  // pruned like the base read
+  private def withDeletes(spark: org.apache.spark.sql.SparkSession,
+      deletes: VictimChannel, base: DataFrame, sub: String)
+      (prune: DataFrame => DataFrame = identity): DataFrame =
+    if (deletes.batches.isEmpty) base
+    else base.unionByName(prune(
+      spark.read.parquet(deletes.batches.map(d => s"$d/$sub"): _*)))
 
   // the (N, avgdl) fold shared by every index probe face: base + append
   // batches + negative delete rows, all exact long sums (order invisible;
   // the coalesce mirrors bm25's all-null-dl fallback)
   private def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, deletes: Option[Seq[String]]): DataFrame = {
-    val statsAll = deletes match {
-      case None => spark.read.parquet(s"$path/stats")
-      case Some(dirs) => spark.read.parquet(s"$path/stats")
-        .unionByName(spark.read.parquet(dirs.map(d => s"$d/stats"): _*))
-    }
-    statsAll
+      path: String, deletes: VictimChannel): DataFrame =
+    withDeletes(spark, deletes, spark.read.parquet(s"$path/stats"), "stats")()
       .agg(sum(col("n_docs")).cast("double").as("__n"),
         when(sum(col("n_dl")) > 0,
           sum(col("sum_dl")).cast("double") / sum(col("n_dl")).cast("double"))
           .otherwise(lit(1.0)).as("__avgdl"))
-  }
 
   /** Batched retrieval against a [[bm25IndexWrite]] index: the top-`k`
     * documents PER QUERY for a whole query table in ONE job — the
@@ -1955,28 +1875,16 @@ object TrainingData {
         .getOrElse(spark.range(0).select(lit(0L).as(idCol),
           lit("").as("term"), lit(0L).as("tf"), lit(0L).as("dl"),
           lit(0L).as("tb"), lit(0L).as("df")))
-    val deletes = bm25DeleteDirs(spark, path)
-    val tf0 = pruned("postings")
+    val deletes = new VictimChannel(spark, path)
+    val tf = deletes.minus(pruned("postings")
       .join(broadcast(qTerms.select("__qid", "term")), Seq("term"))
       .select(col("__qid"), col(idCol), col("term"),
         col("tf").cast("double").as("__tf"),
-        col("dl").cast("double").as("__dl"))
-    val tf = deletes match {
-      case None => tf0
-      case Some(dirs) => tf0.join(
-        spark.read.parquet(dirs.map(d => s"$d/ids"): _*),
-        Seq(idCol), "left_anti")
-    }
-    val dfBase = deletes match {
-      case None => pruned("df")
-      case Some(dirs) =>
-        pruned("df").unionByName(
-          spark.read.parquet(dirs.map(d => s"$d/df"): _*)
-            .filter(col("tb").isin(buckets: _*))
-            .join(broadcast(qTermKeys), Seq("term"), "left_semi"))
-    }
-    val dfT = dfBase.groupBy("term")
-      .agg(sum(col("df")).cast("double").as("__df"))
+        col("dl").cast("double").as("__dl")), idCol)
+    val dfT = withDeletes(spark, deletes, pruned("df"), "df")(
+        _.filter(col("tb").isin(buckets: _*))
+          .join(broadcast(qTermKeys), Seq("term"), "left_semi"))
+      .groupBy("term").agg(sum(col("df")).cast("double").as("__df"))
     val scored = bm25Score(tf, dfT,
       bm25IndexStats(spark, path, deletes), Seq("__qid", idCol), k1, b)
     // bounded top-k per query (score desc, id asc — the round-6 score
@@ -1995,8 +1903,8 @@ object TrainingData {
 
   /** DELETE (takedown) face of the BM25 index — the tombstone
     * discipline ([[graft.operators.Similarity.ivfDelete]]) applied to
-    * retrieval: each call stages one atomic delete batch under
-    * `<path>/deletes/<n>/` holding
+    * retrieval: each call stages one atomic batch to the index's
+    * [[VictimChannel]] holding
     *
     *  - `ids` — the victim ids actually present in the index (and not
     *    already deleted: double-deleting must not double-subtract),
@@ -2006,23 +1914,21 @@ object TrainingData {
     *    the `doclens` table (postings alone cannot reconstruct a
     *    token-less or null-text victim's stats contribution),
     *
-    * made visible ATOMICALLY by a `_COMMIT` marker (the triangle-index
-    * batch protocol — a crash between the three writes can neither
-    * half-apply a delete nor double-apply it on retry: uncommitted
-    * directories are invisible and swept here). [[bm25FromIndex]] then
+    * made visible ATOMICALLY by the channel's `_COMMIT` marker — a
+    * crash between the three writes can neither half-apply a delete nor
+    * double-apply it on retry. [[bm25FromIndex]] then
     * folds the negative deltas into df/stats — both are exact-integer
     * sums, so order is invisible — and anti-joins victim postings out
     * of scoring; [[bm25IndexCompact]] makes the removal physical.
     *
-    * Nothing corpus-partitioned is rewritten at delete time. Contract:
-    * a deleted id must not be re-appended until after a compact or
-    * rebuild (the append contract already requires fresh ids); indexes
-    * built before the `doclens` table fail loudly with a rebuild
-    * instruction.
+    * Nothing corpus-partitioned is rewritten at delete time. A deleted
+    * id cannot be re-appended until after a compact or rebuild
+    * ([[bm25IndexAppend]] refuses it); indexes built before the
+    * `doclens` table fail loudly with a rebuild instruction.
     */
   def bm25IndexDelete(ids: DataFrame, idCol: String, path: String): Unit = {
     val spark = ids.sparkSession
-    // a delete staged while compaction removes the deletes channel
+    // a delete staged while compaction retires the victim channel
     // would be silently erased — a lost takedown
     AtomicBatches.assertNotInMaintenance(spark, path, "bm25IndexDelete")
     val doclens =
@@ -2034,55 +1940,35 @@ object TrainingData {
               "support (or the path is not a bm25 index); rebuild with " +
               "bm25IndexWrite", e)
       }
-    // sweep crashed (uncommitted) attempts — invisible to every reader
-    AtomicBatches.sweepUncommitted(spark, s"$path/deletes")
-    val prior = bm25DeleteDirs(spark, path)
     // victims = requested ∩ indexed ∖ already-deleted, with their exact
-    // stats contribution from doclens
-    var victims = doclens
-      .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-    prior.foreach { dirs =>
-      victims = victims.join(
-        spark.read.parquet(dirs.map(d => s"$d/ids"): _*),
-        Seq(idCol), "left_anti")
-    }
-    victims = victims.localCheckpoint(true) // ids + stats + df read it
+    // stats contribution from doclens, keyed by the index's own id
+    // column whatever the request calls it
+    val dlId = doclens.columns.head
+    val victims = new VictimChannel(spark, path).minus(doclens.join(
+        ids.select(col(idCol).as(dlId)).distinct(), Seq(dlId), "left_semi"),
+        dlId)
+      .localCheckpoint(true) // ids + stats + df read it
     try {
       if (victims.isEmpty) return
-      val bdir =
-        s"$path/deletes/${AtomicBatches.nextBatchN(spark, s"$path/deletes")}"
-      // the three staged tables are independent jobs over the
-      // checkpointed victims frame, invisible until the _COMMIT below —
-      // run them concurrently (the bm25IndexOut judgment): wall = the
-      // postings pass, not the sum of three
-      Takedown.inParallel(Seq[() => Unit](
-        () => victims.select(col(idCol))
-          .write.mode("overwrite").parquet(s"$bdir/ids"),
-        () => victims.agg((-count(lit(1))).as("n_docs"),
-            (-count(col("dl"))).as("n_dl"),
-            (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$bdir/stats"),
-        // one column-pruned postings pass: each victim posting row is
-        // one df unit to give back on its (term, tb)
-        () => spark.read.parquet(s"$path/postings")
-          .select(col("term"), col(idCol), col("tb"))
-          .join(victims.select(col(idCol)), Seq(idCol), "left_semi")
-          .groupBy(col("term"), col("tb"))
-          .agg((-count(lit(1))).as("df"))
-          .write.mode("overwrite").parquet(s"$bdir/df")))(_.apply())
-      AtomicBatches.commit(spark, bdir)
+      // the ids and the two payload tables are written concurrently over
+      // the checkpointed victims (the bm25IndexOut judgment)
+      VictimChannel.stage(spark, path, victims.select(col(dlId))) { dir =>
+        Seq(
+          () => victims.agg((-count(lit(1))).as("n_docs"),
+              (-count(col("dl"))).as("n_dl"),
+              (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
+            .repartition(1)
+            .write.mode("overwrite").parquet(s"$dir/stats"),
+          // one column-pruned postings pass: each victim posting row is
+          // one df unit to give back on its (term, tb)
+          () => spark.read.parquet(s"$path/postings")
+            .select(col("term"), col(dlId), col("tb"))
+            .join(victims.select(col(dlId)), Seq(dlId), "left_semi")
+            .groupBy(col("term"), col("tb"))
+            .agg((-count(lit(1))).as("df"))
+            .write.mode("overwrite").parquet(s"$dir/df"))
+      }
     } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(victims)
-  }
-
-  /** Committed delete-batch directories of a BM25 index (the
-    * [[AtomicBatches]] protocol), or None when the channel is
-    * absent/empty.
-    */
-  private def bm25DeleteDirs(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Seq[String]] = {
-    val dirs = AtomicBatches.committedDirs(spark, s"$path/deletes")
-    if (dirs.isEmpty) None else Some(dirs)
   }
 
   /** AUDIT face: the doc ids whose postings still influence BM25
@@ -2093,17 +1979,8 @@ object TrainingData {
       path: String): DataFrame = {
     AtomicBatches.assertNotInMaintenance(spark, path, "bm25PresentIds")
     val doclens = spark.read.parquet(s"$path/doclens")
-    val idCol = doclens.columns.head
-    val present = doclens.select(col(idCol).as("id"))
-    bm25DeleteDirs(spark, path) match {
-      case None => present
-      case Some(dirs) =>
-        val victims = spark.read.parquet(dirs.map(d => s"$d/ids"): _*)
-        present.join(
-          broadcast(victims.select(col(victims.columns.head).as("id"))
-            .distinct()),
-          Seq("id"), "left_anti")
-    }
+    new VictimChannel(spark, path)
+      .minus(doclens.select(col(doclens.columns.head).as("id")), "id")
   }
 
   /** AUDIT face of the gram/shingle decontamination indexes: the ids
@@ -2121,8 +1998,8 @@ object TrainingData {
       else "shingles"
     val rows = spark.read.parquet(s"$path/$table")
     val idCol = rows.columns.head
-    minusIndexVictims(spark, path,
-      rows.select(col(idCol)).distinct(), idCol)
+    new VictimChannel(spark, path)
+      .minus(rows.select(col(idCol)).distinct(), idCol)
       .select(col(idCol).as("id"))
   }
 
@@ -2133,86 +2010,76 @@ object TrainingData {
     * `stats` for the whole index from the compacted ground truth —
     * recomputation (not delta folding) is what makes a crashed
     * compaction safely re-runnable: every step is a pure function of
-    * (current tables, committed victims). Finally the delete channel is
-    * removed. Maintenance is EXCLUSIVE: don't probe concurrently, and
-    * re-run to completion after a crash before resuming probes (between
-    * the stats rewrite and the channel removal a reader would fold the
-    * delete twice). ENFORCED via the `_MAINT` marker
-    * (`AtomicBatches.withMaintenanceLock`): probe/delete/append faces
-    * fail loudly while compaction holds it, a crash leaves it in place,
-    * and the re-run must pass `takeover = true`.
+    * (current tables, committed victims). Finally the victim channel is
+    * retired ([[VictimChannel]]). Maintenance is EXCLUSIVE: don't probe
+    * concurrently, and re-run to completion after a crash before
+    * resuming probes (between the stats rewrite and the channel removal
+    * a reader would fold the delete twice). ENFORCED via the `_MAINT`
+    * marker (`AtomicBatches.withMaintenanceLock`): probe/delete/append
+    * faces fail loudly while compaction holds it, a crash leaves it in
+    * place, and the re-run must pass `takeover = true`.
     */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String, takeover: Boolean = false): Unit = {
-    // nothing staged and no crashed pass to resume: skip the lock
-    if (bm25DeleteDirs(spark, path).isEmpty &&
-        !AtomicBatches.maintenanceActive(spark, path)) return
-    AtomicBatches.withMaintenanceLock(spark, path, takeover) {
-      bm25IndexCompactBody(spark, path)
-    }
-  }
-
-  private def bm25IndexCompactBody(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val dirs = bm25DeleteDirs(spark, path).getOrElse(return)
-    val victims = spark.read.parquet(dirs.map(d => s"$d/ids"): _*)
-      .distinct().localCheckpoint(true)
-    val idCol = victims.columns.head
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // every checkpoint lands here and is released in the finally — a
-    // failed bucket rewrite must not leak posting-scale pinned blocks
-    // into the re-run the docstring requires
-    val pinned = scala.collection.mutable.ListBuffer[DataFrame](victims)
-    def pin(df: DataFrame): DataFrame = { pinned += df; df }
-    try {
-      // touched buckets: driver-bounded (≤nBuckets) from the delete
-      // batches' df deltas — buckets without victims are never read
-      val touched = spark.read.parquet(dirs.map(d => s"$d/df"): _*)
-        .select(col("tb").cast("long")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (touched.nonEmpty) {
-        val kept = pin(spark.read.parquet(s"$path/postings")
-          .filter(col("tb").isin(touched: _*))
-          .join(victims, Seq(idCol), "left_anti")
-          .localCheckpoint(true)) // postings rewrite + df recompute read it
-        kept.repartition(col("tb"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tb")
-          .parquet(s"$path/postings")
-        // a bucket emptied entirely keeps its stale directory under
-        // dynamic overwrite — remove it, and its df partition, directly
-        val outTb = kept.select(col("tb").cast("long")).distinct()
-          .collect().map(_.getLong(0)).toSet
-        // recompute df for the touched buckets from the compacted rows
-        kept.groupBy(col("term"), col("tb"))
-          .agg(count(lit(1)).as("df"))
-          .repartition(col("tb"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tb")
-          .parquet(s"$path/df")
-        touched.filterNot(outTb).foreach { tb =>
-          Seq("postings", "df").foreach { t =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t/tb=$tb"), true)
+      path: String, takeover: Boolean = false): Unit =
+    VictimChannel.compact(spark, path, takeover) { ids =>
+      val dirs = new VictimChannel(spark, path).batches
+      val doclens = spark.read.parquet(s"$path/doclens")
+      val idCol = doclens.columns.head
+      val victims = ids.select(col("id").as(idCol))
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // every checkpoint lands here and is released in the finally — a
+      // failed bucket rewrite must not leak posting-scale pinned blocks
+      // into the re-run the docstring requires
+      val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
+      def pin(df: DataFrame): DataFrame = { pinned += df; df }
+      try {
+        // touched buckets: driver-bounded (≤nBuckets) from the delete
+        // batches' df deltas — buckets without victims are never read
+        val touched = spark.read.parquet(dirs.map(d => s"$d/df"): _*)
+          .select(col("tb").cast("long")).distinct()
+          .collect().map(_.getLong(0)).sorted
+        if (touched.nonEmpty) {
+          val kept = pin(spark.read.parquet(s"$path/postings")
+            .filter(col("tb").isin(touched: _*))
+            .join(victims, Seq(idCol), "left_anti")
+            .localCheckpoint(true)) // postings rewrite + df recompute read it
+          kept.repartition(col("tb"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("tb")
+            .parquet(s"$path/postings")
+          // a bucket emptied entirely keeps its stale directory under
+          // dynamic overwrite — remove it, and its df partition, directly
+          val outTb = kept.select(col("tb").cast("long")).distinct()
+            .collect().map(_.getLong(0)).toSet
+          // recompute df for the touched buckets from the compacted rows
+          kept.groupBy(col("term"), col("tb"))
+            .agg(count(lit(1)).as("df"))
+            .repartition(col("tb"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("tb")
+            .parquet(s"$path/df")
+          touched.filterNot(outTb).foreach { tb =>
+            Seq("postings", "df").foreach { t =>
+              fs.delete(
+                new org.apache.hadoop.fs.Path(s"$path/$t/tb=$tb"), true)
+            }
           }
         }
-      }
-      // doclens minus victims — checkpointed before overwriting the
-      // table it reads
-      val dlKept = pin(spark.read.parquet(s"$path/doclens")
-        .join(victims, Seq(idCol), "left_anti")
-        .localCheckpoint(true))
-      dlKept.write.mode("overwrite").parquet(s"$path/doclens")
-      // stats from ground truth: one row replacing every batch row
-      val newStats = pin(dlKept
-        .agg(count(lit(1)).as("n_docs"), count(col("dl")).as("n_dl"),
-          coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-        .repartition(1).localCheckpoint(true))
-      newStats.write.mode("overwrite").parquet(s"$path/stats")
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
-    } finally pinned.foreach(
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint)
-  }
+        // doclens minus victims — checkpointed before overwriting the
+        // table it reads
+        val dlKept = pin(doclens.join(victims, Seq(idCol), "left_anti")
+          .localCheckpoint(true))
+        dlKept.write.mode("overwrite").parquet(s"$path/doclens")
+        // stats from ground truth: one row replacing every batch row
+        val newStats = pin(dlKept
+          .agg(count(lit(1)).as("n_docs"), count(col("dl")).as("n_dl"),
+            coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
+          .repartition(1).localCheckpoint(true))
+        newStats.write.mode("overwrite").parquet(s"$path/stats")
+      } finally pinned.foreach(
+        org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint)
+    }
 }

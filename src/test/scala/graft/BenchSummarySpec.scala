@@ -43,4 +43,16 @@ class BenchSummarySpec extends AnyFunSuite with Matchers {
       """"timings_ms":{"q_a":1500,"q_boom":-1}}"""
     Bench.timingsAtSf(record, "/data/sf0.1") shouldBe Some(Map("q_a" -> 1.5))
   }
+
+  test("a run with a failed query keeps the shipping record") {
+    val ok = Seq("q_a" -> 1.5, "q_b" -> 0.25)
+    val failed = ok :+ ("q_boom" -> -1.0)
+    val history = Seq("BENCH_FULL_sf0.1.json", "BENCH_BEST_sf0.1.json")
+    val shipping = Seq("BENCH_FULL_LATEST.json", "BENCH_SUMMARY.json")
+    Bench.recordFiles(subset = false, ok, "sf0.1").toSet shouldBe
+      (history ++ shipping).toSet
+    Bench.recordFiles(subset = false, failed, "sf0.1").toSet shouldBe
+      history.toSet
+    Bench.recordFiles(subset = true, ok, "sf0.1") shouldBe empty
+  }
 }

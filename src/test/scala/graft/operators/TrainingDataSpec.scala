@@ -961,4 +961,34 @@ class TrainingDataSpec extends SparkSpec {
     rows.map(_.getAs[Long]("doc_id")).toSeq shouldBe Seq(1L)
     rows.head.getAs[String]("lang") shouldBe "en"
   }
+
+  test("bm25IndexAppend refuses an id with a pending delete; after the " +
+      "compaction the re-appended doc scores like a fresh index") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "spark spark common common"),
+      (2L, "vector common common common"),
+      (3L, "spark vector words here")).toDF("doc_id", "text")
+    val q = Seq("spark", "vector")
+    val dir = java.nio.file.Files.createTempDirectory("bm25re").toString
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    TrainingData.bm25IndexWrite(docs, "doc_id", "text", dir, nBuckets = 4)
+    TrainingData.bm25IndexDelete(Seq(1L).toDF("doc_id"), "doc_id", dir)
+    val back = Seq((1L, "spark vector vector")).toDF("doc_id", "text")
+    // accepted, the new postings would stay hidden behind the pending
+    // delete, and the compaction would then delete them too
+    intercept[IllegalArgumentException] {
+      TrainingData.bm25IndexAppend(back, "doc_id", "text", dir)
+    }.getMessage should include("PENDING deletions")
+    TrainingData.bm25PresentIds(spark, dir).collect().map(_.getLong(0))
+      .toSet shouldBe Set(2L, 3L)
+    TrainingData.bm25IndexCompact(spark, dir)
+    TrainingData.bm25IndexAppend(back, "doc_id", "text", dir)
+    val now = docs.filter(col("doc_id") =!= 1L).unionByName(back)
+    rows(TrainingData.bm25FromIndex(spark, dir, "doc_id", q)) shouldBe
+      rows(TrainingData.bm25(now, "doc_id", "text", q))
+    TrainingData.bm25PresentIds(spark, dir).collect().map(_.getLong(0))
+      .toSet shouldBe Set(1L, 2L, 3L)
+  }
 }
