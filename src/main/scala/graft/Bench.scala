@@ -51,15 +51,26 @@ object Bench {
 
   /** The record files a run writes: none for a subset run (a partial
     * record must not clobber the complete one); a full run with a failed
-    * query keeps the shipping LATEST and SUMMARY records and writes only
-    * its SF's history and best record, whose readers skip -1 entries.
+    * query, or one on fewer `cpus` than the shipping summary was taken on
+    * (`shippingCpus`, None for a summary without the field), keeps the
+    * shipping LATEST and SUMMARY records and writes only its SF's history
+    * and best record, whose readers skip -1 entries.
     */
   private[graft] def recordFiles(subset: Boolean,
-      results: Seq[(String, Double)], sfName: String): Seq[String] =
+      results: Seq[(String, Double)], sfName: String,
+      cpus: Int = 0, shippingCpus: Option[Int] = None): Seq[String] =
     if (subset) Nil
     else Seq(s"BENCH_FULL_$sfName.json", s"BENCH_BEST_$sfName.json") ++
-      (if (results.exists(_._2 < 0)) Nil
+      (if (results.exists(_._2 < 0) || shippingCpus.exists(_ > cpus)) Nil
        else Seq("BENCH_FULL_LATEST.json", "BENCH_SUMMARY.json"))
+
+  /** The `cpus` a summary record was taken on; None for a record from
+    * before the field. A malformed record throws (an `IOException`).
+    */
+  private[graft] def summaryCpus(record: String): Option[Int] = {
+    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(record).path("cpus")
+    if (n.isInt) Some(n.asInt) else None
+  }
 
   // the one record writer: every record file lands relative to the
   // working directory (the repo root under sbt's forked run and
@@ -270,8 +281,8 @@ object Bench {
     //       the final chunk, so the highest-signal numbers sit closest
     //       to the guaranteed-kept end) and then the <300-byte summary
     //       line LAST — inside any tail window, carrying the gates.
-    val summary = summaryJson(results, throughput, sfDir,
-      spark.sparkContext.defaultParallelism)
+    val cores = spark.sparkContext.defaultParallelism
+    val summary = summaryJson(results, throughput, sfDir, cores)
     def ms(v: Double): String = if (v < 0) "-1" else math.round(v * 1000).toString
 
     val allMs = results.sortBy(_._1)
@@ -299,7 +310,14 @@ object Bench {
       s"BENCH_FULL_$sfName.json" -> fullJson,
       bestPath -> s"""{"sf":${Verify.jsonStr(sfDir)},"timings_ms":$bestMs}""",
       "BENCH_SUMMARY.json" -> summary)
-    recordFiles(only.nonEmpty, results, sfName)
+    val shippingCpus =
+      try {
+        val path = java.nio.file.Paths.get("BENCH_SUMMARY.json")
+        if (!java.nio.file.Files.isReadable(path)) None
+        else summaryCpus(new String(java.nio.file.Files.readAllBytes(path), "UTF-8"))
+      } catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] could not read BENCH_SUMMARY.json: $e"); None }
+    recordFiles(only.nonEmpty, results, sfName, cores, shippingCpus)
       .foreach(file => writeRecord(file, records(file)))
 
     // slowest-last so a byte- or line-limited tail keeps the queries most

@@ -81,26 +81,21 @@ object PipelineRunner {
     * the incoming schema, compiled chain with conservation metrics,
     * topic-routed encode with the outgoing schema.
     *
-    * Malformed messages decode to null instead of killing the query, are
-    * counted as `messages_error_total` (observation "decode_metrics" —
-    * the reference's per-message catch at src/consumer.js:142-150), and
-    * are produced nowhere, exactly like chain-errored rows with no DLQ.
+    * A malformed message decodes to null instead of killing the query
+    * and enters the chain as an error before its first step: it is
+    * counted in the one observation, "pipeline_metrics", as received and
+    * as `messages_error_total` (the reference's per-message catch at
+    * src/consumer.js:142-150), and produced nowhere, exactly like a
+    * chain-errored row with no DLQ. Decode, chain and observation inputs
+    * compile into one whole-stage pass; route filter and encode into a
+    * second one after the observation.
     */
   def decodeAndRoute(source: DataFrame, spec: PipelineDef,
       inSchemaJson: String, outSchemaJson: String, outSchemaId: Int): DataFrame = {
-    // poison messages count toward BOTH received and error here, so the
-    // listener's merged totals keep the reference's conservation
-    // invariant (received = completed + dlq + dropped + error): the
-    // chain's own observation adds the successfully-decoded rows to
-    // received, this one adds the failures
     val decoded = source
       .select(ConfluentAvro.fromConfluentAvroSafe(col("value"), inSchemaJson).as("m"))
-      .observe("decode_metrics",
-        count(when(col("m").isNull, 1)).as("messages_received_total"),
-        count(when(col("m").isNull, 1)).as("messages_error_total"))
-      .filter(col("m").isNotNull)
-      .select("m.key", "m.value", "m.num")
-    spec.toPipeline.observed(decoded).kafkaShape(df =>
+      .select(col("m.key"), col("m.value"), col("m.num"), col("m").isNull.as("poison"))
+    spec.toPipeline.observedWithPoison(decoded, col("poison")).kafkaShape(df =>
       ConfluentAvro.toConfluentAvro(
         struct(df("key"), df("value"), df("num")), outSchemaJson, outSchemaId))
   }

@@ -881,17 +881,22 @@ object Similarity {
     * exist as an EMPTY directory: compaction with `includeLatest`
     * prunes every `batch_id=` partition but leaves the `deltas` root,
     * and schema inference over zero files throws, not returns empty.
-    * Both conditions mean "no rows here".
+    * Both conditions mean "no rows here". A missing path is checked
+    * first: Spark's read would log a warning with a stack trace for it;
+    * the catch covers an empty directory and a delete racing the read.
     */
   private[graft] def readParquetIfAny(
       spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[DataFrame] =
-    try Some(spark.read.parquet(path))
+      : Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(spark.read.parquet(path))
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" ||
              e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
     }
+  }
 
   /** The CURRENT rows of a persisted index, cell-pruned: base cells
     * under `cellPred` ∪ un-compacted deltas, de-duplicated on id by

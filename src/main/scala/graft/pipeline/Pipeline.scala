@@ -2,8 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.LongType
 
 /** The canonical message shape of the reference engine:
   * `{key: string, value: string, num: int}` (reference
@@ -76,18 +74,12 @@ object Processors {
     * src/consumer.js:96-103): parse `value` as a number into `num`,
     * "throwing" when it is not numeric.
     */
-  val parseNum: MapProcessor = {
-    // try_cast(string as bigint) throws and catches an exception inside for
-    // every non-numeric value. The legacy cast returns null instead, and it
-    // accepts a superset of what the exact parse accepts (the same parser,
-    // also allowing a decimal part), so its null check can gate try_cast
-    // without changing a result.
-    def parsed(v: Column): Column =
-      when(Bridge.legacyCast(v, LongType).isNotNull, v.try_cast("long"))
+  val parseNum: MapProcessor =
+    // ParseLong is try_cast(value as bigint) in one pass, without the
+    // exception try_cast throws and catches for every non-numeric value
     MapProcessor("parseNum")(
-      m => m.copy(num = parsed(m.value)),
-      errorWhen = m => parsed(m.value).isNull)
-  }
+      m => m.copy(num = ParseLong(m.value)),
+      errorWhen = m => ParseLong(m.value).isNull)
 
   private val builtin: Seq[Processor] =
     Seq(add10, appendString, capitalize, reverseString, isEven, parseNum)
@@ -125,7 +117,8 @@ object Routing {
   * Columns: topic, key, value, num, error_step (int|null), dropped_step
   * (int|null). DLQ rows carry the ORIGINAL pre-chain message, matching
   * src/consumer.js:87,100. `errorSinkSteps` are the steps with no DLQ,
-  * whose errored rows go to the error sink.
+  * whose errored rows go to the error sink, and [[Pipeline.Poison]] when
+  * the input may hold messages that did not decode.
   */
 final case class RoutedMessages(df: DataFrame, target: String, errorSinkSteps: Seq[Int]) {
   private val msgCols = Seq(col("key"), col("value"), col("num"))
@@ -179,57 +172,72 @@ final case class Pipeline(steps: Seq[Step], target: String = "target") {
     * later steps skip it.
     */
   def apply(input: DataFrame): RoutedMessages = {
-    var df = input
-      .withColumn("__orig", struct(col("key"), col("value"), col("num")))
-      .withColumn("__drop", lit(null).cast("int"))
-      .withColumn("__err", lit(null).cast("int"))
+    val r = route(input, poison = None)
+    r.copy(df = r.df.drop("__route"))
+  }
+
+  private def mapSteps: Seq[Int] = steps.indices.filter(i => !steps(i).processor.isFilter)
+  private def filterSteps: Seq[Int] = steps.indices.filter(i => steps(i).processor.isFilter)
+  private def errorSinkSteps: Seq[Int] = mapSteps.filter(i => steps(i).dlq.isEmpty)
+
+  /** The chain carries one int per row, `__stop`: null while the row is
+    * live, else the step that stopped it (a map step errors it, a filter
+    * drops it) or [[Pipeline.Poison]] for a message that never decoded,
+    * which enters already errored and skips every step. The routed frame
+    * also carries its route class `__route`, with `steps.length` for a
+    * completed row, for the observation.
+    */
+  private def route(input: DataFrame, poison: Option[Column]): RoutedMessages = {
+    val stop = col("__stop")
+    val live = stop.isNull
+    val poisoned = poison.map(_ => Pipeline.Poison).toSeq
+    // the pre-chain message, which errored rows carry to their DLQ
+    val original = Seq(col("key").as("__key0"), col("value").as("__value0"), col("num").as("__num0"))
+    var df = input.select(Seq(col("key"), col("value"), col("num")) ++ original :+
+      poison.fold(lit(null).cast("int"))(when(_, lit(Pipeline.Poison))).as("__stop"): _*)
 
     steps.zipWithIndex.foreach { case (Step(p, _), i) =>
-      val ok = col("__drop").isNull && col("__err").isNull
       val m = Msg(col("key"), col("value"), col("num"))
       p match {
         case f: FilterProcessor =>
           // SQL filter semantics: a NULL predicate drops the row (like
-          // df.filter). Without the coalesce, when(ok && !null, ...)
+          // df.filter). Without the coalesce, when(live && !null, ...)
           // would fall through and silently KEEP null-predicate rows.
-          df = df.withColumn("__drop",
-            when(ok && !coalesce(f.pred(m), lit(false)), lit(i))
-              .otherwise(col("__drop")))
+          df = df.withColumn("__stop",
+            when(live && !coalesce(f.pred(m), lit(false)), lit(i)).otherwise(stop))
         case mp: MapProcessor =>
-          val err = when(ok && mp.errorWhen(m), lit(i)).otherwise(col("__err"))
-          val live = col("__drop").isNull && err.isNull
+          val stopped = when(live && mp.errorWhen(m), lit(i)).otherwise(stop)
           val m2 = mp.fn(m)
           df = df.select(
-            when(live, m2.key).otherwise(col("key")).as("key"),
-            when(live, m2.value).otherwise(col("value")).as("value"),
-            when(live, m2.num).otherwise(col("num")).as("num"),
-            col("__orig"), col("__drop"), err.as("__err"))
+            when(stopped.isNull, m2.key).otherwise(col("key")).as("key"),
+            when(stopped.isNull, m2.value).otherwise(col("value")).as("value"),
+            when(stopped.isNull, m2.num).otherwise(col("num")).as("num"),
+            col("__key0"), col("__value0"), col("__num0"), stopped.as("__stop"))
       }
     }
 
-    // error_step → DLQ topic name; no DLQ configured ⇒ error sink
-    // (reference src/consumer.js:96-103: dlq[i] nullable).
-    val dlqTopic = steps.zipWithIndex.foldLeft(lit(Routing.Error): Column) {
-      case (acc, (Step(_, Some(t)), i)) => when(col("__err") === i, lit(t)).otherwise(acc)
-      case (acc, _) => acc
-    }
-    val topic = when(col("__err").isNotNull, dlqTopic)
-      .when(col("__drop").isNotNull, lit(Routing.Dropped))
-      .otherwise(lit(target))
-
-    val isErr = col("__err").isNotNull
+    def stoppedAt(at: Seq[Int]): Column =
+      if (at.isEmpty) lit(false) else stop.isin(at: _*)
+    val errored = stoppedAt(poisoned ++ mapSteps)
+    // stop step → topic: its DLQ, the error sink (no DLQ configured,
+    // reference src/consumer.js:96-103: dlq[i] nullable) or dropped
+    val stopTopics = poisoned.map(_ -> Routing.Error) ++
+      steps.zipWithIndex.map { case (Step(p, dlq), i) =>
+        i -> (if (p.isFilter) Routing.Dropped else dlq.getOrElse(Routing.Error))
+      }
+    val topic = if (stopTopics.isEmpty) lit(target) else stopTopics.init
+      .foldLeft(when(live, lit(target))) { case (acc, (k, t)) => acc.when(stop === k, lit(t)) }
+      .otherwise(lit(stopTopics.last._2))
     val routed = df.select(
       topic.as("topic"),
-      when(isErr, col("__orig.key")).otherwise(col("key")).as("key"),
-      when(isErr, col("__orig.value")).otherwise(col("value")).as("value"),
-      when(isErr, col("__orig.num")).otherwise(col("num")).as("num"),
-      col("__err").as("error_step"),
-      col("__drop").as("dropped_step"))
-    RoutedMessages(routed, target, errorSinkSteps)
+      when(errored, col("__key0")).otherwise(col("key")).as("key"),
+      when(errored, col("__value0")).otherwise(col("value")).as("value"),
+      when(errored, col("__num0")).otherwise(col("num")).as("num"),
+      when(errored, stop).as("error_step"),
+      when(stoppedAt(filterSteps), stop).as("dropped_step"),
+      coalesce(stop, lit(steps.length)).as("__route"))
+    RoutedMessages(routed, target, poisoned ++ errorSinkSteps)
   }
-
-  private def errorSinkSteps: Seq[Int] =
-    steps.indices.filter(i => !steps(i).processor.isFilter && steps(i).dlq.isEmpty)
 
   /** Routed DataFrame instrumented with the reference's conservation
     * metrics (reference src/metrics.js:5-45):
@@ -237,53 +245,59 @@ final case class Pipeline(steps: Seq[Step], target: String = "target") {
     * Reads back via `org.apache.spark.sql.Observation` on an action, or
     * the streaming `QueryProgressEvent.observedMetrics`.
     *
-    * There are `steps + 1` distinct aggregates, all integer compares: the
-    * rows received, and per step the rows it stopped (a map step errors
-    * them, a filter drops them; a row stops at most once). Every counter
-    * is an exact integer expression over those, so conservation holds by
-    * construction: rows_in(i) = received - Σ_{j<i} stopped(j), and since
-    * no DLQ topic may equal the target or a sentinel, completed/dlq/
-    * dropped/error are the survivors and the stopped rows by step kind
-    * and DLQ slot. Spark's observation accumulator updates one slot per
-    * occurrence of an aggregate in a counter, for every row, so each
-    * counter names each count at most once.
+    * Every counter is one [[RouteCount]] aggregate over the row's route
+    * class (−1 for a message that never decoded, i for a row stopped at
+    * step i, `steps.length` for a completed one), or the constant 0 where
+    * the step kinds rule it out. A row has exactly one class and every
+    * class maps to exactly one of completed/dlq/dropped/error (no DLQ
+    * topic may equal the target or a sentinel), so conservation holds by
+    * construction, and rows_in(i) counts the classes ≥ i. Spark's
+    * observation accumulator updates one slot per aggregate occurrence
+    * for every row, so no counter is a sum of other counts.
     * Per-step labels follow the reference's {processor_name/step}
     * (src/metrics.js); sub-expression timing has no Spark equivalent,
     * documented deviation (SURVEY §7.3).
     */
-  def observed(input: DataFrame, name: String = "pipeline_metrics"): RoutedMessages = {
-    val r = apply(input)
-    val received = count(lit(1))
-    val stopped = steps.zipWithIndex.map { case (Step(p, _), i) =>
-      count(when(col(if (p.isFilter) "dropped_step" else "error_step") === i, 1))
-    }
-    def total(cs: Seq[Column]): Column = cs.reduceOption(_ + _).getOrElse(lit(0L))
-    def stoppedWhere(pick: Step => Boolean): Column =
-      total(steps.indices.filter(i => pick(steps(i))).map(stopped))
-    val rowsIn = steps.indices.map(i => stopped.take(i).foldLeft(received)(_ - _))
+  def observed(input: DataFrame, name: String = "pipeline_metrics"): RoutedMessages =
+    observe(route(input, poison = None), name)
+
+  /** [[observed]] over decoded messages where `poison` marks the ones that
+    * did not decode: they route to the error sink and count as received
+    * and errored, and as no step's input.
+    */
+  private[graft] def observedWithPoison(input: DataFrame, poison: Column): RoutedMessages =
+    observe(route(input, Some(poison)), "pipeline_metrics")
+
+  private def observe(r: RoutedMessages, name: String): RoutedMessages = {
+    val classes = -1 to steps.length
+    // a counter weighs each route class; one weighing none is constant
+    def counter(weight: Int => Long): Column =
+      if (classes.forall(weight(_) == 0)) lit(0L)
+      else RouteCount(col("__route"), classes.map(weight))
+    def rowsOf(cs: Seq[Int]): Column = counter(c => if (cs.contains(c)) 1L else 0L)
     val perStep = steps.zipWithIndex.flatMap { case (Step(p, _), i) =>
       Seq(
-        rowsIn(i).as(s"step_${i}_${p.name}_rows_in_total"),
-        (if (p.isFilter) lit(0L) else stopped(i)).as(s"step_${i}_${p.name}_errors_total"),
-        (if (p.isFilter) stopped(i) else lit(0L)).as(s"step_${i}_${p.name}_dropped_total"))
+        counter(c => if (c >= i) 1L else 0L).as(s"step_${i}_${p.name}_rows_in_total"),
+        rowsOf(if (p.isFilter) Nil else Seq(i)).as(s"step_${i}_${p.name}_errors_total"),
+        rowsOf(if (p.isFilter) Seq(i) else Nil).as(s"step_${i}_${p.name}_dropped_total"))
     }
     val counters = Seq(
-      received.as("messages_received_total"),
-      // Σ rows_in(i), naming each count once
-      steps.indices.dropRight(1).foldLeft(received * steps.length) { (acc, j) =>
-        acc - stopped(j) * (steps.length - 1 - j)
-      }.as("processors_applied_total"),
-      stopped.foldLeft(received)(_ - _).as("messages_completed_total"),
-      stoppedWhere(s => !s.processor.isFilter && s.dlq.isDefined).as("messages_dlq_total"),
-      stoppedWhere(_.processor.isFilter).as("messages_dropped_total"),
-      stoppedWhere(s => !s.processor.isFilter && s.dlq.isEmpty).as("messages_error_total")) ++
+      counter(_ => 1L).as("messages_received_total"),
+      // a row stopped at step i ran i + 1 processors, a completed one all
+      counter(c => math.min(c + 1, steps.length).toLong).as("processors_applied_total"),
+      rowsOf(Seq(steps.length)).as("messages_completed_total"),
+      rowsOf(mapSteps.filter(i => steps(i).dlq.isDefined)).as("messages_dlq_total"),
+      rowsOf(filterSteps).as("messages_dropped_total"),
+      rowsOf(r.errorSinkSteps).as("messages_error_total")) ++
       perStep
-    val obsDf = r.df.observe(name, counters.head, counters.tail: _*)
-    r.copy(df = obsDf)
+    r.copy(df = r.df.observe(name, counters.head, counters.tail: _*).drop("__route"))
   }
 }
 
 object Pipeline {
+  /** The stop step of a message that never decoded: before step 0. */
+  private[graft] val Poison: Int = -1
+
   /** Build from catalog-style step ids, mirroring
     * `steps: {processors: [...], dlq: [...]}` parallel arrays
     * (reference scripts/pipelines/insertTestPipelines.js:23,32,41).

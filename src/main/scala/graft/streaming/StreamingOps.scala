@@ -1730,9 +1730,10 @@ object StreamingOps {
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      // merge every *_metrics observation by counter name — the chain's
-      // "pipeline_metrics" and the decode guard's "decode_metrics" both
-      // feed messages_error_total, like the reference's single registry
+      // sum every *_metrics observation by counter name across batches
+      // and queries, like the reference's single registry; the data
+      // plane's one observation, "pipeline_metrics", already counts the
+      // messages that failed to decode as received and errored
       e.progress.observedMetrics.forEach { (obsName, row) =>
         if (obsName.endsWith("_metrics")) {
           row.schema.fieldNames.foreach { name =>

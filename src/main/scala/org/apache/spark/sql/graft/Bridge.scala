@@ -14,15 +14,6 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** `CAST(c AS dt)` in LEGACY eval mode whatever the session's ANSI
-    * setting: a malformed value becomes null without an exception thrown.
-    * The Column API exposes only the session-mode `cast` and the TRY mode
-    * `try_cast`, which throws and catches inside for every failure.
-    */
-  def legacyCast(c: Column, dt: org.apache.spark.sql.types.DataType): Column =
-    column(org.apache.spark.sql.catalyst.expressions.Cast(expression(c), dt,
-      evalMode = org.apache.spark.sql.catalyst.expressions.EvalMode.LEGACY))
-
   /** Fully convert a composed Column into a Catalyst tree. The plain
     * `ExpressionUtils.expression` wraps the ColumnNode lazily — fine
     * inside DataFrame plans (the session converts it during analysis),

@@ -55,4 +55,22 @@ class BenchSummarySpec extends AnyFunSuite with Matchers {
       history.toSet
     Bench.recordFiles(subset = true, ok, "sf0.1") shouldBe empty
   }
+
+  test("a run on fewer cores keeps a summary recorded on more") {
+    val ok = Seq("q_a" -> 1.5)
+    val history = Seq("BENCH_FULL_sf0.1.json", "BENCH_BEST_sf0.1.json")
+    val shipping = Seq("BENCH_FULL_LATEST.json", "BENCH_SUMMARY.json")
+    def files(cpus: Int, shippingCpus: Option[Int]) =
+      Bench.recordFiles(subset = false, ok, "sf0.1", cpus, shippingCpus).toSet
+    files(8, Some(32)) shouldBe history.toSet
+    files(32, Some(32)) shouldBe (history ++ shipping).toSet
+    files(32, Some(8)) shouldBe (history ++ shipping).toSet
+    // a summary without the field may be replaced
+    files(8, None) shouldBe (history ++ shipping).toSet
+
+    // the field round-trips through the summary line
+    val line = Bench.summaryJson(ok, throughput = 1.0, sfDir = "/data/sf0.1", cpus = 32)
+    Bench.summaryCpus(line) shouldBe Some(32)
+    Bench.summaryCpus("""{"metric":"total_queries","value":1.5}""") shouldBe None
+  }
 }

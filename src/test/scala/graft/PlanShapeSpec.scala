@@ -316,10 +316,11 @@ class PlanShapeSpec extends SparkSpec {
     joined.count() should be > 0L
   }
 
-  test("decodeAndRoute: decode and encode compile whole-stage; the observation holds steps + 1 aggregates") {
+  test("decodeAndRoute: decode and encode compile whole-stage; one observation, one aggregate per counter") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    import org.apache.spark.sql.execution.{CollectMetricsExec, ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.{CollectMetricsExec, InputAdapter, ProjectExec,
+      SparkPlan, WholeStageCodegenExec}
     import graft.codec.ConfluentAvro
     import graft.pipeline.PipelineDef
     val wire = spark.range(1000).select(ConfluentAvro.toConfluentAvro(
@@ -332,10 +333,16 @@ class PlanShapeSpec extends SparkSpec {
       ConfluentAvro.eventSchemaJson, ConfluentAvro.eventSchemaJson, 1)
     val plan = routed.queryExecution.executedPlan
 
-    plan.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e })) shouldBe empty
-    val codegenProjects = plan.collect { case w: WholeStageCodegenExec =>
-      w.child.collect { case p: ProjectExec => p }
-    }.flatten
+    // the operators each whole-stage pass compiles, up to its inputs
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(inStage)
+    }
+    val compiled = plan.collect { case w: WholeStageCodegenExec => inStage(w.child) }.flatten
+    // nothing compiled falls back to interpreted eval (the observation's
+    // precompiled aggregates run in its accumulator, outside the passes)
+    compiled.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e })) shouldBe empty
+    val codegenProjects = compiled.collect { case p: ProjectExec => p }
     def projecting(cls: Class[_]) = plan.collect {
       case p: ProjectExec if p.projectList.exists(_.exists(e => cls.isInstance(e))) => p
     }
@@ -346,13 +353,18 @@ class PlanShapeSpec extends SparkSpec {
           projecting(cls).foreach(p => codegenProjects.exists(_ eq p) shouldBe true)
         }
       }
-    val observation = plan.collect { case c: CollectMetricsExec if c.name == "pipeline_metrics" => c }
-    observation should have size 1
-    // distinct aggregate functions: count(1) and one count per step (the
-    // accumulator still gives each occurrence in a counter its own slot)
-    observation.head.metricExpressions
-      .flatMap(_.collect { case a: AggregateExpression => a.canonicalized })
-      .distinct should have size (spec.processors.size + 1)
+    // the decode guard counts into the chain's observation: no second one
+    val observations = plan.collect { case c: CollectMetricsExec => c }
+    observations.map(_.name) shouldBe Seq("pipeline_metrics")
+    // the accumulator gives every aggregate occurrence its own slot, so
+    // each counter is at most one occurrence and a constant counter none
+    val counters = observations.head.metricExpressions
+    counters should have size (6 + 3 * spec.processors.size)
+    val aggregates = counters.map(_.collect { case a: AggregateExpression => a }.size)
+    aggregates.foreach(_ should be <= 1)
+    // received, applied, completed, dlq, dropped, error, 4 rows_in,
+    // 3 map-step errors and 1 filter-step drops
+    aggregates.sum shouldBe 14
     routed.count() shouldBe 500 // the even nums reach the target
   }
 }
