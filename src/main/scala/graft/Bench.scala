@@ -95,18 +95,17 @@ object Bench {
     * over a batch frame: guarded decode, 3-step chain with its
     * conservation observation, route, encode. Returns msg/s.
     */
-  private def pipelineThroughput(spark: SparkSession, n: Long): Double = {
-    val wire = wireMessages(spark, n).persist()
-    wire.count() // materialize input outside the timed section
-    val spec = PipelineDef(0, "bench", "in", "target", "event", "event",
-      Seq("capitalize", "add10", "isEven"), Seq.empty)
-    val sec = time {
-      force(PipelineRunner.decodeAndRoute(wire, spec,
-        ConfluentAvro.eventSchemaJson, ConfluentAvro.eventSchemaJson, outSchemaId = 1))
+  private def pipelineThroughput(spark: SparkSession, n: Long): Double =
+    Frames.scoped { f =>
+      val wire = f.persist(wireMessages(spark, n))
+      wire.count() // materialize input outside the timed section
+      val spec = PipelineDef(0, "bench", "in", "target", "event", "event",
+        Seq("capitalize", "add10", "isEven"), Seq.empty)
+      n / time {
+        force(PipelineRunner.decodeAndRoute(wire, spec,
+          ConfluentAvro.eventSchemaJson, ConfluentAvro.eventSchemaJson, outSchemaId = 1))
+      }
     }
-    wire.unpersist()
-    n / sec
-  }
 
   /** The per-query seconds of one bench record (`BENCH_FULL_*.json` or
     * `BENCH_BEST_*.json` text) when it was taken at `sfDir`, else None.
@@ -148,10 +147,11 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
 
-    // Several operators persist/localCheckpoint intermediates (dedup
-    // pair-gen, IVF buckets, CCNet thresholds, connected components).
-    // Left in place they accumulate across ~200 executions and tax every
-    // later query with storage pressure — numbers stop being per-query.
+    // An operator frees its own intermediates (graft.Frames); a frame it
+    // RETURNS (dedup pair-gen, IVF probes, CCNet thresholds, connected
+    // components) is left to this session cleanup. Left in place they
+    // accumulate across ~200 executions and tax every later query with
+    // storage pressure — numbers stop being per-query.
     def clearState(): Unit = {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))

@@ -926,20 +926,17 @@ object SparkEntry {
             docs.filter(col("doc_id") >= 250), "doc_id", "text",
             w = 8, maskBits = 6, cdc0), s"$base/cdc")
         },
-        () => {
-          val csPairs = Dedup.minhashLsh(docs, "doc_id", "text",
+        () => Frames.scoped { f =>
+          // labels closure + pair store read it
+          val csPairs = f.checkpoint(Dedup.minhashLsh(docs, "doc_id", "text",
             numHashes = 16, bands = 8, shingleN = 5, threshold = 0.4,
             estimateSlack = 0.05)
-            .select(col("id_a"), col("id_b"))
-            .localCheckpoint(true) // labels closure + pair store read it
-          try {
-            writeBatch0(csPairs, s"$base/cs/pairs")
-            writeBatch0(Dedup.connectedComponents(csPairs, "id_a", "id_b"),
-              s"$base/cs/labels")
-            writeBatch0(docs.select(col("doc_id").as("id")),
-              s"$base/cs/index")
-          } finally
-            org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(csPairs)
+            .select(col("id_a"), col("id_b")))
+          writeBatch0(csPairs, s"$base/cs/pairs")
+          writeBatch0(Dedup.connectedComponents(csPairs, "id_a", "id_b"),
+            s"$base/cs/labels")
+          writeBatch0(docs.select(col("doc_id").as("id")),
+            s"$base/cs/index")
         },
         // and a plain partitioned table (the GDPR deleteMatching kind)
         () => docs.select(col("doc_id"), (col("doc_id") % 16).as("p"),

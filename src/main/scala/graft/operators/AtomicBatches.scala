@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import graft.Frames
 
 /** The `_COMMIT` batch protocol shared by the append-only index
   * channels (the triangle index's `batches/`, the [[VictimChannel]]
@@ -306,10 +307,11 @@ private[graft] object AtomicBatches {
     val touched = withP.filter(dead).select(col("__pv")).distinct()
       .collect().map(_.getLong(0)).sorted
     if (touched.isEmpty) return
-    val kept = withP.filter(col("__pv").isin(touched: _*) && !dead)
-      .select(outColumns.map(col): _*)
-      .localCheckpoint(true) // rewrite + emptied-partition scan read it
-    try {
+    Frames.scoped { f =>
+      // rewrite + emptied-partition scan read it
+      val kept = f.checkpoint(withP
+        .filter(col("__pv").isin(touched: _*) && !dead)
+        .select(outColumns.map(col): _*))
       val parted = kept.repartition(col(partitionCol))
       sortWithin.map(parted.sortWithinPartitions(_)).getOrElse(parted)
         .write.mode("overwrite")
@@ -322,6 +324,6 @@ private[graft] object AtomicBatches {
         fs.delete(
           new org.apache.hadoop.fs.Path(s"$path/$partitionCol=$v"), true)
       }
-    } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(kept)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, max, md5, sum, when}
+import graft.Frames
 
 /** The shared lifecycle of the COUNT-FORM model stores — persisted
   * models whose state is additive integer sufficient statistics, so an
@@ -267,12 +268,12 @@ private[graft] object CountStore {
     val face = s"${ledger.faces}Delete"
     AtomicBatches.assertNotInMaintenance(spark, path, face)
     AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
-    val victims = victimDocs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
-      .dropDuplicates("id")
-      .join(present(spark, path, ledger, Seq("text_md5")), Seq("id"))
-      .localCheckpoint(true) // drift check + every delta table read it
-    try {
+    Frames.scoped { f =>
+      // drift check + every delta table read it
+      val victims = f.checkpoint(victimDocs.filter(col(textCol).isNotNull)
+        .select(col(idCol).as("id"), col(textCol).as("__text"))
+        .dropDuplicates("id")
+        .join(present(spark, path, ledger, Seq("text_md5")), Seq("id")))
       // the emptiness probe and the drift check are independent actions
       // on the checkpointed victims frame — one concurrent round trip
       @volatile var empty = false
@@ -291,8 +292,7 @@ private[graft] object CountStore {
       if (!empty) stageDelta(spark, path, tables(victims.select(
         (col("id").as(idCol) +: col("__text").as(textCol) +:
           ledger.keys.tail.map(col)): _*)))
-    } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(victims)
+    }
   }
 
   /** True when stream batch `batchId` already committed — the callers'

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Frames
 import graft.functions.{ArrayOps, TextFunctions => T, VectorFunctions => V}
 
 /** Deduplication operators for LLM training-data pipelines — the
@@ -798,13 +799,13 @@ object Dedup {
     // rebuild under _MAINT — the land-base-then-retire-victims crash
     // window fails loudly instead of silently folding stale victims
     // onto the fresh base (AtomicBatches.withRebuildMarker)
-    AtomicBatches.withRebuildMarker(spark, path) {
-      val shingled = prefixShingled(df, idCol, textCol, shingleN)
-        .select(col(idCol).cast("long").as("__id"), col("sh"))
-        .localCheckpoint(true) // docs write + df count + prefix all read it
+    AtomicBatches.withRebuildMarker(spark, path)(Frames.scoped { f =>
+      // docs write + df count + prefix all read it
+      val shingled = f.checkpoint(prefixShingled(df, idCol, textCol, shingleN)
+        .select(col(idCol).cast("long").as("__id"), col("sh")))
       val toks = shingled.select(col("__id"), explode(col("sh")).as("tok"))
-      val freq = toks.groupBy("tok").agg(count(lit(1)).as("__df"))
-        .localCheckpoint(true) // df write + prefix build read it
+      // df write + prefix build read it
+      val freq = f.checkpoint(toks.groupBy("tok").agg(count(lit(1)).as("__df")))
       import spark.implicits._
       // with both checkpoints landed the four table writes are
       // independent jobs over materialized frames — concurrent (the
@@ -821,7 +822,7 @@ object Dedup {
       // a rebuild supersedes pending deletions and an interrupted
       // compaction — retired AFTER the new base lands
       VictimChannel.retire(spark, path)
-    }
+    })
   }
 
   /** DELETE (takedown) face of a [[jaccardPrefixIndexWrite]] index: one
@@ -879,12 +880,9 @@ object Dedup {
       Takedown.inParallel(Seq("docs" -> "__id", "prefix" -> "__pid")) {
         case (table, idc) =>
           // checkpoint BEFORE overwriting the table being read
-          val kept = spark.read.parquet(s"$path/$table")
-            .join(v.select(col("id").as(idc)), Seq(idc), "left_anti")
-            .localCheckpoint(true)
-          try kept.write.mode("overwrite").parquet(s"$path/$table")
-          finally
-            org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(kept)
+          Frames.scoped(_.checkpoint(spark.read.parquet(s"$path/$table")
+            .join(v.select(col("id").as(idc)), Seq(idc), "left_anti"))
+            .write.mode("overwrite").parquet(s"$path/$table"))
       }
     }
 
@@ -907,21 +905,22 @@ object Dedup {
     VictimChannel.requireFresh(newDocs, idCol, path,
       "jaccardPrefixIndexAppend")
     val (shingleN, threshold) = readPrefixMeta(spark, path)
-    val shingled = prefixShingled(newDocs, idCol, textCol, shingleN)
-      .select(col(idCol).cast("long").as("__id"), col("sh"))
-      .localCheckpoint(true)
-    val toks = shingled.select(col("__id"), explode(col("sh")).as("tok"))
-    val frozen = spark.read.parquet(s"$path/df")
-    // the three appends are independent jobs over the checkpointed
-    // shingle frame (+ the immutable frozen df) — concurrent, the
-    // bm25IndexOut append-face judgment: a mid-append crash was equally
-    // partial sequentially (no _COMMIT on this face; rebuild recovers)
-    Takedown.inParallel(Seq[() => Unit](
-      () => shingled.write.mode("append").parquet(s"$path/docs"),
-      () => prefixRows(toks, "__id", frozen, threshold)
-        .write.mode("append").parquet(s"$path/prefix"),
-      () => toks.groupBy("tok").agg(count(lit(1)).as("__df"))
-        .write.mode("append").parquet(s"$path/dfdelta")))(_.apply())
+    Frames.scoped { f =>
+      val shingled = f.checkpoint(prefixShingled(newDocs, idCol, textCol,
+        shingleN).select(col(idCol).cast("long").as("__id"), col("sh")))
+      val toks = shingled.select(col("__id"), explode(col("sh")).as("tok"))
+      val frozen = spark.read.parquet(s"$path/df")
+      // the three appends are independent jobs over the checkpointed
+      // shingle frame (+ the immutable frozen df) — concurrent, the
+      // bm25IndexOut append-face judgment: a mid-append crash was equally
+      // partial sequentially (no _COMMIT on this face; rebuild recovers)
+      Takedown.inParallel(Seq[() => Unit](
+        () => shingled.write.mode("append").parquet(s"$path/docs"),
+        () => prefixRows(toks, "__id", frozen, threshold)
+          .write.mode("append").parquet(s"$path/prefix"),
+        () => toks.groupBy("tok").agg(count(lit(1)).as("__df"))
+          .write.mode("append").parquet(s"$path/dfdelta")))(_.apply())
+    }
   }
 
   /** Incremental EXACT near-dup: every pair with Jaccard ≥ `threshold`
@@ -1242,46 +1241,33 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame =
-    connectedComponentsWithCleanup(pairs, aCol, bCol, maxIter)._1
+    Frames.returning(connectedComponentsIn(_, pairs, aCol, bCol, maxIter))
 
-  /** [[connectedComponents]] plus an explicit release handle for the one
-    * cached frame the result reads from. A per-micro-batch caller
-    * ([[graft.streaming.StreamingOps.continuousClusteredDedup]]) MUST
-    * consume the result and then invoke the handle in a `finally` —
-    * relying on GC-driven ContextCleaner reclamation (the old
-    * `localCheckpoint(true)` behavior) accumulates executor blocks for
-    * the stream's lifetime. One-shot batch callers may use
-    * [[connectedComponents]] and leave the single result cache to
-    * session cleanup.
+  /** [[connectedComponents]] with its frames pinned in the caller's
+    * scope `f`; the result reads the last round, which `f` frees.
     */
-  def connectedComponentsWithCleanup(pairs: DataFrame, aCol: String,
-      bCol: String, maxIter: Int = 20): (DataFrame, () => Unit) = {
-    import org.apache.spark.sql.graft.Bridge
+  private[graft] def connectedComponentsIn(f: Frames, pairs: DataFrame,
+      aCol: String, bCol: String, maxIter: Int): DataFrame = {
     // materialize the pair relation ONCE: the undirected-edge union reads
     // it twice, and `pairs` is typically the output of a whole LSH
     // pipeline that must not re-execute per direction (or per round)
-    val p = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .localCheckpoint(true)
-    val edges = p
+    val p = f.checkpoint(pairs
+      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")))
+    val edges = f.persist(p
       .union(p.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .persist()
+      .distinct())
     edges.count() // materialize so the pair relation can release NOW
-    Bridge.releaseLocalCheckpoint(p)
+    f.release(p)
     // eager localCheckpoint each round: an iterative join loop otherwise
     // grows a lineage that DOUBLES per round (`labels` appears twice in
     // the next round's plan) — plain persist leaves plan analysis /
     // rendering exponential even though execution would hit the cache.
     // The checkpoint truncates the plan to a flat LogicalRDD; round k−1's
-    // blocks are then released EXPLICITLY once round k is materialized
-    // (Bridge.releaseLocalCheckpoint) instead of waiting on GC-driven
-    // ContextCleaner reclamation — the leak that matters when this runs
-    // per micro-batch. (On a real cluster point spark.checkpoint.dir at
-    // durable storage and use checkpoint() for executor-loss tolerance.)
-    var labels = edges.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
+    // blocks are released once round k is materialized. (On a real
+    // cluster point spark.checkpoint.dir at durable storage and use
+    // checkpoint() for executor-loss tolerance.)
+    var labels = f.checkpoint(edges.select(col("a").as("id")).distinct()
+      .select(col("id"), col("id").as("label")))
     var prevRound = labels
     var iter = 0
     var converged = false
@@ -1289,32 +1275,26 @@ object Dedup {
       val nbrMin = edges
         .join(labels.select(col("id").as("b"), col("label").as("nl")), Seq("b"))
         .groupBy(col("a").as("id")).agg(min("nl").as("nbr_min"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
+      val next = f.checkpoint(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("next_label"))
-        .localCheckpoint(true) // eager: fully materialized here
+          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("next_label")))
       converged = next.filter(col("next_label") < col("label")).isEmpty
-      // round k−1 is never read again (round k is a flat checkpointed
-      // frame) — free its executor blocks deterministically
-      Bridge.releaseLocalCheckpoint(prevRound)
+      // round k−1 is never read again (round k is a flat checkpoint)
+      f.release(prevRound)
       prevRound = next
       labels = next.select(col("id"), col("next_label").as("label"))
       iter += 1
     }
-    edges.unpersist(blocking = false)
+    f.release(edges)
     // a silent early exit would split one component across cluster ids —
     // multiple "survivors" for one duplicate cluster. Labels move one hop
     // per round, so this only trips on components of diameter > maxIter;
     // fail loudly rather than dedup wrongly.
-    if (!converged) {
-      Bridge.releaseLocalCheckpoint(prevRound)
+    if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — a " +
           "component has diameter > maxIter; raise maxIter")
-    }
-    val lastRound = prevRound
-    (labels.select(col("id"), col("label").as("cluster_id")),
-      () => Bridge.releaseLocalCheckpoint(lastRound))
+    labels.select(col("id"), col("label").as("cluster_id"))
   }
 
   /** Incremental cluster-label maintenance for continuous ingestion:
@@ -1343,13 +1323,14 @@ object Dedup {
     * cost scales with the batch's neighborhood, not the corpus.
     */
   def incrementalConnectedComponents(oldLabels: DataFrame, newPairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b", maxIter: Int = 20): DataFrame = {
-    val (labels, affected, subLabels, _) =
-      incrementalComponentParts(oldLabels, newPairs, aCol, bCol, maxIter)
-    labels.join(affected, Seq("cluster_id"), "left_anti")
-      .select(col("id"), col("cluster_id"))
-      .union(subLabels)
-  }
+      aCol: String = "id_a", bCol: String = "id_b", maxIter: Int = 20): DataFrame =
+    Frames.returning { f =>
+      val (labels, affected, subLabels) =
+        incrementalComponentParts(f, oldLabels, newPairs, aCol, bCol, maxIter)
+      labels.join(affected, Seq("cluster_id"), "left_anti")
+        .select(col("id"), col("cluster_id"))
+        .union(subLabels)
+    }
 
   /** Only the labels CHANGED by the new pairs (re-propagated affected
     * components + newly labeled ids) — the append-only delta a
@@ -1361,56 +1342,37 @@ object Dedup {
     */
   def incrementalComponentDelta(oldLabels: DataFrame, newPairs: DataFrame,
       aCol: String = "id_a", bCol: String = "id_b", maxIter: Int = 20): DataFrame =
-    incrementalComponentParts(oldLabels, newPairs, aCol, bCol, maxIter)._3
+    Frames.returning(
+      incrementalComponentParts(_, oldLabels, newPairs, aCol, bCol, maxIter)._3)
 
-  /** [[incrementalComponentDelta]] plus the release handle for the two
-    * cached frames the delta reads from (the affected-components set and
-    * the propagation result). The per-micro-batch streaming loop MUST
-    * write the delta out and then invoke the handle in a `finally`, so
-    * executor blocks are freed deterministically each batch instead of
-    * waiting on GC-driven ContextCleaner reclamation.
-    */
-  def incrementalComponentDeltaWithCleanup(oldLabels: DataFrame,
-      newPairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-      maxIter: Int = 20): (DataFrame, () => Unit) = {
-    val parts = incrementalComponentParts(oldLabels, newPairs, aCol, bCol, maxIter)
-    (parts._3, parts._4)
-  }
-
-  private def incrementalComponentParts(oldLabels: DataFrame, newPairs: DataFrame,
-      aCol: String, bCol: String, maxIter: Int)
-      : (DataFrame, DataFrame, DataFrame, () => Unit) = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  /** (old labels, affected cluster ids, re-propagated labels); the
+    * last two read frames pinned in the caller's scope `f`. */
+  private[graft] def incrementalComponentParts(f: Frames,
+      oldLabels: DataFrame, newPairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int): (DataFrame, DataFrame, DataFrame) = {
     // materialize once: read for touched ids AND as subgraph edges (and
     // newPairs is typically a whole incremental-LSH pipeline)
-    val np = newPairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .persist(sl)
+    val np = f.persist(newPairs
+      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")))
     val labels = oldLabels.select(
       col("id").cast("long").as("id"), col("cluster_id").cast("long").as("cluster_id"))
     val touched = np.select(col("a").as("id"))
       .union(np.select(col("b").as("id"))).distinct()
-    val affected = labels.join(touched, Seq("id"), "left_semi")
-      .select("cluster_id").distinct()
-      .persist(sl)
+    val affected = f.persist(labels.join(touched, Seq("id"), "left_semi")
+      .select("cluster_id").distinct())
     // the semi-join scans ALL of np, so this one action materializes both
     // caches — np's via the scan, affected's via the persist
     affected.count()
     val subEdges = labels.join(affected, Seq("cluster_id"), "left_semi")
       .select(col("id").as("a"), col("cluster_id").as("b"))
       .union(np)
-    val (cc, ccRelease) =
-      connectedComponentsWithCleanup(subEdges, "a", "b", maxIter)
-    val subLabels = cc.select(col("id"), col("cluster_id"))
+    val subLabels = connectedComponentsIn(f, subEdges, "a", "b", maxIter)
+      .select(col("id"), col("cluster_id"))
     // the propagation result is materialized inside the loop above; np
     // is never read again (the anti-join pass-through needs only
-    // `labels` + cached `affected`) — release it now, not at GC time
-    np.unpersist(blocking = false)
-    val cleanup = () => {
-      affected.unpersist(blocking = false)
-      ccRelease()
-    }
-    (labels, affected, subLabels, cleanup)
+    // `labels` + cached `affected`) — release it now
+    f.release(np)
+    (labels, affected, subLabels)
   }
 
   /** DELETE (takedown) face of the cluster-label state — the tombstone
@@ -1448,41 +1410,22 @@ object Dedup {
   def deleteFromLabels(labels: DataFrame, pairs: DataFrame,
       victims: DataFrame, idCol: String, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 20): DataFrame =
-    deleteFromLabelsWithCleanup(labels, pairs, victims, idCol, aCol, bCol,
-      maxIter)._1
-
-  /** [[deleteFromLabels]] plus the release handle for its cached frames
-    * (victim list, affected components, the re-closure's result cache) —
-    * the [[connectedComponentsWithCleanup]] discipline: a caller
-    * servicing REPEATED takedown requests must consume the result and
-    * invoke the handle in a `finally`, or each call's executor blocks
-    * accumulate for the session's lifetime. One-shot batch callers may
-    * use [[deleteFromLabels]] and leave them to session cleanup.
-    */
-  def deleteFromLabelsWithCleanup(labels: DataFrame, pairs: DataFrame,
-      victims: DataFrame, idCol: String, aCol: String = "id_a",
-      bCol: String = "id_b", maxIter: Int = 20)
-      : (DataFrame, () => Unit) = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // read thrice (affected semi + two pair anti-joins): materialize once
-    val v = victims.select(col(idCol).cast("long").as("id")).distinct()
-      .persist(sl)
-    val lab = labels.select(col("id").cast("long").as("id"),
-      col("cluster_id").cast("long").as("cluster_id"))
-    val p = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-    val (affected, _, reclosed, rel) =
-      affectedReclosure(lab, v, p, maxIter, materializeMembers = false)
-    // everything outside the affected components passes through
-    // untouched, byte-identical
-    val out = lab.join(affected, Seq("cluster_id"), "left_anti")
-      .select(col("id"), col("cluster_id"))
-      .union(reclosed.select(col("id"), col("cluster_id")))
-    (out, () => {
-      v.unpersist(blocking = false)
-      rel()
-    })
-  }
+    Frames.returning { f =>
+      // read thrice (affected semi + two pair anti-joins): materialize once
+      val v = f.persist(
+        victims.select(col(idCol).cast("long").as("id")).distinct())
+      val lab = labels.select(col("id").cast("long").as("id"),
+        col("cluster_id").cast("long").as("cluster_id"))
+      val p = pairs
+        .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      val (affected, _, reclosed) =
+        affectedReclosure(f, lab, v, p, maxIter, materializeMembers = false)
+      // everything outside the affected components passes through
+      // untouched, byte-identical
+      lab.join(affected, Seq("cluster_id"), "left_anti")
+        .select(col("id"), col("cluster_id"))
+        .union(reclosed.select(col("id"), col("cluster_id")))
+    }
 
   /** The victims→affected-components→surviving-subgraph→re-closure core
     * shared by the batch label-store takedown ([[deleteFromLabels]]) and
@@ -1502,18 +1445,19 @@ object Dedup {
     *
     * Returns (affected cluster ids, affected members (id), re-closed
     * labels (id, cluster_id) over the affected subgraph's surviving
-    * pairs, release handle for the frames cached here). 100 TB shape:
-    * the corpus-sized frames cross single-shuffle joins against the
-    * broadcastable victim/affected frames only; the multi-round
-    * propagation runs on the affected components' subgraph alone.
+    * pairs); what they read is pinned in the caller's scope `f`.
+    * 100 TB shape: the corpus-sized frames cross single-shuffle joins
+    * against the broadcastable victim/affected frames only; the
+    * multi-round propagation runs on the affected components' subgraph
+    * alone.
     */
-  private[graft] def affectedReclosure(lab: DataFrame, v: DataFrame,
-      p: DataFrame, maxIter: Int, materializeMembers: Boolean = true)
-      : (DataFrame, DataFrame, DataFrame, () => Unit) = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  private[graft] def affectedReclosure(f: Frames, lab: DataFrame,
+      v: DataFrame, p: DataFrame, maxIter: Int,
+      materializeMembers: Boolean = true)
+      : (DataFrame, DataFrame, DataFrame) = {
     // the components a victim belongs to — bounded, read repeatedly
-    val affected = lab.join(v, Seq("id"), "left_semi")
-      .select("cluster_id").distinct().persist(sl)
+    val affected = f.persist(lab.join(v, Seq("id"), "left_semi")
+      .select("cluster_id").distinct())
     affected.count() // one action materializes v (scanned) + affected
     val members0 = lab.join(affected, Seq("cluster_id"), "left_semi")
       .select(col("id"))
@@ -1522,26 +1466,15 @@ object Dedup {
     // there; the batch caller consumes it exactly once (subPairs), where
     // an eager materialization is pure cost (A/B'd pre/post-unification
     // at sf0.1: the batch face carries no penalty in the lazy shape)
-    val members =
-      if (materializeMembers) members0.localCheckpoint(true) else members0
+    val members = if (materializeMembers) f.checkpoint(members0) else members0
     // surviving pairs WITHIN affected components: closure ⇒ one
     // endpoint's membership implies the other's
     val subPairs = p
       .join(members.select(col("id").as("a")), Seq("a"), "left_semi")
       .join(v.select(col("id").as("a")), Seq("a"), "left_anti")
       .join(v.select(col("id").as("b")), Seq("b"), "left_anti")
-    val (reclosed, ccRelease) =
-      connectedComponentsWithCleanup(subPairs, "a", "b", maxIter)
-    (affected, members, reclosed, () => {
-      affected.unpersist(blocking = false)
-      // only release what WE checkpointed: on the lazy shape the first
-      // LogicalRDD in members' plan is the CALLER's frame (e.g. the
-      // streaming face's checkpointed labels) — releasing it here would
-      // destroy a frame the caller still reads
-      if (materializeMembers)
-        org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(members)
-      ccRelease()
-    })
+    (affected, members,
+      connectedComponentsIn(f, subPairs, "a", "b", maxIter))
   }
 
   /** The end product of near-dup dedup: the corpus with one survivor per

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Frames
 
 /** Embedding-column utilities beyond similarity search: storage-size
   * reduction for the 100 TB case, where float32 embeddings often dominate
@@ -112,10 +113,13 @@ object Embeddings {
   def kmeansTrain(df: DataFrame, idCol: String, vecCol: String, dim: Int,
       k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 0, "k >= 1, iters >= 0")
-    val base = df.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-      .localCheckpoint(true) // read once per round + once for seeds
-    try {
+    // the model is a driver-built frame: the scope frees the training
+    // checkpoint, or retrain-at-compact callers ([[kmeansModelCompact]])
+    // would accumulate one block set per pass
+    Frames.scoped { f =>
+      // read once per round + once for seeds
+      val base = f.checkpoint(df.filter(col(vecCol).isNotNull)
+        .select(col(idCol), col(vecCol).cast("array<double>").as("__v")))
       // deterministic seeds: the k lowest-id vectors (bounded collect)
       var cents: Seq[(Int, Seq[Double])] = base.orderBy(col(idCol)).limit(k)
         .collect().map(_.getSeq[Double](1)).toSeq.zipWithIndex.map(_.swap)
@@ -137,12 +141,7 @@ object Embeddings {
       val spark = df.sparkSession
       import spark.implicits._
       cents.toDF("cluster", "centroid")
-    } finally
-      // the model is a driver-built frame — the training checkpoint is
-      // dead weight the moment the loop ends, and retrain-at-compact
-      // callers ([[kmeansModelCompact]]) would otherwise accumulate one
-      // leaked block set per pass
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(base)
+    }
   }
 
   /** Assignment half: nearest model centroid per vector (argmax of
@@ -197,10 +196,12 @@ object Embeddings {
     // to (sub, cluster, slice) rows, group on the compound key): a
     // per-subspace kmeansTrain loop would scan the corpus m times per
     // iteration — the difference between 2 and 16 corpus passes at m=8
-    val base = df.filter(v.isNotNull)
-      .select(col(idCol).as("__id"), v.as("__v"))
-      .localCheckpoint(true) // seeds + every iteration read it
-    try {
+    // driver-built model → the training checkpoint is releasable the
+    // moment the loop ends (the kmeansTrain discipline)
+    Frames.scoped { f =>
+      // seeds + every iteration read it
+      val base = f.checkpoint(df.filter(v.isNotNull)
+        .select(col(idCol).as("__id"), v.as("__v")))
       // deterministic seeds: the k lowest-id vectors' slices (one bounded
       // collect serves all m subspaces)
       val seedRows = base.orderBy(col("__id")).limit(k).collect()
@@ -235,10 +236,7 @@ object Embeddings {
       cents.toSeq.flatMap { case (s, cs) =>
         cs.map { case (i, c) => (s, i, c) }
       }.sortBy(t => (t._1, t._2)).toDF("sub", "cluster", "centroid")
-    } finally
-      // driver-built model → the training checkpoint is releasable the
-      // moment the loop ends (the kmeansTrain discipline)
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(base)
+    }
   }
 
   /** Collected [[pqTrain]] model: per-sub centroid tables in cluster
@@ -414,33 +412,31 @@ object Embeddings {
       * absent from the manifest are no-ops; re-delivery is idempotent.
       */
     def delete(victims: DataFrame, idCol: String, path: String,
-        face: String): Unit = {
+        face: String): Unit = Frames.scoped { f =>
       val spark = victims.sparkSession
       AtomicBatches.assertNotInMaintenance(spark, path, face)
-      val vids = victims.select(col(idCol).cast("long").as("id")).distinct()
-        .localCheckpoint(true) // counted, then joined
-      val hit = try {
-        // count-gated broadcast, the victimDeletePlans discipline: the
-        // request is unbounded, so hinting it into a driver-built
-        // broadcast relation is only safe below the planner's own
-        // threshold — beyond it (or with auto-broadcast off) the semi
-        // join shuffles
-        val thresholdBytes = org.apache.spark.sql.graft.Bridge
-          .autoBroadcastJoinThreshold(spark)
-        val side = if (thresholdBytes > 0 && vids.count() <= thresholdBytes / 8)
-          broadcast(vids) else vids
-        spark.read.parquet(s"$path/manifest").select("id")
-          .join(side, Seq("id"), "left_semi")
-          .localCheckpoint(true) // existence probe + tombstone write read it
-      } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(vids)
-      try {
-        if (hit.limit(1).count() > 0) {
-          val (fs, _) = fsOf(spark, path)
-          fs.create(new org.apache.hadoop.fs.Path(staleMarker(path)), true)
-            .close()
-          VictimChannel.stage(spark, path, hit)()
-        }
-      } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(hit)
+      // counted, then joined
+      val vids = f.checkpoint(
+        victims.select(col(idCol).cast("long").as("id")).distinct())
+      // count-gated broadcast, the victimDeletePlans discipline: the
+      // request is unbounded, so hinting it into a driver-built
+      // broadcast relation is only safe below the planner's own
+      // threshold — beyond it (or with auto-broadcast off) the semi
+      // join shuffles
+      val thresholdBytes = org.apache.spark.sql.graft.Bridge
+        .autoBroadcastJoinThreshold(spark)
+      val side = if (thresholdBytes > 0 && vids.count() <= thresholdBytes / 8)
+        broadcast(vids) else vids
+      // existence probe + tombstone write read it
+      val hit = f.checkpoint(spark.read.parquet(s"$path/manifest")
+        .select("id").join(side, Seq("id"), "left_semi"))
+      f.release(vids)
+      if (hit.limit(1).count() > 0) {
+        val (fs, _) = fsOf(spark, path)
+        fs.create(new org.apache.hadoop.fs.Path(staleMarker(path)), true)
+          .close()
+        VictimChannel.stage(spark, path, hit)()
+      }
     }
 
     /** Audit probe: manifest minus tombstoned victims — the
@@ -535,14 +531,13 @@ object Embeddings {
       dim: Int, k: Int, iters: Int, path: String): Unit = {
     val spark = train.sparkSession
     import spark.implicits._
-    val manifest = modelManifest(train, idCol, vecCol)
-      .localCheckpoint(true) // trained on AND persisted
-    try {
+    Frames.scoped { f =>
+      // trained on AND persisted
+      val manifest = f.checkpoint(modelManifest(train, idCol, vecCol))
       val model = kmeansTrain(manifest, "id", "vec", dim, k, iters)
       ModelStore.write(spark, path, manifest, "centroids" -> model,
         Seq((dim, k, iters)).toDF("dim", "k", "iters"))
-    } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(manifest)
+    }
   }
 
   /** The served model (cluster, centroid) — REFUSES while the store is
@@ -613,14 +608,13 @@ object Embeddings {
       dim: Int, m: Int, k: Int, iters: Int, path: String): Unit = {
     val spark = train.sparkSession
     import spark.implicits._
-    val manifest = modelManifest(train, idCol, vecCol)
-      .localCheckpoint(true) // trained on AND persisted
-    try {
+    Frames.scoped { f =>
+      // trained on AND persisted
+      val manifest = f.checkpoint(modelManifest(train, idCol, vecCol))
       val model = pqTrain(manifest, "id", "vec", dim, m, k, iters)
       ModelStore.write(spark, path, manifest, "codebooks" -> model,
         Seq((dim, m, k, iters)).toDF("dim", "m", "k", "iters"))
-    } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(manifest)
+    }
   }
 
   /** The served codebooks (sub, cluster, centroid) — REFUSES while

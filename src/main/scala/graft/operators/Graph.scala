@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Frames
 
 /** Link-graph analytics for corpus curation. PageRank over a crawl's
   * link graph is the classic page-quality prior (it is what "quality
@@ -34,8 +35,8 @@ object Graph {
     * edge partitioning), followed by one map-side-combined aggregation
     * on `dst`. Per round the lineage is truncated with an eager
     * localCheckpoint and the previous round's blocks are released
-    * explicitly ([[org.apache.spark.sql.graft.Bridge]]) — the same
-    * discipline as [[Dedup.connectedComponentsWithCleanup]], so a loop
+    * explicitly ([[graft.Frames]]) — the same discipline as
+    * [[Dedup.connectedComponents]], so a loop
     * of 10-20 rounds holds exactly one node-sized frame at a time. On a
     * real cluster point `spark.checkpoint.dir` at durable storage and
     * swap `checkpoint()` in for executor-loss tolerance.
@@ -77,52 +78,47 @@ object Graph {
       base: (Column, Double) => Column): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(damping > 0.0 && damping < 1.0, "damping in (0, 1)")
-    import org.apache.spark.sql.graft.Bridge
+    Frames.scoped { f =>
+      val e = edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      // out-degree annotation once, partitioned by the per-round join key
+      val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      val linked = f.persist(e.join(outdeg, Seq("src")).repartition(col("src")))
+      val nodes = f.checkpoint(linked.select(col("src").as("id"))
+        .union(linked.select(col("dst").as("id")))
+        .distinct())
 
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    // out-degree annotation once, partitioned by the per-round join key
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val linked = e.join(outdeg, Seq("src"))
-      .repartition(col("src"))
-      .persist()
-    val nodes = linked.select(col("src").as("id"))
-      .union(linked.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-
-    // UNLIKE connected components (whose round plan references `labels`
-    // twice and doubles per round), a PageRank round references the
-    // previous ranks ONCE — the plan grows linearly. So rounds compose
-    // lazily and the checkpoint (lineage cut + materialization job)
-    // lands only every `CheckpointEvery` rounds and at the end: a
-    // 3-round run is ONE job instead of three. Checkpointed rounds
-    // release their predecessor's blocks explicitly; the round-0 frame
-    // is a plain projection of the node table and must never be
-    // "released" (that would free the NODES blocks), hence the null
-    // sentinel.
-    var ranks = nodes.select(col("id"), init(col("id")).as("rank"))
-    var prev: DataFrame = null
-    (1 to iters).foreach { i =>
-      val contribs = linked
-        .join(ranks.select(col("id").as("src"), col("rank")), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("deg")).as("c"))
-      ranks = nodes.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"),
-          (base(col("id"), damping) +
-            lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
-      if (i % CheckpointEvery == 0 || i == iters) {
-        // the final round always materializes: the returned frame must
-        // not re-read `linked` after its unpersist below
-        ranks = ranks.localCheckpoint(true)
-        if (prev != null) Bridge.releaseLocalCheckpoint(prev)
-        prev = ranks
+      // UNLIKE connected components (whose round plan references `labels`
+      // twice and doubles per round), a PageRank round references the
+      // previous ranks ONCE — the plan grows linearly. So rounds compose
+      // lazily and the checkpoint (lineage cut + materialization job)
+      // lands only every `CheckpointEvery` rounds and at the end: a
+      // 3-round run is ONE job instead of three. Checkpointed rounds
+      // release their predecessor's blocks; the round-0 frame is a
+      // projection of the node table, not a pinned frame (null sentinel).
+      var ranks = nodes.select(col("id"), init(col("id")).as("rank"))
+      var prev: DataFrame = null
+      (1 to iters).foreach { i =>
+        val contribs = linked
+          .join(ranks.select(col("id").as("src"), col("rank")), Seq("src"))
+          .groupBy(col("dst").as("id"))
+          .agg(sum(col("rank") / col("deg")).as("c"))
+        ranks = nodes.join(contribs, Seq("id"), "left_outer")
+          .select(col("id"),
+            (base(col("id"), damping) +
+              lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
+        // the final round always materializes (the returned frame, left
+        // to session cleanup): it must not re-read `linked` once the
+        // scope frees it
+        if (i == iters) ranks = ranks.localCheckpoint(true)
+        else if (i % CheckpointEvery == 0) {
+          ranks = f.checkpoint(ranks)
+          if (prev != null) f.release(prev)
+          prev = ranks
+        }
       }
+      ranks
     }
-    linked.unpersist(blocking = false)
-    Bridge.releaseLocalCheckpoint(nodes)
-    ranks
   }
 
   /** Lineage-cut cadence for [[pageRank]]'s lazy round composition. */
@@ -173,37 +169,38 @@ object Graph {
       maxRounds: Int = 64): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    import org.apache.spark.sql.graft.Bridge
-    var e = canonicalUndirected(edges, srcCol, dstCol)
-    var edgeCount = e.count()
-    var rounds = 0
-    var done = edgeCount == 0L
-    while (!done) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"k-core peel did not converge within $maxRounds rounds")
-      val deg = e.select(explode(array(col("a"), col("b"))).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("id")
-      val next = e
-        .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(true)
-      val nextCount = next.count()
-      Bridge.releaseLocalCheckpoint(e)
-      e = next
-      // no edge left the graph ⇒ no degree changed ⇒ fixpoint
-      done = nextCount == edgeCount || nextCount == 0L
-      edgeCount = nextCount
+    // the last round is returned: left to session cleanup
+    Frames.returning { f =>
+      var e = f.checkpoint(canonicalUndirected(edges, srcCol, dstCol))
+      var edgeCount = e.count()
+      var rounds = 0
+      var done = edgeCount == 0L
+      while (!done) {
+        rounds += 1
+        require(rounds <= maxRounds,
+          s"k-core peel did not converge within $maxRounds rounds")
+        val deg = e.select(explode(array(col("a"), col("b"))).as("id"))
+          .groupBy("id").agg(count(lit(1)).as("deg"))
+        val keep = deg.filter(col("deg") >= k).select("id")
+        val next = f.checkpoint(e
+          .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
+          .select("a", "b"))
+        val nextCount = next.count()
+        f.release(e)
+        e = next
+        // no edge left the graph ⇒ no degree changed ⇒ fixpoint
+        done = nextCount == edgeCount || nextCount == 0L
+        edgeCount = nextCount
+      }
+      e.select(explode(array(col("a"), col("b"))).as("id"))
+        .groupBy("id").agg(count(lit(1)).as("core_deg"))
     }
-    e.select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("core_deg"))
   }
 
   /** Canonical undirected simple graph: self-loops dropped, (a, b) /
-    * (b, a) / duplicates collapsed. Checkpointed — every caller reads
-    * it at least twice.
+    * (b, a) / duplicates collapsed. Every caller checkpoints it: each
+    * reads it at least twice.
     */
   private def canonicalUndirected(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = edges
@@ -212,7 +209,6 @@ object Graph {
     .select(least(col("a"), col("b")).as("a"),
       greatest(col("a"), col("b")).as("b"))
     .distinct()
-    .localCheckpoint(true)
 
   /** Local clustering coefficients: per vertex,
     * `2·triangles / (deg·(deg−1))` — the fraction of a vertex's
@@ -225,11 +221,11 @@ object Graph {
     * O(m^{3/2}) count plus one edge-sized degree aggregation.
     */
   def clusteringCoefficients(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e0 = canonicalUndirected(edges, srcCol, dstCol)
+      dstCol: String): DataFrame = Frames.returning { f =>
+    val e0 = f.checkpoint(canonicalUndirected(edges, srcCol, dstCol))
     val deg = e0.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    trianglesCanonical(e0).join(deg, Seq("id"))
+    trianglesCanonical(f, e0).join(deg, Seq("id"))
       .select(col("id"), col("triangles"), col("deg"),
         round(when(col("deg") >= 2,
           lit(2.0) * col("triangles") /
@@ -262,7 +258,8 @@ object Graph {
     * quadratic in a vertex's neighborhood beyond the bounded wedge set.
     */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    trianglesCanonical(canonicalUndirected(edges, srcCol, dstCol))
+    Frames.returning(f => trianglesCanonical(f,
+      f.checkpoint(canonicalUndirected(edges, srcCol, dstCol))))
 
   /** Persist a triangle-count index: the canonical edge set under
     * `<path>/edges` and per-vertex counts under `<path>/counts` — the
@@ -282,17 +279,18 @@ object Graph {
     // used to leave readers silently folding the old batches onto the
     // fresh base — now the window fails loudly instead
     AtomicBatches.withRebuildMarker(edges.sparkSession, path) {
-      import org.apache.spark.sql.graft.Bridge
-      val e0 = canonicalUndirected(edges, srcCol, dstCol)
       // both base tables read the checkpointed e0 and any crash inside
       // the rebuild marker demands a full rebuild — so the cheap edge
-      // write runs concurrently with the triangle-count job
-      Takedown.inParallel(Seq[() => Unit](
-        () => e0.write.mode("overwrite").parquet(s"$path/edges"),
-        () => trianglesCanonical(e0).filter(col("triangles") > 0)
-          .select(col("id"), col("triangles").as("d_triangles"))
-          .write.mode("overwrite").parquet(s"$path/counts")))(_.apply())
-      Bridge.releaseLocalCheckpoint(e0) // both writes done — drop the blocks
+      // write runs concurrently with the triangle-count job; the blocks
+      // drop once both writes are done
+      Frames.scoped { f =>
+        val e0 = f.checkpoint(canonicalUndirected(edges, srcCol, dstCol))
+        Takedown.inParallel(Seq[() => Unit](
+          () => e0.write.mode("overwrite").parquet(s"$path/edges"),
+          () => trianglesCanonical(f, e0).filter(col("triangles") > 0)
+            .select(col("id"), col("triangles").as("d_triangles"))
+            .write.mode("overwrite").parquet(s"$path/counts")))(_.apply())
+      }
       // a REBUILD invalidates every appended batch and any interrupted
       // compaction's stage: both retired only AFTER the new base lands
       val spark = edges.sparkSession
@@ -327,8 +325,7 @@ object Graph {
     * enumeration side (any side is CORRECT; the small one is fast).
     */
   def trianglesIndexAppend(newEdges: DataFrame, srcCol: String,
-      dstCol: String, path: String): Unit = {
-    import org.apache.spark.sql.graft.Bridge
+      dstCol: String, path: String): Unit = Frames.scoped { f =>
     val spark = newEdges.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path, "trianglesIndexAppend")
     // crash-safe append: both deltas land under one batch directory and
@@ -339,14 +336,13 @@ object Graph {
     // under-count (readers never see a half-written batch)
     AtomicBatches.sweepUncommitted(spark, s"$path/batches")
     val old = indexEdges(spark, path)
-    val canon = canonicalUndirected(newEdges, srcCol, dstCol)
-    val delta = canon
-      .join(old, Seq("a", "b"), "left_anti")
-      .localCheckpoint(true) // edge write + union + wedge build read it
-    Bridge.releaseLocalCheckpoint(canon) // folded into delta's blocks
-    val union = old.select(col("a"), col("b"), lit(false).as("is_new"))
-      .union(delta.select(col("a"), col("b"), lit(true).as("is_new")))
-      .localCheckpoint(true)
+    val canon = f.checkpoint(canonicalUndirected(newEdges, srcCol, dstCol))
+    // edge write + union + wedge build read it
+    val delta = f.checkpoint(canon.join(old, Seq("a", "b"), "left_anti"))
+    f.release(canon) // folded into delta's blocks
+    val union = f.checkpoint(
+      old.select(col("a"), col("b"), lit(false).as("is_new"))
+        .union(delta.select(col("a"), col("b"), lit(true).as("is_new"))))
     val deg = union.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
     // delta edges with endpoint degrees: s = (deg, id)-smaller endpoint
@@ -390,12 +386,10 @@ object Graph {
         .write.mode("overwrite").parquet(s"$bdir/counts"),
       () => delta.select("a", "b")
         .write.mode("overwrite").parquet(s"$bdir/edges")))(_.apply())
+    // the append face is the REPEATEDLY-CALLED ingestion path: the
+    // scope frees this call's pinned blocks so N appends don't hold N
+    // edge-table copies (the kCenterGreedy / pageRank discipline)
     AtomicBatches.commit(spark, bdir)
-    // the append face is the REPEATEDLY-CALLED ingestion path: release
-    // this call's pinned blocks so N appends don't hold N edge-table
-    // copies (the kCenterGreedy / pageRank discipline)
-    Bridge.releaseLocalCheckpoint(union)
-    Bridge.releaseLocalCheckpoint(delta)
   }
 
   /** DELETE (takedown) face of a [[trianglesIndexWrite]] index: remove
@@ -415,75 +409,68 @@ object Graph {
     * job.
     */
   def trianglesIndexDelete(edges: DataFrame, srcCol: String,
-      dstCol: String, path: String): Unit = {
-    import org.apache.spark.sql.graft.Bridge
+      dstCol: String, path: String): Unit = Frames.scoped { f =>
     val spark = edges.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path, "trianglesIndexDelete")
     AtomicBatches.sweepUncommitted(spark, s"$path/batches")
-    val cur = indexEdges(spark, path).localCheckpoint(true)
-    val canon = canonicalUndirected(edges, srcCol, dstCol)
-    // only edges the index holds delete; re-sent deletions no-op
-    val del = canon.join(cur, Seq("a", "b"), "left_semi")
-      .localCheckpoint(true) // wedge build + removal write read it
-    Bridge.releaseLocalCheckpoint(canon)
+    val cur = f.checkpoint(indexEdges(spark, path))
+    val canon = f.checkpoint(canonicalUndirected(edges, srcCol, dstCol))
+    // only edges the index holds delete; re-sent deletions no-op;
+    // the wedge build + removal write read it
+    val del = f.checkpoint(canon.join(cur, Seq("a", "b"), "left_semi"))
+    f.release(canon)
     // nothing to remove: committing an empty removals batch would
     // permanently demote indexEdges from its plain-union fast path to
     // the per-edge fold — a lasting probe-cost regression bought by a
     // delete that changed nothing
-    if (del.isEmpty) {
-      Bridge.releaseLocalCheckpoint(del)
-      Bridge.releaseLocalCheckpoint(cur)
-      return
+    if (!del.isEmpty) {
+      val union = f.checkpoint(cur
+        .join(del.select(col("a"), col("b"), lit(true).as("is_del")),
+          Seq("a", "b"), "left_outer")
+        .select(col("a"), col("b"),
+          coalesce(col("is_del"), lit(false)).as("is_del")))
+      f.release(cur)
+      val deg = union.select(explode(array(col("a"), col("b"))).as("id"))
+        .groupBy("id").agg(count(lit(1)).as("deg"))
+      val dk = del
+        .join(deg.select(col("id").as("a"), col("deg").as("da")), Seq("a"))
+        .join(deg.select(col("id").as("b"), col("deg").as("db")), Seq("b"))
+        .select(col("a"), col("b"),
+          when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
+            col("a")).otherwise(col("b")).as("s"),
+          when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
+            col("b")).otherwise(col("a")).as("t"))
+      val adj = union.select(col("a").as("u"), col("b").as("z"),
+          col("is_del").as("e1_del"), struct(col("a"), col("b")).as("e1k"))
+        .union(union.select(col("b").as("u"), col("a").as("z"),
+          col("is_del").as("e1_del"), struct(col("a"), col("b")).as("e1k")))
+      val cand = dk.join(adj, col("u") === col("s"))
+        .filter(col("z") =!= col("t"))
+        .select(col("a"), col("b"), col("t"), col("z"), col("e1_del"),
+          col("e1k"))
+      val e2 = union.select(col("a").as("__a2"), col("b").as("__b2"),
+        col("is_del").as("e2_del"), struct(col("a"), col("b")).as("e2k"))
+      val dkey = struct(col("a"), col("b"))
+      // once-per-triangle: this delta edge must be the LARGEST deleted
+      // edge of the triangle it destroys
+      val closed = cand.join(e2,
+          least(col("z"), col("t")) === col("__a2") &&
+            greatest(col("z"), col("t")) === col("__b2"))
+        .filter(!(col("e1_del") && col("e1k") > dkey) &&
+          !(col("e2_del") && col("e2k") > dkey))
+      val bdir =
+        s"$path/batches/${AtomicBatches.nextBatchN(spark, s"$path/batches")}"
+      // concurrent like the append face: both tables are invisible until
+      // the _COMMIT below and read only checkpointed frames
+      Takedown.inParallel(Seq[() => Unit](
+        () => closed
+          .select(explode(array(col("a"), col("b"), col("z"))).as("id"))
+          .groupBy("id").agg((-count(lit(1))).as("d_triangles"))
+          .write.mode("overwrite").parquet(s"$bdir/counts"),
+        () => del.select("a", "b")
+          .write.mode("overwrite").parquet(s"$bdir/removals")))(_.apply())
+      AtomicBatches.commit(spark, bdir)
     }
-    val union = cur
-      .join(del.select(col("a"), col("b"), lit(true).as("is_del")),
-        Seq("a", "b"), "left_outer")
-      .select(col("a"), col("b"),
-        coalesce(col("is_del"), lit(false)).as("is_del"))
-      .localCheckpoint(true)
-    Bridge.releaseLocalCheckpoint(cur)
-    val deg = union.select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val dk = del
-      .join(deg.select(col("id").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("id").as("b"), col("deg").as("db")), Seq("b"))
-      .select(col("a"), col("b"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-          col("a")).otherwise(col("b")).as("s"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-          col("b")).otherwise(col("a")).as("t"))
-    val adj = union.select(col("a").as("u"), col("b").as("z"),
-        col("is_del").as("e1_del"), struct(col("a"), col("b")).as("e1k"))
-      .union(union.select(col("b").as("u"), col("a").as("z"),
-        col("is_del").as("e1_del"), struct(col("a"), col("b")).as("e1k")))
-    val cand = dk.join(adj, col("u") === col("s"))
-      .filter(col("z") =!= col("t"))
-      .select(col("a"), col("b"), col("t"), col("z"), col("e1_del"),
-        col("e1k"))
-    val e2 = union.select(col("a").as("__a2"), col("b").as("__b2"),
-      col("is_del").as("e2_del"), struct(col("a"), col("b")).as("e2k"))
-    val dkey = struct(col("a"), col("b"))
-    // once-per-triangle: this delta edge must be the LARGEST deleted
-    // edge of the triangle it destroys
-    val closed = cand.join(e2,
-        least(col("z"), col("t")) === col("__a2") &&
-          greatest(col("z"), col("t")) === col("__b2"))
-      .filter(!(col("e1_del") && col("e1k") > dkey) &&
-        !(col("e2_del") && col("e2k") > dkey))
-    val bdir =
-      s"$path/batches/${AtomicBatches.nextBatchN(spark, s"$path/batches")}"
-    // concurrent like the append face: both tables are invisible until
-    // the _COMMIT below and read only checkpointed frames
-    Takedown.inParallel(Seq[() => Unit](
-      () => closed
-        .select(explode(array(col("a"), col("b"), col("z"))).as("id"))
-        .groupBy("id").agg((-count(lit(1))).as("d_triangles"))
-        .write.mode("overwrite").parquet(s"$bdir/counts"),
-      () => del.select("a", "b")
-        .write.mode("overwrite").parquet(s"$bdir/removals")))(_.apply())
-    AtomicBatches.commit(spark, bdir)
-    Bridge.releaseLocalCheckpoint(union)
-    Bridge.releaseLocalCheckpoint(del)
   }
 
   /** NODE-level takedown over a [[trianglesIndexWrite]] index: delete
@@ -499,29 +486,24 @@ object Graph {
     * no-op that preserves the append-only probe fast path.
     */
   def trianglesIndexDeleteNodes(ids: DataFrame, idCol: String,
-      path: String): Unit = {
-    import org.apache.spark.sql.graft.Bridge
+      path: String): Unit = Frames.scoped { f =>
     val spark = ids.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, path,
       "trianglesIndexDeleteNodes")
-    val v = ids.select(col(idCol).cast("long").as("__vid")).distinct()
-      .localCheckpoint(true) // both endpoint semi-joins read it
+    // both endpoint semi-joins read it
+    val v = f.checkpoint(
+      ids.select(col(idCol).cast("long").as("__vid")).distinct())
     // the folded edge view feeds BOTH endpoint semi-joins and (via the
     // incident frame) trianglesIndexDelete's own join — checkpoint it
     // once so a slow-fold history (any prior delete) is not re-folded
     // three times per node takedown
-    val cur = indexEdges(spark, path).localCheckpoint(true)
-    try {
-      val incident = cur
-        .join(broadcast(v.select(col("__vid").as("a"))), Seq("a"), "left_semi")
-        .unionByName(cur.join(
-          broadcast(v.select(col("__vid").as("b"))), Seq("b"), "left_semi"))
-        .select(col("a"), col("b")).distinct()
-      trianglesIndexDelete(incident, "a", "b", path)
-    } finally {
-      Bridge.releaseLocalCheckpoint(cur)
-      Bridge.releaseLocalCheckpoint(v)
-    }
+    val cur = f.checkpoint(indexEdges(spark, path))
+    val incident = cur
+      .join(broadcast(v.select(col("__vid").as("a"))), Seq("a"), "left_semi")
+      .unionByName(cur.join(
+        broadcast(v.select(col("__vid").as("b"))), Seq("b"), "left_semi"))
+      .select(col("a"), col("b")).distinct()
+    trianglesIndexDelete(incident, "a", "b", path)
   }
 
   /** Fold a triangle index's committed batch history into a fresh base
@@ -692,21 +674,21 @@ object Graph {
           .otherwise(lit(0.0)), 6).as("coef"))
   }
 
-  private def trianglesCanonical(e0: DataFrame): DataFrame = {
-    val deg = e0.select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true) // orientation (twice) + zero-fill read it
+  // the result reads two frames pinned in the caller's scope `f`
+  private def trianglesCanonical(f: Frames, e0: DataFrame): DataFrame = {
+    val deg = f.checkpoint( // orientation (twice) + zero-fill read it
+      e0.select(explode(array(col("a"), col("b"))).as("id"))
+        .groupBy("id").agg(count(lit(1)).as("deg")))
     val ed = e0
       .join(deg.select(col("id").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("id").as("b"), col("deg").as("db")), Seq("b"))
     val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
     // (s → t, with t's degree carried so wedge pairs order WITHOUT a
     // further degree join)
-    val o = ed.select(
+    val o = f.checkpoint(ed.select(
         when(aFirst, col("a")).otherwise(col("b")).as("s"),
         when(aFirst, col("b")).otherwise(col("a")).as("t"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dt"))
-      .localCheckpoint(true)
+        when(aFirst, col("db")).otherwise(col("da")).as("dt")))
     val x = o.select(col("s"), col("t").as("v"), col("dt").as("dv"))
     val y = o.select(col("s"), col("t").as("w"), col("dt").as("dw"))
     val wedges = x.join(y, Seq("s"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Frames
 
 /** Deterministic sampling for training-data budgeting.
   *
@@ -706,7 +707,7 @@ object Sampling {
     */
   def kCenterSelect(df: DataFrame, idCol: String, vecCol: String,
       t: Int): DataFrame = {
-    val base = kCenterBase(df, idCol, vecCol)
+    val base = kCenterBase(df, idCol, vecCol).localCheckpoint(true)
     kCenterAssignImpl(base, kCenterTraverse(base, t))
       .toDF(idCol, "center_id", "d2")
   }
@@ -722,7 +723,9 @@ object Sampling {
       t: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    kCenterTraverse(kCenterBase(df, idCol, vecCol), t).zipWithIndex
+    Frames.scoped(f =>
+      kCenterTraverse(f.checkpoint(kCenterBase(df, idCol, vecCol)), t))
+      .zipWithIndex
       .map { case ((cid, cv), i) => (i + 1, cid, cv) }
       .toDF("ord", "center_id", "centroid")
   }
@@ -740,7 +743,8 @@ object Sampling {
       .sortBy(_._1)
       .map { case (_, cid, cv) => cid -> cv }.toVector
     require(ctr.nonEmpty, "kCenterAssign: empty coreset")
-    kCenterAssignImpl(kCenterBase(df, idCol, vecCol), ctr)
+    kCenterAssignImpl(
+      kCenterBase(df, idCol, vecCol).localCheckpoint(true), ctr)
       .toDF(idCol, "center_id", "d2")
   }
 
@@ -769,11 +773,11 @@ object Sampling {
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
       .sortBy(_._1)
     require(frozen.nonEmpty, "kCenterExtend: empty coreset")
-    val base = kCenterBase(df, idCol, vecCol)
     val dmin0 = bestCenter(frozen.map(c => (c._2, c._3)).toVector)
       .getField("d")
-    val added = kCenterGreedy(
-      base.select(col("__id"), col("__v"), dmin0.as("__dmin")), tExtra)
+    val added = Frames.scoped(f => kCenterGreedy(
+      f.checkpoint(kCenterBase(df, idCol, vecCol))
+        .select(col("__id"), col("__v"), dmin0.as("__dmin")), tExtra))
     val maxOrd = frozen.map(_._1).max
     (frozen.toSeq.map { case (ord, cid, cv) => (ord, cid, cv) } ++
       added.zipWithIndex.map { case ((cid, cv), i) =>
@@ -836,65 +840,61 @@ object Sampling {
     val spark = df.sparkSession
     import spark.implicits._
     import graft.functions.{VectorFunctions => V}
-    import org.apache.spark.sql.graft.Bridge
-    val base = kCenterBase(df, idCol, vecCol)
-    val first = base.orderBy(col("__id")).limit(1).collect()
-    require(first.nonEmpty, "kCenterPar: no rows with a non-null vector")
-    var cands = Vector(first(0).getLong(0) -> first(0).getSeq[Double](1))
-    var scored = base.select(col("__id"), col("__v"),
-      round(V.sqDist(col("__v"), typedLit(cands.head._2)), 6).as("__dmin"))
-      .localCheckpoint(true)
-    var cp = scored
-    val ell = math.max(1.0, oversample * t)
-    var r = 0
-    var exhausted = false
-    while (r < rounds && !exhausted) {
-      // exact integer micro-units: the sampling threshold must not
-      // depend on a float sum's accumulation order
-      val massRow = scored
-        .agg(sum(round(col("__dmin") * 1e6).cast("long"))).head
-      val mass = if (massRow.isNullAt(0)) 0L else massRow.getLong(0)
-      if (mass <= 0L) exhausted = true // every row coincides with a candidate
-      else {
-        val sumD = mass / 1e6
-        val u = conv(substring(md5(
-            concat(lit(s"kcp:$r:"), col("__id").cast("string"))), 1, 15),
-          16, 10).cast("long").cast("double") /
-          lit(graft.functions.ThetaSketch.Two60)
-        val newC = scored
-          .filter(u < lit(ell) * col("__dmin") / lit(sumD))
-          .select(col("__id"), col("__v"))
-          .collect()
-          .map(w => w.getLong(0) -> w.getSeq[Double](1))
-          .toVector
-        if (newC.nonEmpty) {
-          cands = cands ++ newC
-          val cut = scored.select(col("__id"), col("__v"),
-            least(col("__dmin"), bestCenter(newC).getField("d")).as("__dmin"))
-            .localCheckpoint(true)
-          Bridge.releaseLocalCheckpoint(cp)
-          cp = cut
-          scored = cut
+    Frames.scoped { f =>
+      val base = f.checkpoint(kCenterBase(df, idCol, vecCol))
+      val first = base.orderBy(col("__id")).limit(1).collect()
+      require(first.nonEmpty, "kCenterPar: no rows with a non-null vector")
+      var cands = Vector(first(0).getLong(0) -> first(0).getSeq[Double](1))
+      var scored = f.checkpoint(base.select(col("__id"), col("__v"),
+        round(V.sqDist(col("__v"), typedLit(cands.head._2)), 6).as("__dmin")))
+      val ell = math.max(1.0, oversample * t)
+      var r = 0
+      var exhausted = false
+      while (r < rounds && !exhausted) {
+        // exact integer micro-units: the sampling threshold must not
+        // depend on a float sum's accumulation order
+        val massRow = scored
+          .agg(sum(round(col("__dmin") * 1e6).cast("long"))).head
+        val mass = if (massRow.isNullAt(0)) 0L else massRow.getLong(0)
+        if (mass <= 0L) exhausted = true // every row coincides with a candidate
+        else {
+          val sumD = mass / 1e6
+          val u = conv(substring(md5(
+              concat(lit(s"kcp:$r:"), col("__id").cast("string"))), 1, 15),
+            16, 10).cast("long").cast("double") /
+            lit(graft.functions.ThetaSketch.Two60)
+          val newC = scored
+            .filter(u < lit(ell) * col("__dmin") / lit(sumD))
+            .select(col("__id"), col("__v"))
+            .collect()
+            .map(w => w.getLong(0) -> w.getSeq[Double](1))
+            .toVector
+          if (newC.nonEmpty) {
+            cands = cands ++ newC
+            val cut = f.checkpoint(scored.select(col("__id"), col("__v"),
+              least(col("__dmin"), bestCenter(newC).getField("d")).as("__dmin")))
+            f.release(scored)
+            scored = cut
+          }
+          r += 1
         }
-        r += 1
       }
+      // driver-side reduction: the exact greedy over the candidate set —
+      // same semantics as kCenterGreedy (round-6 distances, farthest
+      // first, ties to the lowest id, stop when the farthest distance
+      // hits 0), in plain arithmetic over ≤ 1 + rounds·l rows
+      val reduced = greedyReduce(cands, t)
+      // shortfall signal (doc contract above): fewer than t centers is
+      // benign only under full corpus coverage (`exhausted` — residual
+      // mass hit zero); a pool-limited shortfall deserves a loud note
+      if (reduced.length < t && !exhausted)
+        System.err.println(s"[graft] kCenterParCenters: ${reduced.length}" +
+          s" < t=$t centers — candidate pool exhausted before t (corpus" +
+          " not fully covered); raise rounds/oversample")
+      reduced.zipWithIndex
+        .map { case ((cid, cv), i) => (i + 1, cid, cv) }
+        .toDF("ord", "center_id", "centroid")
     }
-    Bridge.releaseLocalCheckpoint(cp)
-    // driver-side reduction: the exact greedy over the candidate set —
-    // same semantics as kCenterGreedy (round-6 distances, farthest
-    // first, ties to the lowest id, stop when the farthest distance
-    // hits 0), in plain arithmetic over ≤ 1 + rounds·l rows
-    val reduced = greedyReduce(cands, t)
-    // shortfall signal (doc contract above): fewer than t centers is
-    // benign only under full corpus coverage (`exhausted` — residual
-    // mass hit zero); a pool-limited shortfall deserves a loud note
-    if (reduced.length < t && !exhausted)
-      System.err.println(s"[graft] kCenterParCenters: ${reduced.length}" +
-        s" < t=$t centers — candidate pool exhausted before t (corpus" +
-        " not fully covered); raise rounds/oversample")
-    reduced.zipWithIndex
-      .map { case ((cid, cv), i) => (i + 1, cid, cv) }
-      .toDF("ord", "center_id", "centroid")
   }
 
   /** Exact greedy farthest-point over a DRIVER-HELD candidate list —
@@ -936,12 +936,12 @@ object Sampling {
     chosen
   }
 
+  // every caller checkpoints it: re-read once per round + for assignment
   private def kCenterBase(df: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .localCheckpoint(true) // re-read once per round + for assignment
 
   /** One traversal round's fold-in: the running min against the single
     * NEW centroid. `round(·, 6)` is applied per-distance before the
@@ -968,7 +968,6 @@ object Sampling {
       t: Int): Vector[(Long, Seq[Double])] = {
     require(t >= 1, "t must be >= 1")
     import graft.functions.{VectorFunctions => V}
-    import org.apache.spark.sql.graft.Bridge
     val first = base.orderBy(col("__id")).limit(1).collect()
     require(first.nonEmpty, "kCenter: no rows with a non-null vector")
     var centers = Vector(first(0).getLong(0) -> first(0).getSeq[Double](1))
@@ -994,8 +993,7 @@ object Sampling {
     * the farthest remaining distance hits 0.
     */
   private def kCenterGreedy(scored0: DataFrame,
-      tMore: Int): Vector[(Long, Seq[Double])] = {
-    import org.apache.spark.sql.graft.Bridge
+      tMore: Int): Vector[(Long, Seq[Double])] = Frames.scoped { f =>
     var added = Vector.empty[(Long, Seq[Double])]
     var scored = scored0
     var cp: DataFrame = null
@@ -1019,15 +1017,14 @@ object Sampling {
         scored = kCenterRound(scored, cv)
         sinceCp += 1
         if (sinceCp >= TraverseCheckpointEvery) {
-          val cut = scored.localCheckpoint(true) // eager: materialized NOW,
-          if (cp != null) Bridge.releaseLocalCheckpoint(cp) // so this is safe
+          val cut = f.checkpoint(scored) // eager: materialized NOW,
+          if (cp != null) f.release(cp) // so this is safe
           cp = cut
           scored = cut
           sinceCp = 0
         }
       }
     }
-    if (cp != null) Bridge.releaseLocalCheckpoint(cp)
     added
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Frames
 import graft.functions.{VectorFunctions => V}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -70,15 +71,17 @@ object Similarity {
     */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
       queryVec: Seq[Double], k: Int, dim: Int,
-      nBits: Int = 6, nProbe: Int = 4, lloydIters: Int = 0): DataFrame = {
-    val (assigned, cents) = trainCells(df, idCol, vecCol, dim, nBits, lloydIters)
-    val probes = probeCells(cents, queryVec, nProbe)
-    val q = typedLit(queryVec)
-    assigned.filter(col("cell").isin(probes: _*))
-      .select(col(idCol), round(V.cosine(col("v"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
+      nBits: Int = 6, nProbe: Int = 4, lloydIters: Int = 0): DataFrame =
+    Frames.returning { f =>
+      val (assigned, cents) =
+        trainCells(f, df, idCol, vecCol, dim, nBits, lloydIters)
+      val probes = probeCells(cents, queryVec, nProbe)
+      val q = typedLit(queryVec)
+      assigned.filter(col("cell").isin(probes: _*))
+        .select(col(idCol), round(V.cosine(col("v"), q), 6).as("cosine"))
+        .orderBy(col("cosine").desc, col(idCol))
+        .limit(k)
+    }
 
   /** Train (see [[ivfTopK]]) and PERSIST the IVF index: cell assignments
     * partitioned by `cell` under `<path>/cells`, centroids under
@@ -88,13 +91,14 @@ object Similarity {
     * ≤2^nBits centroid rows.
     */
   def ivfWriteIndex(df: DataFrame, idCol: String, vecCol: String,
-      dim: Int, path: String, nBits: Int = 6, lloydIters: Int = 1): Unit = {
+      dim: Int, path: String, nBits: Int = 6,
+      lloydIters: Int = 1): Unit = Frames.scoped { f =>
     // train BEFORE planting the rebuild marker: training is the
     // failure-prone half (bad dim, empty corpus, Lloyd's driver loop),
     // and the marker makes a fully intact previous index unavailable
     // from the moment it exists — a training error must not brick it
     val (assigned, cents) =
-      trainCells(df, idCol, vecCol, dim, nBits, lloydIters)
+      trainCells(f, df, idCol, vecCol, dim, nBits, lloydIters)
     // the destructive half holds _MAINT (withRebuildMarker): a crash
     // after the base landed but before the stale tombstones/deltas
     // channels were retired used to leave old tombstones silently
@@ -145,10 +149,11 @@ object Similarity {
     */
   def ivfWriteIndexSQ8(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, path: String, nBits: Int = 6, lloydIters: Int = 1,
-      kernel: String = "xxhash", roundedCentroids: Boolean = false): Unit = {
+      kernel: String = "xxhash",
+      roundedCentroids: Boolean = false): Unit = Frames.scoped { f =>
     // train before the marker — a training failure must not leave an
     // intact previous index bricked behind _MAINT (see ivfWriteIndex)
-    val (assigned, cents0) = trainCells(df, idCol, vecCol, dim, nBits,
+    val (assigned, cents0) = trainCells(f, df, idCol, vecCol, dim, nBits,
       lloydIters, kernel)
     // roundedCentroids: the PQ faces' round-9 discipline, opt-in here so
     // the original SQ8 faces' recall-contract hashes are untouched —
@@ -233,12 +238,13 @@ object Similarity {
   def ivfWriteIndexPQ(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, path: String, nBits: Int = 6, lloydIters: Int = 1,
       m: Int = 8, codebookK: Int = 16, pqIters: Int = 2,
-      kernel: String = "xxhash", withRefine: Boolean = false): Unit = {
+      kernel: String = "xxhash",
+      withRefine: Boolean = false): Unit = Frames.scoped { f =>
     require(codebookK >= 1 && codebookK <= 128,
       "PQ codes are stored as signed bytes - codebookK in [1, 128]")
     // BOTH trainers run before the marker — a training failure must not
     // leave an intact previous index bricked behind _MAINT (ivfWriteIndex)
-    val (assigned, cents0) = trainCells(df, idCol, vecCol, dim, nBits,
+    val (assigned, cents0) = trainCells(f, df, idCol, vecCol, dim, nBits,
       lloydIters, kernel)
     // engine-stable centroid components (see scaladoc)
     val cents = cents0.map { case (id, c) =>
@@ -1101,21 +1107,22 @@ object Similarity {
   }
 
   /** Shared coarse-quantizer build: LSH-seeded cells, `lloydIters`
-    * k-means refinements. Returns the (id, v, cell) assignment and the
-    * driver-held centroids.
+    * k-means refinements. Returns the (id, v, cell) assignment, which
+    * reads a frame pinned in the caller's scope `f`, and the driver-held
+    * centroids.
     */
-  private def trainCells(df: DataFrame, idCol: String, vecCol: String,
-      dim: Int, nBits: Int, lloydIters: Int, kernel: String = "xxhash")
+  private def trainCells(f: Frames, df: DataFrame, idCol: String,
+      vecCol: String, dim: Int, nBits: Int, lloydIters: Int,
+      kernel: String = "xxhash")
       : (DataFrame, Array[(Long, Seq[Double])]) = {
     // checkpointed: the centroid collect(s) and the probe filter all read
     // this — without it the scan + bucket projection runs per consumer.
     // Null embeddings have no cell (and can never rank) — dropped up
     // front so the driver-side centroid read never sees a null cell row
-    val base = df
+    val base = f.checkpoint(df
       .filter(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol).as("v"),
-        V.hyperplaneLshBucket(col(vecCol), nBits, dim, kernel).as("cell"))
-      .localCheckpoint(true)
+        V.hyperplaneLshBucket(col(vecCol), nBits, dim, kernel).as("cell")))
 
     def centroidsOf(assigned: DataFrame): Array[(Long, Seq[Double])] = assigned
       .groupBy("cell")

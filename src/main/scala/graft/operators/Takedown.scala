@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Frames
 
 /** The corpus-level takedown orchestrator: ONE entry point —
   * [[forget]] — that applies a takedown request ("these ids must stop
@@ -477,9 +478,9 @@ object Takedown {
       else victims.select(col(idCol)).distinct()
         .withColumn(textCol, lit(null).cast("string"))
         .withColumn("__nt", lit(0L))
-    val vAll = v0.localCheckpoint(true)
-    val v = vAll.drop("__nt")
-    try {
+    Frames.scoped { f =>
+      val vAll = f.checkpoint(v0)
+      val v = vAll.drop("__nt")
       // an id arriving with TWO divergent non-null texts is a malformed
       // request: max() would silently pick one, and an id_text store's
       // digest drift-guard would then fail only when the WRONG one won —
@@ -505,17 +506,12 @@ object Takedown {
       // never a silent 'deleted' (a lie only a later audit would catch)
       val nullTextIds =
         if (stores.map(s => kinds(s.kind)).exists(_.victimShape == "id_text"))
-          v.filter(col(textCol).isNull)
-            .select(col(idCol).cast("long").as("id"))
-            .localCheckpoint(true)
+          f.checkpoint(v.filter(col(textCol).isNull)
+            .select(col(idCol).cast("long").as("id")))
         else null
       val nNullText = if (nullTextIds == null) 0L else nullTextIds.count()
-      try body(spark, v, nullTextIds, nNullText)
-      finally
-        if (nullTextIds != null)
-          org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(nullTextIds)
-    } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(vAll)
+      body(spark, v, nullTextIds, nNullText)
+    }
   }
 
   // one store's delete face + the id_text null-text cross-check — the
@@ -655,9 +651,10 @@ object Takedown {
     validateStores("audit", stores)
     require(victims.columns.contains(idCol),
       s"victims must carry the id column '$idCol'")
-    val v = victims.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint(true) // one probe per store reads it
-    try {
+    Frames.scoped { f =>
+      // one probe per store reads it
+      val v = f.checkpoint(
+        victims.select(col(idCol).cast("long").as("id")).distinct())
       val outcomes = inParallel(stores) { st =>
         try {
           val (n, sample) = probeRemaining(spark, st, idCol, v)
@@ -672,8 +669,7 @@ object Takedown {
       import spark.implicits._
       outcomes.toDF("kind", "path", "status", "n_remaining",
         "remaining_sample")
-    } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(v)
+    }
   }
 
   /** The loud form of [[audit]]: throws unless EVERY store is `clean` —

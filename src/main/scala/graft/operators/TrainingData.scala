@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Frames
 import graft.functions.{TextFunctions => T}
 
 /** The composed product use-case: prepare a raw document corpus for LLM
@@ -633,11 +634,10 @@ object TrainingData {
     * the job; one materialized pass + a disk spill beats two encodes.
     */
   def writeTokenShards(docs: DataFrame, idCol: String, textCol: String,
-      path: String, tokenBudget: Long, size: Int, overlap: Int): Unit = {
-    val ids = docs
-      .select(col(idCol), graft.functions.Bpe.bpeIdsBytes(col(textCol)).as("__ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      path: String, tokenBudget: Long, size: Int, overlap: Int): Unit =
+    Frames.scoped { f =>
+      val ids = f.persist(docs.select(col(idCol),
+        graft.functions.Bpe.bpeIdsBytes(col(textCol)).as("__ids")))
       // packShardsBy's per-partition totals collect is the first action
       // and populates the cache; every later stage reads cached blocks
       // explicit null guard: size(null) is conf-dependent (-1 under
@@ -649,8 +649,7 @@ object TrainingData {
       chunkIdsFrame(ids, idCol, size, overlap)
         .join(shards, Seq(idCol))
         .write.mode("overwrite").partitionBy("shard_id").parquet(path)
-    } finally ids.unpersist(blocking = false)
-  }
+    }
 
   /** GPT-style token-stream packing: concatenate every doc's byte-level
     * BPE ids in ascending-id order with `eodId` appended after each doc,
@@ -1710,46 +1709,46 @@ object TrainingData {
       path: String, nBuckets: Int, overwrite: Boolean): Unit = {
     require(nBuckets >= 1, "nBuckets >= 1")
     val mode = if (overwrite) "overwrite" else "append"
-    val toks = docs
-      .select(col(idCol), T.normTokens(col(textCol)).as("__t"))
-      .select(col(idCol), col("__t"), size(col("__t")).as("__dli"))
-      .localCheckpoint(true) // stats + postings + doclens read it
-    val postings = toks
-      .select(col(idCol), col("__dli"), explode(col("__t")).as("term"))
-      .groupBy(col(idCol), col("__dli"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .select(col("term"), col(idCol), col("tf"), col("__dli").as("dl"),
-        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("tb"))
-      .localCheckpoint(true) // postings write + df derive read it
-    // with both checkpoints landed the four table writes are independent
-    // jobs over materialized frames — run them concurrently (the
-    // CountStore.writeBase judgment): wall = the postings write, not the
-    // sum of four. Write order never carried crash semantics here (the
-    // rebuild face holds _MAINT; a mid-append crash was equally partial
-    // sequentially).
-    // doclens carries (id, dl) for EVERY indexed doc — including
-    // null-text (dl NULL) and token-less (dl 0) docs that never reach
-    // the postings table: bm25IndexDelete needs each victim's exact
-    // stats contribution, and postings alone cannot reconstruct it
-    Takedown.inParallel(Seq[() => Unit](
-      () => toks.select(col(idCol), col("__dli").cast("long").as("dl"))
-        .write.mode(mode).parquet(s"$path/doclens"),
-      () => postings
-        .repartition(col("tb")) // one file per bucket, not files × tasks
-        .write.mode(mode).partitionBy("tb").parquet(s"$path/postings"),
-      () => postings.groupBy(col("term"), col("tb"))
-        .agg(count(lit(1)).as("df"))
-        .repartition(col("tb"))
-        .write.mode(mode).partitionBy("tb").parquet(s"$path/df"),
-      () => toks.agg(count(lit(1)).as("n_docs"),
-          count(col("__dli")).as("n_dl"),
-          coalesce(sum(col("__dli").cast("long")), lit(0L)).as("sum_dl"))
-        .repartition(1)
-        .write.mode(mode).parquet(s"$path/stats")))(_.apply())
-    // the append face is a repeat-called ingestion path: release this
-    // call's pinned blocks (the trianglesIndexAppend discipline)
-    org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(postings)
-    org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(toks)
+    // the append face is a repeat-called ingestion path: the scope frees
+    // this call's pinned blocks (the trianglesIndexAppend discipline)
+    Frames.scoped { f =>
+      // stats + postings + doclens read it
+      val toks = f.checkpoint(docs
+        .select(col(idCol), T.normTokens(col(textCol)).as("__t"))
+        .select(col(idCol), col("__t"), size(col("__t")).as("__dli")))
+      // postings write + df derive read it
+      val postings = f.checkpoint(toks
+        .select(col(idCol), col("__dli"), explode(col("__t")).as("term"))
+        .groupBy(col(idCol), col("__dli"), col("term"))
+        .agg(count(lit(1)).as("tf"))
+        .select(col("term"), col(idCol), col("tf"), col("__dli").as("dl"),
+          pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("tb")))
+      // with both checkpoints landed the four table writes are independent
+      // jobs over materialized frames — run them concurrently (the
+      // CountStore.writeBase judgment): wall = the postings write, not the
+      // sum of four. Write order never carried crash semantics here (the
+      // rebuild face holds _MAINT; a mid-append crash was equally partial
+      // sequentially).
+      // doclens carries (id, dl) for EVERY indexed doc — including
+      // null-text (dl NULL) and token-less (dl 0) docs that never reach
+      // the postings table: bm25IndexDelete needs each victim's exact
+      // stats contribution, and postings alone cannot reconstruct it
+      Takedown.inParallel(Seq[() => Unit](
+        () => toks.select(col(idCol), col("__dli").cast("long").as("dl"))
+          .write.mode(mode).parquet(s"$path/doclens"),
+        () => postings
+          .repartition(col("tb")) // one file per bucket, not files × tasks
+          .write.mode(mode).partitionBy("tb").parquet(s"$path/postings"),
+        () => postings.groupBy(col("term"), col("tb"))
+          .agg(count(lit(1)).as("df"))
+          .repartition(col("tb"))
+          .write.mode(mode).partitionBy("tb").parquet(s"$path/df"),
+        () => toks.agg(count(lit(1)).as("n_docs"),
+            count(col("__dli")).as("n_dl"),
+            coalesce(sum(col("__dli").cast("long")), lit(0L)).as("sum_dl"))
+          .repartition(1)
+          .write.mode(mode).parquet(s"$path/stats")))(_.apply())
+    }
   }
 
   /** Probe a [[bm25IndexWrite]] index: identical scores to running
@@ -1944,31 +1943,30 @@ object TrainingData {
     // stats contribution from doclens, keyed by the index's own id
     // column whatever the request calls it
     val dlId = doclens.columns.head
-    val victims = new VictimChannel(spark, path).minus(doclens.join(
-        ids.select(col(idCol).as(dlId)).distinct(), Seq(dlId), "left_semi"),
-        dlId)
-      .localCheckpoint(true) // ids + stats + df read it
-    try {
-      if (victims.isEmpty) return
+    Frames.scoped { f =>
+      val victims = f.checkpoint(new VictimChannel(spark, path).minus(
+        doclens.join(ids.select(col(idCol).as(dlId)).distinct(), Seq(dlId),
+          "left_semi"), dlId)) // ids + stats + df read it
       // the ids and the two payload tables are written concurrently over
       // the checkpointed victims (the bm25IndexOut judgment)
-      VictimChannel.stage(spark, path, victims.select(col(dlId))) { dir =>
-        Seq(
-          () => victims.agg((-count(lit(1))).as("n_docs"),
-              (-count(col("dl"))).as("n_dl"),
-              (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-            .repartition(1)
-            .write.mode("overwrite").parquet(s"$dir/stats"),
-          // one column-pruned postings pass: each victim posting row is
-          // one df unit to give back on its (term, tb)
-          () => spark.read.parquet(s"$path/postings")
-            .select(col("term"), col(dlId), col("tb"))
-            .join(victims.select(col(dlId)), Seq(dlId), "left_semi")
-            .groupBy(col("term"), col("tb"))
-            .agg((-count(lit(1))).as("df"))
-            .write.mode("overwrite").parquet(s"$dir/df"))
-      }
-    } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(victims)
+      if (!victims.isEmpty)
+        VictimChannel.stage(spark, path, victims.select(col(dlId))) { dir =>
+          Seq(
+            () => victims.agg((-count(lit(1))).as("n_docs"),
+                (-count(col("dl"))).as("n_dl"),
+                (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
+              .repartition(1)
+              .write.mode("overwrite").parquet(s"$dir/stats"),
+            // one column-pruned postings pass: each victim posting row is
+            // one df unit to give back on its (term, tb)
+            () => spark.read.parquet(s"$path/postings")
+              .select(col("term"), col(dlId), col("tb"))
+              .join(victims.select(col(dlId)), Seq(dlId), "left_semi")
+              .groupBy(col("term"), col("tb"))
+              .agg((-count(lit(1))).as("df"))
+              .write.mode("overwrite").parquet(s"$dir/df"))
+        }
+    }
   }
 
   /** AUDIT face: the doc ids whose postings still influence BM25
@@ -2028,22 +2026,20 @@ object TrainingData {
       val victims = ids.select(col("id").as(idCol))
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // every checkpoint lands here and is released in the finally — a
-      // failed bucket rewrite must not leak posting-scale pinned blocks
-      // into the re-run the docstring requires
-      val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-      def pin(df: DataFrame): DataFrame = { pinned += df; df }
-      try {
+      // every checkpoint is pinned in the scope — a failed bucket
+      // rewrite must not leak posting-scale pinned blocks into the
+      // re-run the docstring requires
+      Frames.scoped { f =>
         // touched buckets: driver-bounded (≤nBuckets) from the delete
         // batches' df deltas — buckets without victims are never read
         val touched = spark.read.parquet(dirs.map(d => s"$d/df"): _*)
           .select(col("tb").cast("long")).distinct()
           .collect().map(_.getLong(0)).sorted
         if (touched.nonEmpty) {
-          val kept = pin(spark.read.parquet(s"$path/postings")
+          // postings rewrite + df recompute read it
+          val kept = f.checkpoint(spark.read.parquet(s"$path/postings")
             .filter(col("tb").isin(touched: _*))
-            .join(victims, Seq(idCol), "left_anti")
-            .localCheckpoint(true)) // postings rewrite + df recompute read it
+            .join(victims, Seq(idCol), "left_anti"))
           kept.repartition(col("tb"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -2070,16 +2066,15 @@ object TrainingData {
         }
         // doclens minus victims — checkpointed before overwriting the
         // table it reads
-        val dlKept = pin(doclens.join(victims, Seq(idCol), "left_anti")
-          .localCheckpoint(true))
+        val dlKept =
+          f.checkpoint(doclens.join(victims, Seq(idCol), "left_anti"))
         dlKept.write.mode("overwrite").parquet(s"$path/doclens")
         // stats from ground truth: one row replacing every batch row
-        val newStats = pin(dlKept
+        f.checkpoint(dlKept
           .agg(count(lit(1)).as("n_docs"), count(col("dl")).as("n_dl"),
             coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-          .repartition(1).localCheckpoint(true))
-        newStats.write.mode("overwrite").parquet(s"$path/stats")
-      } finally pinned.foreach(
-        org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint)
+          .repartition(1))
+          .write.mode("overwrite").parquet(s"$path/stats")
+      }
     }
 }

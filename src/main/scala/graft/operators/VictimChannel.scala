@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import graft.Frames
 
 /** The pending-deletion channel of the indexed stores (prefix-join,
   * decontamination grams, containment shingles, BM25, k-means/PQ
@@ -105,11 +106,9 @@ private[graft] object VictimChannel {
     if (new VictimChannel(spark, path).batches.isEmpty &&
         !AtomicBatches.maintenanceActive(spark, path)) return
     AtomicBatches.withMaintenanceLock(spark, path, takeover) {
-      new VictimChannel(spark, path).read("id").foreach { v0 =>
-        val v = v0.distinct().localCheckpoint(true) // every rewrite reads it
-        try rewrite(v)
-        finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(v)
-      }
+      // every rewrite reads the checkpointed ids
+      new VictimChannel(spark, path).read("id").foreach(v0 =>
+        Frames.scoped(f => rewrite(f.checkpoint(v0.distinct()))))
       retire(spark, path)
     }
   }

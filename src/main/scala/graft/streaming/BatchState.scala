@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
+import graft.Frames
 import graft.operators.Similarity.readParquetIfAny
 
 /** The batch-partitioned state protocol every `foreachBatch` store of
@@ -24,16 +25,18 @@ import graft.operators.Similarity.readParquetIfAny
   */
 private[graft] object BatchState {
 
-  /** The stream sink: `body(batch, batchId)` once per micro-batch,
-    * checkpointed at `checkpoint`.
+  /** The stream sink: `body(batch, batchId, frames)` once per
+    * micro-batch, checkpointed at `checkpoint`. `frames` is the batch's
+    * own scope: what the body pins there is freed when the batch ends,
+    * so executor blocks never accumulate for the stream's lifetime.
     */
   def eachBatch(df: DataFrame, checkpoint: String)(
-      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+      body: (DataFrame, Long, Frames) => Unit): DataStreamWriter[Row] =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        body(batch.toDF(), batchId)
+        Frames.scoped(body(batch.toDF(), batchId, _))
       }
 
   /** Write `df` as partition `batch_id = batchId` of `path`, replacing

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.Frames
 import graft.pipeline.{Pipeline, Routing, RoutedMessages}
 
 /** Structured Streaming surface of the engine.
@@ -158,7 +159,7 @@ object StreamingOps {
   def continuousNbScore(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId, _) =>
       BatchState.writeBatch(
         graft.operators.Classifier.nbScore(batch, idCol, textCol, model),
         outPath, batchId)
@@ -176,7 +177,7 @@ object StreamingOps {
   def continuousDsirScore(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, numBuckets: Int, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId, _) =>
       BatchState.writeBatch(
         graft.operators.Sampling.dsirScore(batch, idCol, textCol, model,
           numBuckets),
@@ -199,7 +200,7 @@ object StreamingOps {
   def continuousApplyMixturePlan(docs: DataFrame, sourceCol: String,
       idCol: String, plan: DataFrame, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId, _) =>
       BatchState.writeBatch(
         graft.operators.Sampling.applyMixturePlan(batch, sourceCol, idCol,
           plan),
@@ -216,7 +217,7 @@ object StreamingOps {
   def continuousKmeansAssign(vecs: DataFrame, idCol: String, vecCol: String,
       model: DataFrame, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId, _) =>
       BatchState.writeBatch(
         graft.operators.Embeddings.kmeansAssign(batch, idCol, vecCol, model),
         outPath, batchId)
@@ -236,7 +237,7 @@ object StreamingOps {
   def continuousKCenterAssign(vecs: DataFrame, idCol: String,
       vecCol: String, centers: DataFrame, outPath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId, _) =>
       BatchState.writeBatch(
         graft.operators.Sampling.kCenterAssign(batch, idCol, vecCol, centers),
         outPath, batchId)
@@ -262,7 +263,7 @@ object StreamingOps {
   def continuousCapPerGroup(docs: DataFrame, groupCols: Seq[String],
       idCol: String, scoreCol: String, n: Int, statePath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId, _) =>
       val cur = batch.select((groupCols ++ Seq(idCol, scoreCol)).map(col): _*)
       // distinct: a row present in the carried state AND re-sent in this
       // batch must occupy one top-k slot, not two
@@ -292,7 +293,7 @@ object StreamingOps {
   def continuousDistinctSketch(rows: DataFrame, groupCols: Seq[String],
       valueCol: String, statePath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    BatchState.eachBatch(rows, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(rows, checkpoint) { (batch, batchId, _) =>
       val cur = batch.groupBy(groupCols.map(col): _*)
         .agg(hll_sketch_agg(col(valueCol)).as("sk"))
       BatchState.carry(statePath, batchId, cur.limit(0))(prev =>
@@ -328,7 +329,7 @@ object StreamingOps {
       valueCol: String, statePath: String, checkpoint: String,
       k: Int = 256): DataStreamWriter[Row] = {
     import graft.functions.{ThetaSketch => TS}
-    BatchState.eachBatch(rows, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(rows, checkpoint) { (batch, batchId, _) =>
       val cur = batch.groupBy(groupCols.map(col): _*)
         .agg(TS.thetaSketch(col(valueCol), k).as("sk"))
       BatchState.carry(statePath, batchId, cur.limit(0))(prev =>
@@ -353,7 +354,7 @@ object StreamingOps {
       valueCol: String, statePath: String, checkpoint: String,
       bins: Int = 256): DataStreamWriter[Row] = {
     import graft.functions.{QuantileSketch => QS}
-    BatchState.eachBatch(rows, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(rows, checkpoint) { (batch, batchId, _) =>
       val cur = batch.groupBy(groupCols.map(col): _*)
         .agg(QS.sketchAgg(col(valueCol).cast("double"), bins).as("sk"))
       BatchState.carry(statePath, batchId, cur.limit(0))(prev =>
@@ -403,7 +404,7 @@ object StreamingOps {
   def continuousFunnel(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, steps: Seq[String], conversionWindow: Option[String],
       statePath: String, checkpoint: String): DataStreamWriter[Row] =
-    BatchState.eachBatch(events, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(events, checkpoint) { (batch, batchId, _) =>
       val cur = batch.select(col(userCol), col(typeCol), col(tsCol))
       val emptyState = graft.operators.Funnel.reach(
         cur.limit(0), userCol, typeCol, tsCol, steps, conversionWindow)
@@ -457,31 +458,28 @@ object StreamingOps {
   def continuousScd2(updates: DataFrame, keyCols: Seq[String], tsCol: String,
       tieCol: String, attrCols: Seq[String], statePath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    BatchState.eachBatch(updates, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(updates, checkpoint) { (batch, batchId, f) =>
       val spark = batch.sparkSession
-      val cur = batch.select((keyCols ++ Seq(tsCol, tieCol) ++ attrCols)
-          .map(col): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        cur.count()
-        // the open version of every key this batch touches
-        val currentOfTouched = BatchState.priorRows(spark, statePath, batchId)
-          .map(hist => scd2Live(hist, keyCols, tieCol)
-            .where(col("is_current"))
-            .join(cur.select(keyCols.map(col): _*).distinct(),
-              keyCols, "left_semi"))
-          // first batch: empty frame with the history schema
-          .getOrElse(graft.operators.Scd2.history(cur.limit(0),
-            keyCols, tsCol, tieCol, attrCols))
-        // synthetic observation per touched key's open version: its
-        // effective_from + attrs re-enter the change-compression walk
-        val synth = currentOfTouched.select(
-          (keyCols.map(col) :+ col("effective_from").as(tsCol) :+
-            col(tieCol)) ++ attrCols.map(col): _*)
-        BatchState.writeBatch(graft.operators.Scd2.history(
-          synth.union(cur), keyCols, tsCol, tieCol, attrCols),
-          statePath, batchId)
-      } finally cur.unpersist(blocking = false)
+      val cur = f.persist(batch.select(
+        (keyCols ++ Seq(tsCol, tieCol) ++ attrCols).map(col): _*))
+      cur.count()
+      // the open version of every key this batch touches
+      val currentOfTouched = BatchState.priorRows(spark, statePath, batchId)
+        .map(hist => scd2Live(hist, keyCols, tieCol)
+          .where(col("is_current"))
+          .join(cur.select(keyCols.map(col): _*).distinct(),
+            keyCols, "left_semi"))
+        // first batch: empty frame with the history schema
+        .getOrElse(graft.operators.Scd2.history(cur.limit(0),
+          keyCols, tsCol, tieCol, attrCols))
+      // synthetic observation per touched key's open version: its
+      // effective_from + attrs re-enter the change-compression walk
+      val synth = currentOfTouched.select(
+        (keyCols.map(col) :+ col("effective_from").as(tsCol) :+
+          col(tieCol)) ++ attrCols.map(col): _*)
+      BatchState.writeBatch(graft.operators.Scd2.history(
+        synth.union(cur), keyCols, tsCol, tieCol, attrCols),
+        statePath, batchId)
     }
 
   /** The live row per version of SCD2 history rows: the row of the
@@ -551,26 +549,23 @@ object StreamingOps {
       indexPath: String, outPath: String, checkpoint: String,
       k: Int = 8): DataStreamWriter[Row] = {
     import graft.operators.TrainingData
-    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId, f) =>
       val spark = batch.sparkSession
       // the batch feeds two tokenize passes (rebuild + index delta) —
-      // persist the raw batch once, release deterministically
-      val b = batch
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        b.count()
-        val existing = BatchState.priorRows(spark, indexPath, batchId)
-          .map(_.drop("batch_id"))
-          .getOrElse(TrainingData.spanIndex(b.limit(0), idCol, textCol, k))
-        // output first, index second: a crash between the two replays
-        // the batch with the index still excluding its own rows
-        BatchState.writeBatch(
-          TrainingData.dedupSpansIncremental(b, idCol, textCol, k, existing),
-          outPath, batchId)
-        BatchState.writeBatch(
-          TrainingData.spanIndexDelta(b, idCol, textCol, k, existing),
-          indexPath, batchId)
-      } finally b.unpersist(blocking = false)
+      // persist the raw batch once, freed with the batch
+      val b = f.persist(batch)
+      b.count()
+      val existing = BatchState.priorRows(spark, indexPath, batchId)
+        .map(_.drop("batch_id"))
+        .getOrElse(TrainingData.spanIndex(b.limit(0), idCol, textCol, k))
+      // output first, index second: a crash between the two replays
+      // the batch with the index still excluding its own rows
+      BatchState.writeBatch(
+        TrainingData.dedupSpansIncremental(b, idCol, textCol, k, existing),
+        outPath, batchId)
+      BatchState.writeBatch(
+        TrainingData.spanIndexDelta(b, idCol, textCol, k, existing),
+        indexPath, batchId)
     }
   }
 
@@ -598,7 +593,7 @@ object StreamingOps {
       indexPath: String, outPath: String, checkpoint: String,
       w: Int = 8, maskBits: Int = 6): DataStreamWriter[Row] = {
     import graft.operators.TrainingData
-    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId, f) =>
       val spark = batch.sparkSession
       // fail the batch loudly while compactCdcIndex holds the store —
       // reading half-rewritten partitions would silently mis-dedup;
@@ -606,31 +601,28 @@ object StreamingOps {
       graft.operators.AtomicBatches.assertNotInMaintenance(spark,
         indexPath, "continuousCdcDedup")
       // the batch feeds two chunking passes (dedup + index delta) —
-      // persist the raw batch once, release deterministically
-      val b = batch
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        b.count()
-        // takedown-aware ([[cdcStateDelete]]): a deleted doc's owned
-        // chunks are hidden, so the new batch neither dedups against
-        // them nor fails to re-own them; a re-ingested victim's newer
-        // rows outrank the deletion
-        val existing = BatchState.priorRows(spark, indexPath, batchId)
-          .map(raw => BatchState.live(raw, cdcVictims(spark, indexPath),
-            Seq(idCol)).drop("batch_id"))
-          .getOrElse(TrainingData.cdcIndex(b.limit(0), idCol, textCol, w,
-            maskBits))
-        // output first, index second: a crash between the two replays
-        // the batch with the index still excluding its own rows
-        BatchState.writeBatch(
-          TrainingData.cdcDedupIncremental(b, idCol, textCol, w, maskBits,
-            existing),
-          outPath, batchId)
-        BatchState.writeBatch(
-          TrainingData.cdcIndexDelta(b, idCol, textCol, w, maskBits,
-            existing),
-          indexPath, batchId)
-      } finally b.unpersist(blocking = false)
+      // persist the raw batch once, freed with the batch
+      val b = f.persist(batch)
+      b.count()
+      // takedown-aware ([[cdcStateDelete]]): a deleted doc's owned
+      // chunks are hidden, so the new batch neither dedups against
+      // them nor fails to re-own them; a re-ingested victim's newer
+      // rows outrank the deletion
+      val existing = BatchState.priorRows(spark, indexPath, batchId)
+        .map(raw => BatchState.live(raw, cdcVictims(spark, indexPath),
+          Seq(idCol)).drop("batch_id"))
+        .getOrElse(TrainingData.cdcIndex(b.limit(0), idCol, textCol, w,
+          maskBits))
+      // output first, index second: a crash between the two replays
+      // the batch with the index still excluding its own rows
+      BatchState.writeBatch(
+        TrainingData.cdcDedupIncremental(b, idCol, textCol, w, maskBits,
+          existing),
+        outPath, batchId)
+      BatchState.writeBatch(
+        TrainingData.cdcIndexDelta(b, idCol, textCol, w, maskBits,
+          existing),
+        indexPath, batchId)
     }
   }
 
@@ -684,40 +676,35 @@ object StreamingOps {
       indexPath: String, includeLatest: Boolean = false,
       takeover: Boolean = false): Unit = {
     import graft.operators.{AtomicBatches, Similarity}
-    import org.apache.spark.sql.graft.Bridge
     if (cdcVictims(spark, indexPath).isEmpty &&
         !AtomicBatches.maintenanceActive(spark, indexPath)) return
     AtomicBatches.withMaintenanceLock(spark, indexPath, takeover) {
-      cdcVictims(spark, indexPath).foreach { v0 =>
+      cdcVictims(spark, indexPath).foreach(v0 => Frames.scoped { f =>
         // NO non-local return in here (it would skip the lock release);
         // a store a prior compaction emptied has no rows to prune
         val storeOpt = Similarity.readParquetIfAny(spark, indexPath)
         val horizon = if (includeLatest) Long.MaxValue
           else storeOpt.flatMap(BatchState.maxBatch).getOrElse(Long.MinValue)
-        val v = v0.localCheckpoint(true)
+        val v = f.checkpoint(v0)
         val fs = new org.apache.hadoop.fs.Path(indexPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        try {
-          // shared rewrite protocol: touched-only dynamic overwrite +
-          // emptied-partition deletion (AtomicBatches)
-          storeOpt.foreach { store =>
-            val (joined, dead) =
-              BatchState.withVictims(store, v, Seq(cdcIdCol(store)))
-            AtomicBatches.pruneDeadPartitionRows(spark, indexPath,
-              "batch_id", joined,
-              col("batch_id").cast("long") < lit(horizon) && dead,
-              store.columns.toSeq)
-          }
-          // GC victims whose every possible row is now physical; later
-          // deletions (up_to ≥ horizon) stay pending and keep hiding
-          val pending = v.filter(col("up_to") >= lit(horizon))
-            .localCheckpoint(true)
-          val vroot = new org.apache.hadoop.fs.Path(s"$indexPath/_victims")
-          if (pending.isEmpty) fs.delete(vroot, true)
-          else pending.write.mode("overwrite").parquet(vroot.toString)
-          Bridge.releaseLocalCheckpoint(pending)
-        } finally Bridge.releaseLocalCheckpoint(v)
-      }
+        // shared rewrite protocol: touched-only dynamic overwrite +
+        // emptied-partition deletion (AtomicBatches)
+        storeOpt.foreach { store =>
+          val (joined, dead) =
+            BatchState.withVictims(store, v, Seq(cdcIdCol(store)))
+          AtomicBatches.pruneDeadPartitionRows(spark, indexPath,
+            "batch_id", joined,
+            col("batch_id").cast("long") < lit(horizon) && dead,
+            store.columns.toSeq)
+        }
+        // GC victims whose every possible row is now physical; later
+        // deletions (up_to ≥ horizon) stay pending and keep hiding
+        val pending = f.checkpoint(v.filter(col("up_to") >= lit(horizon)))
+        val vroot = new org.apache.hadoop.fs.Path(s"$indexPath/_victims")
+        if (pending.isEmpty) fs.delete(vroot, true)
+        else pending.write.mode("overwrite").parquet(vroot.toString)
+      })
     }
   }
 
@@ -913,7 +900,6 @@ object StreamingOps {
       indexPath: String, pairsPath: String, labelsPath: String,
       maxIter: Int = 20): Unit = {
     import graft.operators.{AtomicBatches, Dedup}
-    import org.apache.spark.sql.graft.Bridge
     val spark = victims.sparkSession
     AtomicBatches.assertNotInMaintenance(spark, labelsPath,
       "clusterStateDelete")
@@ -934,23 +920,23 @@ object StreamingOps {
       .getOrElse(throw new IllegalArgumentException(
         s"no index/label state under $indexPath / $labelsPath - " +
           "nothing to delete from"))
-    val v = victims.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint(true) // read by affected, subPairs ×2, staging
-    try {
-      if (v.isEmpty) return
-      // a stream of all-unique docs writes EMPTY label/pair deltas — no
-      // partition, possibly no directory — yet its victims still need
-      // their records staged (that is what hides their INDEX rows):
-      // treat an unreadable labels/pairs store as empty, never abort
-      def emptyLongs(names: String*): DataFrame =
-        names.map(n => spark.range(0).select(col("id").cast("long").as(n)))
-          .reduce((a, b) => a.crossJoin(b))
-      val lab = graft.operators.Similarity
-        .readParquetIfAny(spark, labelsPath)
-        .map(_ => currentClusterLabels(spark, labelsPath))
-        .getOrElse(emptyLongs("id", "cluster_id"))
-        .localCheckpoint(true) // read for affected + members
-      try {
+    Frames.scoped { f =>
+      // read by affected, subPairs ×2, staging
+      val v = f.checkpoint(
+        victims.select(col(idCol).cast("long").as("id")).distinct())
+      if (!v.isEmpty) {
+        // a stream of all-unique docs writes EMPTY label/pair deltas — no
+        // partition, possibly no directory — yet its victims still need
+        // their records staged (that is what hides their INDEX rows):
+        // treat an unreadable labels/pairs store as empty, never abort
+        def emptyLongs(names: String*): DataFrame =
+          names.map(n => spark.range(0).select(col("id").cast("long").as(n)))
+            .reduce((a, b) => a.crossJoin(b))
+        // read for affected + members
+        val lab = f.checkpoint(graft.operators.Similarity
+          .readParquetIfAny(spark, labelsPath)
+          .map(_ => currentClusterLabels(spark, labelsPath))
+          .getOrElse(emptyLongs("id", "cluster_id")))
         val p = graft.operators.Similarity
           .readParquetIfAny(spark, pairsPath)
           .map(_ => currentClusterPairs(spark, pairsPath, labelsPath))
@@ -960,31 +946,29 @@ object StreamingOps {
         // the shared victims→affected→re-closure core
         // (Dedup.affectedReclosure — one implementation with the batch
         // label-store takedown, so a closure fix cannot miss a face)
-        val (_, members, reclosed, release) =
-          Dedup.affectedReclosure(lab, v, p, maxIter)
-        try {
-          val n = AtomicBatches.nextBatchN(spark, croot)
-          val bdir = s"$croot/$n"
-          // both staged tables are invisible until the _COMMIT below and
-          // read only checkpointed frames — concurrent (the
-          // CountStore.stageDelta judgment): the tiny victims write
-          // overlaps the label-override join.
-          // One override row per affected-component member: the
-          // re-closed label, or NULL for victims and orphans (ids a
-          // rebuild over survivors would never label)
-          graft.operators.Takedown.inParallel(Seq[() => Unit](
-            () => members
-              .join(reclosed.select(col("id"), col("cluster_id").as("__nc")),
-                Seq("id"), "left_outer")
-              .select(col("id"), col("__nc").as("cluster_id"),
-                lit(upTo).as("up_to"), lit(n).as("seq"))
-              .write.mode("overwrite").parquet(s"$bdir/labels"),
-            () => v.select(col("id"), lit(upTo).as("up_to"))
-              .write.mode("overwrite").parquet(s"$bdir/victims")))(_.apply())
-          AtomicBatches.commit(spark, bdir)
-        } finally release()
-      } finally Bridge.releaseLocalCheckpoint(lab)
-    } finally Bridge.releaseLocalCheckpoint(v)
+        val (_, members, reclosed) =
+          Dedup.affectedReclosure(f, lab, v, p, maxIter)
+        val n = AtomicBatches.nextBatchN(spark, croot)
+        val bdir = s"$croot/$n"
+        // both staged tables are invisible until the _COMMIT below and
+        // read only checkpointed frames — concurrent (the
+        // CountStore.stageDelta judgment): the tiny victims write
+        // overlaps the label-override join.
+        // One override row per affected-component member: the
+        // re-closed label, or NULL for victims and orphans (ids a
+        // rebuild over survivors would never label)
+        graft.operators.Takedown.inParallel(Seq[() => Unit](
+          () => members
+            .join(reclosed.select(col("id"), col("cluster_id").as("__nc")),
+              Seq("id"), "left_outer")
+            .select(col("id"), col("__nc").as("cluster_id"),
+              lit(upTo).as("up_to"), lit(n).as("seq"))
+            .write.mode("overwrite").parquet(s"$bdir/labels"),
+          () => v.select(col("id"), lit(upTo).as("up_to"))
+            .write.mode("overwrite").parquet(s"$bdir/victims")))(_.apply())
+        AtomicBatches.commit(spark, bdir)
+      }
+    }
   }
 
   /** AUDIT face of a [[continuousClusteredDedup]] state: the ids that
@@ -1138,7 +1122,6 @@ object StreamingOps {
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       pairsPath: String, labelsPath: String, includeLatest: Boolean): Unit = {
     import graft.operators.{AtomicBatches, Similarity}
-    import org.apache.spark.sql.graft.Bridge
     val allOpt = Similarity.readParquetIfAny(spark, labelsPath)
     // the stream's true position is the max batch across the stores —
     // the labels store alone under-reads it when recent batches were
@@ -1179,42 +1162,40 @@ object StreamingOps {
         // nothing, so a stale pre-takedown −1 snapshot would survive the
         // corrections' GC and silently resurrect the victims — delete the
         // snapshot partition explicitly in that case
-        val snapped = BatchState.foldLabels(
-            all.where(col("batch_id") < lit(horizon)), applied)
-          .localCheckpoint(true) // isEmpty + write
-        try {
+        Frames.scoped { f =>
+          // read by the isEmpty and the write
+          val snapped = f.checkpoint(BatchState.foldLabels(
+            all.where(col("batch_id") < lit(horizon)), applied))
           if (snapped.isEmpty) BatchState.prune(spark, labelsPath)(_ == -1L)
           else BatchState.writeBatch(snapped, labelsPath, -1L)
-        } finally Bridge.releaseLocalCheckpoint(snapped)
+        }
         BatchState.prune(spark, labelsPath)(b => b >= 0 && b < horizon)
       }
     }
     // 2) physically remove victim rows from the committed pair and
     // index partitions — victims from ALL correction batches (pending
     // ones keep their read-time rule for whatever this pass leaves)
-    clusterVictims(spark, labelsPath).foreach { v =>
-      val victims = v.localCheckpoint(true)
-      try {
-        // a row dies iff ANY of its id columns is a victim whose
-        // deletion covers the row's batch — shared rewrite protocol
-        // (AtomicBatches.pruneDeadPartitionRows handles touched-only
-        // dynamic overwrite + emptied-partition deletion, with the
-        // FileSystem resolved per store path)
-        def pruneStore(path: String, store: DataFrame,
-            idCols: Seq[String]): Unit = {
-          val (joined, dead) = BatchState.withVictims(store, victims, idCols)
-          AtomicBatches.pruneDeadPartitionRows(spark, path, "batch_id",
-            joined, col("batch_id").cast("long") < lit(horizon) && dead,
-            store.columns.toSeq)
-        }
-        Similarity.readParquetIfAny(spark, pairsPath).foreach(store =>
-          pruneStore(pairsPath, store, Seq("id_a", "id_b")))
-        // the index store's id column is its FIRST column (the
-        // minhash/simhash/embedding index faces all put idCol first)
-        Similarity.readParquetIfAny(spark, indexPath).foreach(store =>
-          pruneStore(indexPath, store, Seq(store.columns.head)))
-      } finally Bridge.releaseLocalCheckpoint(victims)
-    }
+    clusterVictims(spark, labelsPath).foreach(v => Frames.scoped { f =>
+      val victims = f.checkpoint(v)
+      // a row dies iff ANY of its id columns is a victim whose
+      // deletion covers the row's batch — shared rewrite protocol
+      // (AtomicBatches.pruneDeadPartitionRows handles touched-only
+      // dynamic overwrite + emptied-partition deletion, with the
+      // FileSystem resolved per store path)
+      def pruneStore(path: String, store: DataFrame,
+          idCols: Seq[String]): Unit = {
+        val (joined, dead) = BatchState.withVictims(store, victims, idCols)
+        AtomicBatches.pruneDeadPartitionRows(spark, path, "batch_id",
+          joined, col("batch_id").cast("long") < lit(horizon) && dead,
+          store.columns.toSeq)
+      }
+      Similarity.readParquetIfAny(spark, pairsPath).foreach(store =>
+        pruneStore(pairsPath, store, Seq("id_a", "id_b")))
+      // the index store's id column is its FIRST column (the
+      // minhash/simhash/embedding index faces all put idCol first)
+      Similarity.readParquetIfAny(spark, indexPath).foreach(store =>
+        pruneStore(indexPath, store, Seq(store.columns.head)))
+    })
     // 3) GC the applied correction batches — their kills and overrides
     // are physical now; pending ones keep guarding. Deleted in ASCENDING
     // numeric order (committedDirs lists lexicographically, where "10"
@@ -1244,7 +1225,7 @@ object StreamingOps {
       indexPath: String, pairsPath: String,
       checkpoint: String, labelsPath: Option[String] = None,
       compactEveryBatches: Int = 0): DataStreamWriter[Row] =
-    BatchState.eachBatch(docs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(docs, checkpoint) { (batch, batchId, f) =>
       val spark = batch.sparkSession
       // fail EARLY while compactClusterState holds the labels store —
       // without this the batch would write pairs/index before the
@@ -1253,52 +1234,40 @@ object StreamingOps {
       labelsPath.foreach(lp => graft.operators.AtomicBatches
         .assertNotInMaintenance(spark, lp, "continuousIndexedDedup"))
       // persist (not localCheckpoint): compute the batch index once for
-      // both the probe and the index write, with a handle we can release
-      // — checkpointed blocks would accumulate on executors for the
-      // stream's lifetime
-      val newIdx = indexOf(batch)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        newIdx.count()
-        // takedown-aware probe: a deleted doc's index rows are hidden,
-        // so no new pairs ever form against it; rows a later batch
-        // re-ingested outrank the deletion and stay probeable
-        // (resurrection)
-        val existing = BatchState.priorRows(spark, indexPath, batchId)
-          .map(raw => BatchState.live(raw,
-            labelsPath.flatMap(clusterVictims(spark, _)), Seq(idCol))
-            .drop("batch_id"))
-          .getOrElse(newIdx.limit(0))
-        // with labels, the pair relation feeds the pair write AND the
-        // label fold — materialize it once (bounded: new-involving pairs)
-        val probed = probe(newIdx, existing)
-        val pairs = labelsPath.fold(probed)(_ => probed
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        try {
-          BatchState.writeBatch(pairs, pairsPath, batchId)
-          BatchState.writeBatch(newIdx, indexPath, batchId)
-          labelsPath.foreach { lp =>
-            // corrections-aware ([[currentClusterLabelsAt]]): a batch
-            // folding pairs after a takedown must build on the
-            // RE-CLOSED state, or it would propagate a deleted doc's
-            // id as a cluster representative
-            val current = currentClusterLabelsAt(spark, lp, Some(batchId))
-            // WithCleanup: the delta's cached frames are released in the
-            // finally — per-batch localCheckpoint/persist blocks must
-            // not wait on GC-driven ContextCleaner reclamation or they
-            // accumulate for the stream's lifetime
-            val (delta, release) = graft.operators.Dedup
-              .incrementalComponentDeltaWithCleanup(current, pairs)
-            try BatchState.writeBatch(delta, lp, batchId)
-            finally release()
-            // inline maintenance: fold committed deltas into the -1
-            // snapshot every N batches (batch 0 has nothing to fold)
-            if (compactEveryBatches > 0 && batchId > 0 &&
-                batchId % compactEveryBatches == 0)
-              compactClusterLabels(spark, lp)
-          }
-        } finally if (labelsPath.isDefined) pairs.unpersist(blocking = false)
-      } finally newIdx.unpersist(blocking = false)
+      // both the probe and the index write
+      val newIdx = f.persist(indexOf(batch))
+      newIdx.count()
+      // takedown-aware probe: a deleted doc's index rows are hidden,
+      // so no new pairs ever form against it; rows a later batch
+      // re-ingested outrank the deletion and stay probeable
+      // (resurrection)
+      val existing = BatchState.priorRows(spark, indexPath, batchId)
+        .map(raw => BatchState.live(raw,
+          labelsPath.flatMap(clusterVictims(spark, _)), Seq(idCol))
+          .drop("batch_id"))
+        .getOrElse(newIdx.limit(0))
+      // with labels, the pair relation feeds the pair write AND the
+      // label fold — materialize it once (bounded: new-involving pairs)
+      val probed = probe(newIdx, existing)
+      val pairs = labelsPath.fold(probed)(_ => f.persist(probed))
+      BatchState.writeBatch(pairs, pairsPath, batchId)
+      BatchState.writeBatch(newIdx, indexPath, batchId)
+      labelsPath.foreach { lp =>
+        // corrections-aware ([[currentClusterLabelsAt]]): a batch
+        // folding pairs after a takedown must build on the
+        // RE-CLOSED state, or it would propagate a deleted doc's
+        // id as a cluster representative
+        val current = currentClusterLabelsAt(spark, lp, Some(batchId))
+        // the delta's own scope frees its frames before the compaction
+        Frames.scoped(g => BatchState.writeBatch(graft.operators.Dedup
+          .incrementalComponentParts(g, current, pairs, "id_a", "id_b", 20)._3,
+          lp, batchId))
+        // inline maintenance: fold committed deltas into the -1
+        // snapshot every N batches (batch 0 has nothing to fold)
+        if (compactEveryBatches > 0 && batchId > 0 &&
+            batchId % compactEveryBatches == 0)
+          compactClusterLabels(spark, lp)
+      }
     }
 
   /** [[continuousHammingDedup]] specialized to text SimHash — the
@@ -1337,7 +1306,7 @@ object StreamingOps {
       indexPath: String, checkpoint: String,
       compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
     import graft.operators.Similarity
-    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId, _) =>
       val spark = batch.sparkSession
       // the frozen quantizer: ≤2^nBits rows, read per batch so an
       // offline rebuild that swaps the centroids table is picked up at
@@ -1428,14 +1397,14 @@ object StreamingOps {
         readParquetIfAny(spark, s"$indexPath/tombstones").isEmpty &&
         !AtomicBatches.maintenanceActive(spark, indexPath)) return
     AtomicBatches.withMaintenanceLock(spark, indexPath, takeover) {
-      compactIvfDeltasBody(spark, indexPath, includeLatest)
+      Frames.scoped(compactIvfDeltasBody(_, spark, indexPath, includeLatest))
     }
   }
 
-  private def compactIvfDeltasBody(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, includeLatest: Boolean): Unit = {
+  private def compactIvfDeltasBody(f: Frames,
+      spark: org.apache.spark.sql.SparkSession, indexPath: String,
+      includeLatest: Boolean): Unit = {
     import graft.operators.Similarity.readParquetIfAny
-    import org.apache.spark.sql.graft.Bridge
     val deltasOpt = readParquetIfAny(spark, s"$indexPath/deltas")
     val tombsOpt = readParquetIfAny(spark, s"$indexPath/tombstones")
     if (deltasOpt.isEmpty && tombsOpt.isEmpty) return
@@ -1473,15 +1442,14 @@ object StreamingOps {
         // recency dedup WITHIN the committed deltas: the max-batch_id row
         // per id wins (deterministic — equal batch_ids only arise from
         // replays whose rows agree in value), carrying its rank for the
-        // tombstone horizon check
-        committedAll
+        // tombstone horizon check; read by touched-cells, prior-cells, fold
+        f.checkpoint(committedAll
           .groupBy(col(idCol))
           .agg(max_by(struct((payload :+ "cell").map(col): _*),
             col("batch_id")).as("__w"),
             max(col("batch_id").cast("long")).as("__b"))
           .select(col(idCol) +: (payload :+ "cell").map(c =>
-            col(s"__w.$c").as(c)) :+ col("__b"): _*)
-          .localCheckpoint(true) // read by touched-cells, prior-cells, fold
+            col(s"__w.$c").as(c)) :+ col("__b"): _*))
       }
     // committed winners minus the ones an applied tombstone kills
     val liveOpt = committedOpt.map { committed =>
@@ -1519,10 +1487,9 @@ object StreamingOps {
             .join(removalIds, Seq(idCol), "left_anti")
         case None => liveOpt.get.limit(0)
       }
-      val folded = liveOpt
+      val folded = f.checkpoint(liveOpt
         .map(existing.unionByName(_))
-        .getOrElse(existing)
-        .localCheckpoint(true)
+        .getOrElse(existing))
       folded
         .repartition(col("cell")) // one file per touched cell
         .write.mode("overwrite")
@@ -1540,9 +1507,9 @@ object StreamingOps {
         fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/cells/cell=$c"),
           true)
       }
-      Bridge.releaseLocalCheckpoint(folded)
+      f.release(folded)
     }
-    committedOpt.foreach(Bridge.releaseLocalCheckpoint)
+    committedOpt.foreach(f.release)
     // prune the folded delta partitions
     if (deltasOpt.nonEmpty) BatchState.prune(spark, s"$indexPath/deltas")(b =>
       b < maxBatch || includeLatest)
@@ -1555,10 +1522,8 @@ object StreamingOps {
       if (includeLatest) fs.delete(troot, true)
       else {
         // materialize survivors BEFORE overwriting the table they read
-        val pending = ts.filter(col("up_to") >= lit(horizon))
-          .localCheckpoint(true)
-        pending.write.mode("overwrite").parquet(troot.toString)
-        Bridge.releaseLocalCheckpoint(pending)
+        f.checkpoint(ts.filter(col("up_to") >= lit(horizon)))
+          .write.mode("overwrite").parquet(troot.toString)
       }
     }
   }
@@ -1615,7 +1580,7 @@ object StreamingOps {
       indexPath: String, checkpoint: String,
       compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
     import graft.operators.Similarity
-    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId) =>
+    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId, _) =>
       val spark = batch.sparkSession
       // frozen quantizer + codebooks re-read per batch, so an offline
       // rebuild that swaps them is picked up at the next batch boundary
@@ -1766,7 +1731,11 @@ object StreamingOps {
   /** Output row of [[statefulRunningAgg]]. */
   case class KeyAgg(key: String, n: Long, total: Double)
 
-  private case class AggState(n: Long, total: Double)
+  /** Per-key state of [[statefulRunningAgg]]. Public: Spark's generated
+    * state projection cannot call a private case class's accessors (it
+    * would fall back to interpreted mode).
+    */
+  case class AggState(n: Long, total: Double)
 
   /** StatefulProcessor behind [[statefulRunningAgg]]: one typed
     * ValueState per key, optional TTL handled by the state store.

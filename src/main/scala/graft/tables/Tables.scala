@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
+import graft.Frames
+
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
   * All reads go through `spark.read.parquet` so Catalyst pushes filters
@@ -217,12 +219,13 @@ object Tables {
   def deleteMatching(spark: SparkSession, path: String,
       partitionCol: String, victims: DataFrame, idCol: String,
       stagedFraction: Double): Long = {
-    val v = victims.select(col(idCol).cast("long").as("__vid")).distinct()
-      .localCheckpoint(true) // read by the discovery AND the rewrite
-    try {
+    Frames.scoped { f =>
+      // read by the discovery AND the rewrite
+      val v = f.checkpoint(
+        victims.select(col(idCol).cast("long").as("__vid")).distinct())
       val (matches, keep) = victimDeletePlans(idCol, v, v.count())
       deleteRewrite(spark, path, partitionCol, matches, keep, stagedFraction)
-    } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(v)
+    }
   }
 
   // the two sides of a victim delete, as a testable seam: rows to drop
@@ -341,16 +344,15 @@ object Tables {
       stagedSwap(fs, root, partitionCol, dirNames, kept)
       (deleted, true)
     } else {
-      val cp = kept.localCheckpoint(true)
-      val stillThere =
-        try {
-          cp.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partitionCol)
-            .parquet(path)
-          // partitions the delete emptied never appear in the output
-          cp.select(partitionCol).distinct().collect().map(_.get(0)).toSet
-        } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(cp)
+      val stillThere = Frames.scoped { f =>
+        val cp = f.checkpoint(kept)
+        cp.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(partitionCol)
+          .parquet(path)
+        // partitions the delete emptied never appear in the output
+        cp.select(partitionCol).distinct().collect().map(_.get(0)).toSet
+      }
       partValues.zip(dirNames).collect {
         case (v, name) if !stillThere.contains(v) =>
           fs.delete(new org.apache.hadoop.fs.Path(root, name), true)

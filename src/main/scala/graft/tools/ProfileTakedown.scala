@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Frames
 import graft.operators.{Takedown, Classifier, Sampling, TrainingData,
   Graph, Embeddings, Dedup, Similarity}
 import graft.operators.Takedown.Store
@@ -121,20 +122,16 @@ object ProfileTakedown {
           docs.filter(col("doc_id") >= 250), "doc_id", "text",
           w = 8, maskBits = 6, cdc0), s"$base/cdc")
       }),
-      "cs" -> (() => {
-        val csPairs = Dedup.minhashLsh(docs, "doc_id", "text",
+      "cs" -> (() => Frames.scoped { f =>
+        val csPairs = f.checkpoint(Dedup.minhashLsh(docs, "doc_id", "text",
           numHashes = 16, bands = 8, shingleN = 5, threshold = 0.4,
           estimateSlack = 0.05)
-          .select(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
-        try {
-          writeBatch0(csPairs, s"$base/cs/pairs")
-          writeBatch0(Dedup.connectedComponents(csPairs, "id_a", "id_b"),
-            s"$base/cs/labels")
-          writeBatch0(docs.select(col("doc_id").as("id")),
-            s"$base/cs/index")
-        } finally
-          org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(csPairs)
+          .select(col("id_a"), col("id_b")))
+        writeBatch0(csPairs, s"$base/cs/pairs")
+        writeBatch0(Dedup.connectedComponents(csPairs, "id_a", "id_b"),
+          s"$base/cs/labels")
+        writeBatch0(docs.select(col("doc_id").as("id")),
+          s"$base/cs/index")
       }),
       "tbl" -> (() => docs.select(col("doc_id"), (col("doc_id") % 16).as("p"),
           col("source"))

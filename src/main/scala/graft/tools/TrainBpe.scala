@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Frames
 import graft.functions.{Bpe, TextFunctions}
 
 /** Trains the bundled byte-level BPE fixture (merges_byte.txt +
@@ -90,14 +91,14 @@ object TrainBpe {
     * produce pairs, so the working table shrinks as training proceeds.
     */
   def distTrain(docs: DataFrame, textCol: String, nMerges: Int,
-      checkpointEvery: Int = 16): Seq[(String, String)] = {
+      checkpointEvery: Int = 16): Seq[(String, String)] = Frames.scoped { f =>
     require(nMerges >= 0, "nMerges >= 0")
     require(checkpointEvery >= 1, "checkpointEvery >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
     // the one corpus-sized pass: distinct pre-token segments + corpus
     // frequency, then byte-level initial symbols (vocabulary-sized map)
-    var cur = docs
+    var cur = f.checkpoint(docs
       .select(explode(regexp_extract_all(
         col(textCol), lit(TextFunctions.subwordPattern), lit(0))).as("g"))
       .groupBy("g").count()
@@ -107,8 +108,7 @@ object TrainBpe {
           .toSeq.map(b => String.valueOf(Bpe.byteToUnicode(b & 0xff))), f)
       }
       .toDF("syms", "cnt")
-      .filter(size(col("syms")) >= 2)
-      .localCheckpoint(true)
+      .filter(size(col("syms")) >= 2))
     var lastCkpt = cur
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var sinceCkpt = 0
@@ -131,14 +131,13 @@ object TrainBpe {
           .filter(size(col("syms")) >= 2)
         sinceCkpt += 1
         if (sinceCkpt >= checkpointEvery) {
-          cur = cur.localCheckpoint(true)
-          org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(lastCkpt)
+          cur = f.checkpoint(cur)
+          f.release(lastCkpt)
           lastCkpt = cur
           sinceCkpt = 0
         }
       }
     }
-    org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(lastCkpt)
     merges.toSeq
   }
 

@@ -47,18 +47,4 @@ object Bridge {
   def autoBroadcastJoinThreshold(
       spark: org.apache.spark.sql.SparkSession): Long =
     spark.sessionState.conf.autoBroadcastJoinThreshold
-
-  /** Free the executor blocks behind a `localCheckpoint(eager = true)`-ed
-    * Dataset NOW instead of waiting for GC-driven ContextCleaner
-    * reclamation — the lever a per-micro-batch loop needs, since dropped
-    * references otherwise accumulate blocks for the stream's lifetime.
-    * The checkpointed plan is a `LogicalRDD` holding the materialized
-    * RDD; unpersisting it destroys the only copy (local checkpoints
-    * truncate lineage), so callers must invoke this strictly AFTER the
-    * last read of the frame. No-op on non-checkpointed plans.
-    */
-  def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r
-    }.foreach(_.rdd.unpersist(blocking = false))
 }

@@ -274,6 +274,38 @@ class StreamingOpsSpec extends SparkSpec {
     }
   }
 
+  test("transformWithState running agg state encoder compiles (CODEGEN_ONLY)") {
+    // CODEGEN_ONLY turns a state projection Spark cannot compile into a
+    // failure instead of a silent fall-back to interpreted mode
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val keys = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0),
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(keys(1), "CODEGEN_ONLY")
+    try {
+      val in = MemoryStream[(String, Double)]
+      val q = StreamingOps.statefulRunningAgg(
+          spark, in.toDF().toDF("k", "v"), "k", "v")
+        .toDF().writeStream.format("memory").queryName("tws_codegen_out")
+        .outputMode(OutputMode.Update()).start()
+      try {
+        in.addData(("a", 1.0), ("a", 2.0))
+        q.processAllAvailable()
+        in.addData(("a", 4.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table("tws_codegen_out").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+        .maxBy(_._2) shouldBe (("a", 3L, 7.0))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("continuousCapPerGroup: streamed selection equals batch cap on the union") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
