@@ -21,14 +21,24 @@ object Embeddings {
     * references an outer EXPRESSION re-evaluates it per element (the
     * max-abs pass would run 64× per row).
     */
-  def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    df.select(col(idCol), v.as("__v"),
-        array_max(transform(v, x => abs(x))).as("scale"))
-      .select(col(idCol), col("scale"),
+  def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    int8Rows(df, Seq(idCol), col(vecCol))
+
+  /** [[quantizeInt8]]'s rule over any frame: `keep` columns, then
+    * `scale` (double) and the unpacked codes `q` (array<int>) of `vec`.
+    * The one copy of the rule — the SQ8 storage layout of the IVF index
+    * ([[IvfLayout]]) packs these codes.
+    */
+  private[operators] def int8Rows(df: DataFrame, keep: Seq[String],
+      vec: Column): DataFrame = {
+    val v = vec.cast("array<double>")
+    df.select(keep.map(col) :+ v.as("__v") :+
+        array_max(transform(v, x => abs(x))).as("scale"): _*)
+      .select(keep.map(col) :+ col("scale") :+
         transform(col("__v"), x =>
           when(col("scale") === 0.0, lit(0))
-            .otherwise(floor(x / col("scale") * 127.0 + 0.5).cast("int"))).as("q"))
+            .otherwise(floor(x / col("scale") * 127.0 + 0.5))
+            .cast("int")).as("q"): _*)
   }
 
   /** Dequantize back to doubles: x_i ≈ q_i * scale / 127. */

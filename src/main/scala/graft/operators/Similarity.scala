@@ -92,125 +92,41 @@ object Similarity {
     */
   def ivfWriteIndex(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, path: String, nBits: Int = 6,
-      lloydIters: Int = 1): Unit = Frames.scoped { f =>
-    // train BEFORE planting the rebuild marker: training is the
-    // failure-prone half (bad dim, empty corpus, Lloyd's driver loop),
-    // and the marker makes a fully intact previous index unavailable
-    // from the moment it exists — a training error must not brick it
-    val (assigned, cents) =
-      trainCells(f, df, idCol, vecCol, dim, nBits, lloydIters)
-    // the destructive half holds _MAINT (withRebuildMarker): a crash
-    // after the base landed but before the stale tombstones/deltas
-    // channels were retired used to leave old tombstones silently
-    // killing fresh base rows — now the window fails loudly instead
-    AtomicBatches.withRebuildMarker(df.sparkSession, path) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      // both tables are independent outputs (cells projects the
-      // checkpointed training frame, centroids is a driver-side Seq) and
-      // any crash inside the marker demands a full rebuild — so the tiny
-      // centroid write rides along the cells job (CountStore.writeBase)
-      Takedown.inParallel(Seq[() => Unit](
-        // repartition on cell first: without it every task writes into
-        // every cell directory it touches (tasks × cells small files —
-        // the small-file problem at birth); one shuffle gives one file
-        // per cell
-        () => assigned.repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$path/cells"),
-        () => cents.toSeq.toDF("cell", "centroid")
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$path/centroids")))(_.apply())
-      // the new base is fully landed — only now retire the old channels
-      // (a crash inside this block leaves the previous index's DATA
-      // intact but the faces failing on the rebuild-typed _MAINT marker
-      // until a rebuild completes)
-      clearSideChannels(spark, path)
-    }
-  }
+      lloydIters: Int = 1): Unit =
+    ivfWriteLayout(df, idCol, vecCol, dim, path, nBits, lloydIters,
+      "xxhash", roundedCentroids = false)(_ => IvfLayout.Flat)
 
   /** [[ivfWriteIndex]] with scalar int8 quantization of the stored
     * vectors — the standard IVF-SQ8 shape (FAISS `IndexIVFScalarQuantizer`
-    * with QT_8bit): each cell row keeps the vector as `dim` signed bytes
-    * packed into ONE contiguous `binary` value plus one float32 scale,
-    * instead of `dim` float32 list components — 4× smaller vector
-    * payload (measured ~3.2× at the file level for dim=64: binary
-    * length prefix + scale + id; →4× as dim grows) for the identical
-    * probe plan (same cell partitioning, same partition pruning).
-    * Packing to binary (not `array<tinyint>`) matters: parquet stores
-    * list-of-int at INT32 width plus repetition levels, which gives
-    * back half the savings ([[graft.functions.Sq8.PackSQ8]]).
+    * with QT_8bit, [[IvfLayout.Sq8]]): each cell row keeps the vector as
+    * `dim` signed bytes packed into ONE contiguous `binary` value plus
+    * one float32 scale — 4× smaller vector payload (measured ~3.2× at
+    * the file level for dim=64) for the identical probe plan (same cell
+    * partitioning, same partition pruning). Packing to binary (not
+    * `array<tinyint>`) matters: parquet stores list-of-int at INT32
+    * width plus repetition levels, which gives back half the savings.
     *
-    * Quantization is [[Embeddings.quantizeInt8]]'s symmetric per-row
-    * rule: scale = max |x_i|, q_i = floor(x_i/scale·127 + 0.5) — and the
-    * same two-projection discipline (`scale` must be a plain attribute
-    * before the packing lambda references it, else the max-abs pass
-    * re-evaluates per element).
+    * `roundedCentroids`: the PQ faces' round-9 discipline, opt-in here
+    * so the original SQ8 faces' recall-contract hashes are untouched —
+    * with kernel = "md5" and lloydIters = 0 the whole index becomes a
+    * pure function of the corpus (the sim_bitext_margin_indexed replay).
     */
   def ivfWriteIndexSQ8(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, path: String, nBits: Int = 6, lloydIters: Int = 1,
       kernel: String = "xxhash",
-      roundedCentroids: Boolean = false): Unit = Frames.scoped { f =>
-    // train before the marker — a training failure must not leave an
-    // intact previous index bricked behind _MAINT (see ivfWriteIndex)
-    val (assigned, cents0) = trainCells(f, df, idCol, vecCol, dim, nBits,
-      lloydIters, kernel)
-    // roundedCentroids: the PQ faces' round-9 discipline, opt-in here so
-    // the original SQ8 faces' recall-contract hashes are untouched —
-    // with kernel = "md5" and lloydIters = 0 the whole index becomes a
-    // pure function of the corpus (the sim_bitext_margin_indexed replay)
-    val cents = if (!roundedCentroids) cents0 else cents0.map { case (id, c) =>
-      id -> c.map(x =>
-        BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    }
-    AtomicBatches.withRebuildMarker(df.sparkSession, path) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      // concurrent independent writes under the marker — see
-      // ivfWriteIndex
-      Takedown.inParallel(Seq[() => Unit](
-        () => sq8Rows(assigned, idCol)
-          .repartition(col("cell")) // one file per cell — ivfWriteIndex
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$path/cells"),
-        () => cents.toSeq.toDF("cell", "centroid")
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$path/centroids")))(_.apply())
-      // the new base is fully landed — only now retire the old channels
-      // (a crash in this block: data intact, faces fail on the
-      // rebuild-typed _MAINT until a rebuild completes — see ivfWriteIndex)
-      clearSideChannels(spark, path)
-    }
-  }
-
-  /** The SQ8 storage projection over an assigned (id, v, cell) frame —
-    * shared by [[ivfWriteIndexSQ8]] and [[ivfAppendSQ8]] so a full build
-    * and an append quantize identically (same symmetric per-row rule,
-    * same two-projection `scale`-as-attribute discipline).
-    */
-  private def sq8Rows(assigned: DataFrame, idCol: String): DataFrame =
-    assigned
-      .select(col(idCol), col("cell"), col("v").cast("array<double>").as("__v"),
-        array_max(transform(col("v").cast("array<double>"), x => abs(x)))
-          .as("scale"))
-      .select(col(idCol), col("cell"),
-        col("scale").cast("float").as("scale"),
-        graft.functions.Sq8.packSq8(
-          transform(col("__v"), x =>
-            when(col("scale") === 0.0, lit(0))
-              .otherwise(floor(x / col("scale") * 127.0 + 0.5))
-              .cast("int"))).as("q"))
+      roundedCentroids: Boolean = false): Unit =
+    ivfWriteLayout(df, idCol, vecCol, dim, path, nBits, lloydIters, kernel,
+      roundedCentroids)(_ => IvfLayout.Sq8)
 
   /** [[ivfWriteIndex]] with PRODUCT-quantized storage — the IVF-PQ
     * composition (FAISS `IndexIVFPQ` shape; Jégou et al. 2011 §IV):
     * the coarse quantizer prunes WHICH cells are scanned, the
     * [[Embeddings.pqTrain]] codebooks shrink WHAT each scanned row
-    * costs. Each cell row stores the vector as `m` code nibbles packed
-    * into ONE `m`-byte binary ([[graft.functions.Sq8.PackSQ8]] — codes
-    * are 0..codebookK−1, so `codebookK ≤ 128` keeps them signed-byte
-    * clean) — 64× smaller than the raw 64-double payload, 16× smaller
-    * than SQ8, which is the regime where a 100 TB corpus's index fits
-    * on a cluster that the raw vectors never could.
+    * costs ([[IvfLayout.Pq]]: `m` code bytes per row — 64× smaller than
+    * the raw 64-double payload, 16× smaller than SQ8; `codebookK ≤ 128`
+    * keeps the codes signed-byte clean). `withRefine` also stores the
+    * SQ8 payload the refine probes re-rank against (FAISS
+    * `IndexIVFPQR`'s two-tier idea: m + dim + 4 bytes/vector).
     *
     * Codebooks train over the FULL corpus (not per cell): one model
     * serves every cell, appends never retrain it, and the probe decodes
@@ -218,11 +134,8 @@ object Similarity {
     * residuals against the coarse centroid; with cosine scoring the
     * residual trick loses its meaning — normalization is not additive —
     * so this is the IVFFlat-style composition: PQ over raw vectors,
-    * cells purely for pruning.)
-    *
-    * Layout: `<path>/cells` (id, codes) partitioned by `cell`,
-    * `<path>/centroids` (coarse), `<path>/pqmodel` (sub, cluster,
-    * centroid).
+    * cells purely for pruning.) The model lands under `<path>/pqmodel`
+    * (sub, cluster, centroid).
     *
     * DERANDOMIZED index metadata, unlike the flat/SQ8 faces: coarse
     * centroids are written with round-9 components (the
@@ -239,514 +152,123 @@ object Similarity {
       dim: Int, path: String, nBits: Int = 6, lloydIters: Int = 1,
       m: Int = 8, codebookK: Int = 16, pqIters: Int = 2,
       kernel: String = "xxhash",
-      withRefine: Boolean = false): Unit = Frames.scoped { f =>
+      withRefine: Boolean = false): Unit = {
     require(codebookK >= 1 && codebookK <= 128,
       "PQ codes are stored as signed bytes - codebookK in [1, 128]")
-    // BOTH trainers run before the marker — a training failure must not
-    // leave an intact previous index bricked behind _MAINT (ivfWriteIndex)
-    val (assigned, cents0) = trainCells(f, df, idCol, vecCol, dim, nBits,
-      lloydIters, kernel)
-    // engine-stable centroid components (see scaladoc)
-    val cents = cents0.map { case (id, c) =>
+    ivfWriteLayout(df, idCol, vecCol, dim, path, nBits, lloydIters, kernel,
+      roundedCentroids = true)(assigned => IvfLayout.Pq(
+        Embeddings.pqTrain(assigned, idCol, "v", dim, m, codebookK, pqIters),
+        withRefine))
+  }
+
+  /** The one IVF build behind the three write faces: train the coarse
+    * quantizer ([[trainCells]]; centroid components rounded to 9
+    * decimals when `roundedCentroids`), then the layout (`layoutOf`
+    * trains the PQ codebooks over the assignment), then — under the
+    * rebuild marker — write cells, centroids and the PQ model
+    * concurrently and retire the side channels.
+    */
+  private[graft] def ivfWriteLayout(df: DataFrame, idCol: String,
+      vecCol: String, dim: Int, path: String, nBits: Int, lloydIters: Int,
+      kernel: String, roundedCentroids: Boolean)(
+      layoutOf: DataFrame => IvfLayout): Unit = Frames.scoped { f =>
+    // train BEFORE planting the rebuild marker: training is the
+    // failure-prone half (bad dim, empty corpus, Lloyd's driver loop),
+    // and the marker makes a fully intact previous index unavailable
+    // from the moment it exists — a training error must not brick it
+    val (assigned, cents0) =
+      trainCells(f, df, idCol, vecCol, dim, nBits, lloydIters, kernel)
+    val cents = if (!roundedCentroids) cents0 else cents0.map { case (id, c) =>
       id -> c.map(x =>
         BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }
-    val model = Embeddings.pqTrain(assigned, idCol, "v", dim, m, codebookK,
-      pqIters)
+    val layout = layoutOf(assigned)
+    // the destructive half holds _MAINT (withRebuildMarker): a crash
+    // after the base landed but before the stale tombstones/deltas
+    // channels were retired used to leave old tombstones silently
+    // killing fresh base rows — now the window fails loudly instead
     AtomicBatches.withRebuildMarker(df.sparkSession, path) {
       val spark = df.sparkSession
       import spark.implicits._
-      // concurrent independent writes under the marker (the model is
-      // driver-built and the cells projection reads the checkpointed
-      // training frame) — see ivfWriteIndex
-      Takedown.inParallel(Seq[() => Unit](
-        () => model.repartition(1)
-          .write.mode("overwrite").parquet(s"$path/pqmodel"),
-        () => pqRows(assigned, idCol, model, withRefine)
-          .repartition(col("cell")) // one file per cell — ivfWriteIndex
+      val model = layout match {
+        case IvfLayout.Pq(m, _) => Seq[() => Unit](() =>
+          m.repartition(1).write.mode("overwrite").parquet(s"$path/pqmodel"))
+        case _ => Nil
+      }
+      // the tables are independent outputs (cells projects the
+      // checkpointed training frame, centroids and the PQ model are
+      // driver-side) and any crash inside the marker demands a full
+      // rebuild — so the tiny writes ride along the cells job
+      // (CountStore.writeBase)
+      Takedown.inParallel(model ++ Seq[() => Unit](
+        // repartition on cell first: without it every task writes into
+        // every cell directory it touches (tasks × cells small files —
+        // the small-file problem at birth); one shuffle gives one file
+        // per cell
+        () => layout.rows(assigned, idCol).repartition(col("cell"))
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$path/cells"),
         () => cents.toSeq.toDF("cell", "centroid")
           .repartition(1)
           .write.mode("overwrite").parquet(s"$path/centroids")))(_.apply())
       // the new base is fully landed — only now retire the old channels
-      // (a crash in this block: data intact, faces fail on the
-      // rebuild-typed _MAINT until a rebuild completes — see ivfWriteIndex)
+      // (a crash inside this block leaves the previous index's DATA
+      // intact but the faces failing on the rebuild-typed _MAINT marker
+      // until a rebuild completes)
       clearSideChannels(spark, path)
     }
   }
 
-  /** The PQ storage projection over an assigned (id, v, cell) frame —
-    * shared by [[ivfWriteIndexPQ]] and [[ivfAppendPQ]] (the sq8Rows
-    * discipline): the m per-subspace L2 argmins computed by the single
-    * native [[graft.functions.PqEncodeFn.PqEncode]] expression, packed
-    * into one m-byte binary. With `withRefine`, each row ALSO carries
-    * the SQ8 payload (scale, q) — [[sq8Rows]]'s exact projection — the
-    * refinement tier [[ivfTopKFromIndexPQRefine]] re-ranks against
-    * (FAISS `IndexIVFPQR`'s two-tier idea with SQ8 as the fine code:
-    * m + dim + 4 bytes/vector instead of m — still 6× under raw
-    * float32 at dim=64/m=16).
-    */
-  private def pqRows(assigned: DataFrame, idCol: String,
-      model: DataFrame, withRefine: Boolean = false): DataFrame = {
-    val bySub = Embeddings.pqModel(model)
-    val codes = graft.functions.Sq8.packSq8(graft.functions.PqEncodeFn.pqEncode(
-      col("v").cast("array<double>"), bySub.map(_.map(_._2)))).as("codes")
-    if (!withRefine) assigned.select(col(idCol), col("cell"), codes)
-    else {
-      // same two-projection discipline as sq8Rows: `scale` must be a
-      // plain attribute before the packing lambda references it
-      assigned
-        .select(col(idCol), col("cell"), codes,
-          col("v").cast("array<double>").as("__v"),
-          array_max(transform(col("v").cast("array<double>"), x => abs(x)))
-            .as("scale"))
-        .select(col(idCol), col("cell"), col("codes"),
-          col("scale").cast("float").as("scale"),
-          graft.functions.Sq8.packSq8(
-            transform(col("__v"), x =>
-              when(col("scale") === 0.0, lit(0))
-                .otherwise(floor(x / col("scale") * 127.0 + 0.5))
-                .cast("int"))).as("q"))
-    }
-  }
-
-  /** [[ivfAppend]] against an [[ivfWriteIndexPQ]] index: frozen
-    * everything — new vectors are assigned to the nearest EXISTING
-    * coarse centroid and encoded against the persisted codebooks, so a
-    * probe cannot tell appended rows from built rows and the model
-    * never drifts under ingestion (retrain via [[ivfWriteIndexPQ]] on a
-    * drift trigger, as with the other index faces).
+  /** Batch-append new vectors to a persisted IVF index WITHOUT
+    * retraining, in the layout the index was BUILT with
+    * ([[IvfLayout.of]] reads it from the stored rows — an SQ8 or PQ
+    * index gets SQ8 or PQ rows, so a probe cannot tell appended rows
+    * from built rows): each new row is assigned to its nearest existing
+    * centroid (the frozen coarse quantizer — the same rule a Lloyd
+    * reassignment round applies; round-6 with ties to the lowest cell
+    * for PQ, so the `sim_ivfpq_append` oracle replays it) and appended
+    * to that cell's partition, PQ codes encoded against the persisted
+    * codebooks. One shuffle on `cell` keeps one new file per touched
+    * cell per append. The incremental half of the probe-and-append
+    * discipline; retrain via the write face when drift accumulates (or
+    * on a trigger — [[graft.streaming.StreamingOps
+    * .continuousIvfAppend]]).
     *
-    * The cell assignment here is the derandomized frozen-quantizer
-    * rule — argmax of ROUND-6 centroid cosine, ties to the lowest cell
-    * id (the [[probeCellsRounded]] twin, distributed) — so the
-    * `sim_ivfpq_append` oracle replays the append history exactly.
     * NOTE for `lloydIters = 0`-built indexes: built rows sit in their
     * raw LSH bucket while appended rows go to the nearest centroid —
     * cells are pruning buckets, not semantics, so probes are unaffected;
     * a full rebuild may place appended rows differently.
     */
-  def ivfAppendPQ(df: DataFrame, idCol: String, vecCol: String,
-      indexPath: String): Unit = {
-    requireNoPendingTombstones(df, idCol, indexPath)
-    pqDeltaRows(df, idCol, vecCol, indexPath)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$indexPath/cells")
-  }
-
-  /** A new batch's (id, cell, codes) rows against a FROZEN
-    * [[ivfWriteIndexPQ]] index — the shared assignment+encode behind
-    * [[ivfAppendPQ]] and the streaming
-    * [[graft.streaming.StreamingOps.continuousPqAppend]], so batch and
-    * stream produce byte-identical rows for the same input.
-    */
-  private[graft] def pqDeltaRows(df: DataFrame, idCol: String,
-      vecCol: String, indexPath: String): DataFrame = {
-    val spark = df.sparkSession
-    val cents = readCentroids(spark, indexPath)
-    val model = spark.read.parquet(s"$indexPath/pqmodel")
-    // withRefine is a BUILD-time property — sniff it from the existing
-    // cells schema (footer read, no data scan) so appends to a refine
-    // index keep carrying the SQ8 tier and appends to a plain index
-    // don't grow one. NOT exception-guarded: a built index always has
-    // a cells table, and swallowing a transient read failure here would
-    // silently downgrade the append to refine-less rows that the refine
-    // probe ranks last on NULL cosine — fail loudly instead
-    val withRefine = spark.read.parquet(s"$indexPath/cells")
-      .schema.fieldNames.contains("q")
-    pqRows(assignToCellsRounded(df, idCol, vecCol, cents), idCol, model,
-      withRefine)
-  }
-
-  /** [[assignToCells]] derandomized for the PQ faces: (id, v, cell)
-    * with cell = argmax of ROUND-6 cosine against the frozen centroids,
-    * ties to the lowest cell id (`cents` arrives id-sorted from
-    * [[readCentroids]], and the strict `>` fold keeps the first max).
-    */
-  private def assignToCellsRounded(df: DataFrame, idCol: String,
-      vecCol: String, cents: Array[(Long, Seq[Double])]): DataFrame = {
-    val centVecs = typedLit(cents.map(_._2).toSeq)
-    val cellIds = typedLit(cents.map(_._1).toSeq)
-    val n = cents.length
-    df.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .select(col(idCol), col("v"), {
-        val scored = transform(sequence(lit(1), lit(n)), i =>
-          struct(round(V.cosine(col("v"), element_at(centVecs, i)), 6).as("c"),
-            element_at(cellIds, i).as("cell")))
-        val zero = struct(lit(-2.0).as("c"), lit(-1L).as("cell"))
-        aggregate(scored, zero,
-          (acc, x) => when(x("c") > acc("c"), x).otherwise(acc))
-          .getField("cell").as("cell")
-      })
-  }
-
-  /** The packed-codes → reconstructed-vector projection over a
-    * persisted [[ivfWriteIndexPQ]] index: unpack the m bytes (scale 127
-    * makes [[graft.functions.Sq8.UnpackSQ8]] an identity — code·127/127)
-    * and concatenate the chosen codebook centroids
-    * ([[Embeddings.pqDecode]] against the driver-read m·k-row model).
-    */
-  private[graft] def pqReconstruct(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Column = {
-    val model = spark.read.parquet(s"$indexPath/pqmodel")
-    val codesInt = transform(
-      graft.functions.Sq8.unpackSq8(col("codes"), lit(127.0)),
-      x => x.cast("int"))
-    Embeddings.pqDecode(codesInt, model)
-  }
-
-  /** Query a persisted [[ivfWriteIndexPQ]] index: the [[ivfTopKFromIndex]]
-    * probe plan (driver-side centroid read, cell partition pruning) with
-    * the candidate cosine computed against the PQ RECONSTRUCTION —
-    * Jégou et al.'s asymmetric distance (exact query side, quantized
-    * document side), cosine-normalized as in [[Embeddings.pqTopK]].
-    * Probe-cell ranking is round-6 cosine with ties to the lowest cell
-    * id — deterministic against the round-9 centroids the PQ face
-    * writes, so the `sim_ivfpq` oracle replays the probe selection
-    * exactly (see [[ivfWriteIndexPQ]]).
-    */
-  def ivfTopKFromIndexPQ(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, queryVec: Seq[Double], k: Int,
-      nProbe: Int = 4,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val probes = probeCellsRounded(cents, queryVec, nProbe)
-    val q = typedLit(queryVec)
-    rowFilter(cellsCurrent(spark, path, idCol, col("cell").isin(probes: _*)))
-      .select(col(idCol),
-        round(V.cosine(pqReconstruct(spark, path), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** The PQ REFINE probe (FAISS refine step; `IndexIVFPQR` two-tier
-    * shape): ADC-rank the probed cells as [[ivfTopKFromIndexPQ]] does,
-    * keep a SHORTLIST of `refineFactor · k` candidates
-    * (TakeOrderedAndProject — per-partition heap, bounded), then
-    * re-rank the shortlist by cosine against the SQ8 refinement payload
-    * and return the top k. Requires an index built with
-    * `ivfWriteIndexPQ(..., withRefine = true)`.
-    *
-    * Why: raw ADC ranking carries the full m-subspace quantization
-    * error — on this corpus its top-10 needs an exact-top-50 contract.
-    * The refine pass spends one bounded re-rank (refineFactor·k rows,
-    * ≤ scale/254 per-component error — the [[ivfTopKFromIndexSQ8]]
-    * fidelity) to tighten that to exact-top-10: ADC only has to get
-    * the true neighbors INTO the shortlist, not ORDER them. At 100 TB
-    * the economics are the point — the ADC scan touches m bytes/row
-    * over the probed cells, the SQ8 payload is read for just
-    * refineFactor·k rows.
-    */
-  def ivfTopKFromIndexPQRefine(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, queryVec: Seq[Double], k: Int,
-      nProbe: Int = 4, refineFactor: Int = 4,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
-    require(k >= 1 && refineFactor >= 1, "k and refineFactor must be >= 1")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val probes = probeCellsRounded(cents, queryVec, nProbe)
-    val cells = spark.read.parquet(s"$path/cells")
-    require(cells.schema.fieldNames.contains("q"),
-      s"$path was not built with withRefine = true - no SQ8 tier to re-rank")
-    val q = typedLit(queryVec)
-    val shortlist = rowFilter(
-        cellsCurrent(spark, path, idCol, col("cell").isin(probes: _*)))
-      .select(col(idCol), col("q"), col("scale"),
-        round(V.cosine(pqReconstruct(spark, path), q), 6).as("__adc"))
-      .orderBy(col("__adc").desc, col(idCol))
-      .limit(refineFactor * k)
-    shortlist
-      .select(col(idCol), round(V.cosine(
-          graft.functions.Sq8.unpackSq8(col("q"), col("scale").cast("double")),
-          q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Query a persisted [[ivfWriteIndexSQ8]] index: same driver-side
-    * centroid read and cell partition pruning as [[ivfTopKFromIndex]];
-    * the probe DEQUANTIZES INLINE in the scan projection (code·scale/127,
-    * [[graft.functions.Sq8.UnpackSQ8]] feeding the same CosineDouble as
-    * the flat path — one pass, nothing materialized at float width).
-    * Cosine is scale-invariant, so ranking error comes only from the
-    * ≤ scale/254 per-component rounding; the `sim_ivf_sq8` recall
-    * contract checks it against the exact top-50.
-    */
-  def ivfTopKFromIndexSQ8(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, queryVec: Seq[Double], k: Int,
-      nProbe: Int = 4,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val probes = probeCells(cents, queryVec, nProbe)
-    val q = typedLit(queryVec)
-    rowFilter(cellsCurrent(spark, path, idCol, col("cell").isin(probes: _*)))
-      .select(col(idCol), round(V.cosine(
-          graft.functions.Sq8.unpackSq8(col("q"), col("scale").cast("double")),
-          q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Batched ANN join: the top-`k` index neighbors of EVERY row of a
-    * query DataFrame against a persisted [[ivfWriteIndexSQ8]] index —
-    * the production shape at 100 TB ("dedup this new batch against the
-    * vector index"), where [[ivfTopKFromIndexSQ8]]'s single-literal
-    * probe would mean one job per query row.
-    *
-    * Scale shape, stage by stage:
-    *   1. per-query cell assignment is ONE codegen'd projection against
-    *      the BROADCAST centroid literal (≤2^nBits × dim doubles) —
-    *      score every cell, `array_sort` the ≤2^nBits (−cos, cell)
-    *      structs, slice `nProbe`; queries are never collected;
-    *   2. the probed-cell set (driver read bounded by the CELL COUNT,
-    *      ≤2^nBits longs, independent of query count) becomes a literal
-    *      `isin` filter, so the cell scan prunes whole partition
-    *      directories BEFORE the join — a join on the partition column
-    *      alone cannot guarantee static pruning;
-    *   3. query×cell rows join candidates cell-to-cell (broadcast when
-    *      the exploded query side is small — the common case; pass
-    *      `broadcastQueries = false` for huge query batches and the join
-    *      shuffles both sides on `cell` instead);
-    *   4. per-query top-k is the bounded [[graft.functions.Aggregators
-    *      .topKByScore]] AGGREGATION (≤k entries per query per partition
-    *      in the shuffle), not a window — no query's candidate set ever
-    *      funnels through one task-sized sort.
-    *
-    * Dequantization (code·scale/127) happens inline in the candidate
-    * projection, same as the point-probe path. Ranking: (round-6 cosine
-    * desc, id asc); cell-assignment ties: (cosine desc, cell asc).
-    * Returns (q_id, id, cosine, rank), rank 1..≤k per query.
-    * `excludeSelf` drops candidates whose index id equals the query id —
-    * for the self-join shape where queries are corpus members.
-    *
-    * FILTERED (predicated) probe — `rowFilter`, here and on every
-    * point-probe face: the single most common real ANN query is top-k
-    * AMONG ROWS SATISFYING A PREDICATE ("nearest docs WHERE lang='en'",
-    * "dedup within source X"). `rowFilter` transforms the pruned cell
-    * scan BEFORE scoring and the top-k, so each query still returns k
-    * rows from the FILTERED candidate set (not a post-filtered, shorter
-    * list). Two shapes: a column predicate over the index rows
-    * (`_.filter(col("id") % 2 === 0)` — Catalyst pushes it into the
-    * scan), or an allowed-id frame
-    * (`_.join(broadcast(allowed), Seq("id"), "left_semi")` — the
-    * metadata-predicate route when the predicate lives in another
-    * table). The recall contract then holds PER FILTERED SUBSET; as
-    * selectivity drops, raise `nProbe` so the probed cells still hold
-    * ≥k matching rows (the filter thins every cell uniformly in
-    * expectation — cells are geometric, predicates usually aren't
-    * geometric, so selectivity composes multiplicatively).
-    */
-  def ivfTopKJoinSQ8(queries: DataFrame, qIdCol: String, qVecCol: String,
-      indexPath: String, idCol: String, k: Int, nProbe: Int = 4,
-      excludeSelf: Boolean = false, broadcastQueries: Boolean = true,
-      rowFilter: DataFrame => DataFrame = identity,
-      roundedProbe: Boolean = false): DataFrame =
-    ivfJoinImpl(queries, qIdCol, qVecCol, indexPath, idCol, k, nProbe,
-      excludeSelf, broadcastQueries, storage = "sq8", rowFilter,
-      roundedProbe)
-
-  /** [[ivfTopKJoinSQ8]] against a flat (unquantized) [[ivfWriteIndex]]
-    * index — identical plan, no dequantize step.
-    */
-  def ivfTopKJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
-      indexPath: String, idCol: String, k: Int, nProbe: Int = 4,
-      excludeSelf: Boolean = false, broadcastQueries: Boolean = true,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame =
-    ivfJoinImpl(queries, qIdCol, qVecCol, indexPath, idCol, k, nProbe,
-      excludeSelf, broadcastQueries, storage = "flat", rowFilter)
-
-  /** [[ivfTopKJoinSQ8]] against a product-quantized [[ivfWriteIndexPQ]]
-    * index — identical plan, candidates scored against the PQ
-    * reconstruction ([[ivfTopKFromIndexPQ]]'s asymmetric distance).
-    * The batched probe over the 64×-compressed index: at 100 TB this is
-    * the shape where the scanned cells' payload is small enough to
-    * broadcast-join against a large query batch.
-    */
-  def ivfPqTopKJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
-      indexPath: String, idCol: String, k: Int, nProbe: Int = 4,
-      excludeSelf: Boolean = false, broadcastQueries: Boolean = true,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame =
-    ivfJoinImpl(queries, qIdCol, qVecCol, indexPath, idCol, k, nProbe,
-      excludeSelf, broadcastQueries, storage = "pq", rowFilter)
-
-  /** The REFINE tier on the batched join face —
-    * [[ivfTopKFromIndexPQRefine]]'s two-tier discipline applied per
-    * query of a batch, against an `ivfWriteIndexPQ(..., withRefine =
-    * true)` index (fails loudly otherwise). The batched join is the
-    * production dedup shape ("dedup this batch against the index"), so
-    * it is where the exact-top-k contract matters most:
-    *
-    *   1. ADC stage: [[ivfPqTopKJoin]]'s plan — probe cells per query
-    *      (ROUND-6 centroid cosine, ties to the lowest cell: the PQ
-    *      faces' derandomized rule, so the `sim_ivfpq_join_refine`
-    *      oracle replays the probe selection), candidates scored
-    *      against the PQ reconstruction, and a per-query SHORTLIST of
-    *      `refineFactor · k` ids kept by the bounded
-    *      [[graft.functions.Aggregators.topKByScore]] aggregation
-    *      (map-side combine — no query's candidates funnel through one
-    *      sort).
-    *   2. Refine stage: the shortlist joins BACK to the pruned cell
-    *      frame for its SQ8 payload (a second column-pruned read that
-    *      touches the `q` bytes for shortlist rows' files only — the
-    *      ADC scan never reads them) and to the query vectors, re-ranks
-    *      by (round-6 SQ8 cosine desc, id asc), keeps k.
-    *
-    * Returns (q_id, id, cosine, rank) like every join face — `cosine`
-    * is the REFINED (SQ8) score. Scale shape: the only frames beyond
-    * stage 1's are shortlist-sized (|queries| · refineFactor · k rows).
-    */
-  def ivfPqTopKJoinRefine(queries: DataFrame, qIdCol: String,
-      qVecCol: String, indexPath: String, idCol: String, k: Int,
-      nProbe: Int = 4, refineFactor: Int = 4, excludeSelf: Boolean = false,
-      broadcastQueries: Boolean = true,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
-    require(k >= 1 && nProbe >= 1 && refineFactor >= 1,
-      "k, nProbe and refineFactor must be >= 1")
-    val spark = queries.sparkSession
-    require(spark.read.parquet(s"$indexPath/cells")
-        .schema.fieldNames.contains("q"),
-      s"$indexPath was not built with withRefine = true - no SQ8 tier to re-rank")
-    val (qSide, cellsDf) = ivfJoinPrelude(queries, qIdCol, qVecCol,
-      indexPath, idCol, nProbe, broadcastQueries, rowFilter,
-      roundedProbe = true)
-    val cand0 = qSide.join(cellsDf, Seq("cell"))
-      .select(col("q_id"), col(idCol).cast("long").as("id"),
-        round(V.cosine(pqReconstruct(spark, indexPath), col("__qv")), 6)
-          .as("__adc"))
-    val cand = if (excludeSelf) cand0.filter(col("q_id") =!= col("id"))
-      else cand0
-    val shortlist = cand.groupBy("q_id")
-      .agg(graft.functions.Aggregators.topKByScore(
-        col("id"), col("__adc"), refineFactor * k).as("__top"))
-      .select(col("q_id"), explode(col("__top")).as("__e"))
-      .select(col("q_id"), col("__e._1").as("id"))
-    // the SQ8 payload, read for shortlist rows only; cellsCurrent
-    // already deduped ids, so this join cannot fan out
-    val payload = cellsDf.select(col(idCol).cast("long").as("id"),
-      col("q"), col("scale"))
-    val qVecs = qSide.select(col("q_id"), col("__qv")).dropDuplicates("q_id")
-    shortlist
-      .join(payload, Seq("id"))
-      .join(qVecs, Seq("q_id"))
-      .select(col("q_id"), col("id"), round(V.cosine(
-        graft.functions.Sq8.unpackSq8(col("q"), col("scale").cast("double")),
-        col("__qv")), 6).as("cosine"))
-      .groupBy("q_id")
-      .agg(graft.functions.Aggregators.topKByScore(
-        col("id"), col("cosine"), k).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")))
-      .select(col("q_id"), col("col._1").as("id"), col("col._2").as("cosine"),
-        (col("pos") + 1).as("rank"))
-  }
-
-  /** Shared prelude of the batched join faces: per-query probe-cell
-    * assignment against the broadcast centroid literal, the bounded
-    * probed-cell collect (≤2^nBits longs — static partition pruning on
-    * the cell scan), and the tombstone-aware pruned candidate read.
-    * Returns (query side ready to join on `cell` — broadcast-wrapped
-    * when asked — and the filtered candidate frame).
-    *
-    * `roundedProbe` ranks probe cells by ROUND-6 centroid cosine with
-    * ties to the lowest cell id — [[probeCellsRounded]]'s derandomized
-    * rule, per query — so a face that needs a bit-for-bit oracle
-    * replay (the PQ-refine join, the indexed margin miner) selects the
-    * identical probe set in any engine; the default raw-cosine ranking
-    * is kept on the recall-contract faces so their hashes are
-    * untouched.
-    */
-  private def ivfJoinPrelude(queries: DataFrame, qIdCol: String,
-      qVecCol: String, indexPath: String, idCol: String, nProbe: Int,
-      broadcastQueries: Boolean, rowFilter: DataFrame => DataFrame,
-      roundedProbe: Boolean): (DataFrame, DataFrame) = {
-    val spark = queries.sparkSession
-    // driver-bounded: ≤2^nBits centroid rows
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    require(cents.nonEmpty, s"no centroids at $indexPath/centroids")
-    val nCells = cents.length
-    val centVecs = typedLit(cents.map(_._2).toSeq)
-    val cellIds = typedLit(cents.map(_._1).toSeq)
-    val qv = col(qVecCol).cast("array<double>")
-    // (−cosine, cell) structs sort lexicographically = cosine desc,
-    // cell asc on ties — deterministic probe order
-    val scoredCells = transform(sequence(lit(1), lit(nCells)), i => {
-      val c = V.cosine(qv, element_at(centVecs, i))
-      struct((-(if (roundedProbe) round(c, 6) else c)).as("negcos"),
-        element_at(cellIds, i).as("cell"))
-    })
-    val probeList = transform(
-      slice(array_sort(scoredCells), 1, math.min(nProbe, nCells)),
-      s => s("cell"))
-    // checkpointed (the trainCells / deleteMatching discipline): the
-    // exploded frame feeds BOTH the probed-cell collect and the join —
-    // without it the query plan evaluates twice, and a non-deterministic
-    // query source could probe cells in the join that the collected
-    // `isin` filter already pruned, silently dropping candidates
-    val exploded = queries
-      .filter(col(qVecCol).isNotNull)
-      .select(col(qIdCol).cast("long").as("q_id"), qv.as("__qv"),
-        explode(probeList).as("cell"))
-      .localCheckpoint(true)
-    // bounded driver read (≤2^nBits longs, NOT query-count-sized): the
-    // distinct probed cells as a literal filter = static partition
-    // pruning on the cell scan
-    val probed = exploded.select("cell").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cellsDf = rowFilter(cellsCurrent(spark, indexPath, idCol,
-      col("cell").isin(probed: _*)))
-    val qSide = if (broadcastQueries) broadcast(exploded) else exploded
-    (qSide, cellsDf)
-  }
-
-  private def ivfJoinImpl(queries: DataFrame, qIdCol: String, qVecCol: String,
-      indexPath: String, idCol: String, k: Int, nProbe: Int,
-      excludeSelf: Boolean, broadcastQueries: Boolean, storage: String,
-      rowFilter: DataFrame => DataFrame = identity,
-      roundedProbe: Boolean = false): DataFrame = {
-    require(k >= 1 && nProbe >= 1, "k and nProbe must be >= 1")
-    val spark = queries.sparkSession
-    val (qSide, cellsDf) = ivfJoinPrelude(queries, qIdCol, qVecCol,
-      indexPath, idCol, nProbe, broadcastQueries, rowFilter, roundedProbe)
-    val joined = qSide.join(cellsDf, Seq("cell"))
-    val candVec = storage match {
-      case "sq8" =>
-        graft.functions.Sq8.unpackSq8(col("q"), col("scale").cast("double"))
-      case "pq" => pqReconstruct(spark, indexPath)
-      case _ => col("v").cast("array<double>")
-    }
-    val cand0 = joined.select(col("q_id"),
-      col(idCol).cast("long").as("id"),
-      round(V.cosine(candVec, col("__qv")), 6).as("cosine"))
-    val cand = if (excludeSelf) cand0.filter(col("q_id") =!= col("id")) else cand0
-    cand.groupBy("q_id")
-      .agg(graft.functions.Aggregators.topKByScore(
-        col("id"), col("cosine"), k).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")))
-      .select(col("q_id"), col("col._1").as("id"), col("col._2").as("cosine"),
-        (col("pos") + 1).as("rank"))
-  }
-
-  /** Batch-append new vectors to a persisted [[ivfWriteIndex]] index
-    * WITHOUT retraining: each new row is assigned to its nearest
-    * existing centroid (the frozen coarse quantizer — the same rule a
-    * Lloyd reassignment round applies) and appended to that cell's
-    * partition. One shuffle on `cell` keeps one new file per touched
-    * cell per append. The incremental half of the probe-and-append
-    * discipline; retrain via [[ivfWriteIndex]] when drift accumulates
-    * (or on a trigger — [[graft.streaming.StreamingOps
-    * .continuousIvfAppend]]).
-    */
   def ivfAppend(df: DataFrame, idCol: String, vecCol: String,
       indexPath: String): Unit = {
     requireNoPendingTombstones(df, idCol, indexPath)
-    val cents = readCentroids(df.sparkSession, indexPath)
-    assignToCells(df, idCol, vecCol, cents)
+    appendRows(df, idCol, vecCol, indexPath)
       .repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$indexPath/cells")
+  }
+
+  /** [[ivfAppend]] (kept as API: the index's stored layout decides). */
+  def ivfAppendSQ8(df: DataFrame, idCol: String, vecCol: String,
+      indexPath: String): Unit = ivfAppend(df, idCol, vecCol, indexPath)
+
+  /** [[ivfAppend]] (kept as API: the index's stored layout decides). */
+  def ivfAppendPQ(df: DataFrame, idCol: String, vecCol: String,
+      indexPath: String): Unit = ivfAppend(df, idCol, vecCol, indexPath)
+
+  /** A new batch's rows in the stored layout of the index at
+    * `indexPath` — the frozen-quantizer assignment and the layout's row
+    * projection behind [[ivfAppend]] and the streaming
+    * [[graft.streaming.StreamingOps.continuousIvfAppend]], so batch and
+    * stream write identical rows for the same input. The layout read is
+    * NOT exception-guarded: swallowing a transient read failure would
+    * silently append rows of the wrong layout — fail loudly instead.
+    */
+  private[graft] def appendRows(df: DataFrame, idCol: String,
+      vecCol: String, indexPath: String): DataFrame = {
+    val spark = df.sparkSession
+    val layout = IvfLayout.of(spark, indexPath)
+    layout.rows(assignToCells(df, idCol, vecCol,
+      readCentroids(spark, indexPath), layout.roundedAssign), idCol)
   }
 
   /** Guard on the BATCH append faces ([[ivfAppend]]/[[ivfAppendSQ8]]/
@@ -784,18 +306,314 @@ object Similarity {
       }
   }
 
-  /** [[ivfAppend]] against an [[ivfWriteIndexSQ8]] index: the same
-    * frozen-quantizer cell assignment, with the appended vectors stored
-    * through the identical SQ8 projection the full build uses — so a
-    * probe cannot tell appended rows from built rows.
+  /** Query a persisted [[ivfWriteIndex]] index. */
+  def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      idCol: String, queryVec: Seq[Double], k: Int, nProbe: Int = 4,
+      rowFilter: DataFrame => DataFrame = identity): DataFrame =
+    ivfProbe(spark, path, idCol, queryVec, k, nProbe, rowFilter,
+      rounded = false)
+
+  /** Query a persisted [[ivfWriteIndexSQ8]] index: the probe
+    * DEQUANTIZES INLINE in the scan projection (code·scale/127 feeding
+    * the same CosineDouble as the flat path — one pass, nothing
+    * materialized at float width). Cosine is scale-invariant, so
+    * ranking error comes only from the ≤ scale/254 per-component
+    * rounding; the `sim_ivf_sq8` recall contract checks it against the
+    * exact top-50.
     */
-  def ivfAppendSQ8(df: DataFrame, idCol: String, vecCol: String,
-      indexPath: String): Unit = {
-    requireNoPendingTombstones(df, idCol, indexPath)
-    val cents = readCentroids(df.sparkSession, indexPath)
-    sq8Rows(assignToCells(df, idCol, vecCol, cents), idCol)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$indexPath/cells")
+  def ivfTopKFromIndexSQ8(spark: org.apache.spark.sql.SparkSession,
+      path: String, idCol: String, queryVec: Seq[Double], k: Int,
+      nProbe: Int = 4,
+      rowFilter: DataFrame => DataFrame = identity): DataFrame =
+    ivfProbe(spark, path, idCol, queryVec, k, nProbe, rowFilter,
+      rounded = false)
+
+  /** Query a persisted [[ivfWriteIndexPQ]] index: the candidate cosine is
+    * computed against the PQ RECONSTRUCTION — Jégou et al.'s asymmetric
+    * distance (exact query side, quantized document side),
+    * cosine-normalized as in [[Embeddings.pqTopK]]. Probe-cell ranking
+    * is round-6 cosine with ties to the lowest cell id — deterministic
+    * against the round-9 centroids the PQ face writes, so the
+    * `sim_ivfpq` oracle replays the probe selection exactly.
+    */
+  def ivfTopKFromIndexPQ(spark: org.apache.spark.sql.SparkSession,
+      path: String, idCol: String, queryVec: Seq[Double], k: Int,
+      nProbe: Int = 4,
+      rowFilter: DataFrame => DataFrame = identity): DataFrame =
+    ivfProbe(spark, path, idCol, queryVec, k, nProbe, rowFilter,
+      rounded = true)
+
+  /** The PQ REFINE probe (FAISS refine step; `IndexIVFPQR` two-tier
+    * shape): ADC-rank the probed cells as [[ivfTopKFromIndexPQ]] does,
+    * keep a SHORTLIST of `refineFactor · k` candidates
+    * (TakeOrderedAndProject — per-partition heap, bounded), then
+    * re-rank the shortlist by cosine against the SQ8 refinement payload
+    * and return the top k. Requires an index built with
+    * `ivfWriteIndexPQ(..., withRefine = true)`.
+    *
+    * Why: raw ADC ranking carries the full m-subspace quantization
+    * error — on this corpus its top-10 needs an exact-top-50 contract.
+    * The refine pass spends one bounded re-rank (refineFactor·k rows,
+    * ≤ scale/254 per-component error — the [[ivfTopKFromIndexSQ8]]
+    * fidelity) to tighten that to exact-top-10: ADC only has to get
+    * the true neighbors INTO the shortlist, not ORDER them. At 100 TB
+    * the economics are the point — the ADC scan touches m bytes/row
+    * over the probed cells, the SQ8 payload is read for just
+    * refineFactor·k rows.
+    */
+  def ivfTopKFromIndexPQRefine(spark: org.apache.spark.sql.SparkSession,
+      path: String, idCol: String, queryVec: Seq[Double], k: Int,
+      nProbe: Int = 4, refineFactor: Int = 4,
+      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
+    require(k >= 1 && refineFactor >= 1, "k and refineFactor must be >= 1")
+    ivfProbe(spark, path, idCol, queryVec, k, nProbe, rowFilter,
+      rounded = true, refineFactor)
+  }
+
+  /** The one point probe behind the batch and stream probe faces: the
+    * `nProbe` cells whose centroids are nearest the query
+    * ([[probeCells]]; round-6 ranking when `rounded`), the
+    * tombstone-aware current rows of those cells ([[cellsCurrent]] —
+    * partition pruning, base ∪ deltas) through `rowFilter`, scored by
+    * round-6 cosine against the stored layout's candidate vector, top
+    * k by (cosine desc, id asc). `refineFactor > 0` ranks a shortlist
+    * of `refineFactor · k` that way and re-ranks it against the
+    * layout's refine tier (fails loudly without one).
+    */
+  private[graft] def ivfProbe(spark: org.apache.spark.sql.SparkSession,
+      path: String, idCol: String, queryVec: Seq[Double], k: Int,
+      nProbe: Int, rowFilter: DataFrame => DataFrame, rounded: Boolean,
+      refineFactor: Int = 0): DataFrame = {
+    val probes = probeCells(readCentroids(spark, path), queryVec, nProbe,
+      rounded)
+    val current = cellsCurrent(spark, path, idCol, col("cell").isin(probes: _*))
+    val layout = IvfLayout.of(spark, path, current.columns)
+    val q = typedLit(queryVec)
+    def topK(rows: DataFrame, keep: Seq[String], v: Column, score: String,
+        n: Int): DataFrame =
+      rows.select(col(idCol) +: keep.map(col) :+
+          round(V.cosine(v, q), 6).as(score): _*)
+        .orderBy(col(score).desc, col(idCol))
+        .limit(n)
+    if (refineFactor == 0) topK(rowFilter(current), Nil, layout.candidate,
+      "cosine", k)
+    else {
+      val fine = refineTierOf(layout, path)
+      topK(topK(rowFilter(current), fine.columns, layout.candidate, "__adc",
+        refineFactor * k), Nil, fine.candidate, "cosine", k)
+    }
+  }
+
+  private def refineTierOf(layout: IvfLayout, path: String)
+      : IvfLayout.Sq8.type =
+    layout.refineTier.getOrElse(throw new IllegalArgumentException(
+      s"$path was not built with withRefine = true - no SQ8 tier to re-rank"))
+
+  /** Batched ANN join: the top-`k` index neighbors of EVERY row of a
+    * query DataFrame against a persisted [[ivfWriteIndexSQ8]] index —
+    * the production shape at 100 TB ("dedup this new batch against the
+    * vector index"), where [[ivfTopKFromIndexSQ8]]'s single-literal
+    * probe would mean one job per query row.
+    *
+    * Scale shape, stage by stage:
+    *   1. per-query cell assignment is ONE codegen'd projection against
+    *      the BROADCAST centroid literal (≤2^nBits × dim doubles) —
+    *      score every cell, `array_sort` the ≤2^nBits (−cos, cell)
+    *      structs, slice `nProbe`; queries are never collected;
+    *   2. the probed-cell set (driver read bounded by the CELL COUNT,
+    *      ≤2^nBits longs, independent of query count) becomes a literal
+    *      `isin` filter, so the cell scan prunes whole partition
+    *      directories BEFORE the join — a join on the partition column
+    *      alone cannot guarantee static pruning;
+    *   3. query×cell rows join candidates cell-to-cell (broadcast when
+    *      the exploded query side is small — the common case; pass
+    *      `broadcastQueries = false` for huge query batches and the join
+    *      shuffles both sides on `cell` instead);
+    *   4. per-query top-k is the bounded [[graft.functions.Aggregators
+    *      .topKByScore]] AGGREGATION (≤k entries per query per partition
+    *      in the shuffle), not a window — no query's candidate set ever
+    *      funnels through one task-sized sort.
+    *
+    * Dequantization (code·scale/127) happens inline in the candidate
+    * projection, same as the point-probe path. Ranking: (round-6 cosine
+    * desc, id asc); cell-assignment ties: (cosine desc, cell asc).
+    * Returns (q_id, id, cosine, rank), rank 1..≤k per query.
+    * `excludeSelf` drops candidates whose index id equals the query id —
+    * for the self-join shape where queries are corpus members.
+    * `roundedProbe` ranks probe cells by ROUND-6 centroid cosine with
+    * ties to the lowest cell id — [[probeCells]]'s derandomized rule,
+    * per query — so a face that needs a bit-for-bit oracle replay (the
+    * indexed margin miner) selects the identical probe set in any
+    * engine; the default raw-cosine ranking keeps the recall-contract
+    * hashes untouched.
+    *
+    * FILTERED (predicated) probe — `rowFilter`, here and on every
+    * point-probe face: the single most common real ANN query is top-k
+    * AMONG ROWS SATISFYING A PREDICATE ("nearest docs WHERE lang='en'",
+    * "dedup within source X"). `rowFilter` transforms the pruned cell
+    * scan BEFORE scoring and the top-k, so each query still returns k
+    * rows from the FILTERED candidate set (not a post-filtered, shorter
+    * list). Two shapes: a column predicate over the index rows
+    * (`_.filter(col("id") % 2 === 0)` — Catalyst pushes it into the
+    * scan), or an allowed-id frame
+    * (`_.join(broadcast(allowed), Seq("id"), "left_semi")` — the
+    * metadata-predicate route when the predicate lives in another
+    * table). The recall contract then holds PER FILTERED SUBSET; as
+    * selectivity drops, raise `nProbe` so the probed cells still hold
+    * ≥k matching rows (the filter thins every cell uniformly in
+    * expectation — cells are geometric, predicates usually aren't
+    * geometric, so selectivity composes multiplicatively).
+    */
+  def ivfTopKJoinSQ8(queries: DataFrame, qIdCol: String, qVecCol: String,
+      indexPath: String, idCol: String, k: Int, nProbe: Int = 4,
+      excludeSelf: Boolean = false, broadcastQueries: Boolean = true,
+      rowFilter: DataFrame => DataFrame = identity,
+      roundedProbe: Boolean = false): DataFrame =
+    ivfJoin(queries, qIdCol, qVecCol, indexPath, idCol, k, nProbe,
+      excludeSelf, broadcastQueries, rowFilter, roundedProbe)
+
+  /** [[ivfTopKJoinSQ8]] against a flat (unquantized) [[ivfWriteIndex]]
+    * index — identical plan, no dequantize step.
+    */
+  def ivfTopKJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
+      indexPath: String, idCol: String, k: Int, nProbe: Int = 4,
+      excludeSelf: Boolean = false, broadcastQueries: Boolean = true,
+      rowFilter: DataFrame => DataFrame = identity): DataFrame =
+    ivfJoin(queries, qIdCol, qVecCol, indexPath, idCol, k, nProbe,
+      excludeSelf, broadcastQueries, rowFilter, roundedProbe = false)
+
+  /** [[ivfTopKJoinSQ8]] against a product-quantized [[ivfWriteIndexPQ]]
+    * index — identical plan, candidates scored against the PQ
+    * reconstruction ([[ivfTopKFromIndexPQ]]'s asymmetric distance).
+    * The batched probe over the 64×-compressed index: at 100 TB this is
+    * the shape where the scanned cells' payload is small enough to
+    * broadcast-join against a large query batch.
+    */
+  def ivfPqTopKJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
+      indexPath: String, idCol: String, k: Int, nProbe: Int = 4,
+      excludeSelf: Boolean = false, broadcastQueries: Boolean = true,
+      rowFilter: DataFrame => DataFrame = identity): DataFrame =
+    ivfJoin(queries, qIdCol, qVecCol, indexPath, idCol, k, nProbe,
+      excludeSelf, broadcastQueries, rowFilter, roundedProbe = false)
+
+  /** The REFINE tier on the batched join face —
+    * [[ivfTopKFromIndexPQRefine]]'s two-tier discipline applied per
+    * query of a batch, against an `ivfWriteIndexPQ(..., withRefine =
+    * true)` index (fails loudly otherwise). The batched join is the
+    * production dedup shape ("dedup this batch against the index"), so
+    * it is where the exact-top-k contract matters most:
+    *
+    *   1. ADC stage: [[ivfPqTopKJoin]]'s plan — probe cells per query
+    *      (ROUND-6 centroid cosine, ties to the lowest cell: the PQ
+    *      faces' derandomized rule, so the `sim_ivfpq_join_refine`
+    *      oracle replays the probe selection), candidates scored
+    *      against the PQ reconstruction, and a per-query SHORTLIST of
+    *      `refineFactor · k` ids kept by the bounded
+    *      [[graft.functions.Aggregators.topKByScore]] aggregation
+    *      (map-side combine — no query's candidates funnel through one
+    *      sort).
+    *   2. Refine stage: the shortlist joins BACK to the pruned cell
+    *      frame for its SQ8 payload (a second column-pruned read that
+    *      touches the `q` bytes for shortlist rows' files only — the
+    *      ADC scan never reads them) and to the query vectors, re-ranks
+    *      by (round-6 SQ8 cosine desc, id asc), keeps k.
+    *
+    * Returns (q_id, id, cosine, rank) like every join face — `cosine`
+    * is the REFINED (SQ8) score. Scale shape: the only frames beyond
+    * stage 1's are shortlist-sized (|queries| · refineFactor · k rows).
+    */
+  def ivfPqTopKJoinRefine(queries: DataFrame, qIdCol: String,
+      qVecCol: String, indexPath: String, idCol: String, k: Int,
+      nProbe: Int = 4, refineFactor: Int = 4, excludeSelf: Boolean = false,
+      broadcastQueries: Boolean = true,
+      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
+    require(k >= 1 && nProbe >= 1 && refineFactor >= 1,
+      "k, nProbe and refineFactor must be >= 1")
+    ivfJoin(queries, qIdCol, qVecCol, indexPath, idCol, k, nProbe,
+      excludeSelf, broadcastQueries, rowFilter, roundedProbe = true,
+      refineFactor)
+  }
+
+  /** The one batched join behind the four join faces (stages in
+    * [[ivfTopKJoinSQ8]]): per-query probe cells against the broadcast
+    * centroid literal, the probed-cell collect, the tombstone-aware
+    * pruned candidate read scored against the stored layout's candidate
+    * vector, and the per-query top-k — with `refineFactor > 0`, a
+    * shortlist re-ranked against the refine tier
+    * ([[ivfPqTopKJoinRefine]]).
+    */
+  private def ivfJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
+      indexPath: String, idCol: String, k: Int, nProbe: Int,
+      excludeSelf: Boolean, broadcastQueries: Boolean,
+      rowFilter: DataFrame => DataFrame, roundedProbe: Boolean,
+      refineFactor: Int = 0): DataFrame = {
+    require(k >= 1 && nProbe >= 1, "k and nProbe must be >= 1")
+    val spark = queries.sparkSession
+    // driver-bounded: ≤2^nBits centroid rows
+    val cents = readCentroids(spark, indexPath)
+    val nCells = cents.length
+    val centVecs = typedLit(cents.map(_._2).toSeq)
+    val cellIds = typedLit(cents.map(_._1).toSeq)
+    val qv = col(qVecCol).cast("array<double>")
+    // (−cosine, cell) structs sort lexicographically = cosine desc,
+    // cell asc on ties — deterministic probe order
+    val scoredCells = transform(sequence(lit(1), lit(nCells)), i => {
+      val c = V.cosine(qv, element_at(centVecs, i))
+      struct((-(if (roundedProbe) round(c, 6) else c)).as("negcos"),
+        element_at(cellIds, i).as("cell"))
+    })
+    val probeList = transform(
+      slice(array_sort(scoredCells), 1, math.min(nProbe, nCells)),
+      s => s("cell"))
+    // checkpointed (the trainCells / deleteMatching discipline): the
+    // exploded frame feeds BOTH the probed-cell collect and the join —
+    // without it the query plan evaluates twice, and a non-deterministic
+    // query source could probe cells in the join that the collected
+    // `isin` filter already pruned, silently dropping candidates
+    val exploded = queries
+      .filter(col(qVecCol).isNotNull)
+      .select(col(qIdCol).cast("long").as("q_id"), qv.as("__qv"),
+        explode(probeList).as("cell"))
+      .localCheckpoint(true)
+    // bounded driver read (≤2^nBits longs, NOT query-count-sized): the
+    // distinct probed cells as a literal filter = static partition
+    // pruning on the cell scan
+    val probed = exploded.select("cell").distinct()
+      .collect().map(_.getLong(0)).sorted
+    val current = cellsCurrent(spark, indexPath, idCol,
+      col("cell").isin(probed: _*))
+    val layout = IvfLayout.of(spark, indexPath, current.columns)
+    val fine = Option.when(refineFactor > 0)(refineTierOf(layout, indexPath))
+    val cellsDf = rowFilter(current)
+    val qSide = if (broadcastQueries) broadcast(exploded) else exploded
+    def topK(cand: DataFrame, score: String, n: Int): DataFrame =
+      cand.groupBy("q_id").agg(graft.functions.Aggregators.topKByScore(
+        col("id"), col(score), n).as("__top"))
+    val score = if (fine.isEmpty) "cosine" else "__adc"
+    val cand0 = qSide.join(cellsDf, Seq("cell"))
+      .select(col("q_id"), col(idCol).cast("long").as("id"),
+        round(V.cosine(layout.candidate, col("__qv")), 6).as(score))
+    val cand = if (excludeSelf) cand0.filter(col("q_id") =!= col("id"))
+      else cand0
+    val top = fine match {
+      case None => topK(cand, score, k)
+      case Some(tier) =>
+        val shortlist = topK(cand, score, refineFactor * k)
+          .select(col("q_id"), explode(col("__top")).as("__e"))
+          .select(col("q_id"), col("__e._1").as("id"))
+        // the refine payload, read for shortlist rows only; cellsCurrent
+        // already deduped ids, so this join cannot fan out
+        val payload = cellsDf.select(col(idCol).cast("long").as("id") +:
+          tier.columns.map(col): _*)
+        val qVecs = qSide.select(col("q_id"), col("__qv")).dropDuplicates("q_id")
+        topK(shortlist.join(payload, Seq("id")).join(qVecs, Seq("q_id"))
+          .select(col("q_id"), col("id"),
+            round(V.cosine(tier.candidate, col("__qv")), 6).as("cosine")),
+          "cosine", k)
+    }
+    top.select(col("q_id"), posexplode(col("__top")))
+      .select(col("q_id"), col("col._1").as("id"), col("col._2").as("cosine"),
+        (col("pos") + 1).as("rank"))
   }
 
   /** DELETE (takedown) face for every persisted index layout — flat
@@ -1070,12 +888,13 @@ object Similarity {
   }
 
   /** Frozen-quantizer assignment: (id, v, cell) with cell = the id of the
-    * nearest centroid. Shared by [[ivfAppend]] and the streaming
-    * [[graft.streaming.StreamingOps.continuousIvfAppend]] so batch and
-    * stream apply the identical rule.
+    * nearest centroid ([[nearestCell]]; round-6 cosine when `rounded`,
+    * the PQ layout's derandomized rule — `cents` arrives id-sorted from
+    * [[readCentroids]], so ties go to the lowest cell id). Behind
+    * [[appendRows]], so batch and stream apply the identical rule.
     */
   private[graft] def assignToCells(df: DataFrame, idCol: String, vecCol: String,
-      cents: Array[(Long, Seq[Double])]): DataFrame = {
+      cents: Array[(Long, Seq[Double])], rounded: Boolean = false): DataFrame = {
     // frozen-quantizer assignment must agree with nearestCell's
     // 0-based-index rule: cell ids from ivfWriteIndex are exactly the
     // positions Lloyd assigned, so index-by-sorted-position is identity
@@ -1086,24 +905,11 @@ object Similarity {
     // win over the vector being assigned
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol).as("v"),
-        nearestCell(col(vecCol).cast("array<double>"), byPos).as("__pos"))
+        nearestCell(col(vecCol).cast("array<double>"), byPos, rounded)
+          .as("__pos"))
       .select(col(idCol), col("v"),
         element_at(typedLit(cents.map(_._1).toSeq), col("__pos").cast("int") + 1)
           .as("cell"))
-  }
-
-  /** Query a persisted [[ivfWriteIndex]] index. */
-  def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, queryVec: Seq[Double], k: Int, nProbe: Int = 4,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val probes = probeCells(cents, queryVec, nProbe)
-    val q = typedLit(queryVec)
-    rowFilter(cellsCurrent(spark, path, idCol, col("cell").isin(probes: _*)))
-      .select(col(idCol), round(V.cosine(col("v"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
   }
 
   /** Shared coarse-quantizer build: LSH-seeded cells, `lloydIters`
@@ -1142,10 +948,15 @@ object Similarity {
   }
 
   /** The `nProbe` cell ids whose centroids are most cosine-similar to
-    * the query (driver-side over ≤2^nBits centroids).
+    * the query (driver-side over ≤2^nBits centroids). `rounded` is the
+    * derandomized rule of the PQ faces: ROUND-6 cosine (SQL `round`
+    * semantics — half away from zero), ties to the lowest cell id — the
+    * rounding absorbs last-ulp arithmetic differences so an independent
+    * engine selects the identical probe set. Raw ties keep input order.
     */
   private[graft] def probeCells(cents: Array[(Long, Seq[Double])],
-      queryVec: Seq[Double], nProbe: Int): Seq[Long] = {
+      queryVec: Seq[Double], nProbe: Int,
+      rounded: Boolean = false): Seq[Long] = {
     def cos(a: Seq[Double], b: Seq[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
@@ -1155,42 +966,28 @@ object Similarity {
       val d = math.sqrt(na) * math.sqrt(nb)
       if (d == 0.0) 0.0 else dot / d
     }
-    cents.sortBy { case (_, c) => -cos(c, queryVec) }
-      .take(nProbe).map(_._1).toSeq
-  }
-
-  /** [[probeCells]] derandomized for the PQ index face: ROUND-6 cosine
-    * (SQL `round` semantics — half away from zero), ties to the lowest
-    * cell id. Same bounded driver-side work; the rounding absorbs
-    * last-ulp arithmetic differences so an independent engine selects
-    * the identical probe set.
-    */
-  private[graft] def probeCellsRounded(cents: Array[(Long, Seq[Double])],
-      queryVec: Seq[Double], nProbe: Int): Seq[Long] = {
-    def cos(a: Seq[Double], b: Seq[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < math.min(a.length, b.length)) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0) 0.0 else dot / d
+    val scored = cents.map { case (id, c) =>
+      val x = cos(c, queryVec)
+      id -> (if (!rounded) x
+        else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }
-    cents.map { case (id, c) =>
-      id -> BigDecimal(cos(c, queryVec))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }.sortBy { case (id, r) => (-r, id) }
+    (if (rounded) scored.sortBy { case (id, r) => (-r, id) }
+      else scored.sortBy(-_._2))
       .take(nProbe).map(_._1).toSeq
   }
 
   /** Index (0-based, as long) of the centroid most cosine-similar to
-    * `v`, evaluated as one HOF fold over a broadcast centroid literal —
-    * ties break to the LOWEST index, so reassignment is deterministic.
+    * `v` (round-6 cosine when `rounded`), evaluated as one HOF fold over
+    * a broadcast centroid literal — ties break to the LOWEST index, so
+    * reassignment is deterministic.
     */
-  private def nearestCell(v: Column, cents: Seq[Seq[Double]]): Column = {
+  private def nearestCell(v: Column, cents: Seq[Seq[Double]],
+      rounded: Boolean = false): Column = {
     val centLit = typedLit(cents)
-    val scored = transform(sequence(lit(0), lit(cents.length - 1)),
-      i => struct(V.cosine(v, element_at(centLit, i + lit(1))).as("c"), i.as("i")))
+    val scored = transform(sequence(lit(0), lit(cents.length - 1)), i => {
+      val c = V.cosine(v, element_at(centLit, i + lit(1)))
+      struct((if (rounded) round(c, 6) else c).as("c"), i.as("i"))
+    })
     aggregate(scored,
       struct(lit(Double.NegativeInfinity).as("c"), lit(-1).as("i")),
       (acc, x) => when(x("c") > acc("c"), x).otherwise(acc))

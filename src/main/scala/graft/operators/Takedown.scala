@@ -66,7 +66,9 @@ object Takedown {
     * along, the count-form stores' drift-guard contract), the write
     * faces that create/extend stores of the family (the machine-checked
     * takedown-surface map), the delete face's name (for reporting), and
-    * the invocation itself.
+    * the invocation itself — called with the victims already renamed to
+    * the store's id column, that column's name, the text column and the
+    * store.
     */
   final case class Kind(name: String, victimShape: String,
       writeFaces: Seq[String], deleteFace: String,
@@ -153,12 +155,10 @@ object Takedown {
     // cluster_state's own sub-paths nest inside its root by design.
     val roots: Seq[(Int, String)] = stores.zipWithIndex.flatMap {
       case (st, i) =>
-        (if (st.kind == "cluster_state") Seq(
-          st.path,
-          st.opts.getOrElse("indexPath", s"${st.path}/index"),
-          st.opts.getOrElse("pairsPath", s"${st.path}/pairs"),
-          st.opts.getOrElse("labelsPath", s"${st.path}/labels"))
-        else Seq(st.path)).map(p => i -> norm(p))
+        (if (st.kind == "cluster_state") {
+          val (ip, pp, lp) = clusterPaths(st)
+          Seq(st.path, ip, pp, lp)
+        } else Seq(st.path)).map(p => i -> norm(p))
     }
     val dup = roots.map(_._2).groupBy(identity)
       .collect { case (p, xs) if xs.size > 1 => p }
@@ -184,13 +184,11 @@ object Takedown {
       "outer store's scans and rewrites).")
   }
 
-  // victims renamed to the store's id column (opts("idCol"), defaulting
-  // to the request's) so one request frame serves stores keyed on
-  // doc_id / vec_id / node ids alike
-  private def vAs(v: DataFrame, idCol: String, st: Store): (DataFrame, String) = {
-    val sid = st.opts.getOrElse("idCol", idCol)
-    (v.withColumnRenamed(idCol, sid), sid)
-  }
+  // a cluster_state store's three tables (opts, defaulting under its root)
+  private def clusterPaths(st: Store): (String, String, String) = (
+    st.opts.getOrElse("indexPath", s"${st.path}/index"),
+    st.opts.getOrElse("pairsPath", s"${st.path}/pairs"),
+    st.opts.getOrElse("labelsPath", s"${st.path}/labels"))
 
   /** The registry: every persisted store family and its delete face.
     * One row per family — the complete takedown surface as code.
@@ -198,13 +196,10 @@ object Takedown {
   val kinds: Map[String, Kind] = Seq(
     Kind("ivf", "ids",
       Seq("ivfWriteIndex", "ivfWriteIndexSQ8", "ivfWriteIndexPQ",
-        "ivfAppend", "ivfAppendSQ8", "ivfAppendPQ",
+        "ivfWriteLayout", "ivfAppend", "ivfAppendSQ8", "ivfAppendPQ",
         "continuousIvfAppend", "continuousPqAppend"),
       "Similarity.ivfDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        Similarity.ivfDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) => Similarity.ivfDelete(v, sid, st.path),
       Some((sp, st) => graft.streaming.StreamingOps.compactIvfDeltas(
         sp, st.path, includeLatest =
           st.opts.get("includeLatest").exists(_.toBoolean))),
@@ -213,92 +208,68 @@ object Takedown {
     Kind("bm25", "ids",
       Seq("bm25IndexWrite", "bm25IndexAppend"),
       "TrainingData.bm25IndexDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        TrainingData.bm25IndexDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) => TrainingData.bm25IndexDelete(v, sid, st.path),
       Some((sp, st) => TrainingData.bm25IndexCompact(sp, st.path)),
       present = (sp, _, st) => TrainingData.bm25PresentIds(sp, st.path)),
     Kind("jaccard_prefix", "ids",
       Seq("jaccardPrefixIndexWrite", "jaccardPrefixIndexAppend"),
       "Dedup.jaccardPrefixIndexDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        Dedup.jaccardPrefixIndexDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) => Dedup.jaccardPrefixIndexDelete(v, sid, st.path),
       Some((sp, st) => Dedup.jaccardPrefixIndexCompact(sp, st.path)),
       present = (sp, _, st) => Dedup.jaccardPrefixPresentIds(sp, st.path)),
     Kind("decontam", "ids",
       Seq("decontamIndexWrite", "decontamIndexAppend"),
       "TrainingData.decontamIndexDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        TrainingData.decontamIndexDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) => TrainingData.decontamIndexDelete(v, sid, st.path),
       Some((sp, st) => TrainingData.decontamIndexCompact(sp, st.path)),
       present = (sp, _, st) => TrainingData.decontamPresentIds(sp, st.path)),
     Kind("containment", "ids",
       Seq("containmentIndexWrite", "containmentIndexAppend"),
       "TrainingData.containmentIndexDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        TrainingData.containmentIndexDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) => TrainingData.containmentIndexDelete(v, sid, st.path),
       Some((sp, st) => TrainingData.containmentIndexCompact(sp, st.path)),
       present = (sp, _, st) => TrainingData.decontamPresentIds(sp, st.path)),
     Kind("nb_model", "id_text",
       Seq("nbModelWrite", "nbModelAppend", "nbModelAppendStream"),
       "Classifier.nbModelDelete",
-      (v, idCol, textCol, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        Classifier.nbModelDelete(vv, sid, textCol, st.path)
-      },
+      (v, sid, textCol, st) =>
+        Classifier.nbModelDelete(v, sid, textCol, st.path),
       Some((sp, st) => Classifier.nbModelCompact(sp, st.path)),
       present = (sp, _, st) => Classifier.nbModelPresentIds(sp, st.path)),
     Kind("dsir", "id_text",
       Seq("dsirStoreWrite", "dsirStoreAppend", "dsirStoreAppendStream"),
       "Sampling.dsirStoreDelete",
-      (v, idCol, textCol, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        Sampling.dsirStoreDelete(vv, sid, textCol, st.path)
-      },
+      (v, sid, textCol, st) =>
+        Sampling.dsirStoreDelete(v, sid, textCol, st.path),
       Some((sp, st) => Sampling.dsirStoreCompact(sp, st.path)),
       present = (sp, _, st) => Sampling.dsirStorePresentIds(sp, st.path)),
     Kind("triangles", "ids",
       Seq("trianglesIndexWrite", "trianglesIndexAppend"),
       "Graph.trianglesIndexDeleteNodes",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        Graph.trianglesIndexDeleteNodes(vv, sid, st.path)
-      },
+      (v, sid, _, st) => Graph.trianglesIndexDeleteNodes(v, sid, st.path),
       Some((sp, st) => Graph.trianglesIndexCompact(sp, st.path)),
       present = (sp, _, st) => Graph.trianglesPresentNodes(sp, st.path)),
     Kind("cluster_state", "ids",
       Seq.empty, // stream-maintained (continuousClusteredDedup)
       "StreamingOps.clusterStateDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        graft.streaming.StreamingOps.clusterStateDelete(vv, sid,
-          st.opts.getOrElse("indexPath", s"${st.path}/index"),
-          st.opts.getOrElse("pairsPath", s"${st.path}/pairs"),
-          st.opts.getOrElse("labelsPath", s"${st.path}/labels"))
+      (v, sid, _, st) => {
+        val (ip, pp, lp) = clusterPaths(st)
+        graft.streaming.StreamingOps.clusterStateDelete(v, sid, ip, pp, lp)
       },
-      Some((sp, st) => graft.streaming.StreamingOps.compactClusterState(sp,
-        st.opts.getOrElse("indexPath", s"${st.path}/index"),
-        st.opts.getOrElse("pairsPath", s"${st.path}/pairs"),
-        st.opts.getOrElse("labelsPath", s"${st.path}/labels"),
-        includeLatest = st.opts.get("includeLatest").exists(_.toBoolean))),
-      present = (sp, _, st) => graft.streaming.StreamingOps.clusterStatePresentIds(sp,
-        st.opts.getOrElse("indexPath", s"${st.path}/index"),
-        st.opts.getOrElse("pairsPath", s"${st.path}/pairs"),
-        st.opts.getOrElse("labelsPath", s"${st.path}/labels"))),
+      Some((sp, st) => {
+        val (ip, pp, lp) = clusterPaths(st)
+        graft.streaming.StreamingOps.compactClusterState(sp, ip, pp, lp,
+          includeLatest = st.opts.get("includeLatest").exists(_.toBoolean))
+      }),
+      present = (sp, _, st) => {
+        val (ip, pp, lp) = clusterPaths(st)
+        graft.streaming.StreamingOps.clusterStatePresentIds(sp, ip, pp, lp)
+      }),
     Kind("cdc_state", "ids",
       Seq.empty, // stream-maintained (continuousCdcDedup)
       "StreamingOps.cdcStateDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        graft.streaming.StreamingOps.cdcStateDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) =>
+        graft.streaming.StreamingOps.cdcStateDelete(v, sid, st.path),
       Some((sp, st) => graft.streaming.StreamingOps.compactCdcIndex(sp,
         st.path, includeLatest =
           st.opts.get("includeLatest").exists(_.toBoolean))),
@@ -306,10 +277,7 @@ object Takedown {
     Kind("kmeans_model", "ids",
       Seq("kmeansModelWrite"),
       "Embeddings.kmeansModelDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        Embeddings.kmeansModelDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) => Embeddings.kmeansModelDelete(v, sid, st.path),
       // compact = RETRAIN over the manifest survivors: the one provable
       // removal path for an aggregate model (forget only fences +
       // tombstones — O(victim), like every other kind's delete face)
@@ -319,10 +287,7 @@ object Takedown {
     Kind("pq_model", "ids",
       Seq("pqModelWrite"),
       "Embeddings.pqModelDelete",
-      (v, idCol, _, st) => {
-        val (vv, sid) = vAs(v, idCol, st)
-        Embeddings.pqModelDelete(vv, sid, st.path)
-      },
+      (v, sid, _, st) => Embeddings.pqModelDelete(v, sid, st.path),
       // same fence/tombstone → retrain-at-compact protocol as
       // kmeans_model (one ModelStore implementation behind both)
       Some((sp, st) => Embeddings.pqModelCompact(sp, st.path,
@@ -332,19 +297,18 @@ object Takedown {
       Seq("writePartitioned", "writeClustered", "writeZOrdered",
         "writeZOrderedN"),
       "Tables.deleteMatching",
-      (v, idCol, _, st) => {
+      (v, sid, _, st) => {
         val pcol = st.opts.getOrElse("partitionCol",
           throw new IllegalArgumentException(
             "table kind requires opts(\"partitionCol\") — the Hive " +
             "partition column deleteMatching prunes its rewrite to"))
-        val (vv, sid) = vAs(v, idCol, st)
         // join-based delete: the victim frame reaches the rewrite as a
         // semi/anti join (broadcast-hinted only below the session's
         // broadcast threshold; shuffled beyond it) — a million-id
         // request stays a three-join plan, never a driver collect or
         // an `isin` literal
         graft.tables.Tables.deleteMatching(v.sparkSession, st.path,
-          pcol, vv.select(col(sid)), sid)
+          pcol, v.select(col(sid)), sid)
         ()
       },
       present = (sp, idCol, st) => sp.read.parquet(st.path)
@@ -520,7 +484,11 @@ object Takedown {
       idCol: String, textCol: String, nullTextIds: DataFrame,
       nNullText: Long): String = {
     val kind = kinds(st.kind)
-    kind.invoke(v, idCol, textCol, st)
+    // victims renamed to the store's id column (opts("idCol"), defaulting
+    // to the request's) so one request frame serves stores keyed on
+    // doc_id / vec_id / node ids alike
+    val sid = st.opts.getOrElse("idCol", idCol)
+    kind.invoke(v.withColumnRenamed(idCol, sid), sid, textCol, st)
     if (kind.victimShape == "id_text" && nNullText > 0) {
       val (n, sample) = probeRemaining(spark, st, idCol, nullTextIds)
       if (n > 0) throw PartialTakedown(

@@ -1281,39 +1281,37 @@ object StreamingOps {
       b => graft.operators.Dedup.simhashIndex(b, idCol, textCol, maxHamming, kernel),
       idCol, indexPath, pairsPath, checkpoint, maxHamming, maxBucketSize)
 
-  /** Continuous maintenance of a persisted IVF ANN index
-    * ([[graft.operators.Similarity.ivfWriteIndex]] layout): each
+  /** Continuous maintenance of a persisted IVF ANN index (any layout —
+    * flat [[graft.operators.Similarity.ivfWriteIndex]], SQ8 or PQ): each
     * micro-batch of new vectors is assigned to its nearest FROZEN
-    * centroid ([[graft.operators.Similarity.ivfAppend]]'s rule, shared
-    * code — batch and stream apply the identical quantizer) and lands as
-    * a per-batch-id DELTA partition under `<indexPath>/deltas` with
-    * dynamic partition overwrite, so an at-least-once replay replaces its
-    * own partition instead of duplicating vectors (`ivfAppend`'s
-    * `mode("append")` is NOT replay-safe — that is exactly why the
-    * streaming face writes deltas, the [[continuousNearDup]] discipline).
+    * centroid and stored in the index's own layout
+    * ([[graft.operators.Similarity.ivfAppend]]'s rule, shared code —
+    * batch and stream apply the identical quantizer and codebooks) and
+    * lands as a per-batch-id DELTA partition under `<indexPath>/deltas`
+    * with dynamic partition overwrite, so an at-least-once replay
+    * replaces its own partition instead of duplicating vectors
+    * (`ivfAppend`'s `mode("append")` is NOT replay-safe — that is exactly
+    * why the streaming face writes deltas, the [[continuousNearDup]]
+    * discipline). The frozen quantizer, codebooks and layout are re-read
+    * per batch, so an offline rebuild is picked up at the next batch
+    * boundary.
     *
     * Probe with [[ivfTopKFromStreamIndex]] (base cells ∪ deltas, both
     * cell-pruned). `compactEveryBatches > 0` folds committed deltas into
     * the cell-partitioned base every Nth batch ([[compactIvfDeltas]]), so
     * a long-running stream's probe cost stays one base read + ≤N small
     * deltas. Retraining the coarse quantizer itself (centroid drift) is a
-    * REBUILD — `ivfWriteIndex` over the union to a fresh path and a
+    * REBUILD — the write face over the union to a fresh path and a
     * stream restart, the same train-offline / score-online split as
     * [[continuousKmeansAssign]]: frozen assignment is what makes batch
     * and stream indexes interchangeable.
     */
   def continuousIvfAppend(vecs: DataFrame, idCol: String, vecCol: String,
       indexPath: String, checkpoint: String,
-      compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
-    import graft.operators.Similarity
+      compactEveryBatches: Int = 0): DataStreamWriter[Row] =
     BatchState.eachBatch(vecs, checkpoint) { (batch, batchId, _) =>
-      val spark = batch.sparkSession
-      // the frozen quantizer: ≤2^nBits rows, read per batch so an
-      // offline rebuild that swaps the centroids table is picked up at
-      // the next batch boundary
-      val cents = Similarity.readCentroids(spark, indexPath)
       BatchState.writeBatch(
-        Similarity.assignToCells(batch, idCol, vecCol, cents)
+        graft.operators.Similarity.appendRows(batch, idCol, vecCol, indexPath)
           // cluster by cell: each task writes one cell-coherent file, so
           // the delta read's cell predicate prunes via row-group stats
           // even though the delta tree partitions on batch_id
@@ -1321,9 +1319,8 @@ object StreamingOps {
         s"$indexPath/deltas", batchId)
       if (compactEveryBatches > 0 && batchId > 0 &&
           batchId % compactEveryBatches == 0)
-        compactIvfDeltas(spark, indexPath)
+        compactIvfDeltas(batch.sparkSession, indexPath)
     }
-  }
 
   /** Fold a [[continuousIvfAppend]] (or [[continuousPqAppend]] — the
     * fold is layout-generic over the columns between id and `cell`)
@@ -1410,8 +1407,8 @@ object StreamingOps {
     if (deltasOpt.isEmpty && tombsOpt.isEmpty) return
     val maxBatch = deltasOpt.flatMap(BatchState.maxBatch).getOrElse(-1L)
     val baseOpt = readParquetIfAny(spark, s"$indexPath/cells")
-    // layout-generic: (id, <payload...>, cell) — v for the flat index,
-    // codes for the PQ index ([[continuousPqAppend]] deltas)
+    // layout-generic: (id, <payload...>, cell) — whatever the stored
+    // layout's payload is (v, scale + q, codes)
     val refCols = baseOpt.map(_.columns)
       .orElse(deltasOpt.map(_.drop("batch_id").columns))
       .getOrElse(return) // tombstones over a rowless index: nothing to do
@@ -1528,14 +1525,15 @@ object StreamingOps {
     }
   }
 
-  /** Probe a [[continuousIvfAppend]]-maintained index: nearest-centroid
-    * cell selection on the driver (≤2^nBits rows), then the
-    * `Similarity.cellsCurrent` read the batch faces share — base cells (partition-pruned directories) ∪ un-compacted
-    * deltas, de-duplicated on id by RECENCY (max delta batch_id wins;
-    * the base ranks as batch −1), tombstone-killed versions dropped —
-    * scored and top-k'd exactly like
-    * [[graft.operators.Similarity.ivfTopKFromIndex]]: a stream-built
-    * index answers identically to a batch-built one over the same rows.
+  /** Probe a [[continuousIvfAppend]]-maintained index: the batch faces'
+    * point probe ([[graft.operators.Similarity.ivfTopKFromIndex]]) —
+    * nearest-centroid cell selection on the driver (≤2^nBits rows), then
+    * the `Similarity.cellsCurrent` read: base cells (partition-pruned
+    * directories) ∪ un-compacted deltas, de-duplicated on id by RECENCY
+    * (max delta batch_id wins; the base ranks as batch −1),
+    * tombstone-killed versions dropped — scored in the index's stored
+    * layout: a stream-built index answers identically to a batch-built
+    * one over the same rows.
     *
     * `rowFilter` is the batch faces' filtered-probe hook
     * ([[graft.operators.Similarity.ivfTopKJoinSQ8]] doc), applied AFTER
@@ -1547,80 +1545,30 @@ object StreamingOps {
   def ivfTopKFromStreamIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, idCol: String, queryVec: Seq[Double], k: Int,
       nProbe: Int = 4,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
-    import graft.operators.Similarity
-    import graft.functions.{VectorFunctions => V}
-    val cents = Similarity.readCentroids(spark, indexPath)
-    val probes = Similarity.probeCells(cents, queryVec, nProbe)
-    val q = typedLit(queryVec)
-    rowFilter(Similarity.cellsCurrent(spark, indexPath, idCol,
-        col("cell").isin(probes: _*))
-        .select(col(idCol), col("v")))
-      .select(col(idCol), round(V.cosine(col("v"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
+      rowFilter: DataFrame => DataFrame = identity): DataFrame =
+    graft.operators.Similarity.ivfProbe(spark, indexPath, idCol, queryVec,
+      k, nProbe, rowFilter, rounded = false)
 
-  /** [[continuousIvfAppend]] for a product-quantized index
-    * ([[graft.operators.Similarity.ivfWriteIndexPQ]] layout): each
-    * micro-batch is assigned to its nearest FROZEN coarse centroid and
-    * encoded against the FROZEN codebooks
-    * ([[graft.operators.Similarity.ivfAppendPQ]]'s exact rules, shared
-    * code), landing as per-batch-id delta partitions with dynamic
-    * overwrite — replay-safe, like every streaming face here. Deltas
-    * carry (id, cell, codes): m bytes per vector in flight, which at
-    * ingest volume is the difference between shipping the stream and
-    * shipping 64× the stream. Compact with [[compactIvfDeltas]] (the
-    * fold is layout-generic); probe with [[ivfPqTopKFromStreamIndex]];
-    * codebook/centroid drift → offline [[graft.operators.Similarity
-    * .ivfWriteIndexPQ]] rebuild + stream restart (the frozen
-    * train-offline / score-online split).
+  /** [[continuousIvfAppend]] (kept as API: the index's stored layout
+    * decides, so a PQ index gets codes encoded against its frozen
+    * codebooks — m bytes per vector in flight).
     */
   def continuousPqAppend(vecs: DataFrame, idCol: String, vecCol: String,
       indexPath: String, checkpoint: String,
-      compactEveryBatches: Int = 0): DataStreamWriter[Row] = {
-    import graft.operators.Similarity
-    BatchState.eachBatch(vecs, checkpoint) { (batch, batchId, _) =>
-      val spark = batch.sparkSession
-      // frozen quantizer + codebooks re-read per batch, so an offline
-      // rebuild that swaps them is picked up at the next batch boundary
-      BatchState.writeBatch(
-        Similarity.pqDeltaRows(batch, idCol, vecCol, indexPath)
-          .repartition(col("cell")), // cell-coherent files — see above
-        s"$indexPath/deltas", batchId)
-      if (compactEveryBatches > 0 && batchId > 0 &&
-          batchId % compactEveryBatches == 0)
-        compactIvfDeltas(spark, indexPath)
-    }
-  }
+      compactEveryBatches: Int = 0): DataStreamWriter[Row] =
+    continuousIvfAppend(vecs, idCol, vecCol, indexPath, checkpoint,
+      compactEveryBatches)
 
   /** [[ivfTopKFromStreamIndex]] for a [[continuousPqAppend]]-maintained
-    * PQ index: the same shared
-    * `Similarity.cellsCurrent` read (recency dedup, tombstone drop), with the
-    * candidate cosine computed against the PQ reconstruction
-    * ([[graft.operators.Similarity.ivfTopKFromIndexPQ]]'s asymmetric
-    * distance) and the probe-cell selection the PQ faces' round-6 rule.
-    * `rowFilter` as on [[ivfTopKFromStreamIndex]]: applied after the
-    * recency dedup and tombstone drop, before the top-k.
+    * PQ index: the probe-cell selection is the PQ faces' round-6 rule
+    * ([[graft.operators.Similarity.ivfTopKFromIndexPQ]]).
     */
   def ivfPqTopKFromStreamIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, idCol: String, queryVec: Seq[Double], k: Int,
       nProbe: Int = 4,
-      rowFilter: DataFrame => DataFrame = identity): DataFrame = {
-    import graft.operators.Similarity
-    import graft.functions.{VectorFunctions => V}
-    val cents = Similarity.readCentroids(spark, indexPath)
-    val probes = Similarity.probeCellsRounded(cents, queryVec, nProbe)
-    val q = typedLit(queryVec)
-    rowFilter(Similarity.cellsCurrent(spark, indexPath, idCol,
-        col("cell").isin(probes: _*))
-        .select(col(idCol), col("codes")))
-      .select(col(idCol), round(
-        V.cosine(Similarity.pqReconstruct(spark, indexPath), q), 6)
-        .as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
+      rowFilter: DataFrame => DataFrame = identity): DataFrame =
+    graft.operators.Similarity.ivfProbe(spark, indexPath, idCol, queryVec,
+      k, nProbe, rowFilter, rounded = true)
 
   /** Stream-stream inner join with watermark-bounded state (SURVEY §2.3
     * joins row): both sides buffer only rows newer than their watermark,
