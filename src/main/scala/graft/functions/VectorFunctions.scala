@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Vector / hashing column functions for similarity search and near-dup
   * detection over embedding columns (`array<float>`).
@@ -16,6 +17,19 @@ object VectorFunctions {
     * accumulation drifts and would disagree with any double-math oracle.
     */
   private def asDouble(v: Column): Column = v.cast("array<double>")
+
+  /** Column `c` of `df` as `array<double>`: the column itself when it
+    * already is one. The optimizer drops a no-op cast of a
+    * non-null-element array, so the optimized plan would disagree with
+    * the analyzed one on element nullability, and a checkpoint of the
+    * frame would lose its statistics (LogicalRDD's output-columns
+    * warning).
+    */
+  def doubles(df: DataFrame, c: String): Column =
+    df.select(col(c)).schema.head.dataType match {
+      case ArrayType(DoubleType, _) => col(c)
+      case _ => col(c).cast("array<double>")
+    }
 
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),

@@ -23,9 +23,10 @@ import graft.Frames
   * double-fold or miss rows. [[withMaintenanceLock]] turns that into
   * an error: a `_MAINT` marker at the index root is created when
   * compaction starts and removed when it COMPLETES; every read/write
-  * face calls [[assertNotInMaintenance]] and fails loudly while it is
-  * present. A crashed compaction deliberately LEAVES the marker (the
-  * index may be mid-rewrite — probes must keep failing), and the next
+  * face opens a [[StoreRoot]], which runs [[assertNotInMaintenance]],
+  * and fails loudly while it is present. A crashed compaction
+  * deliberately LEAVES the marker (the index may be mid-rewrite —
+  * probes must keep failing), and the next
   * compaction refuses to start on the stale marker unless the caller
   * passes `takeover = true`, asserting no other maintenance is live.
   * A FULL rebuild also clears the marker: it overwrites every table,
@@ -56,7 +57,7 @@ private[graft] object AtomicBatches {
     * index.
     */
   def maintenanceActive(spark: SparkSession, indexPath: String): Boolean = {
-    val (fs, _) = fsOf(spark, indexPath)
+    val fs = StoreRoot.fs(spark, indexPath)
     fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/_MAINT"))
   }
 
@@ -65,7 +66,7 @@ private[graft] object AtomicBatches {
     */
   def maintenanceKind(spark: SparkSession, indexPath: String)
       : Option[String] = {
-    val (fs, _) = fsOf(spark, indexPath)
+    val fs = StoreRoot.fs(spark, indexPath)
     val m = new org.apache.hadoop.fs.Path(s"$indexPath/_MAINT")
     if (!fs.exists(m)) None
     else try {
@@ -94,9 +95,10 @@ private[graft] object AtomicBatches {
     out.close()
   }
 
-  /** Loud guard every probe/delete/append face places before touching
-    * an index's tables — `face` names the caller in the error, and the
-    * message names the right recovery for the marker's TYPE.
+  /** Loud guard of every probe/delete/append face, run once per
+    * [[StoreRoot]] before any table is read — `face` names the caller in
+    * the error, and the message names the right recovery for the
+    * marker's TYPE.
     */
   def assertNotInMaintenance(spark: SparkSession, indexPath: String,
       face: String): Unit =
@@ -129,7 +131,7 @@ private[graft] object AtomicBatches {
     */
   def withMaintenanceLock[T](spark: SparkSession, indexPath: String,
       takeover: Boolean)(body: => T): T = {
-    val (fs, _) = fsOf(spark, indexPath)
+    val fs = StoreRoot.fs(spark, indexPath)
     val m = new org.apache.hadoop.fs.Path(s"$indexPath/_MAINT")
     maintenanceKind(spark, indexPath) match {
       case Some(KindRebuild) => throw new IllegalArgumentException(
@@ -164,7 +166,7 @@ private[graft] object AtomicBatches {
     * interrupted compaction left behind moot.
     */
   def clearMaintenance(spark: SparkSession, indexPath: String): Unit = {
-    val (fs, _) = fsOf(spark, indexPath)
+    val fs = StoreRoot.fs(spark, indexPath)
     val m = new org.apache.hadoop.fs.Path(s"$indexPath/_MAINT")
     if (fs.exists(m)) fs.delete(m, false)
   }
@@ -195,7 +197,7 @@ private[graft] object AtomicBatches {
     */
   def withRebuildMarker[T](spark: SparkSession, indexPath: String)
       (body: => T): T = {
-    val (fs, _) = fsOf(spark, indexPath)
+    val fs = StoreRoot.fs(spark, indexPath)
     val m = new org.apache.hadoop.fs.Path(s"$indexPath/_MAINT")
     createMarker(fs, m, KindRebuild, overwrite = true)
     val out = body
@@ -203,17 +205,12 @@ private[graft] object AtomicBatches {
     out
   }
 
-  private def fsOf(spark: SparkSession, root: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Delete crashed (uncommitted) batch directories under `root` —
     * invisible garbage from a failed staging attempt.
     */
   def sweepUncommitted(spark: SparkSession, root: String): Unit = {
-    val (fs, r) = fsOf(spark, root)
+    val (fs, r) =
+      (StoreRoot.fs(spark, root), new org.apache.hadoop.fs.Path(root))
     if (fs.exists(r)) fs.listStatus(r).foreach { st =>
       if (st.isDirectory &&
           !fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_COMMIT")))
@@ -223,7 +220,8 @@ private[graft] object AtomicBatches {
 
   /** The committed batch directories under `root` (marker exists). */
   def committedDirs(spark: SparkSession, root: String): Seq[String] = {
-    val (fs, r) = fsOf(spark, root)
+    val (fs, r) =
+      (StoreRoot.fs(spark, root), new org.apache.hadoop.fs.Path(root))
     if (!fs.exists(r)) Seq.empty
     else fs.listStatus(r).toSeq
       .filter(st => st.isDirectory &&
@@ -235,7 +233,8 @@ private[graft] object AtomicBatches {
     * none exist).
     */
   def nextBatchN(spark: SparkSession, root: String): Long = {
-    val (fs, r) = fsOf(spark, root)
+    val (fs, r) =
+      (StoreRoot.fs(spark, root), new org.apache.hadoop.fs.Path(root))
     (Seq(-1L) ++ (if (fs.exists(r))
       fs.listStatus(r).toSeq.flatMap(st =>
         scala.util.Try(st.getPath.getName.toLong).toOption)
@@ -244,7 +243,7 @@ private[graft] object AtomicBatches {
 
   /** The atomic commit point: one zero-byte marker create. */
   def commit(spark: SparkSession, batchDir: String): Unit = {
-    val (fs, _) = fsOf(spark, batchDir)
+    val fs = StoreRoot.fs(spark, batchDir)
     fs.create(new org.apache.hadoop.fs.Path(s"$batchDir/_COMMIT"), true)
       .close()
   }
@@ -270,7 +269,7 @@ private[graft] object AtomicBatches {
     */
   def swapCommittedStage(spark: SparkSession, path: String,
       nextDir: String, tableNames: Seq[String]): Unit = {
-    val (fs, _) = fsOf(spark, nextDir)
+    val fs = StoreRoot.fs(spark, nextDir)
     tableNames.foreach { name =>
       val staged = new org.apache.hadoop.fs.Path(s"$nextDir/$name")
       if (fs.exists(staged)) {
@@ -302,7 +301,7 @@ private[graft] object AtomicBatches {
       dead: org.apache.spark.sql.Column, outColumns: Seq[String],
       sortWithin: Option[String] = None): Unit = {
     import org.apache.spark.sql.functions.col
-    val (fs, _) = fsOf(spark, path)
+    val fs = StoreRoot.fs(spark, path)
     val withP = store.withColumn("__pv", col(partitionCol).cast("long"))
     val touched = withP.filter(dead).select(col("__pv")).distinct()
       .collect().map(_.getLong(0)).sorted

@@ -235,9 +235,9 @@ object Classifier {
   def nbModelAppend(newDocs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val spark = newDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "nbModelAppend")
+    val root = nbLedger.open(spark, path, "nbModelAppend")
     AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
-    CountStore.requireFresh(nbLedger, newDocs, idCol, textCol, path,
+    CountStore.requireFresh(nbLedger, root, newDocs, idCol, textCol,
       "nbModelAppend")
     CountStore.stageDelta(spark, path, nbModelTables(newDocs, idCol, textCol))
   }
@@ -262,9 +262,9 @@ object Classifier {
   def nbModelAppendStream(newDocs: DataFrame, idCol: String,
       textCol: String, path: String, batchId: Long): Boolean = {
     val spark = newDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "nbModelAppendStream")
+    val root = nbLedger.open(spark, path, "nbModelAppendStream")
     if (CountStore.streamBatchCommitted(spark, path, batchId)) return false
-    CountStore.requireFresh(nbLedger, newDocs, idCol, textCol, path,
+    CountStore.requireFresh(nbLedger, root, newDocs, idCol, textCol,
       "nbModelAppendStream")
     CountStore.stageStreamDelta(spark, path, batchId,
       nbModelTables(newDocs, idCol, textCol))
@@ -285,7 +285,7 @@ object Classifier {
   def nbModelDelete(victimDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     CountStore.stageDelete(nbLedger, victimDocs, idCol, textCol, path)(
-      nbModelTables(_, idCol, textCol, sign = -1))
+      (_, victims) => nbModelTables(victims, idCol, textCol, sign = -1))
 
   /** AUDIT face: the ids whose counts still influence the model — one
     * `id` column, lazily corpus-sized ([[CountStore.presentIds]], the
@@ -308,8 +308,8 @@ object Classifier {
     * identical, the oracle contract).
     */
   def nbModelAsLlr(spark: SparkSession, path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path, "nbModelAsLlr")
-    val counts = CountStore.fold(spark, path, "counts").groupBy("term")
+    val root = nbLedger.open(spark, path, "nbModelAsLlr")
+    val counts = CountStore.fold(root, "counts").groupBy("term")
       .agg(sum(col("c_pos")).as("c_pos"), sum(col("c_neg")).as("c_neg"))
       .filter(col("c_pos") + col("c_neg") > 0)
       .localCheckpoint(true)
@@ -323,7 +323,7 @@ object Classifier {
       () => t = counts.agg(
         sum("c_pos").as("t_pos"), sum("c_neg").as("t_neg"),
         count(lit(1)).as("v")).head(),
-      () => d = CountStore.fold(spark, path, "stats")
+      () => d = CountStore.fold(root, "stats")
         .agg(sum("d_pos").as("d_pos"), sum("d_neg").as("d_neg")).head()))(
       _.apply())
     def l(i: Int): Long = if (t.isNullAt(i)) 0L else t.getLong(i)
@@ -360,12 +360,12 @@ object Classifier {
       takeover: Boolean = false): Unit =
     CountStore.compactSwap(spark, path, takeover, nbLedger,
       Seq("counts", "stats")) {
-      case "counts" =>
-        CountStore.fold(spark, path, "counts").groupBy("term")
+      case (root, "counts") =>
+        CountStore.fold(root, "counts").groupBy("term")
           .agg(sum(col("c_pos")).as("c_pos"), sum(col("c_neg")).as("c_neg"))
           .filter(col("c_pos") + col("c_neg") > 0)
-      case "stats" =>
-        CountStore.fold(spark, path, "stats")
+      case (root, "stats") =>
+        CountStore.fold(root, "stats")
           .agg(coalesce(sum("d_pos"), lit(0L)).as("d_pos"),
             coalesce(sum("d_neg"), lit(0L)).as("d_neg"))
           .repartition(1)

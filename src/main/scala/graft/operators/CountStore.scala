@@ -40,11 +40,6 @@ import graft.Frames
   */
 private[graft] object CountStore {
 
-  private def fsOf(spark: SparkSession, path: String)
-      : org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Loud guard against INTRA-batch duplicate keys — the corruption the
     * fresh-ids ledger guard cannot see: the table builders emit one +1
     * ledger row and one count contribution per input ROW, so a batch
@@ -109,7 +104,7 @@ private[graft] object CountStore {
       // write order never mattered here: any crash inside the marker
       // demands a full rebuild
       writeTables(path, tables)
-      val fs = fsOf(spark, path)
+      val fs = StoreRoot.fs(spark, path)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/deltas"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/base_next"), true)
     }
@@ -140,11 +135,8 @@ private[graft] object CountStore {
     }
 
   /** One table read across base + every committed delta batch. */
-  def fold(spark: SparkSession, path: String, table: String): DataFrame = {
-    val deltas = AtomicBatches.committedDirs(spark, s"$path/deltas")
-    spark.read.parquet(
-      s"$path/$table" +: deltas.map(d => s"$d/$table"): _*)
-  }
+  def fold(root: StoreRoot, table: String): DataFrame =
+    root.read(table, root.committed("deltas"))
 
   /** A store's membership ledger layout: the `members` table's key
     * columns (`id` first — DSIR adds `role`) and the per-key columns its
@@ -157,15 +149,19 @@ private[graft] object CountStore {
       faces: String) {
     require(keys.headOption.contains("id") && carried.contains("text_md5"),
       "a ledger is keyed by id first and carries text_md5")
+
+    /** The store's handle for `face`; its write face rebuilds it. */
+    def open(spark: SparkSession, path: String, face: String): StoreRoot =
+      new StoreRoot(spark, path, face, s"${faces}Write")
   }
 
   // the ONE present rule: a key influences the model while Σ mult > 0.
   // `carried` re-reads the key's pinned +1 row via max() — a present key
   // has exactly one +1 row and no −1 row, because the append guard
   // refuses re-ingestion of any key the ledger still holds
-  private def present(spark: SparkSession, path: String, ledger: Ledger,
+  private def present(root: StoreRoot, ledger: Ledger,
       carried: Seq[String]): DataFrame =
-    fold(spark, path, "members").groupBy(ledger.keys.map(col): _*)
+    fold(root, "members").groupBy(ledger.keys.map(col): _*)
       .agg(sum(col("mult")).as("__m"), carried.map(c => max(col(c)).as(c)): _*)
       .filter(col("__m") > 0)
       .select((ledger.keys ++ carried).map(col): _*)
@@ -176,11 +172,9 @@ private[graft] object CountStore {
     * id [[stageDelete]] subtracted no longer appears, compacted or not.
     */
   def presentIds(spark: SparkSession, path: String,
-      ledger: Ledger): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path,
-      s"${ledger.faces}PresentIds")
-    present(spark, path, ledger, Nil).select("id").distinct()
-  }
+      ledger: Ledger): DataFrame =
+    present(ledger.open(spark, path, s"${ledger.faces}PresentIds"), ledger,
+      Nil).select("id").distinct()
 
   /** Loud guard for the append faces, run BEFORE anything is staged:
     * the batch's non-null-text rows are keyed by `id` plus `keyValues`
@@ -203,8 +197,8 @@ private[graft] object CountStore {
     * The ledger side broadcasts the BOUNDED batch; the other direction
     * would broadcast a corpus-sized id set.
     */
-  def requireFresh(ledger: Ledger, docs: DataFrame, idCol: String,
-      textCol: String, path: String, face: String,
+  def requireFresh(ledger: Ledger, root: StoreRoot, docs: DataFrame,
+      idCol: String, textCol: String, face: String,
       keyValues: Column*): Unit = {
     val extra = ledger.keys.tail
     require(keyValues.size == extra.size,
@@ -217,7 +211,7 @@ private[graft] object CountStore {
       .select(lit("dup").as("__k"), col("__key").as("__v"))
     val sameKey =
       extra.map(k => col(k) === col(s"__b_$k")).foldLeft(lit(true))(_ && _)
-    val clash = fold(docs.sparkSession, path, "members")
+    val clash = fold(root, "members")
       .select((ledger.keys :+ "text_md5").map(col): _*)
       .join(broadcast(batch.select((col("id") +:
           extra.map(k => col(k).as(s"__b_$k"))) :+ col("__bmd5"): _*)
@@ -232,16 +226,17 @@ private[graft] object CountStore {
     raiseDuplicateKeys(face, ledger.keys, tagged("dup"))
     val same = tagged("same")
     require(same.isEmpty,
-      s"$face to $path includes ids already in the model's membership " +
-      s"ledger (e.g. ${same.mkString(", ")}): re-ingesting an id already " +
+      s"$face to ${root.path} includes ids already in the model's " +
+      s"membership ledger (e.g. ${same.mkString(", ")}): re-ingesting an " +
+      "id already " +
       s"in the ledger under the same ${ledger.keys.mkString("(", ", ", ")")} " +
       "key would corrupt the counts (and a formerly-deleted id's ledger " +
       s"rows are retired only by ${ledger.faces}Compact). Compact first, " +
       s"or rebuild with ${ledger.faces}Write.")
     val cross = tagged("cross")
     require(cross.isEmpty,
-      s"$face to $path: ids ${cross.mkString(", ")} are in the ledger " +
-      s"under the other ${extra.mkString("/")} with DIFFERENT text — a " +
+      s"$face to ${root.path}: ids ${cross.mkString(", ")} are in the " +
+      s"ledger under the other ${extra.mkString("/")} with DIFFERENT text — a " +
       "takedown subtracts one submitted text from every key an id holds, " +
       "so divergent texts would make these ids undeletable. Ingest " +
       s"byte-identical text under every key, or rebuild with " +
@@ -263,17 +258,17 @@ private[graft] object CountStore {
     */
   def stageDelete(ledger: Ledger, victimDocs: DataFrame, idCol: String,
       textCol: String, path: String)(
-      tables: DataFrame => Seq[(String, DataFrame)]): Unit = {
+      tables: (StoreRoot, DataFrame) => Seq[(String, DataFrame)]): Unit = {
     val spark = victimDocs.sparkSession
     val face = s"${ledger.faces}Delete"
-    AtomicBatches.assertNotInMaintenance(spark, path, face)
+    val root = ledger.open(spark, path, face)
     AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
     Frames.scoped { f =>
       // drift check + every delta table read it
       val victims = f.checkpoint(victimDocs.filter(col(textCol).isNotNull)
         .select(col(idCol).as("id"), col(textCol).as("__text"))
         .dropDuplicates("id")
-        .join(present(spark, path, ledger, Seq("text_md5")), Seq("id")))
+        .join(present(root, ledger, Seq("text_md5")), Seq("id")))
       // the emptiness probe and the drift check are independent actions
       // on the checkpointed victims frame — one concurrent round trip
       @volatile var empty = false
@@ -289,7 +284,7 @@ private[graft] object CountStore {
         "subtracting drifted counts would silently corrupt the model. " +
         s"Submit the ingested text, or rebuild with ${ledger.faces}Write " +
         "over the surviving corpus.")
-      if (!empty) stageDelta(spark, path, tables(victims.select(
+      if (!empty) stageDelta(spark, path, tables(root, victims.select(
         (col("id").as(idCol) +: col("__text").as(textCol) +:
           ledger.keys.tail.map(col)): _*)))
     }
@@ -302,7 +297,7 @@ private[graft] object CountStore {
     */
   def streamBatchCommitted(spark: SparkSession, path: String,
       batchId: Long): Boolean =
-    fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(
+    StoreRoot.fs(spark, path).exists(new org.apache.hadoop.fs.Path(
       s"$path/deltas/s$batchId/_COMMIT"))
 
   /** The REPLAY-SAFE staging face for stream-driven ingestion
@@ -322,7 +317,7 @@ private[graft] object CountStore {
   def stageStreamDelta(spark: SparkSession, path: String, batchId: Long,
       tables: Seq[(String, DataFrame)]): Boolean = {
     require(batchId >= 0, "batchId must be non-negative")
-    val fs = fsOf(spark, path)
+    val fs = StoreRoot.fs(spark, path)
     val bdir = s"$path/deltas/s$batchId"
     if (streamBatchCommitted(spark, path, batchId)) return false
     fs.delete(new org.apache.hadoop.fs.Path(bdir), true)
@@ -332,22 +327,24 @@ private[graft] object CountStore {
   }
 
   /** Staged-swap compaction: compute each named table's folded
-    * replacement via `fresh` and the ledger's fold (one +1 row per
-    * present key, carrying the ledger's pinned columns) as `members`,
+    * replacement via `fresh` (handed the lock holder's handle) and the
+    * ledger's fold (one +1 row per present key, carrying the ledger's
+    * pinned columns) as `members`,
     * commit the stage, then idempotently swap it in and retire the delta
     * channel. Tables NOT named (e.g. a frozen `meta`) are left untouched
     * — deltas never carry them.
     */
   def compactSwap(spark: SparkSession, path: String, takeover: Boolean,
       ledger: Ledger, tableNames: Seq[String])(
-      fresh: String => DataFrame): Unit = {
+      fresh: (StoreRoot, String) => DataFrame): Unit = {
     val staged = tableNames :+ "members"
-    val fs = fsOf(spark, path)
+    val fs = StoreRoot.fs(spark, path)
     val nextDir = s"$path/base_next"
     if (AtomicBatches.committedDirs(spark, s"$path/deltas").isEmpty &&
         !AtomicBatches.maintenanceActive(spark, path) &&
         !fs.exists(new org.apache.hadoop.fs.Path(nextDir))) return
-    AtomicBatches.withMaintenanceLock(spark, path, takeover) {
+    StoreRoot.maintain(spark, path, takeover, s"${ledger.faces}Compact",
+        s"${ledger.faces}Write") { root =>
       val committed = fs.exists(
         new org.apache.hadoop.fs.Path(s"$nextDir/_COMMIT"))
       if (!committed) {
@@ -356,9 +353,8 @@ private[graft] object CountStore {
         // before its _COMMIT below, so they run concurrently too
         Takedown.inParallel(staged) { name =>
           val df = if (name == "members")
-            present(spark, path, ledger, ledger.carried)
-              .withColumn("mult", lit(1))
-          else fresh(name)
+            present(root, ledger, ledger.carried).withColumn("mult", lit(1))
+          else fresh(root, name)
           df.write.parquet(s"$nextDir/$name")
         }
         AtomicBatches.commit(spark, nextDir)

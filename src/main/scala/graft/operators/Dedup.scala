@@ -839,12 +839,9 @@ object Dedup {
     */
   def jaccardPrefixIndexDelete(ids: DataFrame, idCol: String,
       path: String): Unit = {
-    val spark = ids.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path,
-      "jaccardPrefixIndexDelete")
-    spark.read.parquet(s"$path/meta") // loud on a non-index path
-    VictimChannel.stage(spark, path,
-      ids.select(col(idCol).cast("long")).distinct())()
+    val root = prefixRoot(ids.sparkSession, path, "jaccardPrefixIndexDelete")
+    root.read("meta") // loud on a non-index path
+    VictimChannel.stage(root, ids.select(col(idCol).cast("long")).distinct())()
   }
 
   /** AUDIT face: the ids whose docs a prefix-index probe can still pair
@@ -853,10 +850,8 @@ object Dedup {
     */
   def jaccardPrefixPresentIds(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path,
-      "jaccardPrefixPresentIds")
-    new VictimChannel(spark, path)
-      .minus(spark.read.parquet(s"$path/docs").select(col("__id")), "__id")
+    val root = prefixRoot(spark, path, "jaccardPrefixPresentIds")
+    root.victims.minus(root.read("docs").select(col("__id")), "__id")
       .select(col("__id").as("id"))
   }
 
@@ -873,24 +868,24 @@ object Dedup {
     */
   def jaccardPrefixIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    VictimChannel.compact(spark, path, takeover) { v =>
+    VictimChannel.compact(spark, path, takeover, "jaccardPrefixIndexCompact",
+        "jaccardPrefixIndexWrite") { (root, v) =>
       // the two rewrite chains touch disjoint tables and read only the
       // checkpointed victim frame — concurrent under the _MAINT lock
       // (the CountStore.compactSwap stage-build judgment)
       Takedown.inParallel(Seq("docs" -> "__id", "prefix" -> "__pid")) {
         case (table, idc) =>
           // checkpoint BEFORE overwriting the table being read
-          Frames.scoped(_.checkpoint(spark.read.parquet(s"$path/$table")
+          Frames.scoped(_.checkpoint(root.read(table)
             .join(v.select(col("id").as(idc)), Seq(idc), "left_anti"))
             .write.mode("overwrite").parquet(s"$path/$table"))
       }
     }
 
-  private def readPrefixMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Double) = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    (m.getAs[Int]("shingle_n"), m.getAs[Double]("threshold"))
-  }
+  private val prefixRoot = StoreRoot.of("jaccardPrefixIndexWrite")
+
+  private def prefixMeta(root: StoreRoot): (Int, Double) =
+    (root.meta.getAs[Int]("shingle_n"), root.meta.getAs[Double]("threshold"))
 
   /** Append a new batch to a [[jaccardPrefixIndexWrite]] index: shingle
     * sets to `docs`, prefix rows UNDER THE FROZEN ORDER to `prefix`, and
@@ -901,15 +896,15 @@ object Dedup {
   def jaccardPrefixIndexAppend(newDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
     requireIntegralId(newDocs, idCol, "jaccardPrefixIndexAppend")
-    val spark = newDocs.sparkSession
-    VictimChannel.requireFresh(newDocs, idCol, path,
+    val root = prefixRoot(newDocs.sparkSession, path,
       "jaccardPrefixIndexAppend")
-    val (shingleN, threshold) = readPrefixMeta(spark, path)
+    VictimChannel.requireFresh(root, newDocs, idCol)
+    val (shingleN, threshold) = prefixMeta(root)
     Frames.scoped { f =>
       val shingled = f.checkpoint(prefixShingled(newDocs, idCol, textCol,
         shingleN).select(col(idCol).cast("long").as("__id"), col("sh")))
       val toks = shingled.select(col("__id"), explode(col("sh")).as("tok"))
-      val frozen = spark.read.parquet(s"$path/df")
+      val frozen = root.read("df")
       // the three appends are independent jobs over the checkpointed
       // shingle frame (+ the immutable frozen df) — concurrent, the
       // bm25IndexOut append-face judgment: a mid-append crash was equally
@@ -941,10 +936,9 @@ object Dedup {
   def jaccardJoinPrefixIncremental(newDocs: DataFrame, idCol: String,
       textCol: String, path: String, threshold: Double): DataFrame = {
     requireIntegralId(newDocs, idCol, "jaccardJoinPrefixIncremental")
-    val spark = newDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path,
+    val root = prefixRoot(newDocs.sparkSession, path,
       "jaccardJoinPrefixIncremental")
-    val (shingleN, buildT) = readPrefixMeta(spark, path)
+    val (shingleN, buildT) = prefixMeta(root)
     require(threshold >= buildT && threshold <= 1.0,
       s"probe threshold $threshold must be in [index build threshold " +
         s"$buildT, 1] — stored prefixes are too short below it")
@@ -953,7 +947,7 @@ object Dedup {
     val shNew = prefixShingled(newDocs, idCol, textCol, shingleN)
       .select(col(idCol).cast("long").as("__id"), col("sh"))
     val toksNew = shNew.select(col("__id"), explode(col("sh")).as("tok"))
-    val frozen = spark.read.parquet(s"$path/df")
+    val frozen = root.read("df")
     // new-batch prefixes at the BUILD threshold (not the probe one): the
     // index side's stored prefixes have build-threshold length, and the
     // prefix theorem needs the SHARED token to fall in both prefixes —
@@ -965,8 +959,7 @@ object Dedup {
       // expensive collect_list/sort agg (the jaccardJoinPrefix judgment)
     // takedown-aware: deleted docs leave the candidate side immediately
     // (one broadcast anti-join against the bounded victim list)
-    val victims = new VictimChannel(spark, path)
-    val prefOld = victims.minus(spark.read.parquet(s"$path/prefix"), "__pid")
+    val prefOld = root.victims.minus(root.read("prefix"), "__pid")
     // new×corpus (both orientations — corpus ids can sit on either side
     // of the id order) ∪ new×new, one union of prefix rows with a flag
     val all = prefOld.withColumn("__new", lit(false))
@@ -994,7 +987,7 @@ object Dedup {
     // ...and the verify side (belt-and-braces: no candidate references a
     // victim once the prefix side is pruned, but the dropped rows keep
     // the picked-set deterministic if one ever did)
-    val shById = victims.minus(spark.read.parquet(s"$path/docs"), "__id")
+    val shById = root.victims.minus(root.read("docs"), "__id")
       .withColumn("__new", lit(false))
       .unionByName(shNew.withColumn("__new", lit(true)))
       .withColumn("__rn", row_number().over(pick))
@@ -1147,7 +1140,7 @@ object Dedup {
     val cents = model.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
     df.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
+      .select(col(idCol), V.doubles(df, vecCol).as("v"))
       .select(col(idCol), col("v"), Embeddings.nearest(col("v"), cents))
   }
 

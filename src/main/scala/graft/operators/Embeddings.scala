@@ -199,7 +199,7 @@ object Embeddings {
     require(m >= 1 && dim % m == 0, "m must divide dim")
     require(k >= 1 && iters >= 0, "k >= 1, iters >= 0")
     val sub = dim / m
-    val v = col(vecCol).cast("array<double>")
+    val v = graft.functions.VectorFunctions.doubles(df, vecCol)
     // ALL m codebooks train from one frame in ONE aggregation pass per
     // Lloyd iteration (the native PqEncode expression computes every
     // subspace's argmin in one tight loop, posexplode fans the codes out
@@ -367,31 +367,33 @@ object Embeddings {
   // ---------------------------------------------------------------
   private object ModelStore {
 
-    def fsOf(spark: org.apache.spark.sql.SparkSession, path: String)
-        : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
-
     private def staleMarker(path: String) = s"$path/_STALE"
 
     /** True while the store carries tombstoned-but-not-yet-retrained
       * victim influence (the [[delete]] fence).
       */
     def stale(spark: org.apache.spark.sql.SparkSession,
-        path: String): Boolean = {
-      val (fs, _) = fsOf(spark, path)
-      fs.exists(new org.apache.hadoop.fs.Path(staleMarker(path)))
-    }
+        path: String): Boolean =
+      StoreRoot.fs(spark, path)
+        .exists(new org.apache.hadoop.fs.Path(staleMarker(path)))
 
-    def assertServable(spark: org.apache.spark.sql.SparkSession,
-        path: String, face: String, compactFace: String): Unit = {
-      AtomicBatches.assertNotInMaintenance(spark, path, face)
+    /** The store's handle for `face` of the `kind` ("kmeansModel" or
+      * "pqModel") store.
+      */
+    def open(spark: org.apache.spark.sql.SparkSession, path: String,
+        kind: String, face: String): StoreRoot =
+      new StoreRoot(spark, path, face, s"${kind}Write")
+
+    /** The served `table` — refused while the model is victim-stale. */
+    def served(spark: org.apache.spark.sql.SparkSession, path: String,
+        kind: String, face: String, table: String): DataFrame = {
+      val root = open(spark, path, kind, face)
       require(!stale(spark, path),
         s"$face: model at $path is VICTIM-STALE (_STALE fence " +
         "present): a takedown tombstoned training rows and the model " +
-        s"still embeds them. Run $compactFace " +
+        s"still embeds them. Run ${kind}Compact " +
         "(retrain-over-survivors) to produce a servable model.")
+      root.read(table)
     }
 
     /** Full (re)build: manifest + recipe + the model table, under the
@@ -405,13 +407,13 @@ object Embeddings {
         manifest: DataFrame, modelTable: (String, DataFrame),
         meta: DataFrame): Unit =
       AtomicBatches.withRebuildMarker(spark, path) {
-        val (fs, _) = fsOf(spark, path)
         modelTable._2.write.mode("overwrite")
           .parquet(s"$path/${modelTable._1}")
         manifest.write.mode("overwrite").parquet(s"$path/manifest")
         meta.write.mode("overwrite").parquet(s"$path/meta")
         VictimChannel.retire(spark, path)
-        fs.delete(new org.apache.hadoop.fs.Path(staleMarker(path)), false)
+        StoreRoot.fs(spark, path)
+          .delete(new org.apache.hadoop.fs.Path(staleMarker(path)), false)
       }
 
     /** Takedown face: fence, then tombstone — see the section note.
@@ -422,9 +424,9 @@ object Embeddings {
       * absent from the manifest are no-ops; re-delivery is idempotent.
       */
     def delete(victims: DataFrame, idCol: String, path: String,
-        face: String): Unit = Frames.scoped { f =>
+        kind: String): Unit = Frames.scoped { f =>
       val spark = victims.sparkSession
-      AtomicBatches.assertNotInMaintenance(spark, path, face)
+      val root = open(spark, path, kind, s"${kind}Delete")
       // counted, then joined
       val vids = f.checkpoint(
         victims.select(col(idCol).cast("long").as("id")).distinct())
@@ -438,14 +440,14 @@ object Embeddings {
       val side = if (thresholdBytes > 0 && vids.count() <= thresholdBytes / 8)
         broadcast(vids) else vids
       // existence probe + tombstone write read it
-      val hit = f.checkpoint(spark.read.parquet(s"$path/manifest")
+      val hit = f.checkpoint(root.read("manifest")
         .select("id").join(side, Seq("id"), "left_semi"))
       f.release(vids)
       if (hit.limit(1).count() > 0) {
-        val (fs, _) = fsOf(spark, path)
-        fs.create(new org.apache.hadoop.fs.Path(staleMarker(path)), true)
+        StoreRoot.fs(spark, path)
+          .create(new org.apache.hadoop.fs.Path(staleMarker(path)), true)
           .close()
-        VictimChannel.stage(spark, path, hit)()
+        VictimChannel.stage(root, hit)()
       }
     }
 
@@ -453,27 +455,27 @@ object Embeddings {
       * read-visibility rule (see the section note).
       */
     def presentIds(spark: org.apache.spark.sql.SparkSession,
-        path: String, face: String): DataFrame = {
-      AtomicBatches.assertNotInMaintenance(spark, path, face)
-      new VictimChannel(spark, path)
-        .minus(spark.read.parquet(s"$path/manifest").select("id"), "id")
+        path: String, kind: String): DataFrame = {
+      val root = open(spark, path, kind, s"${kind}PresentIds")
+      root.victims.minus(root.read("manifest").select("id"), "id")
     }
 
     /** Physical removal = RETRAIN over the manifest survivors, then
       * swap the manifest to the survivor set, lift the fence and retire
       * the tombstones ([[VictimChannel.compact]]). `retrain` maps the
-      * survivor manifest frame to the new model table's rows (each face
-      * reads its own recipe from `path/meta` and handles the
-      * empty-survivors edge). No-op when nothing is tombstoned. Runs
+      * survivor manifest frame and the store's `meta` recipe to the new
+      * model table's rows (each face handles the empty-survivors
+      * edge). No-op when nothing is tombstoned. Runs
       * under the `_MAINT` lock; a crashed pass re-runs with
       * `takeover = true` (every step is a pure function of the current
       * tables — the manifest swap is recovered from `manifest_next` if a
       * crash landed between its delete and rename).
       */
     def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-        takeover: Boolean, modelTable: String)
-        (retrain: DataFrame => DataFrame): Unit = {
-      val (fs, _) = fsOf(spark, path)
+        takeover: Boolean, kind: String, modelTable: String)
+        (retrain: (DataFrame, org.apache.spark.sql.Row) => DataFrame)
+        : Unit = {
+      val fs = StoreRoot.fs(spark, path)
       val mPath = new org.apache.hadoop.fs.Path(s"$path/manifest")
       val mNext = new org.apache.hadoop.fs.Path(s"$path/manifest_next")
       // fence WITHOUT tombstones = a delete crashed between fence-up
@@ -483,22 +485,23 @@ object Embeddings {
       // retraining over the full manifest would lift the fence while
       // every victim still influences the model — refuse, the recovery
       // is re-running the forget (re-delivery is safe)
-      val pending = new VictimChannel(spark, path).batches.nonEmpty
-      require(!stale(spark, path) || pending || fs.exists(mNext),
+      require(!stale(spark, path) || VictimChannel.pending(spark, path) ||
+          fs.exists(mNext),
         s"model store at $path is FENCED (_STALE) with no tombstones " +
         "recorded: a delete crashed between the fence and its tombstone " +
         "write, so the victim set is unknown — re-run the forget (its " +
         "re-delivery is idempotent) before compacting; retraining now " +
         "would lift the fence with every victim still in the model.")
-      VictimChannel.compact(spark, path, takeover) { victims =>
+      VictimChannel.compact(spark, path, takeover, s"${kind}Compact",
+          s"${kind}Write") { (root, victims) =>
         if (!fs.exists(mPath) && fs.exists(mNext) &&
             !fs.rename(mNext, mPath))
           throw new java.io.IOException(
             s"manifest swap recovery rename $mNext -> $mPath failed")
-        spark.read.parquet(mPath.toString)
+        root.read("manifest")
           .join(broadcast(victims), Seq("id"), "left_anti")
           .write.mode("overwrite").parquet(mNext.toString)
-        retrain(spark.read.parquet(mNext.toString))
+        retrain(root.read("manifest_next"), root.meta)
           .write.mode("overwrite").parquet(s"$path/$modelTable")
         if (!fs.delete(mPath, true) || !fs.rename(mNext, mPath))
           throw new java.io.IOException(
@@ -558,9 +561,8 @@ object Embeddings {
     */
   def kmeansModelCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    ModelStore.assertServable(spark, path, "kmeansModelCentroids",
-      "kmeansModelCompact")
-    spark.read.parquet(s"$path/centroids").select("cluster", "centroid")
+    ModelStore.served(spark, path, "kmeansModel", "kmeansModelCentroids",
+      "centroids").select("cluster", "centroid")
   }
 
   /** [[kmeansAssign]] against the persisted store's current centroids
@@ -576,14 +578,14 @@ object Embeddings {
     */
   def kmeansModelDelete(victims: DataFrame, idCol: String,
       path: String): Unit =
-    ModelStore.delete(victims, idCol, path, "kmeansModelDelete")
+    ModelStore.delete(victims, idCol, path, "kmeansModel")
 
   /** Audit probe: manifest minus tombstoned victims
     * ([[ModelStore.presentIds]]).
     */
   def kmeansModelPresentIds(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    ModelStore.presentIds(spark, path, "kmeansModelPresentIds")
+    ModelStore.presentIds(spark, path, "kmeansModel")
 
   /** Retrain-over-survivors compaction ([[ModelStore.compact]]). An
     * all-victims manifest retrains to an EMPTY model (no training rows
@@ -592,8 +594,8 @@ object Embeddings {
     */
   def kmeansModelCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    ModelStore.compact(spark, path, takeover, "centroids") { survivors =>
-      val meta = spark.read.parquet(s"$path/meta").head()
+    ModelStore.compact(spark, path, takeover, "kmeansModel", "centroids") {
+      (survivors, meta) =>
       if (survivors.limit(1).count() == 0) {
         import spark.implicits._
         Seq.empty[(Int, Seq[Double])].toDF("cluster", "centroid")
@@ -633,10 +635,8 @@ object Embeddings {
     */
   def pqModelCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    ModelStore.assertServable(spark, path, "pqModelCodebooks",
-      "pqModelCompact")
-    spark.read.parquet(s"$path/codebooks")
-      .select("sub", "cluster", "centroid")
+    ModelStore.served(spark, path, "pqModel", "pqModelCodebooks",
+      "codebooks").select("sub", "cluster", "centroid")
   }
 
   /** [[pqEncode]] against the persisted store's current codebooks
@@ -649,12 +649,12 @@ object Embeddings {
   /** Takedown face: fence + tombstone ([[ModelStore.delete]]). */
   def pqModelDelete(victims: DataFrame, idCol: String,
       path: String): Unit =
-    ModelStore.delete(victims, idCol, path, "pqModelDelete")
+    ModelStore.delete(victims, idCol, path, "pqModel")
 
   /** Audit probe ([[ModelStore.presentIds]]). */
   def pqModelPresentIds(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    ModelStore.presentIds(spark, path, "pqModelPresentIds")
+    ModelStore.presentIds(spark, path, "pqModel")
 
   /** Retrain-over-survivors compaction ([[ModelStore.compact]]);
     * empty-survivors edge as in [[kmeansModelCompact]]. Anything
@@ -664,8 +664,8 @@ object Embeddings {
     */
   def pqModelCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    ModelStore.compact(spark, path, takeover, "codebooks") { survivors =>
-      val meta = spark.read.parquet(s"$path/meta").head()
+    ModelStore.compact(spark, path, takeover, "pqModel", "codebooks") {
+      (survivors, meta) =>
       if (survivors.limit(1).count() == 0) {
         import spark.implicits._
         Seq.empty[(Int, Int, Seq[Double])].toDF("sub", "cluster", "centroid")

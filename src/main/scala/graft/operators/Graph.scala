@@ -293,10 +293,8 @@ object Graph {
       }
       // a REBUILD invalidates every appended batch and any interrupted
       // compaction's stage: both retired only AFTER the new base lands
-      val spark = edges.sparkSession
-      val batchesRoot = new org.apache.hadoop.fs.Path(s"$path/batches")
-      val fs = batchesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(batchesRoot)) fs.delete(batchesRoot, true)
+      val fs = StoreRoot.fs(edges.sparkSession, path)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/batches"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/base_next"), true)
     }
 
@@ -327,7 +325,7 @@ object Graph {
   def trianglesIndexAppend(newEdges: DataFrame, srcCol: String,
       dstCol: String, path: String): Unit = Frames.scoped { f =>
     val spark = newEdges.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "trianglesIndexAppend")
+    val root = trianglesRoot(spark, path, "trianglesIndexAppend")
     // crash-safe append: both deltas land under one batch directory and
     // become visible ATOMICALLY via its _COMMIT marker — a crash
     // between the counts and edges writes can neither double-count (a
@@ -335,7 +333,7 @@ object Graph {
     // them and the crashed uncommitted directory is swept here) nor
     // under-count (readers never see a half-written batch)
     AtomicBatches.sweepUncommitted(spark, s"$path/batches")
-    val old = indexEdges(spark, path)
+    val old = indexEdges(root)
     val canon = f.checkpoint(canonicalUndirected(newEdges, srcCol, dstCol))
     // edge write + union + wedge build read it
     val delta = f.checkpoint(canon.join(old, Seq("a", "b"), "left_anti"))
@@ -411,9 +409,9 @@ object Graph {
   def trianglesIndexDelete(edges: DataFrame, srcCol: String,
       dstCol: String, path: String): Unit = Frames.scoped { f =>
     val spark = edges.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "trianglesIndexDelete")
+    val root = trianglesRoot(spark, path, "trianglesIndexDelete")
     AtomicBatches.sweepUncommitted(spark, s"$path/batches")
-    val cur = f.checkpoint(indexEdges(spark, path))
+    val cur = f.checkpoint(indexEdges(root))
     val canon = f.checkpoint(canonicalUndirected(edges, srcCol, dstCol))
     // only edges the index holds delete; re-sent deletions no-op;
     // the wedge build + removal write read it
@@ -487,8 +485,7 @@ object Graph {
     */
   def trianglesIndexDeleteNodes(ids: DataFrame, idCol: String,
       path: String): Unit = Frames.scoped { f =>
-    val spark = ids.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path,
+    val root = trianglesRoot(ids.sparkSession, path,
       "trianglesIndexDeleteNodes")
     // both endpoint semi-joins read it
     val v = f.checkpoint(
@@ -497,7 +494,7 @@ object Graph {
     // incident frame) trianglesIndexDelete's own join — checkpoint it
     // once so a slow-fold history (any prior delete) is not re-folded
     // three times per node takedown
-    val cur = f.checkpoint(indexEdges(spark, path))
+    val cur = f.checkpoint(indexEdges(root))
     val incident = cur
       .join(broadcast(v.select(col("__vid").as("a"))), Seq("a"), "left_semi")
       .unionByName(cur.join(
@@ -523,13 +520,13 @@ object Graph {
     */
   def trianglesIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreRoot.fs(spark, path)
     val nextDir = s"$path/base_next"
-    if (committedBatchDirs(spark, path).isEmpty &&
+    if (AtomicBatches.committedDirs(spark, s"$path/batches").isEmpty &&
         !AtomicBatches.maintenanceActive(spark, path) &&
         !fs.exists(new org.apache.hadoop.fs.Path(nextDir))) return
-    AtomicBatches.withMaintenanceLock(spark, path, takeover) {
+    StoreRoot.maintain(spark, path, takeover, "trianglesIndexCompact",
+        "trianglesIndexWrite") { root =>
       val committed = fs.exists(
         new org.apache.hadoop.fs.Path(s"$nextDir/_COMMIT"))
       if (!committed) {
@@ -539,9 +536,9 @@ object Graph {
         // (the CountStore.compactSwap stage-build judgment)
         fs.delete(new org.apache.hadoop.fs.Path(nextDir), true)
         Takedown.inParallel(Seq[() => Unit](
-          () => indexEdges(spark, path)
+          () => indexEdges(root)
             .write.parquet(s"$nextDir/edges"),
-          () => indexCounts(spark, path)
+          () => indexCounts(root)
             .groupBy("id").agg(sum(col("d_triangles")).as("d_triangles"))
             .filter(col("d_triangles") =!= 0L)
             .write.parquet(s"$nextDir/counts")))(_.apply())
@@ -556,15 +553,6 @@ object Graph {
     }
   }
 
-  /** The batch directories of a triangle index that are COMMITTED —
-    * the [[AtomicBatches]] protocol. Uncommitted directories are
-    * crashed append attempts: invisible to every reader, swept by the
-    * next append.
-    */
-  private def committedBatchDirs(
-      spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] =
-    AtomicBatches.committedDirs(spark, s"$path/batches")
-
   /** The index's full edge set. Append-only history is a plain union
     * (the fast path — no fold appears until a deletion exists); once
     * any committed batch carries a `removals` table, edge membership
@@ -574,30 +562,26 @@ object Graph {
     * after a re-add is absent — the cellsCurrent recency discipline on
     * edges.
     */
-  private def indexEdges(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val dirs = committedBatchDirs(spark, path)
+  private def indexEdges(root: StoreRoot): DataFrame = {
+    // committed batches only: an uncommitted directory is a crashed
+    // append attempt, invisible to every reader and swept by the next
+    val dirs = root.committed("batches")
+    val batch = dirs.map(d => d.split('/').last)
     // fast/slow split on one fs.exists per batch dir — building (and
     // discarding) per-dir DataFrames just to ask "any removals?" paid
     // 2N schema inferences on every probe of the 99% append-only case
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val anyRemovals = dirs.exists(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$d/removals")))
-    if (!anyRemovals)
+    if (!batch.exists(n => root.has(s"batches/$n/removals")))
       // append-only history: every committed batch has an edges table
-      spark.read.parquet(s"$path/edges" +: dirs.map(d => s"$d/edges"): _*)
+      root.read("edges", dirs)
     else {
-      val parts = dirs.map { d =>
-        (d.split('/').last.toLong,
-          Similarity.readParquetIfAny(spark, s"$d/edges"),
-          Similarity.readParquetIfAny(spark, s"$d/removals"))
+      val parts = batch.map { n =>
+        (n.toLong, root.side(s"batches/$n/edges"),
+          root.side(s"batches/$n/removals"))
       }
       def shape(df: DataFrame, n: Long, present: Boolean): DataFrame =
         df.select(col("a"), col("b"), lit(n).as("__n"),
           lit(present).as("__p"))
-      val all = (Seq(shape(spark.read.parquet(s"$path/edges"), -1L,
-          present = true)) ++
+      val all = (Seq(shape(root.read("edges"), -1L, present = true)) ++
         parts.flatMap { case (n, adds, rems) =>
           adds.map(shape(_, n, present = true)).toSeq ++
             rems.map(shape(_, n, present = false)).toSeq
@@ -611,10 +595,8 @@ object Graph {
   /** The index's per-batch count deltas, folded by the readers with
     * exact integer sums (order-invariant): base ∪ committed batches.
     */
-  private def indexCounts(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/counts" +:
-      committedBatchDirs(spark, path).map(d => s"$d/counts"): _*)
+  private def indexCounts(root: StoreRoot): DataFrame =
+    root.read("counts", root.committed("batches"))
 
   /** AUDIT face: the node ids the index's current edge set still
     * touches, as one `id` column — after [[trianglesIndexDeleteNodes]]
@@ -622,22 +604,23 @@ object Graph {
     * here ([[graft.operators.Takedown.audit]]'s triangles row).
     */
   def trianglesPresentNodes(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path,
-      "trianglesPresentNodes")
-    indexEdges(spark, path)
+      path: String): DataFrame =
+    indexEdges(trianglesRoot(spark, path, "trianglesPresentNodes"))
       .select(explode(array(col("a"), col("b"))).as("id")).distinct()
-  }
+
+  private val trianglesRoot = StoreRoot.of("trianglesIndexWrite")
 
   /** Per-vertex triangle counts from a persisted index: every vertex of
     * the stored edge set, zeros included — the same contract as
     * [[triangles]], without a recount.
     */
   def trianglesFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path, "trianglesFromIndex")
-    val e = indexEdges(spark, path)
-    val cnt = indexCounts(spark, path)
+      path: String): DataFrame =
+    trianglesOf(trianglesRoot(spark, path, "trianglesFromIndex"))
+
+  private def trianglesOf(root: StoreRoot): DataFrame = {
+    val e = indexEdges(root)
+    val cnt = indexCounts(root)
       .groupBy("id").agg(sum(col("d_triangles")).as("triangles"))
     e.select(explode(array(col("a"), col("b"))).as("id")).distinct()
       .join(cnt, Seq("id"), "left_outer")
@@ -661,12 +644,11 @@ object Graph {
     */
   def clusteringCoefFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path,
-      "clusteringCoefFromIndex")
-    val e = indexEdges(spark, path)
-    val deg = e.select(explode(array(col("a"), col("b"))).as("id"))
+    val root = trianglesRoot(spark, path, "clusteringCoefFromIndex")
+    val deg = indexEdges(root)
+      .select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    trianglesFromIndex(spark, path).join(deg, Seq("id"))
+    trianglesOf(root).join(deg, Seq("id"))
       .select(col("id"), col("triangles"), col("deg"),
         round(when(col("deg") >= 2,
           lit(2.0) * col("triangles") /

@@ -82,19 +82,17 @@ private[graft] object IvfLayout {
     * schema (a footer read, no data scan) — from the deltas' when the
     * base holds no rows. Fails loudly on an index with no rows at all.
     */
-  def of(spark: SparkSession, indexPath: String): IvfLayout = {
-    val stored = Similarity.readParquetIfAny(spark, s"$indexPath/cells")
-      .orElse(Similarity.readParquetIfAny(spark, s"$indexPath/deltas"))
-    require(stored.nonEmpty, s"no cells or deltas under $indexPath to " +
+  def of(root: StoreRoot): IvfLayout = {
+    val stored = root.side("cells").orElse(root.side("deltas"))
+    require(stored.nonEmpty, s"no cells or deltas under ${root.path} to " +
       "read the storage layout from - rebuild the index")
-    of(spark, indexPath, stored.get.columns)
+    of(root, stored.get.columns)
   }
 
   /** The layout of stored rows with `columns`. */
-  def of(spark: SparkSession, indexPath: String,
-      columns: Seq[String]): IvfLayout =
+  def of(root: StoreRoot, columns: Seq[String]): IvfLayout =
     if (columns.contains("codes"))
-      Pq(spark.read.parquet(s"$indexPath/pqmodel"), columns.contains("q"))
+      Pq(root.read("pqmodel"), columns.contains("q"))
     else if (columns.contains("q")) Sq8
     else Flat
 }

@@ -444,15 +444,8 @@ object Sampling {
     Seq("counts" -> counts, "members" -> members)
   }
 
-  private def dsirStoreBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int =
-    try spark.read.parquet(s"$path/meta").head().getAs[Int]("num_buckets")
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$path has no meta table (or is not a dsirStoreWrite store); " +
-            "rebuild with dsirStoreWrite", e)
-    }
+  private def dsirBuckets(root: StoreRoot): Int =
+    root.meta.getAs[Int]("num_buckets")
 
   /** Append a new doc batch under `role` ("raw" or "target") — the
     * batch's counts/members staged as one atomic `_COMMIT` delta under
@@ -463,10 +456,10 @@ object Sampling {
   def dsirStoreAppend(newDocs: DataFrame, idCol: String, textCol: String,
       path: String, role: String): Unit = {
     val spark = newDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "dsirStoreAppend")
+    val root = dsirLedger.open(spark, path, "dsirStoreAppend")
     AtomicBatches.sweepUncommitted(spark, s"$path/deltas")
-    CountStore.stageDelta(spark, path, dsirAppendTables(newDocs, idCol,
-      textCol, path, role, "dsirStoreAppend"))
+    CountStore.stageDelta(spark, path,
+      dsirAppendTables(root, newDocs, idCol, textCol, role))
   }
 
   /** REPLAY-SAFE ingestion face — the [[Classifier.nbModelAppendStream]]
@@ -480,24 +473,24 @@ object Sampling {
       textCol: String, path: String, role: String,
       batchId: Long): Boolean = {
     val spark = newDocs.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "dsirStoreAppendStream")
+    val root = dsirLedger.open(spark, path, "dsirStoreAppendStream")
     if (CountStore.streamBatchCommitted(spark, path, batchId)) return false
-    CountStore.stageStreamDelta(spark, path, batchId, dsirAppendTables(
-      newDocs, idCol, textCol, path, role, "dsirStoreAppendStream"))
+    CountStore.stageStreamDelta(spark, path, batchId,
+      dsirAppendTables(root, newDocs, idCol, textCol, role))
   }
 
   // the append faces' guard and delta tables: the fused ledger guard job
   // and the one-row meta read are independent probes over DISJOINT trees
   // — one concurrent round trip
-  private def dsirAppendTables(newDocs: DataFrame, idCol: String,
-      textCol: String, path: String, role: String,
-      face: String): Seq[(String, DataFrame)] = {
+  private def dsirAppendTables(root: StoreRoot, newDocs: DataFrame,
+      idCol: String, textCol: String,
+      role: String): Seq[(String, DataFrame)] = {
     require(role == "raw" || role == "target", "role is 'raw' or 'target'")
     @volatile var nb = 0
     Takedown.inParallel(Seq[() => Unit](
-      () => CountStore.requireFresh(dsirLedger, newDocs, idCol, textCol,
-        path, s"$face($role)", lit(role)),
-      () => nb = dsirStoreBuckets(newDocs.sparkSession, path)))(_.apply())
+      () => CountStore.requireFresh(dsirLedger, root, newDocs, idCol,
+        textCol, s"${root.face}($role)", lit(role)),
+      () => nb = dsirBuckets(root)))(_.apply())
     dsirStoreTables(Seq(role -> newDocs), idCol, textCol, nb)
   }
 
@@ -512,11 +505,10 @@ object Sampling {
   def dsirStoreDelete(victimDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit =
     CountStore.stageDelete(dsirLedger, victimDocs, idCol, textCol, path) {
-      victims =>
+      (root, victims) =>
         dsirStoreTables(Seq("raw", "target").map(role =>
             role -> victims.filter(col("role") === role)),
-          idCol, textCol, dsirStoreBuckets(victimDocs.sparkSession, path),
-          sign = -1)
+          idCol, textCol, dsirBuckets(root), sign = -1)
     }
 
   /** AUDIT face: the ids whose feature counts still influence the
@@ -540,15 +532,11 @@ object Sampling {
     */
   def dsirStoreModel(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    dsirStoreModelWith(spark, path, dsirStoreBuckets(spark, path))
+    dsirModel(dsirLedger.open(spark, path, "dsirStoreModel"))
 
-  // model under an already-read hash width — so dsirStoreScore reads
-  // the one-row meta table once, not once here and once for the kernel
-  private def dsirStoreModelWith(spark: org.apache.spark.sql.SparkSession,
-      path: String, numBuckets: Int): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path, "dsirStoreModel")
-    val B = lit(numBuckets.toDouble)
-    val counts = CountStore.fold(spark, path, "counts").groupBy("b")
+  private def dsirModel(root: StoreRoot): DataFrame = {
+    val B = lit(dsirBuckets(root).toDouble)
+    val counts = CountStore.fold(root, "counts").groupBy("b")
       .agg(sum("c_raw").cast("double").as("__cr"),
         sum("c_target").cast("double").as("__ct"))
       .filter(col("__cr") + col("__ct") > 0)
@@ -575,9 +563,9 @@ object Sampling {
     */
   def dsirStoreScore(docs: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
-    val spark = docs.sparkSession
-    val nb = dsirStoreBuckets(spark, path)
-    dsirScore(docs, idCol, textCol, dsirStoreModelWith(spark, path, nb), nb)
+    // the handle reads the one-row meta table once for model and kernel
+    val root = dsirLedger.open(docs.sparkSession, path, "dsirStoreScore")
+    dsirScore(docs, idCol, textCol, dsirModel(root), dsirBuckets(root))
   }
 
   /** Fold the committed delta history into a fresh base and retire the
@@ -592,8 +580,8 @@ object Sampling {
       path: String, takeover: Boolean = false): Unit =
     CountStore.compactSwap(spark, path, takeover, dsirLedger,
       Seq("counts")) {
-      case "counts" =>
-        CountStore.fold(spark, path, "counts").groupBy("b")
+      case (root, "counts") =>
+        CountStore.fold(root, "counts").groupBy("b")
           .agg(sum("c_raw").as("c_raw"), sum("c_target").as("c_target"))
           .filter(col("c_raw") =!= 0L || col("c_target") =!= 0L)
     }
@@ -941,7 +929,7 @@ object Sampling {
       vecCol: String): DataFrame =
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"),
-        col(vecCol).cast("array<double>").as("__v"))
+        graft.functions.VectorFunctions.doubles(df, vecCol).as("__v"))
 
   /** One traversal round's fold-in: the running min against the single
     * NEW centroid. `round(·, 6)` is applied per-distance before the

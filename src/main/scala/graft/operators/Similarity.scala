@@ -241,8 +241,10 @@ object Similarity {
     */
   def ivfAppend(df: DataFrame, idCol: String, vecCol: String,
       indexPath: String): Unit = {
-    requireNoPendingTombstones(df, idCol, indexPath)
-    appendRows(df, idCol, vecCol, indexPath)
+    // compaction rewrites the very cell partitions an append lands in
+    val root = ivfRoot(df.sparkSession, indexPath, "batch append")
+    requireNoPendingTombstones(root, df, idCol)
+    appendRows(root, df, idCol, vecCol)
       .repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$indexPath/cells")
   }
@@ -255,20 +257,19 @@ object Similarity {
   def ivfAppendPQ(df: DataFrame, idCol: String, vecCol: String,
       indexPath: String): Unit = ivfAppend(df, idCol, vecCol, indexPath)
 
-  /** A new batch's rows in the stored layout of the index at
-    * `indexPath` — the frozen-quantizer assignment and the layout's row
+  /** A new batch's rows in the stored layout of the index at `root`
+    * — the frozen-quantizer assignment and the layout's row
     * projection behind [[ivfAppend]] and the streaming
     * [[graft.streaming.StreamingOps.continuousIvfAppend]], so batch and
     * stream write identical rows for the same input. The layout read is
     * NOT exception-guarded: swallowing a transient read failure would
     * silently append rows of the wrong layout — fail loudly instead.
     */
-  private[graft] def appendRows(df: DataFrame, idCol: String,
-      vecCol: String, indexPath: String): DataFrame = {
-    val spark = df.sparkSession
-    val layout = IvfLayout.of(spark, indexPath)
-    layout.rows(assignToCells(df, idCol, vecCol,
-      readCentroids(spark, indexPath), layout.roundedAssign), idCol)
+  private[graft] def appendRows(root: StoreRoot, df: DataFrame,
+      idCol: String, vecCol: String): DataFrame = {
+    val layout = IvfLayout.of(root)
+    layout.rows(assignToCells(df, idCol, vecCol, readCentroids(root),
+      layout.roundedAssign), idCol)
   }
 
   /** Guard on the BATCH append faces ([[ivfAppend]]/[[ivfAppendSQ8]]/
@@ -284,27 +285,21 @@ object Similarity {
     * delta rows carry a batch_id above any tombstone's `up_to`, so a
     * stream append legitimately resurrects.
     */
-  private def requireNoPendingTombstones(df: DataFrame, idCol: String,
-      indexPath: String): Unit = {
-    // doubles as the append faces' maintenance guard: compaction
-    // rewrites the very cell partitions an append lands in
-    AtomicBatches.assertNotInMaintenance(df.sparkSession, indexPath,
-      "batch append")
-    readParquetIfAny(df.sparkSession, s"$indexPath/tombstones")
-      .foreach { ts =>
+  private def requireNoPendingTombstones(root: StoreRoot, df: DataFrame,
+      idCol: String): Unit =
+    root.side("tombstones").foreach { ts =>
         val victims = df.select(col(idCol))
           .join(broadcast(ts.select(col(idCol)).distinct()),
             Seq(idCol), "left_semi")
           .limit(5).collect().map(_.get(0))
         require(victims.isEmpty,
-          s"batch append to $indexPath includes ids with PENDING " +
+          s"batch append to ${root.path} includes ids with PENDING " +
           s"tombstones (e.g. ${victims.mkString(", ")}): base rows rank " +
           "below every tombstone, so the append would be silently " +
           "invisible to probes. Run StreamingOps.compactIvfDeltas first " +
           "(GCs applied tombstones), then re-append — or use the stream " +
           "append face, whose delta batches legitimately resurrect ids.")
       }
-  }
 
   /** Query a persisted [[ivfWriteIndex]] index. */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -384,10 +379,10 @@ object Similarity {
       path: String, idCol: String, queryVec: Seq[Double], k: Int,
       nProbe: Int, rowFilter: DataFrame => DataFrame, rounded: Boolean,
       refineFactor: Int = 0): DataFrame = {
-    val probes = probeCells(readCentroids(spark, path), queryVec, nProbe,
-      rounded)
-    val current = cellsCurrent(spark, path, idCol, col("cell").isin(probes: _*))
-    val layout = IvfLayout.of(spark, path, current.columns)
+    val root = ivfRoot(spark, path, "index probe")
+    val probes = probeCells(readCentroids(root), queryVec, nProbe, rounded)
+    val current = cellsCurrent(root, idCol, col("cell").isin(probes: _*))
+    val layout = IvfLayout.of(root, current.columns)
     val q = typedLit(queryVec)
     def topK(rows: DataFrame, keep: Seq[String], v: Column, score: String,
         n: Int): DataFrame =
@@ -548,13 +543,13 @@ object Similarity {
       rowFilter: DataFrame => DataFrame, roundedProbe: Boolean,
       refineFactor: Int = 0): DataFrame = {
     require(k >= 1 && nProbe >= 1, "k and nProbe must be >= 1")
-    val spark = queries.sparkSession
+    val root = ivfRoot(queries.sparkSession, indexPath, "index probe")
     // driver-bounded: ≤2^nBits centroid rows
-    val cents = readCentroids(spark, indexPath)
+    val cents = readCentroids(root)
     val nCells = cents.length
     val centVecs = typedLit(cents.map(_._2).toSeq)
     val cellIds = typedLit(cents.map(_._1).toSeq)
-    val qv = col(qVecCol).cast("array<double>")
+    val qv = V.doubles(queries, qVecCol)
     // (−cosine, cell) structs sort lexicographically = cosine desc,
     // cell asc on ties — deterministic probe order
     val scoredCells = transform(sequence(lit(1), lit(nCells)), i => {
@@ -580,9 +575,8 @@ object Similarity {
     // pruning on the cell scan
     val probed = exploded.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted
-    val current = cellsCurrent(spark, indexPath, idCol,
-      col("cell").isin(probed: _*))
-    val layout = IvfLayout.of(spark, indexPath, current.columns)
+    val current = cellsCurrent(root, idCol, col("cell").isin(probed: _*))
+    val layout = IvfLayout.of(root, current.columns)
     val fine = Option.when(refineFactor > 0)(refineTierOf(layout, indexPath))
     val cellsDf = rowFilter(current)
     val qSide = if (broadcastQueries) broadcast(exploded) else exploded
@@ -655,12 +649,11 @@ object Similarity {
     * ids absent from the index are a harmless no-op kill.
     */
   def ivfDelete(ids: DataFrame, idCol: String, indexPath: String): Unit = {
-    val spark = ids.sparkSession
     // a delete racing compaction's tombstone GC (read-then-overwrite of
     // tombstones/) would be silently erased — a lost takedown
-    AtomicBatches.assertNotInMaintenance(spark, indexPath, "ivfDelete")
-    val base = readParquetIfAny(spark, s"$indexPath/cells")
-    val deltas = readParquetIfAny(spark, s"$indexPath/deltas")
+    val root = ivfRoot(ids.sparkSession, indexPath, "ivfDelete")
+    val base = root.side("cells")
+    val deltas = root.side("deltas")
     require(base.nonEmpty || deltas.nonEmpty, s"no index at $indexPath")
     val upTo = deltas
       .map(_.agg(max(col("batch_id"))).head.get(0))
@@ -677,7 +670,7 @@ object Similarity {
     */
   def ivfPresentIds(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, idCol: String): DataFrame =
-    cellsCurrent(spark, indexPath, idCol, lit(true))
+    cellsCurrent(ivfRoot(spark, indexPath, "ivfPresentIds"), idCol, lit(true))
       .select(col(idCol).as("id"))
 
   /** A FULL index build supersedes every side channel — appended delta
@@ -691,36 +684,17 @@ object Similarity {
     */
   private def clearSideChannels(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Unit = {
-    Seq("deltas", "tombstones").foreach { ch =>
-      val p = new org.apache.hadoop.fs.Path(s"$indexPath/$ch")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val fs = StoreRoot.fs(spark, indexPath)
+    Seq("deltas", "tombstones").foreach(ch =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/$ch"), true))
     // a rebuild also supersedes an interrupted compaction: whatever the
     // crash left half-rewritten was just overwritten wholesale
     AtomicBatches.clearMaintenance(spark, indexPath)
   }
 
-  /** Read a parquet table that may legitimately not exist yet — or
-    * exist as an EMPTY directory: compaction with `includeLatest`
-    * prunes every `batch_id=` partition but leaves the `deltas` root,
-    * and schema inference over zero files throws, not returns empty.
-    * Both conditions mean "no rows here". A missing path is checked
-    * first: Spark's read would log a warning with a stack trace for it;
-    * the catch covers an empty directory and a delete racing the read.
-    */
-  private[graft] def readParquetIfAny(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else try Some(spark.read.parquet(path))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-             e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-    }
-  }
+  /** The handle factory of the IVF indexes. */
+  private[graft] val ivfRoot =
+    StoreRoot.of("the ivfWriteIndex face it was built with")
 
   /** The CURRENT rows of a persisted index, cell-pruned: base cells
     * under `cellPred` ∪ un-compacted deltas, de-duplicated on id by
@@ -745,19 +719,16 @@ object Similarity {
     * ([[graft.streaming.StreamingOps.ivfTopKFromStreamIndex]]), so all
     * of them honor stream appends and tombstones identically.
     */
-  private[graft] def cellsCurrent(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, cellPred: Column): DataFrame = {
-    // one read path for every probe/join/stream face = one maintenance
-    // guard: compaction rewrites cell partitions in place, so a probe
-    // racing it could double-fold or miss rows — fail loudly instead
-    AtomicBatches.assertNotInMaintenance(spark, indexPath, "index probe")
-    val base = readParquetIfAny(spark, s"$indexPath/cells").map(_.filter(cellPred))
-    val deltas = readParquetIfAny(spark, s"$indexPath/deltas")
-    val tombs = readParquetIfAny(spark, s"$indexPath/tombstones")
+  private[graft] def cellsCurrent(root: StoreRoot, idCol: String,
+      cellPred: Column): DataFrame = {
+    val base = root.side("cells").map(_.filter(cellPred))
+    val deltas = root.side("deltas")
+    val tombs = root.side("tombstones")
     (base, deltas, tombs) match {
       case (Some(b), None, None) => b
       case (b, d, t) =>
-        require(b.nonEmpty || d.nonEmpty, s"no cells or deltas under $indexPath")
+        require(b.nonEmpty || d.nonEmpty,
+          s"no cells or deltas under ${root.path}")
         val ref = b.getOrElse(d.get.drop("batch_id"))
         val payload = ref.columns.filterNot(c => c == idCol || c == "cell")
         def shape(df: DataFrame, bCol: Column): DataFrame =
@@ -787,12 +758,12 @@ object Similarity {
   /** Driver-side read of a persisted index's coarse quantizer — ≤2^nBits
     * rows, sorted by cell id. Fails loudly on an empty/corrupt table.
     */
-  private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Array[(Long, Seq[Double])] = {
-    val cents = spark.read.parquet(s"$indexPath/centroids")
+  private[graft] def readCentroids(root: StoreRoot)
+      : Array[(Long, Seq[Double])] = {
+    val cents = root.read("centroids")
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
       .sortBy(_._1)
-    require(cents.nonEmpty, s"no centroids at $indexPath/centroids")
+    require(cents.nonEmpty, s"no centroids at ${root.path}/centroids")
     cents
   }
 

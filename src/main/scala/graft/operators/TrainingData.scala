@@ -242,6 +242,12 @@ object TrainingData {
         round(col("__m").cast("double") / col("__se"), 6).as("containment"))
   }
 
+  private val decontamRoot = StoreRoot.of("decontamIndexWrite")
+  private val containmentRoot = StoreRoot.of("containmentIndexWrite")
+  // the faces both layouts share
+  private val gramsRoot =
+    StoreRoot.of("decontamIndexWrite or containmentIndexWrite")
+
   /** Persist the decontamination gram index of a corpus under `path` —
     * the probe-and-append discipline ([[bm25IndexWrite]],
     * [[Dedup.minhashIndex]]) applied to benchmark screening:
@@ -299,11 +305,10 @@ object TrainingData {
     */
   def decontamIndexDelete(ids: DataFrame, idCol: String,
       path: String): Unit = {
-    val spark = ids.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, "index delete")
+    val root = gramsRoot(ids.sparkSession, path, "index delete")
     // loud on a non-index path: both layouts persist a meta table
-    spark.read.parquet(s"$path/meta")
-    VictimChannel.stage(spark, path, ids.select(col(idCol)).distinct())()
+    root.read("meta")
+    VictimChannel.stage(root, ids.select(col(idCol)).distinct())()
   }
 
   /** [[decontamIndexDelete]] for a [[containmentIndexWrite]] index. */
@@ -321,18 +326,20 @@ object TrainingData {
     */
   def decontamIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    indexCompact(spark, path, "grams", "gb", "g", takeover)
+    indexCompact(spark, path, "decontamIndex", "grams", "gb", "g", takeover)
 
   /** [[decontamIndexCompact]] for a [[containmentIndexWrite]] index. */
   def containmentIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    indexCompact(spark, path, "shingles", "sb", "tok", takeover)
+    indexCompact(spark, path, "containmentIndex", "shingles", "sb", "tok",
+      takeover)
 
   private def indexCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String, table: String, bucketCol: String, sortCol: String,
-      takeover: Boolean): Unit =
-    VictimChannel.compact(spark, path, takeover) { v =>
-      val store = spark.read.parquet(s"$path/$table")
+      path: String, index: String, table: String, bucketCol: String,
+      sortCol: String, takeover: Boolean): Unit =
+    VictimChannel.compact(spark, path, takeover, s"${index}Compact",
+        s"${index}Write") { (root, v) =>
+      val store = root.read(table)
       // the store's id column is its FIRST column
       val storeIdCol = store.columns.head
       // shared rewrite protocol (AtomicBatches): only victim-touched
@@ -351,8 +358,9 @@ object TrainingData {
     */
   def decontamIndexAppend(newDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
-    VictimChannel.requireFresh(newDocs, idCol, path, "decontamIndexAppend")
-    val meta = newDocs.sparkSession.read.parquet(s"$path/meta").head()
+    val root = decontamRoot(newDocs.sparkSession, path, "decontamIndexAppend")
+    VictimChannel.requireFresh(root, newDocs, idCol)
+    val meta = root.meta
     decontamGramsOut(newDocs, idCol, textCol, path,
       meta.getAs[Int]("n"), meta.getAs[Int]("n_buckets"), overwrite = false)
   }
@@ -384,10 +392,10 @@ object TrainingData {
   def decontaminateFromIndex(benchmark: DataFrame, benchTextCol: String,
       path: String, idCol: String): DataFrame = {
     import graft.functions.ArrayOps
-    val spark = benchmark.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val n = meta.getAs[Int]("n")
-    val nBuckets = meta.getAs[Int]("n_buckets")
+    val root = decontamRoot(benchmark.sparkSession, path,
+      "decontaminateFromIndex")
+    val n = root.meta.getAs[Int]("n")
+    val nBuckets = root.meta.getAs[Int]("n_buckets")
     val benchGrams = benchmark.select(
       explode(ArrayOps.wordNgramHashes(T.normTokens(nfc(col(benchTextCol))), n))
         .as("g"))
@@ -397,8 +405,7 @@ object TrainingData {
     val buckets = benchGrams
       .select(pmod(col("g"), lit(nBuckets.toLong)))
       .distinct().collect().map(_.getLong(0))
-    AtomicBatches.assertNotInMaintenance(spark, path, "decontaminateFromIndex")
-    new VictimChannel(spark, path).minus(spark.read.parquet(s"$path/grams")
+    root.victims.minus(root.read("grams")
         .filter(col("gb").isin(buckets: _*)), idCol)
       .join(broadcast(benchGrams), Seq("g"))
       .groupBy(idCol).agg(count(lit(1)).as("n_overlap_grams"))
@@ -434,9 +441,10 @@ object TrainingData {
     */
   def containmentIndexAppend(newDocs: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
-    VictimChannel.requireFresh(newDocs, idCol, path,
+    val root = containmentRoot(newDocs.sparkSession, path,
       "containmentIndexAppend")
-    val meta = newDocs.sparkSession.read.parquet(s"$path/meta").head()
+    VictimChannel.requireFresh(root, newDocs, idCol)
+    val meta = root.meta
     containmentShinglesOut(newDocs, idCol, textCol, path,
       meta.getAs[Int]("shingle_n"), meta.getAs[Int]("n_buckets"),
       overwrite = false)
@@ -471,10 +479,10 @@ object TrainingData {
       idCol: String, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
     import graft.functions.ArrayOps
-    val spark = benchmark.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val shingleN = meta.getAs[Int]("shingle_n")
-    val nBuckets = meta.getAs[Int]("n_buckets")
+    val root = containmentRoot(benchmark.sparkSession, path,
+      "decontaminateContainmentFromIndex")
+    val shingleN = root.meta.getAs[Int]("shingle_n")
+    val nBuckets = root.meta.getAs[Int]("n_buckets")
     def norm(c: Column) = regexp_replace(trim(lower(nfc(c))), "\\s+", " ")
     val evalToks = benchmark.filter(col(benchTextCol).isNotNull)
       .select(col(benchIdCol).as("__eid"),
@@ -486,9 +494,7 @@ object TrainingData {
     val buckets = evalToks
       .select(pmod(col("tok"), lit(nBuckets.toLong)))
       .distinct().collect().map(_.getLong(0))
-    AtomicBatches.assertNotInMaintenance(spark, path,
-      "decontaminateContainmentFromIndex")
-    new VictimChannel(spark, path).minus(spark.read.parquet(s"$path/shingles")
+    root.victims.minus(root.read("shingles")
         .filter(col("sb").isin(buckets: _*)), idCol)
       .join(broadcast(evalToks), Seq("tok"))
       .groupBy(col(idCol), col("__eid"), col("__se"))
@@ -1678,32 +1684,17 @@ object TrainingData {
     // guard would then pass while silently no-opping deletes of base
     // ids, and a compaction would recompute stats from the partial
     // table. Fail here instead, like the missing-meta case.
-    val spark = newDocs.sparkSession
-    VictimChannel.requireFresh(newDocs, idCol, path, "bm25IndexAppend")
-    val dl = new org.apache.hadoop.fs.Path(s"$path/doclens")
-    val fsDl = dl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fsDl.exists(dl),
-      s"$path has no doclens table - the index predates deletion " +
-        "support; rebuild with bm25IndexWrite before appending")
+    val root = bm25Root(newDocs.sparkSession, path, "bm25IndexAppend")
+    VictimChannel.requireFresh(root, newDocs, idCol)
+    root.expect("doclens")
     bm25IndexOut(newDocs, idCol, textCol, path,
-      bm25IndexBuckets(spark, path), overwrite = false)
+      root.meta.getAs[Int]("n_buckets"), overwrite = false)
   }
 
-  /** The frozen bucket count of a [[bm25IndexWrite]] index. A missing
-    * meta table fails with a rebuild instruction rather than a bare
-    * path error — an index written before the meta table existed has no
-    * trustworthy bucket count (guessing one silently drops postings).
-    */
-  private def bm25IndexBuckets(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int =
-    try spark.read.parquet(s"$path/meta").head().getAs[Int]("n_buckets")
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$path has no meta table - the index predates the frozen " +
-            "n_buckets meta (or the path is not a bm25 index); rebuild " +
-            "with bm25IndexWrite", e)
-    }
+  // an index written before the meta table existed has no trustworthy
+  // bucket count (guessing one silently drops postings): its missing
+  // meta fails with the rebuild instruction
+  private val bm25Root = StoreRoot.of("bm25IndexWrite")
 
   private def bm25IndexOut(docs: DataFrame, idCol: String, textCol: String,
       path: String, nBuckets: Int, overwrite: Boolean): Unit = {
@@ -1766,8 +1757,8 @@ object TrainingData {
     import spark.implicits._
     // compaction rewrites posting buckets in place: a probe racing it
     // (or reading a crashed half-rewrite) would double-fold deletes
-    AtomicBatches.assertNotInMaintenance(spark, path, "bm25FromIndex")
-    val nBuckets = bm25IndexBuckets(spark, path)
+    val root = bm25Root(spark, path, "bm25FromIndex")
+    val nBuckets = root.meta.getAs[Int]("n_buckets")
     val qTerms = query.map(_.trim.toLowerCase).filter(_.nonEmpty).distinct
     // the buckets through the SAME expression the writer used — the
     // hash definition lives in one place; ≤|query| driver rows
@@ -1778,7 +1769,7 @@ object TrainingData {
     // with zero partitions — schema inference over zero files throws,
     // and an empty index must answer with no hits, not crash
     def pruned(sub: String): DataFrame =
-      graft.operators.Similarity.readParquetIfAny(spark, s"$path/$sub")
+      root.side(sub)
         .map(_.filter(col("tb").isin(buckets: _*) &&
           col("term").isin(qTerms: _*)))
         .getOrElse(spark.range(0).select(lit(0L).as(idCol),
@@ -1788,32 +1779,27 @@ object TrainingData {
     // rows are NEGATIVE exact integers (sum order invisible) and their
     // victim postings are anti-joined out of scoring. No deletes → the
     // plan is byte-identical to the pre-deletion one.
-    val deletes = new VictimChannel(spark, path)
-    val tf = deletes.minus(pruned("postings")
+    val tf = root.victims.minus(pruned("postings")
       .select(col(idCol), col("term"), col("tf").cast("double").as("__tf"),
         col("dl").cast("double").as("__dl")), idCol)
-    val dfT = withDeletes(spark, deletes, pruned("df"), "df")(
+    val dfT = withDeletes(root, pruned("df"), "df")(
         _.filter(col("tb").isin(buckets: _*) && col("term").isin(qTerms: _*)))
       .groupBy("term").agg(sum(col("df")).cast("double").as("__df"))
-    bm25Score(tf, dfT, bm25IndexStats(spark, path, deletes),
-      Seq(idCol), k1, b)
+    bm25Score(tf, dfT, bm25IndexStats(root), Seq(idCol), k1, b)
   }
 
   // `base` ∪ the `sub` payload rows of the committed delete batches,
   // pruned like the base read
-  private def withDeletes(spark: org.apache.spark.sql.SparkSession,
-      deletes: VictimChannel, base: DataFrame, sub: String)
+  private def withDeletes(root: StoreRoot, base: DataFrame, sub: String)
       (prune: DataFrame => DataFrame = identity): DataFrame =
-    if (deletes.batches.isEmpty) base
-    else base.unionByName(prune(
-      spark.read.parquet(deletes.batches.map(d => s"$d/$sub"): _*)))
+    root.inBatches(sub, root.victims.batches)
+      .fold(base)(d => base.unionByName(prune(d)))
 
   // the (N, avgdl) fold shared by every index probe face: base + append
   // batches + negative delete rows, all exact long sums (order invisible;
   // the coalesce mirrors bm25's all-null-dl fallback)
-  private def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, deletes: VictimChannel): DataFrame =
-    withDeletes(spark, deletes, spark.read.parquet(s"$path/stats"), "stats")()
+  private def bm25IndexStats(root: StoreRoot): DataFrame =
+    withDeletes(root, root.read("stats"), "stats")()
       .agg(sum(col("n_docs")).cast("double").as("__n"),
         when(sum(col("n_dl")) > 0,
           sum(col("sum_dl")).cast("double") / sum(col("n_dl")).cast("double"))
@@ -1849,8 +1835,8 @@ object TrainingData {
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, "k must be positive")
     require(k1 >= 0 && b >= 0 && b <= 1, "k1 >= 0, b in [0, 1]")
-    AtomicBatches.assertNotInMaintenance(spark, path, "bm25TopKJoin")
-    val nBuckets = bm25IndexBuckets(spark, path)
+    val root = bm25Root(spark, path, "bm25TopKJoin")
+    val nBuckets = root.meta.getAs[Int]("n_buckets")
     // one (qid, term) row per DISTINCT query term, through the SAME
     // tokenizer the index was built with; bounded by Σ query terms
     // (benchmark question sets), so the checkpoint is small and both
@@ -1868,24 +1854,23 @@ object TrainingData {
     val buckets = qTerms.select("tb").distinct().collect().map(_.getLong(0))
     val qTermKeys = qTerms.select("term").distinct()
     def pruned(sub: String): DataFrame =
-      graft.operators.Similarity.readParquetIfAny(spark, s"$path/$sub")
+      root.side(sub)
         .map(_.filter(col("tb").isin(buckets: _*))
           .join(broadcast(qTermKeys), Seq("term"), "left_semi"))
         .getOrElse(spark.range(0).select(lit(0L).as(idCol),
           lit("").as("term"), lit(0L).as("tf"), lit(0L).as("dl"),
           lit(0L).as("tb"), lit(0L).as("df")))
-    val deletes = new VictimChannel(spark, path)
-    val tf = deletes.minus(pruned("postings")
+    val tf = root.victims.minus(pruned("postings")
       .join(broadcast(qTerms.select("__qid", "term")), Seq("term"))
       .select(col("__qid"), col(idCol), col("term"),
         col("tf").cast("double").as("__tf"),
         col("dl").cast("double").as("__dl")), idCol)
-    val dfT = withDeletes(spark, deletes, pruned("df"), "df")(
+    val dfT = withDeletes(root, pruned("df"), "df")(
         _.filter(col("tb").isin(buckets: _*))
           .join(broadcast(qTermKeys), Seq("term"), "left_semi"))
       .groupBy("term").agg(sum(col("df")).cast("double").as("__df"))
-    val scored = bm25Score(tf, dfT,
-      bm25IndexStats(spark, path, deletes), Seq("__qid", idCol), k1, b)
+    val scored = bm25Score(tf, dfT, bm25IndexStats(root), Seq("__qid", idCol),
+      k1, b)
     // bounded top-k per query (score desc, id asc — the round-6 score
     // makes the order engine-replicable), then hit counts ride back on
     // the #queries × k selection
@@ -1926,31 +1911,22 @@ object TrainingData {
     * `doclens` table fail loudly with a rebuild instruction.
     */
   def bm25IndexDelete(ids: DataFrame, idCol: String, path: String): Unit = {
-    val spark = ids.sparkSession
     // a delete staged while compaction retires the victim channel
     // would be silently erased — a lost takedown
-    AtomicBatches.assertNotInMaintenance(spark, path, "bm25IndexDelete")
-    val doclens =
-      try spark.read.parquet(s"$path/doclens")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"$path has no doclens table - the index predates deletion " +
-              "support (or the path is not a bm25 index); rebuild with " +
-              "bm25IndexWrite", e)
-      }
+    val root = bm25Root(ids.sparkSession, path, "bm25IndexDelete")
+    val doclens = root.read("doclens")
     // victims = requested ∩ indexed ∖ already-deleted, with their exact
     // stats contribution from doclens, keyed by the index's own id
     // column whatever the request calls it
     val dlId = doclens.columns.head
     Frames.scoped { f =>
-      val victims = f.checkpoint(new VictimChannel(spark, path).minus(
+      val victims = f.checkpoint(root.victims.minus(
         doclens.join(ids.select(col(idCol).as(dlId)).distinct(), Seq(dlId),
           "left_semi"), dlId)) // ids + stats + df read it
       // the ids and the two payload tables are written concurrently over
       // the checkpointed victims (the bm25IndexOut judgment)
       if (!victims.isEmpty)
-        VictimChannel.stage(spark, path, victims.select(col(dlId))) { dir =>
+        VictimChannel.stage(root, victims.select(col(dlId))) { dir =>
           Seq(
             () => victims.agg((-count(lit(1))).as("n_docs"),
                 (-count(col("dl"))).as("n_dl"),
@@ -1959,7 +1935,7 @@ object TrainingData {
               .write.mode("overwrite").parquet(s"$dir/stats"),
             // one column-pruned postings pass: each victim posting row is
             // one df unit to give back on its (term, tb)
-            () => spark.read.parquet(s"$path/postings")
+            () => root.read("postings")
               .select(col("term"), col(dlId), col("tb"))
               .join(victims.select(col(dlId)), Seq(dlId), "left_semi")
               .groupBy(col("term"), col("tb"))
@@ -1975,10 +1951,9 @@ object TrainingData {
     */
   def bm25PresentIds(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path, "bm25PresentIds")
-    val doclens = spark.read.parquet(s"$path/doclens")
-    new VictimChannel(spark, path)
-      .minus(doclens.select(col(doclens.columns.head).as("id")), "id")
+    val root = bm25Root(spark, path, "bm25PresentIds")
+    val doclens = root.read("doclens")
+    root.victims.minus(doclens.select(col(doclens.columns.head).as("id")), "id")
   }
 
   /** AUDIT face of the gram/shingle decontamination indexes: the ids
@@ -1988,16 +1963,10 @@ object TrainingData {
     */
   def decontamPresentIds(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    AtomicBatches.assertNotInMaintenance(spark, path, "decontamPresentIds")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val table =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/grams"))) "grams"
-      else "shingles"
-    val rows = spark.read.parquet(s"$path/$table")
+    val root = gramsRoot(spark, path, "decontamPresentIds")
+    val rows = root.read(if (root.has("grams")) "grams" else "shingles")
     val idCol = rows.columns.head
-    new VictimChannel(spark, path)
-      .minus(rows.select(col(idCol)).distinct(), idCol)
+    root.victims.minus(rows.select(col(idCol)).distinct(), idCol)
       .select(col(idCol).as("id"))
   }
 
@@ -2019,25 +1988,24 @@ object TrainingData {
     */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String, takeover: Boolean = false): Unit =
-    VictimChannel.compact(spark, path, takeover) { ids =>
-      val dirs = new VictimChannel(spark, path).batches
-      val doclens = spark.read.parquet(s"$path/doclens")
+    VictimChannel.compact(spark, path, takeover, "bm25IndexCompact",
+        "bm25IndexWrite") { (root, ids) =>
+      val doclens = root.read("doclens")
       val idCol = doclens.columns.head
       val victims = ids.select(col("id").as(idCol))
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StoreRoot.fs(spark, path)
       // every checkpoint is pinned in the scope — a failed bucket
       // rewrite must not leak posting-scale pinned blocks into the
       // re-run the docstring requires
       Frames.scoped { f =>
         // touched buckets: driver-bounded (≤nBuckets) from the delete
         // batches' df deltas — buckets without victims are never read
-        val touched = spark.read.parquet(dirs.map(d => s"$d/df"): _*)
-          .select(col("tb").cast("long")).distinct()
-          .collect().map(_.getLong(0)).sorted
+        val touched = root.inBatches("df", root.victims.batches).toSeq
+          .flatMap(_.select(col("tb").cast("long")).distinct()
+            .collect().map(_.getLong(0))).sorted
         if (touched.nonEmpty) {
           // postings rewrite + df recompute read it
-          val kept = f.checkpoint(spark.read.parquet(s"$path/postings")
+          val kept = f.checkpoint(root.read("postings")
             .filter(col("tb").isin(touched: _*))
             .join(victims, Seq(idCol), "left_anti"))
           kept.repartition(col("tb"))

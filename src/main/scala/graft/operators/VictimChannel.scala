@@ -31,11 +31,10 @@ import graft.Frames
   * batches, so a delete committing mid-probe reaches all of a probe's
   * reads or none (BM25 folds the ids and payloads of the same batches).
   */
-private[graft] final class VictimChannel(spark: SparkSession, path: String) {
+private[graft] final class VictimChannel(root: StoreRoot) {
 
   /** The committed batch directories. */
-  val batches: Seq[String] =
-    AtomicBatches.committedDirs(spark, VictimChannel.root(path))
+  val batches: Seq[String] = root.committed("victims")
 
   /** The pending ids as one column `as`, or None when no batch is
     * committed (no Spark job). An id deleted twice appears twice: the
@@ -43,9 +42,7 @@ private[graft] final class VictimChannel(spark: SparkSession, path: String) {
     * compaction pays a shuffle to deduplicate before it pins the ids.
     */
   def read(as: String): Option[DataFrame] =
-    if (batches.isEmpty) None
-    else Some(spark.read.parquet(batches.map(d => s"$d/ids"): _*)
-      .select(col("id").as(as)))
+    root.inBatches("ids", batches).map(_.select(col("id").as(as)))
 
   /** `store` with the pending ids hidden: one broadcast left-anti join
     * on `idCol` against the bounded takedown list.
@@ -58,57 +55,60 @@ private[graft] final class VictimChannel(spark: SparkSession, path: String) {
 
 private[graft] object VictimChannel {
 
-  private def root(path: String): String = s"$path/victims"
+  private def channel(path: String): String = s"$path/victims"
+
+  /** True when a delete batch is committed (a listing, no Spark job). */
+  def pending(spark: SparkSession, path: String): Boolean =
+    AtomicBatches.committedDirs(spark, channel(path)).nonEmpty
 
   /** Stage one delete batch: sweep crashed attempts, write the ids of
     * the one-column frame `ids` under `id`, and the `payload` tables
     * the caller writes into the batch directory, concurrently — then
     * commit. Nothing of the batch is visible before the `_COMMIT`.
     */
-  def stage(spark: SparkSession, path: String, ids: DataFrame)
+  def stage(root: StoreRoot, ids: DataFrame)
       (payload: String => Seq[() => Unit] = _ => Nil): Unit = {
-    AtomicBatches.sweepUncommitted(spark, root(path))
-    val dir = s"${root(path)}/${AtomicBatches.nextBatchN(spark, root(path))}"
+    val (spark, ch) = (root.spark, channel(root.path))
+    AtomicBatches.sweepUncommitted(spark, ch)
+    val dir = s"$ch/${AtomicBatches.nextBatchN(spark, ch)}"
     Takedown.inParallel((() => ids.toDF("id").write.mode("overwrite")
       .parquet(s"$dir/ids")) +: payload(dir))(_.apply())
     AtomicBatches.commit(spark, dir)
   }
 
-  /** The append guard, which doubles as the append face's maintenance
-    * guard: refuse a batch holding a pending id (its rows would land
-    * yet stay hidden). Runs no job while the channel is empty.
+  /** The append guard: refuse a batch holding a pending id (its rows
+    * would land yet stay hidden). Runs no job while the channel is
+    * empty.
     */
-  def requireFresh(df: DataFrame, idCol: String, path: String,
-      face: String): Unit = {
-    val spark = df.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, path, face)
-    new VictimChannel(spark, path).read(idCol).foreach { v =>
+  def requireFresh(root: StoreRoot, df: DataFrame, idCol: String): Unit =
+    root.victims.read(idCol).foreach { v =>
       val hits = df.select(col(idCol))
         .join(broadcast(v), Seq(idCol), "left_semi")
         .limit(5).collect().map(_.get(0))
       require(hits.isEmpty,
-        s"$face to $path includes ids with PENDING deletions (e.g. " +
-        s"${hits.mkString(", ")}): the appended rows would be hidden by " +
-        "the victim list. Compact the index first, then re-append.")
+        s"${root.face} to ${root.path} includes ids with PENDING " +
+        s"deletions (e.g. ${hits.mkString(", ")}): the appended rows " +
+        "would be hidden by the victim list. Compact the index first, " +
+        "then re-append.")
     }
-  }
 
   /** Compaction: skip when no batch is pending and no `_MAINT` marker
     * is left to resume; otherwise, under the exclusive maintenance lock,
-    * hand the deduplicated, checkpointed pending ids (column `id`) to
-    * the store's `rewrite`, then retire the channel. A crash leaves the marker and
-    * the channel in place, so the re-run (`takeover = true`) hands the
-    * same ids to the rewrite, which must be a pure function of the
-    * current tables and those ids.
+    * hand the lock holder's handle and the deduplicated, checkpointed
+    * pending ids (column `id`) to the store's `rewrite`, then retire the
+    * channel. A crash leaves the marker and the channel in place, so the
+    * re-run (`takeover = true`) hands the same ids to the rewrite, which
+    * must be a pure function of the current tables and those ids.
     */
-  def compact(spark: SparkSession, path: String, takeover: Boolean)
-      (rewrite: DataFrame => Unit): Unit = {
-    if (new VictimChannel(spark, path).batches.isEmpty &&
+  def compact(spark: SparkSession, path: String, takeover: Boolean,
+      face: String, rebuild: String)
+      (rewrite: (StoreRoot, DataFrame) => Unit): Unit = {
+    if (!pending(spark, path) &&
         !AtomicBatches.maintenanceActive(spark, path)) return
-    AtomicBatches.withMaintenanceLock(spark, path, takeover) {
+    StoreRoot.maintain(spark, path, takeover, face, rebuild) { root =>
       // every rewrite reads the checkpointed ids
-      new VictimChannel(spark, path).read("id").foreach(v0 =>
-        Frames.scoped(f => rewrite(f.checkpoint(v0.distinct()))))
+      root.victims.read("id").foreach(v0 =>
+        Frames.scoped(f => rewrite(root, f.checkpoint(v0.distinct()))))
       retire(spark, path)
     }
   }
@@ -116,8 +116,7 @@ private[graft] object VictimChannel {
   /** Drop the channel, committed or not: after a compaction applied it,
     * or after a rebuild's new base landed.
     */
-  def retire(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root(path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  def retire(spark: SparkSession, path: String): Unit =
+    StoreRoot.fs(spark, path)
+      .delete(new org.apache.hadoop.fs.Path(channel(path)), true)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 import graft.Frames
-import graft.operators.Similarity.readParquetIfAny
+import graft.operators.StoreRoot
 
 /** The batch-partitioned state protocol every `foreachBatch` store of
   * [[StreamingOps]] shares.
@@ -50,15 +50,14 @@ private[graft] object BatchState {
       .partitionBy("batch_id")
       .parquet(path)
 
-  /** The rows of every batch of `path` except `batchId`, `batch_id`
-    * kept; None when the store has no rows to read — never written, or
-    * emptied by a compaction. Any other read error surfaces: a store
-    * written without `batch_id` partitions fails the batch instead of
-    * silently reading as empty.
+  /** The rows of every batch of the store at `root` except `batchId`,
+    * `batch_id` kept; None when the store has no rows to read — never
+    * written, or emptied by a compaction. Any other read error
+    * surfaces: a store written without `batch_id` partitions fails the
+    * batch instead of silently reading as empty.
     */
-  def priorRows(spark: SparkSession, path: String,
-      batchId: Long): Option[DataFrame] =
-    readParquetIfAny(spark, path).map(_.where(col("batch_id") =!= batchId))
+  def priorRows(root: StoreRoot, batchId: Long): Option[DataFrame] =
+    root.side("").map(_.where(col("batch_id") =!= batchId))
 
   /** The highest `batch_id` of `rows`, None when it has no rows. */
   def maxBatch(rows: DataFrame): Option[Long] =
@@ -72,10 +71,13 @@ private[graft] object BatchState {
     maxBatch(rows).map(b =>
       rows.where(col("batch_id") === b).drop("batch_id"))
 
+  private val stateRoot = StoreRoot.of("its stream face")
+
   /** The current state of a carried-state store, for its readers. */
   def current(spark: SparkSession, path: String): DataFrame =
-    readParquetIfAny(spark, path).flatMap(latest).getOrElse(
-      throw new IllegalArgumentException(s"no committed state under $path"))
+    stateRoot(spark, path, "current-state read")
+      .side("").flatMap(latest).getOrElse(
+        throw new IllegalArgumentException(s"no committed state under $path"))
 
   /** One batch of a carried-state store: `next` folds the batch into
     * the latest prior state (`empty`'s columns; `empty` itself before
@@ -87,7 +89,8 @@ private[graft] object BatchState {
   def carry(path: String, batchId: Long, empty: DataFrame)(
       next: DataFrame => DataFrame): Unit = {
     val spark = empty.sparkSession
-    val prev = priorRows(spark, path, batchId).flatMap(latest)
+    val prev = priorRows(stateRoot(spark, path, s"stream batch $batchId"),
+      batchId).flatMap(latest)
       .fold(empty)(_.select(empty.columns.map(col): _*))
     writeBatch(next(prev), path, batchId)
     prune(spark, path)(b => b != batchId && b != batchId - 1)
@@ -97,8 +100,8 @@ private[graft] object BatchState {
     * `drop(b)` holds.
     */
   def prune(spark: SparkSession, path: String)(drop: Long => Boolean): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) =
+      (StoreRoot.fs(spark, path), new org.apache.hadoop.fs.Path(path))
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
       val name = st.getPath.getName
       if (st.isDirectory && name.startsWith("batch_id="))

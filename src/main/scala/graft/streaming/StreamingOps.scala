@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.Frames
+import graft.operators.StoreRoot
 import graft.pipeline.{Pipeline, Routing, RoutedMessages}
 
 /** Structured Streaming surface of the engine.
@@ -464,7 +465,8 @@ object StreamingOps {
         (keyCols ++ Seq(tsCol, tieCol) ++ attrCols).map(col): _*))
       cur.count()
       // the open version of every key this batch touches
-      val currentOfTouched = BatchState.priorRows(spark, statePath, batchId)
+      val currentOfTouched = BatchState.priorRows(
+          scd2Root(spark, statePath, "continuousScd2"), batchId)
         .map(hist => scd2Live(hist, keyCols, tieCol)
           .where(col("is_current"))
           .join(cur.select(keyCols.map(col): _*).distinct(),
@@ -488,6 +490,8 @@ object StreamingOps {
     * at one effective_from, and the synthetic replay carries the
     * original tie so rewrites collide with their own version.
     */
+  private val scd2Root = StoreRoot.of("continuousScd2")
+
   private def scd2Live(hist: DataFrame, keyCols: Seq[String],
       tieCol: String): DataFrame =
     BatchState.latestPerKey(hist, keyCols ++ Seq("effective_from", tieCol),
@@ -501,7 +505,8 @@ object StreamingOps {
     */
   def currentScd2History(spark: org.apache.spark.sql.SparkSession,
       statePath: String, keyCols: Seq[String], tieCol: String): DataFrame =
-    scd2Live(spark.read.parquet(statePath), keyCols, tieCol)
+    scd2Live(scd2Root(spark, statePath, "currentScd2History").read(""),
+      keyCols, tieCol)
 
   /** Compact a [[continuousScd2]] state table — the
     * [[compactClusterLabels]] discipline ported to version rows: fold
@@ -516,7 +521,7 @@ object StreamingOps {
   def compactScd2History(spark: org.apache.spark.sql.SparkSession,
       statePath: String, keyCols: Seq[String], tieCol: String): Unit =
     for {
-      all <- graft.operators.Similarity.readParquetIfAny(spark, statePath)
+      all <- scd2Root(spark, statePath, "compactScd2History").side("")
       maxBatch <- BatchState.maxBatch(all) if maxBatch > 0
     } {
       BatchState.writeBatch(
@@ -555,7 +560,8 @@ object StreamingOps {
       // persist the raw batch once, freed with the batch
       val b = f.persist(batch)
       b.count()
-      val existing = BatchState.priorRows(spark, indexPath, batchId)
+      val existing = BatchState.priorRows(StoreRoot.of("continuousSpanDedup")(
+          spark, indexPath, "continuousSpanDedup"), batchId)
         .map(_.drop("batch_id"))
         .getOrElse(TrainingData.spanIndex(b.limit(0), idCol, textCol, k))
       // output first, index second: a crash between the two replays
@@ -598,8 +604,7 @@ object StreamingOps {
       // fail the batch loudly while compactCdcIndex holds the store —
       // reading half-rewritten partitions would silently mis-dedup;
       // the failed batch replays after the maintenance completes
-      graft.operators.AtomicBatches.assertNotInMaintenance(spark,
-        indexPath, "continuousCdcDedup")
+      val root = cdcRoot(spark, indexPath, "continuousCdcDedup")
       // the batch feeds two chunking passes (dedup + index delta) —
       // persist the raw batch once, freed with the batch
       val b = f.persist(batch)
@@ -608,9 +613,9 @@ object StreamingOps {
       // chunks are hidden, so the new batch neither dedups against
       // them nor fails to re-own them; a re-ingested victim's newer
       // rows outrank the deletion
-      val existing = BatchState.priorRows(spark, indexPath, batchId)
-        .map(raw => BatchState.live(raw, cdcVictims(spark, indexPath),
-          Seq(idCol)).drop("batch_id"))
+      val existing = BatchState.priorRows(root, batchId)
+        .map(raw => BatchState.live(raw, cdcVictims(root), Seq(idCol))
+          .drop("batch_id"))
         .getOrElse(TrainingData.cdcIndex(b.limit(0), idCol, textCol, w,
           maskBits))
       // output first, index second: a crash between the two replays
@@ -631,11 +636,11 @@ object StreamingOps {
     * inside `indexPath` (underscore-hidden from the batch-partition
     * reads, collision-free with the stream's `batch_id=` overwrites).
     */
-  private def cdcVictims(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[DataFrame] =
-    graft.operators.Similarity
-      .readParquetIfAny(spark, s"$indexPath/_victims")
+  private def cdcVictims(root: StoreRoot): Option[DataFrame] =
+    root.side("_victims")
       .map(_.groupBy("id").agg(max(col("up_to")).as("up_to")))
+
+  private val cdcRoot = StoreRoot.of("continuousCdcDedup")
 
   /** DELETE (takedown) face of a [[continuousCdcDedup]] persisted chunk
     * index: one bounded (id, up_to) append to the `_victims` channel —
@@ -651,11 +656,8 @@ object StreamingOps {
     */
   def cdcStateDelete(victims: DataFrame, idCol: String,
       indexPath: String): Unit = {
-    import graft.operators.AtomicBatches
-    val spark = victims.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, indexPath, "cdcStateDelete")
-    val upTo = graft.operators.Similarity.readParquetIfAny(spark, indexPath)
-      .flatMap(BatchState.maxBatch)
+    val upTo = cdcRoot(victims.sparkSession, indexPath, "cdcStateDelete")
+      .side("").flatMap(BatchState.maxBatch)
       .getOrElse(throw new IllegalArgumentException(
         s"no chunk index under $indexPath - nothing to delete from"))
     victims.select(col(idCol).cast("long").as("id")).distinct()
@@ -675,19 +677,20 @@ object StreamingOps {
   def compactCdcIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, includeLatest: Boolean = false,
       takeover: Boolean = false): Unit = {
-    import graft.operators.{AtomicBatches, Similarity}
-    if (cdcVictims(spark, indexPath).isEmpty &&
-        !AtomicBatches.maintenanceActive(spark, indexPath)) return
-    AtomicBatches.withMaintenanceLock(spark, indexPath, takeover) {
-      cdcVictims(spark, indexPath).foreach(v0 => Frames.scoped { f =>
+    import graft.operators.AtomicBatches
+    if (!AtomicBatches.maintenanceActive(spark, indexPath) &&
+        cdcVictims(cdcRoot(spark, indexPath, "compactCdcIndex")).isEmpty)
+      return
+    StoreRoot.maintain(spark, indexPath, takeover, "compactCdcIndex",
+        "continuousCdcDedup") { root =>
+      cdcVictims(root).foreach(v0 => Frames.scoped { f =>
         // NO non-local return in here (it would skip the lock release);
         // a store a prior compaction emptied has no rows to prune
-        val storeOpt = Similarity.readParquetIfAny(spark, indexPath)
+        val storeOpt = root.side("")
         val horizon = if (includeLatest) Long.MaxValue
           else storeOpt.flatMap(BatchState.maxBatch).getOrElse(Long.MinValue)
         val v = f.checkpoint(v0)
-        val fs = new org.apache.hadoop.fs.Path(indexPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = StoreRoot.fs(spark, indexPath)
         // shared rewrite protocol: touched-only dynamic overwrite +
         // emptied-partition deletion (AtomicBatches)
         storeOpt.foreach { store =>
@@ -793,30 +796,32 @@ object StreamingOps {
     */
   def currentClusterLabels(spark: org.apache.spark.sql.SparkSession,
       labelsPath: String): DataFrame =
-    currentClusterLabelsAt(spark, labelsPath, excludeBatch = None)
+    labelsAt(clusterRoot(spark, labelsPath, "cluster-label read"),
+      excludeBatch = None)
 
-  /** [[currentClusterLabels]] with one delta partition excluded — the
-    * stream loop's own read (a replayed batch must not fold its prior
-    * attempt's rows into the state it rebuilds from).
+  /** [[currentClusterLabels]] of the labels store at `labels`, with one
+    * delta partition excluded for the stream loop's own read (a
+    * replayed batch must not fold its prior attempt's rows into the
+    * state it rebuilds from).
     */
-  private[graft] def currentClusterLabelsAt(
-      spark: org.apache.spark.sql.SparkSession, labelsPath: String,
-      excludeBatch: Option[Long]): DataFrame = {
-    graft.operators.AtomicBatches.assertNotInMaintenance(spark, labelsPath,
-      "cluster-label read")
+  private def labelsAt(labels: StoreRoot,
+      excludeBatch: Option[Long]): DataFrame =
     // a COMPLETE takedown legitimately leaves the store with zero delta
     // partitions (every labeled id corrected to NULL, the snapshot
     // deleted): "no labels" is an answer, not an error
-    val rawOpt = graft.operators.Similarity
-      .readParquetIfAny(spark, labelsPath)
-    if (rawOpt.isEmpty)
-      return spark.range(0).select(col("id").cast("long").as("id"),
-        col("id").cast("long").as("cluster_id"))
-    val raw = rawOpt.get
-    val deltas = excludeBatch
-      .map(b => raw.where(col("batch_id") =!= b)).getOrElse(raw)
-    BatchState.foldLabels(deltas, clusterCorrections(spark, labelsPath))
-  }
+    labels.side("").fold(labels.spark.range(0).select(
+        col("id").cast("long").as("id"),
+        col("id").cast("long").as("cluster_id"))) { raw =>
+      labelsOf(labels, excludeBatch.fold(raw)(b =>
+        raw.where(col("batch_id") =!= b)))
+    }
+
+  // the label fold over the delta rows `raw` of the store at `labels`
+  private def labelsOf(labels: StoreRoot, raw: DataFrame): DataFrame =
+    BatchState.foldLabels(raw, clusterCorrections(labels))
+
+  // a store of a continuousClusteredDedup state: labels, pairs or index
+  private val clusterRoot = StoreRoot.of("continuousClusteredDedup")
 
   /** Committed takedown correction rows (id, cluster_id NULLABLE,
     * up_to, seq) of a labels store, or None. The `_corrections` channel
@@ -825,26 +830,16 @@ object StreamingOps {
     * stream's `batch_id=` dynamic overwrites can never collide with it
     * (the lesson the ANN tombstones channel was built on).
     */
-  private def clusterCorrections(spark: org.apache.spark.sql.SparkSession,
-      labelsPath: String): Option[DataFrame] = {
-    val dirs = graft.operators.AtomicBatches
-      .committedDirs(spark, s"$labelsPath/_corrections")
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(d => s"$d/labels"): _*))
-  }
+  private def clusterCorrections(labels: StoreRoot): Option[DataFrame] =
+    labels.inBatches("labels", labels.committed("_corrections"))
 
   /** Deleted ids of a labels store as (id, up_to) — latest deletion per
     * id — or None. Read by every face that must HIDE a victim's rows:
     * the stream loop's index probe and [[currentClusterPairs]].
     */
-  private[graft] def clusterVictims(spark: org.apache.spark.sql.SparkSession,
-      labelsPath: String): Option[DataFrame] = {
-    val dirs = graft.operators.AtomicBatches
-      .committedDirs(spark, s"$labelsPath/_corrections")
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(d => s"$d/victims"): _*)
-      .groupBy("id").agg(max(col("up_to")).as("up_to")))
-  }
+  private def clusterVictims(labels: StoreRoot): Option[DataFrame] =
+    labels.inBatches("victims", labels.committed("_corrections"))
+      .map(_.groupBy("id").agg(max(col("up_to")).as("up_to")))
 
   /** Current pair relation of a [[continuousClusteredDedup]] state:
     * the accumulated pair store minus every pair touching a deleted doc
@@ -857,13 +852,13 @@ object StreamingOps {
       pairsPath: String, labelsPath: String): DataFrame = {
     // compactClusterState rewrites victim-touched pair partitions in
     // place under the labels store's _MAINT — a read racing it would
-    // silently miss or double rows (every other read/write face of the
-    // cluster state carries this guard; this one was the gap)
-    graft.operators.AtomicBatches.assertNotInMaintenance(spark, labelsPath,
-      "currentClusterPairs")
-    BatchState.live(spark.read.parquet(pairsPath),
-      clusterVictims(spark, labelsPath), Seq("id_a", "id_b"))
+    // silently miss or double rows
+    pairsOf(clusterRoot(spark, pairsPath, "currentClusterPairs").read(""),
+      clusterRoot(spark, labelsPath, "currentClusterPairs"))
   }
+
+  private def pairsOf(pairs: DataFrame, labels: StoreRoot): DataFrame =
+    BatchState.live(pairs, clusterVictims(labels), Seq("id_a", "id_b"))
 
   /** DELETE (takedown) face of a [[continuousClusteredDedup]] state —
     * the tombstone discipline applied to the THREE stores the stream
@@ -901,8 +896,8 @@ object StreamingOps {
       maxIter: Int = 20): Unit = {
     import graft.operators.{AtomicBatches, Dedup}
     val spark = victims.sparkSession
-    AtomicBatches.assertNotInMaintenance(spark, labelsPath,
-      "clusterStateDelete")
+    val Seq(labels, pairs, index) = Seq(labelsPath, pairsPath, indexPath)
+      .map(clusterRoot(spark, _, "clusterStateDelete"))
     val croot = s"$labelsPath/_corrections"
     AtomicBatches.sweepUncommitted(spark, croot)
     // up_to: the takedown kills state up to and including the latest
@@ -913,8 +908,7 @@ object StreamingOps {
     // labels-derived up_to would under-read and leave such a doc's
     // index rows visible, an un-hidden victim. Fails loudly when
     // there is no state at all.
-    val upTo = Seq(indexPath, labelsPath)
-      .flatMap(p => graft.operators.Similarity.readParquetIfAny(spark, p))
+    val upTo = Seq(index, labels).flatMap(_.side(""))
       .flatMap(BatchState.maxBatch)
       .maxOption
       .getOrElse(throw new IllegalArgumentException(
@@ -933,13 +927,9 @@ object StreamingOps {
           names.map(n => spark.range(0).select(col("id").cast("long").as(n)))
             .reduce((a, b) => a.crossJoin(b))
         // read for affected + members
-        val lab = f.checkpoint(graft.operators.Similarity
-          .readParquetIfAny(spark, labelsPath)
-          .map(_ => currentClusterLabels(spark, labelsPath))
+        val lab = f.checkpoint(labels.side("").map(labelsOf(labels, _))
           .getOrElse(emptyLongs("id", "cluster_id")))
-        val p = graft.operators.Similarity
-          .readParquetIfAny(spark, pairsPath)
-          .map(_ => currentClusterPairs(spark, pairsPath, labelsPath))
+        val p = pairs.side("").map(pairsOf(_, labels))
           .getOrElse(emptyLongs("id_a", "id_b"))
           .select(col("id_a").cast("long").as("a"),
             col("id_b").cast("long").as("b"))
@@ -981,21 +971,18 @@ object StreamingOps {
   def clusterStatePresentIds(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, pairsPath: String, labelsPath: String)
       : DataFrame = {
-    import graft.operators.Similarity.readParquetIfAny
-    graft.operators.AtomicBatches.assertNotInMaintenance(spark, labelsPath,
-      "clusterStatePresentIds")
-    val labelIds = readParquetIfAny(spark, labelsPath)
-      .map(_ => currentClusterLabels(spark, labelsPath).select(col("id")))
-    val pairIds = readParquetIfAny(spark, pairsPath)
-      .map(_ => currentClusterPairs(spark, pairsPath, labelsPath)
-        .select(explode(array(col("id_a"), col("id_b"))).as("id")))
-    val indexIds = readParquetIfAny(spark, indexPath).map { idx =>
+    val Seq(labels, pairs, index) = Seq(labelsPath, pairsPath, indexPath)
+      .map(clusterRoot(spark, _, "clusterStatePresentIds"))
+    val labelIds = labels.side("").map(labelsOf(labels, _).select(col("id")))
+    val pairIds = pairs.side("").map(pairsOf(_, labels)
+      .select(explode(array(col("id_a"), col("id_b"))).as("id")))
+    val indexIds = index.side("").map { idx =>
       val idCol = idx.columns.find(_ == "doc_id").getOrElse(
         idx.columns.filterNot(Set("batch_id", "sh", "sig", "bucket"))
           .head)
       BatchState.live(
         idx.select(col(idCol).cast("long").as("id"), col("batch_id")),
-        clusterVictims(spark, labelsPath), Seq("id")).select("id")
+        clusterVictims(labels), Seq("id")).select("id")
     }
     (labelIds.toSeq ++ pairIds.toSeq ++ indexIds.toSeq)
       .reduceOption(_ unionByName _)
@@ -1010,14 +997,13 @@ object StreamingOps {
     */
   def cdcStatePresentIds(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): DataFrame = {
-    graft.operators.AtomicBatches.assertNotInMaintenance(spark, indexPath,
-      "cdcStatePresentIds")
+    val root = cdcRoot(spark, indexPath, "cdcStatePresentIds")
     // a store a full takedown emptied holds no ids
-    graft.operators.Similarity.readParquetIfAny(spark, indexPath)
+    root.side("")
       .map(store => BatchState.live(
         store.select(col(cdcIdCol(store)).cast("long").as("id"),
           col("batch_id")),
-        cdcVictims(spark, indexPath), Seq("id")).select("id").distinct())
+        cdcVictims(root), Seq("id")).select("id").distinct())
       .getOrElse(spark.range(0).select(col("id")))
   }
 
@@ -1045,10 +1031,8 @@ object StreamingOps {
     // a labels store under compactClusterState maintenance may be
     // mid-rewrite — rewriting the −1 snapshot from it would bake the
     // inconsistent state in before a takeover re-run can repair it
-    graft.operators.AtomicBatches.assertNotInMaintenance(spark, labelsPath,
-      "compactClusterLabels")
-    val all = graft.operators.Similarity.readParquetIfAny(spark, labelsPath)
-      .getOrElse(return)
+    val labels = clusterRoot(spark, labelsPath, "compactClusterLabels")
+    val all = labels.side("").getOrElse(return)
     val maxBatch = BatchState.maxBatch(all).getOrElse(return)
     if (maxBatch <= 0) return // nothing strictly below the latest batch
     // pending takedown corrections PIN the fold horizon: a delta row
@@ -1058,7 +1042,7 @@ object StreamingOps {
     // time. Rows at or below EVERY correction's up_to fold safely
     // (already overridden before, still overridden at −1). Physical
     // application + GC of the corrections is compactClusterState's job.
-    val minUpTo = clusterCorrections(spark, labelsPath)
+    val minUpTo = clusterCorrections(labels)
       .flatMap(c => Option(c.agg(min(col("up_to"))).head.get(0)))
       .map(_.toString.toLong)
     val horizon = math.min(maxBatch, minUpTo.map(_ + 1).getOrElse(Long.MaxValue))
@@ -1112,17 +1096,21 @@ object StreamingOps {
       compactClusterLabels(spark, labelsPath)
       return
     }
-    AtomicBatches.withMaintenanceLock(spark, labelsPath, takeover) {
-      compactClusterStateBody(spark, indexPath, pairsPath, labelsPath,
-        includeLatest)
+    StoreRoot.maintain(spark, labelsPath, takeover, "compactClusterState",
+        "continuousClusteredDedup") { labels =>
+      compactClusterStateBody(labels,
+        clusterRoot(spark, indexPath, "compactClusterState"),
+        clusterRoot(spark, pairsPath, "compactClusterState"), includeLatest)
     }
   }
 
-  private def compactClusterStateBody(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      pairsPath: String, labelsPath: String, includeLatest: Boolean): Unit = {
-    import graft.operators.{AtomicBatches, Similarity}
-    val allOpt = Similarity.readParquetIfAny(spark, labelsPath)
+  // `labels` is the lock holder's handle; the pair and index stores
+  // have no marker of their own
+  private def compactClusterStateBody(labels: StoreRoot, index: StoreRoot,
+      pairs: StoreRoot, includeLatest: Boolean): Unit = {
+    import graft.operators.AtomicBatches
+    val (spark, labelsPath) = (labels.spark, labels.path)
+    val allOpt = labels.side("")
     // the stream's true position is the max batch across the stores —
     // the labels store alone under-reads it when recent batches were
     // pair-less (their empty label deltas write no partition), and an
@@ -1131,8 +1119,7 @@ object StreamingOps {
     // unreadable labels store used to skip the physical prune and the
     // corrections GC entirely — a silent, permanent non-removal of
     // takedown data (r14 self-review)
-    val maxBatch = (allOpt.toSeq ++
-        Similarity.readParquetIfAny(spark, indexPath).toSeq)
+    val maxBatch = (allOpt.toSeq ++ index.side("").toSeq)
       .flatMap(BatchState.maxBatch)
       .maxOption
       // NO readable store at all: with includeLatest there is no latest
@@ -1141,10 +1128,9 @@ object StreamingOps {
       // physical exists to prune — corrections stay pending
       .getOrElse { if (includeLatest) -1L else return }
     val horizon = if (includeLatest) Long.MaxValue else maxBatch
-    val dirs = AtomicBatches.committedDirs(spark, s"$labelsPath/_corrections")
     // per-batch up_to is a staging-time constant — one driver row each
-    val dirUpTo = dirs.map { d =>
-      d -> spark.read.parquet(s"$d/victims")
+    val dirUpTo = labels.committed("_corrections").map { d =>
+      d -> labels.inBatches("victims", Seq(d)).get
         .agg(max(col("up_to"))).head.getLong(0)
     }
     val appliedDirs = dirUpTo.filter(_._2 < horizon).map(_._1)
@@ -1154,9 +1140,7 @@ object StreamingOps {
     // still run)
     allOpt.foreach { all =>
       if (maxBatch > 0 || includeLatest) {
-        val applied =
-          if (appliedDirs.isEmpty) None
-          else Some(spark.read.parquet(appliedDirs.map(d => s"$d/labels"): _*))
+        val applied = labels.inBatches("labels", appliedDirs)
         // the fold can be EMPTY (every folded id overridden to NULL by an
         // applied correction): dynamic overwrite of zero rows replaces
         // nothing, so a stale pre-takedown −1 snapshot would survive the
@@ -1175,26 +1159,25 @@ object StreamingOps {
     // 2) physically remove victim rows from the committed pair and
     // index partitions — victims from ALL correction batches (pending
     // ones keep their read-time rule for whatever this pass leaves)
-    clusterVictims(spark, labelsPath).foreach(v => Frames.scoped { f =>
+    clusterVictims(labels).foreach(v => Frames.scoped { f =>
       val victims = f.checkpoint(v)
       // a row dies iff ANY of its id columns is a victim whose
       // deletion covers the row's batch — shared rewrite protocol
       // (AtomicBatches.pruneDeadPartitionRows handles touched-only
       // dynamic overwrite + emptied-partition deletion, with the
       // FileSystem resolved per store path)
-      def pruneStore(path: String, store: DataFrame,
-          idCols: Seq[String]): Unit = {
-        val (joined, dead) = BatchState.withVictims(store, victims, idCols)
-        AtomicBatches.pruneDeadPartitionRows(spark, path, "batch_id",
-          joined, col("batch_id").cast("long") < lit(horizon) && dead,
-          store.columns.toSeq)
-      }
-      Similarity.readParquetIfAny(spark, pairsPath).foreach(store =>
-        pruneStore(pairsPath, store, Seq("id_a", "id_b")))
+      def pruneStore(root: StoreRoot, idCols: DataFrame => Seq[String]) =
+        root.side("").foreach { store =>
+          val (joined, dead) =
+            BatchState.withVictims(store, victims, idCols(store))
+          AtomicBatches.pruneDeadPartitionRows(spark, root.path, "batch_id",
+            joined, col("batch_id").cast("long") < lit(horizon) && dead,
+            store.columns.toSeq)
+        }
+      pruneStore(pairs, _ => Seq("id_a", "id_b"))
       // the index store's id column is its FIRST column (the
       // minhash/simhash/embedding index faces all put idCol first)
-      Similarity.readParquetIfAny(spark, indexPath).foreach(store =>
-        pruneStore(indexPath, store, Seq(store.columns.head)))
+      pruneStore(index, store => Seq(store.columns.head))
     })
     // 3) GC the applied correction batches — their kills and overrides
     // are physical now; pending ones keep guarding. Deleted in ASCENDING
@@ -1204,8 +1187,7 @@ object StreamingOps {
     // is exactly the newest-wins rule — the other order could leave an
     // OLDER correction to re-apply on the takeover re-run, rolling a
     // later takedown's re-closure back (r14 self-review)
-    val fs = new org.apache.hadoop.fs.Path(labelsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreRoot.fs(spark, labelsPath)
     appliedDirs.sortBy(_.split('/').last.toLong).foreach(d =>
       fs.delete(new org.apache.hadoop.fs.Path(d), true))
   }
@@ -1231,8 +1213,8 @@ object StreamingOps {
       // without this the batch would write pairs/index before the
       // label fold's own assert fired (replay-safe either way, but a
       // clean refusal beats a half-written batch)
-      labelsPath.foreach(lp => graft.operators.AtomicBatches
-        .assertNotInMaintenance(spark, lp, "continuousIndexedDedup"))
+      val labels =
+        labelsPath.map(clusterRoot(spark, _, "continuousIndexedDedup"))
       // persist (not localCheckpoint): compute the batch index once for
       // both the probe and the index write
       val newIdx = f.persist(indexOf(batch))
@@ -1241,10 +1223,10 @@ object StreamingOps {
       // so no new pairs ever form against it; rows a later batch
       // re-ingested outrank the deletion and stay probeable
       // (resurrection)
-      val existing = BatchState.priorRows(spark, indexPath, batchId)
-        .map(raw => BatchState.live(raw,
-          labelsPath.flatMap(clusterVictims(spark, _)), Seq(idCol))
-          .drop("batch_id"))
+      val existing = BatchState.priorRows(
+          clusterRoot(spark, indexPath, "continuousIndexedDedup"), batchId)
+        .map(raw => BatchState.live(raw, labels.flatMap(clusterVictims),
+          Seq(idCol)).drop("batch_id"))
         .getOrElse(newIdx.limit(0))
       // with labels, the pair relation feeds the pair write AND the
       // label fold — materialize it once (bounded: new-involving pairs)
@@ -1253,11 +1235,13 @@ object StreamingOps {
       BatchState.writeBatch(pairs, pairsPath, batchId)
       BatchState.writeBatch(newIdx, indexPath, batchId)
       labelsPath.foreach { lp =>
-        // corrections-aware ([[currentClusterLabelsAt]]): a batch
-        // folding pairs after a takedown must build on the
+        // corrections-aware ([[labelsAt]], its own handle — a
+        // compaction may have started since the batch's first read): a
+        // batch folding pairs after a takedown must build on the
         // RE-CLOSED state, or it would propagate a deleted doc's
         // id as a cluster representative
-        val current = currentClusterLabelsAt(spark, lp, Some(batchId))
+        val current = labelsAt(
+          clusterRoot(spark, lp, "cluster-label read"), Some(batchId))
         // the delta's own scope frees its frames before the compaction
         Frames.scoped(g => BatchState.writeBatch(graft.operators.Dedup
           .incrementalComponentParts(g, current, pairs, "id_a", "id_b", 20)._3,
@@ -1311,7 +1295,9 @@ object StreamingOps {
       compactEveryBatches: Int = 0): DataStreamWriter[Row] =
     BatchState.eachBatch(vecs, checkpoint) { (batch, batchId, _) =>
       BatchState.writeBatch(
-        graft.operators.Similarity.appendRows(batch, idCol, vecCol, indexPath)
+        graft.operators.Similarity.appendRows(graft.operators.Similarity
+          .ivfRoot(batch.sparkSession, indexPath, "continuousIvfAppend"),
+          batch, idCol, vecCol)
           // cluster by cell: each task writes one cell-coherent file, so
           // the delta read's cell predicate prunes via row-group stats
           // even though the delta tree partitions on batch_id
@@ -1386,27 +1372,27 @@ object StreamingOps {
   def compactIvfDeltas(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, includeLatest: Boolean = false,
       takeover: Boolean = false): Unit = {
-    import graft.operators.Similarity.readParquetIfAny
-    import graft.operators.AtomicBatches
+    import graft.operators.{AtomicBatches, Similarity}
     // nothing staged and no crashed pass to resume: skip the lock — the
     // common poll-compact loop must not churn marker creates
-    if (readParquetIfAny(spark, s"$indexPath/deltas").isEmpty &&
-        readParquetIfAny(spark, s"$indexPath/tombstones").isEmpty &&
-        !AtomicBatches.maintenanceActive(spark, indexPath)) return
-    AtomicBatches.withMaintenanceLock(spark, indexPath, takeover) {
-      Frames.scoped(compactIvfDeltasBody(_, spark, indexPath, includeLatest))
+    if (!AtomicBatches.maintenanceActive(spark, indexPath) && {
+          val root = Similarity.ivfRoot(spark, indexPath, "compactIvfDeltas")
+          root.side("deltas").isEmpty && root.side("tombstones").isEmpty
+        }) return
+    StoreRoot.maintain(spark, indexPath, takeover, "compactIvfDeltas",
+        "the ivfWriteIndex face it was built with") { root =>
+      Frames.scoped(compactIvfDeltasBody(_, root, includeLatest))
     }
   }
 
-  private def compactIvfDeltasBody(f: Frames,
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
+  private def compactIvfDeltasBody(f: Frames, root: StoreRoot,
       includeLatest: Boolean): Unit = {
-    import graft.operators.Similarity.readParquetIfAny
-    val deltasOpt = readParquetIfAny(spark, s"$indexPath/deltas")
-    val tombsOpt = readParquetIfAny(spark, s"$indexPath/tombstones")
+    val (spark, indexPath) = (root.spark, root.path)
+    val deltasOpt = root.side("deltas")
+    val tombsOpt = root.side("tombstones")
     if (deltasOpt.isEmpty && tombsOpt.isEmpty) return
     val maxBatch = deltasOpt.flatMap(BatchState.maxBatch).getOrElse(-1L)
-    val baseOpt = readParquetIfAny(spark, s"$indexPath/cells")
+    val baseOpt = root.side("cells")
     // layout-generic: (id, <payload...>, cell) — whatever the stored
     // layout's payload is (v, scale + q, codes)
     val refCols = baseOpt.map(_.columns)
@@ -1493,8 +1479,7 @@ object StreamingOps {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell")
         .parquet(s"$indexPath/cells")
-      val fs = new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StoreRoot.fs(spark, indexPath)
       // dynamic overwrite only rewrites partitions PRESENT in the output:
       // a prior cell emptied by an update (its only rows were re-ingested
       // or deleted ids) keeps its stale directory — delete those explicitly
@@ -1510,8 +1495,7 @@ object StreamingOps {
     // prune the folded delta partitions
     if (deltasOpt.nonEmpty) BatchState.prune(spark, s"$indexPath/deltas")(b =>
       b < maxBatch || includeLatest)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreRoot.fs(spark, indexPath)
     // garbage-collect the APPLIED tombstones (their kills are physical
     // now); pending ones (up_to ≥ horizon) keep guarding the latest batch
     tombsOpt.foreach { ts =>

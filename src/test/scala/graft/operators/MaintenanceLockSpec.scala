@@ -144,6 +144,39 @@ class MaintenanceLockSpec extends SparkSpec {
       be > 0L
   }
 
+  test("decontam probes check the marker before reading meta or running a job") {
+    import spark.implicits._
+    val bench = Seq((100L, "alpha beta gamma")).toDF("eval_id", "text")
+    Seq("grams" -> { (dir: String) =>
+        TrainingData.decontamIndexWrite(docs, "doc_id", "text", dir, n = 2,
+          nBuckets = 4)
+        () => TrainingData.decontaminateFromIndex(bench, "text", dir,
+          "doc_id").collect()
+      }, "shingles" -> { (dir: String) =>
+        TrainingData.containmentIndexWrite(docs, "doc_id", "text", dir,
+          shingleN = 2, nBuckets = 4)
+        () => TrainingData.decontaminateContainmentFromIndex(bench,
+          "eval_id", "text", dir, "doc_id").collect()
+      }).foreach { case (layout, build) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"maint-$layout")
+        .toString
+      val probe = build(dir)
+      // the state a rebuild that crashed during its meta overwrite leaves
+      intercept[RuntimeException] {
+        AtomicBatches.withRebuildMarker(spark, dir) {
+          throw new RuntimeException("simulated crash mid-meta-overwrite")
+        }
+      }
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/meta"), true)
+      withClue(layout) {
+        intercept[IllegalArgumentException](probe())
+          .getMessage should include ("RE-RUN THE REBUILD")
+      }
+    }
+  }
+
   test("a crashed compaction's marker is compact-typed; takeover works") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("maint-ctype").toString
